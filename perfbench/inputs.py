@@ -6,7 +6,9 @@ gives the same bytes. Generation runs in child processes
 (``python3 inputs.py <seed>`` with its list of ``[part path, indices]``
 as JSON on stdin) before Spark starts, outside every timer, and the
 result is cached by (``CORPUS_VERSION``, name, row count, rows digest,
-seed). The program under test only ever receives the parquet paths.
+seed). Each part has a ``_bytes-<k>.json`` sidecar with the payload size
+of its rows. The program under test only ever receives the parquet
+paths.
 """
 
 from __future__ import annotations
@@ -35,6 +37,13 @@ def _write_part(path: str, indices: list[int], seed: int) -> None:
     ])
     rows = [make_row(i, seed) for i in indices]
     pq.write_table(pa.Table.from_pylist(rows, schema=schema), path)
+    # payload bytes per row, for the benchmark's byte ratios; Spark
+    # skips files whose names start with "_"
+    head, tail = os.path.split(path)
+    sidecar = os.path.join(head, "_bytes-" + tail.split("-", 1)[1])
+    with open(sidecar.replace(".parquet", ".json"), "w",
+              encoding="utf-8") as fh:
+        json.dump([len(r["html"]) for r in rows], fh)
 
 
 def _chunks(indices: list[int], parts: int) -> list[list[int]]:

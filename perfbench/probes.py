@@ -99,6 +99,12 @@ class RssSampler:
     def peak_bytes(self) -> int:
         return sum(b for pid, b in self.last.items() if self.seen[pid] > 1)
 
+    def breakdown(self) -> str:
+        """Counted peaks in MB, largest first, for the progress log."""
+        peaks = sorted((b for pid, b in self.last.items()
+                        if self.seen[pid] > 1), reverse=True)
+        return " ".join(f"{b / 2**20:.0f}" for b in peaks)
+
     def __enter__(self) -> RssSampler:
         self._thread.start()
         return self
@@ -119,35 +125,44 @@ class Tracer:
     def __init__(self) -> None:
         self.spans: list[list] = []
         self._local = threading.local()
-        self._patched: list[tuple[object, str, object]] = []
+        self._restore: list = []
 
     def _stack(self) -> list[int]:
         if not hasattr(self._local, "stack"):
             self._local.stack = []
         return self._local.stack
 
-    def wrap(self, owner: object, attr: str, name: str) -> None:
-        orig = getattr(owner, attr)
-
-        def traced(*args, **kwargs):
+    def traced(self, fn, name: str):
+        """``fn`` with a span recorded around each call."""
+        def call(*args, **kwargs):
             stack = self._stack()
             span = [name, time.perf_counter(), None,
                     stack[-1] if stack else None]
             self.spans.append(span)
             stack.append(len(self.spans) - 1)
             try:
-                return orig(*args, **kwargs)
+                return fn(*args, **kwargs)
             finally:
                 stack.pop()
                 span[2] = time.perf_counter()
 
-        setattr(owner, attr, traced)
-        self._patched.append((owner, attr, orig))
+        return call
+
+    def wrap(self, owner: object, attr: str, name: str) -> None:
+        orig = getattr(owner, attr)
+        setattr(owner, attr, self.traced(orig, name))
+        self._restore.append(lambda: setattr(owner, attr, orig))
+
+    def wrap_query(self, queries: dict, key: str, name: str) -> None:
+        """Span the DataFrame-building function of a registry entry."""
+        orig = queries[key]
+        queries[key] = (self.traced(orig[0], name),) + tuple(orig[1:])
+        self._restore.append(lambda: queries.__setitem__(key, orig))
 
     def unwrap_all(self) -> None:
-        for owner, attr, orig in reversed(self._patched):
-            setattr(owner, attr, orig)
-        self._patched.clear()
+        for restore in reversed(self._restore):
+            restore()
+        self._restore.clear()
 
     def total_s(self, name: str, since: int = 0) -> float:
         return sum(s[2] - s[1] for s in self.spans[since:]
@@ -160,7 +175,9 @@ class Tracer:
 
 def wrap_package(tracer: Tracer) -> None:
     """Span every public call the extraction pipeline makes into the
-    layers below it, as seen from the driver process."""
+    layers below it, and each registry query's DataFrame construction,
+    as seen from the driver process."""
+    from westa_ocr_spark import registry
     from westa_ocr_spark.plans import pipeline
     from westa_ocr_spark.sources import tables
 
@@ -171,6 +188,8 @@ def wrap_package(tracer: Tracer) -> None:
                  "overwrite"):
         tracer.wrap(tables.ParquetTable, attr,
                     f"sources.tables.ParquetTable.{attr}")
+    for key in list(registry.QUERIES):
+        tracer.wrap_query(registry.QUERIES, key, f"registry.QUERIES.{key}")
 
 
 # ---------------------------------------------------------------- event log

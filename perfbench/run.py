@@ -9,14 +9,17 @@ Spark on ``local[<nproc>]``, runs the workload as a closed loop of jobs
 for ``--seconds``, checks the outputs and prints one JSON result as the
 last line of stdout. ``--trace 0`` reports the end-to-end metrics;
 ``--trace 1`` runs the window with spans and the Spark event log on,
-adds single-layer probes after it and reports the per-layer metrics.
-All scratch output goes under ``.perfbench/``.
+adds single-layer probes after it (on ``fresh_extract`` also one pass
+over the registry's headline queries) and reports the per-layer
+metrics named in ``BENCHMARK.json``. All scratch output goes under
+``.perfbench/``.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import math
 import os
 import shlex
 import shutil
@@ -31,6 +34,9 @@ ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench")
 WORKLOADS = ("fresh_extract", "incremental_merge")
 HARD_LIMIT_S = 170  # the result must be printed well inside 180 s
+# the traced registry query pass issues no query after this many
+# seconds of the run, leaving time for the checks and the report
+QUERY_DEADLINE_S = 100
 DRIVER_MEMORY = "2g"
 
 sys.path.insert(0, HERE)
@@ -114,8 +120,9 @@ def _stop_processes() -> None:
         time.sleep(0.2)
 
 
-def _inputs(workload: str, seed: int, procs: int) -> dict:
+def _inputs(workload: str, seed: int, procs: int, trace: bool) -> dict:
     import inputs
+    import sfgen
 
     cache = os.path.join(WORK, "inputs")
     os.makedirs(cache, exist_ok=True)
@@ -135,13 +142,24 @@ def _inputs(workload: str, seed: int, procs: int) -> dict:
     spec = {"warm": paths[0], "new_indices": new}
     if workload == "fresh_extract":
         spec["pages"] = paths[1]
+        spec["input_bytes"] = wl.input_bytes(spec["pages"])
+        if trace:
+            spec["tables"] = sfgen.write_tables(cache, wl.DATA_SEED)
     else:
         spec["deltas"] = paths[1:]
+        spec["new_bytes"] = sum(wl.input_bytes(p, wl.DELTA_NEW)
+                                for p in spec["deltas"])
+        spec["input_bytes"] = wl.input_bytes(spec["warm"]) + spec["new_bytes"]
     return spec
 
 
 def _op_rates(workload: str, ops) -> tuple[float, float]:
-    """(seconds per operation, documents per second) of a window."""
+    """(seconds per operation, items per second) of a window.
+
+    fresh_extract: seconds per job, docs per second. incremental_merge:
+    median seconds per delta run, new docs per second of the whole
+    sequence (compaction included).
+    """
     if workload == "fresh_extract":
         op_s = statistics.median(op.seconds for op in ops)
         return op_s, wl.FRESH_DOCS / op_s
@@ -169,20 +187,24 @@ def _kernel_rows(spec: dict, workload: str) -> list[tuple[int, str, bytes]]:
     for path, idx in zip(paths, spec["new_indices"]):
         table = []
         for name in sorted(os.listdir(path)):
-            table += pq.read_table(os.path.join(path, name),
-                                   columns=["url", "html"]).to_pylist()
+            if name.endswith(".parquet"):
+                table += pq.read_table(os.path.join(path, name),
+                                       columns=["url", "html"]).to_pylist()
         rows += [(i, r["url"], r["html"]) for i, r in zip(idx, table)]
     return rows[:wl.KERNEL_SAMPLE_DOCS]
 
 
-def _per_layer(workload: str, bench, spec: dict, traced, variants: dict,
-               events: dict, kern: dict) -> dict:
+def _per_layer_units() -> dict[str, str]:
+    """Name -> unit of every per-layer metric, from BENCHMARK.json."""
+    with open(os.path.join(ROOT, "BENCHMARK.json"), encoding="utf-8") as fh:
+        return {m["name"]: m["unit"] for m in json.load(fh)["per_layer"]}
+
+
+def _extract_layers(m: dict, workload: str, bench, spec: dict, traced,
+                    variants: dict, events: dict, kern: dict) -> None:
     from probes import doc_class
 
     med = wl.median
-    m: dict[str, float] = {name: 0.0 for name in wl.PER_LAYER}
-    m["session.get_spark_s"] = med(a for a, _ in bench.setups)
-    m["session.warm_s"] = med(b for _, b in bench.setups)
 
     # L0 kernel, single core
     classes = kern["classes"]
@@ -217,11 +239,9 @@ def _per_layer(workload: str, bench, spec: dict, traced, variants: dict,
         m[f"plans.pipeline.{stage}_s"] = med(
             r.stages.get(stage, 0.0) for r in results)
     run_tags = [t for op in traced for t in op.tags]
-    for key in wl.EVENT_METRICS:
+    for key in wl.EVENT_METRICS + ("extract_tasks",):
         m[f"plans.pipeline.{key}"] = med(
             events.get(t, {}).get(key, 0) for t in run_tags)
-    m["plans.pipeline.extract_tasks"] = med(
-        events.get(t, {}).get("extract_tasks", 0) for t in run_tags)
     m["operators.partitioning.extract_task_skew"] = med(
         events.get(t, {}).get("extract_task_skew", 0.0) for t in run_tags)
     last = results[-1]
@@ -267,28 +287,20 @@ def _per_layer(workload: str, bench, spec: dict, traced, variants: dict,
             lambda op: sum(wl.DELTA_NEW + wl.DELTA_RESENT - r.docs_processed
                            for r in op.results))
 
-    # the end-to-end op_s of this traced run; minus op_s of an untraced
-    # run on the same seed it gives the tracing overhead
-    m["trace.op_s"] = _op_rates(workload, traced)[0]
-    return {name: {"value": value, "unit": _unit(name)}
-            for name, value in m.items()}
 
-
-def _unit(name: str) -> str:
-    if name.endswith("_s_per_kdoc"):
-        return "s/kdoc"
-    if name.endswith("mb_per_s_core"):
-        return "MB/s"
-    if name.endswith("docs_per_s_core"):
-        return "1/s"
-    if name.endswith("_s"):
-        return "s"
-    if name.endswith("bytes") or name.endswith("bytes_rewritten"):
-        return "bytes"
-    if "share" in name or name.endswith(("_per_input_byte", "_per_new_byte",
-                                         "amplification", "_skew")):
-        return "ratio"
-    return "count"
+def _query_layers(m: dict, qops, events: dict) -> None:
+    """Per-query seconds of the registry probe pass, their sum and
+    geometric mean, and the pass's Spark jobs, shuffle and GC."""
+    for op in qops:
+        m[f"queries.{op.name}_s"] = op.seconds
+    times = [op.seconds for op in qops]
+    if times:
+        m["queries.total_s"] = sum(times)
+        m["queries.geomean_s"] = math.exp(
+            sum(math.log(t) for t in times) / len(times))
+    for key in ("spark_jobs", "shuffle_bytes", "gc_s"):
+        m[f"queries.{key}"] = sum(events.get(op.tags[0], {}).get(key, 0)
+                                  for op in qops)
 
 
 def _on_alarm(signum, frame):
@@ -312,6 +324,7 @@ def main() -> int:
     signal.alarm(HARD_LIMIT_S)
     sys.path.insert(0, ROOT)
     trace = bool(args.trace)
+    workload = args.workload
     run_dir = os.path.join(WORK, "run")
     shutil.rmtree(run_dir, ignore_errors=True)
     events_dir = _configure_environment(run_dir, trace)
@@ -319,44 +332,45 @@ def main() -> int:
 
     # inputs first, in their own processes, before any timer or JVM
     t_start = time.perf_counter()
-    spec = _inputs(args.workload, args.seed, cores)
+    spec = _inputs(workload, args.seed, cores, trace)
     wl.log(f"inputs ready after {time.perf_counter() - t_start:.2f} s")
-    if args.workload == "fresh_extract":
-        spec["input_bytes"] = wl.input_bytes(spec["pages"])
-    else:
-        spec["new_bytes"] = sum(wl.input_bytes(p, wl.DELTA_NEW)
-                                for p in spec["deltas"])
-        spec["input_bytes"] = wl.input_bytes(spec["warm"]) + spec["new_bytes"]
 
     from probes import RssSampler, Tracer, kernel_profile, read_event_log
     from probes import wrap_package
 
     bench = wl.Bench(run_dir, args.seed, cores)
-    if args.workload == "fresh_extract":
+    if workload == "fresh_extract":
         def window(tag):
             return bench.fresh_window(spec["pages"], args.seconds, tag)
     else:
         def window(tag):
             return bench.incremental_window(spec["deltas"], args.seconds, tag)
 
+    ops, qops, variants = [], [], {}
     try:
+        # peak memory covers set-up and the window, not the checks
         with RssSampler() as rss:
             bench.setup(spec["warm"])
             if trace:
                 bench.tracer = Tracer()
                 wrap_package(bench.tracer)
-            try:
-                ops = window("t" if trace else "u")
-            finally:
-                if trace:
-                    bench.tracer.unwrap_all()
-            if trace and ops:
-                first_input = (spec["pages"] if args.workload == "fresh_extract"
-                               else spec["deltas"][0])
-                variants = bench.stage_variants(first_input)
-            if args.workload == "fresh_extract" and ops:
-                bench.check_fresh_output(spec["pages"])
-            bench.stop()
+            ops = window("t" if trace else "u")
+        wl.log(f"peak rss per process (MB): {rss.breakdown()}")
+        if trace and ops:
+            first_input = (spec["pages"] if workload == "fresh_extract"
+                           else spec["deltas"][0])
+            variants = bench.stage_variants(first_input)
+            if workload == "fresh_extract":
+                qops = bench.query_pass(spec["tables"], "q",
+                                        t_start + QUERY_DEADLINE_S)
+            bench.tracer.unwrap_all()
+        if ops and workload == "fresh_extract":
+            bench.check_fresh_output(spec["pages"])
+        if qops:
+            import sfgen
+
+            bench.check_registry_output(spec["tables"], sfgen.TABLES)
+        bench.stop()
     finally:
         wl.log(f"stopping after {time.perf_counter() - t_start:.2f} s")
         _stop_processes()
@@ -366,14 +380,29 @@ def main() -> int:
         return 1
 
     if trace:
+        from westa_ocr_spark.session import ARROW_BATCH_ROWS
+
         events = read_event_log(events_dir)
-        kern = kernel_profile(_kernel_rows(spec, args.workload), args.seed,
-                              wl.ARROW_BATCH_ROWS)
-        metrics = _per_layer(args.workload, bench, spec, ops, variants,
-                             events, kern)
+        units = _per_layer_units()
+        m = {name: 0.0 for name in units}
+        m["session.get_spark_s"] = bench.get_spark_s
+        m["session.warm_s"] = bench.warm_s
+        kern = kernel_profile(_kernel_rows(spec, workload), args.seed,
+                              ARROW_BATCH_ROWS)
+        _extract_layers(m, workload, bench, spec, ops, variants, events,
+                        kern)
+        _query_layers(m, qops, events)
+        # the end-to-end op_s of this traced run; minus op_s of an
+        # untraced run on the same seed it gives the tracing overhead
+        m["trace.op_s"] = _op_rates(workload, ops)[0]
+        unknown = set(m) - set(units)
+        if unknown:
+            raise KeyError(f"metrics missing from BENCHMARK.json: {unknown}")
+        metrics = {name: {"value": value, "unit": units[name]}
+                   for name, value in m.items()}
         bench.tracer.dump(os.path.join(run_dir, "spans.json"))
     else:
-        metrics = _end_to_end(args.workload, bench, ops, rss.peak_bytes)
+        metrics = _end_to_end(workload, bench, ops, rss.peak_bytes)
     signal.alarm(0)
     print(json.dumps({
         "correct": bench.failed == 0,

@@ -1,14 +1,15 @@
-"""The benchmark workloads: one client, a closed loop of extraction jobs.
+"""The benchmark workloads: one client, a closed loop of Spark jobs.
 
 ``fresh_extract`` repeats one ``run_extraction_job`` into an empty sink.
 ``incremental_merge`` replays a fixed sequence of ``resume=True`` delta
 runs onto a copy of a committed sink. Both start from the same set-up:
-``get_spark`` plus one warm extraction job, repeated ``SETUPS`` times
-(the first launches the JVM, later ones restart the SparkContext in it).
+``get_spark`` plus one warm extraction job. The registry query pass is
+a probe of the traced ``fresh_extract`` run.
 """
 
 from __future__ import annotations
 
+import math
 import os
 import random
 import shutil
@@ -17,57 +18,51 @@ import sys
 import time
 from dataclasses import dataclass, field
 
-# Sizes keep one run near a minute: on 4 cores a cold set-up takes
-# ~25 s, a fresh job ~12 s and a delta run ~13 s, most of it fixed
+# Sizes keep one run near 45-70 s on 4 cores: a cold set-up takes
+# 25-30 s (JVM ~9 s, warm job ~16 s), a fresh job ~9 s, a delta run
+# 7-18 s (the first is the JVM's first resume run), most of it fixed
 # per-job cost.
-SETUPS = 1
 WARM_DOCS = 64            # warm job input; also incremental_merge's base
-FRESH_DOCS = 2000
-FRESH_PARTS = 8           # input files of the fresh corpus
-DELTA_NEW = 200           # new urls per delta run
-DELTA_RESENT = 50         # re-sent committed urls per delta run
-DELTAS = 2                # delta runs per incremental sequence
-# pipeline argument: the first delta's merge leaves ~5 files in the
-# fullest bucket and the second's ~2, so each sequence compacts once
+FRESH_DOCS = 1000
+FRESH_PARTS = 4           # input files of the fresh corpus
+DELTA_NEW = 30            # new urls per delta run
+DELTA_RESENT = 10         # re-sent committed urls per delta run
+DELTAS = 3                # delta runs per incremental sequence
+# pipeline argument, sized so that each sequence compacts exactly
+# COMPACTIONS times (a check counts any other number as a failure)
 COMPACT_FILES_PER_BUCKET = 4
+COMPACTIONS = 1
 CHECK_URLS = 16           # committed rows compared with extract_rows
 KERNEL_SAMPLE_DOCS = 600  # single-core kernel profile sample (traced)
 
-# Spark settings the benchmark pins and records
+# Registry query probe of the traced fresh_extract run: every bench.py
+# HEADLINE query once, each followed by count(), in a seeded order, over
+# the DATA_SEED tables, with the row counts pinned for those tables; the
+# rows of one seeded pick of ORACLE_CHECKED (fast DuckDB twins) are
+# compared with registry.oracle_sql()
+DATA_SEED = 42
+QUERY_ROWS = {
+    "tpch_q1": 6, "tpch_q3": 10, "join_broadcast": 25,
+    "manifest_counters": 150, "ring_buffer_topk": 450, "lang_id": 2,
+    "quality_scores": 2000, "gopher_quality": 2000, "fingerprints": 2000,
+    "minhash_signatures": 500, "ngram_jaccard": 20, "simhash64": 300,
+    "lsh_dup_candidates": 406, "duplicate_groups": 29, "embedding_topk": 10,
+    "embedding_knn": 60, "parse_details": 192, "tpch_q19": 1,
+    "merge_upsert": 3000, "stratified_sample": 5, "sequence_packing": 59,
+    "sequence_packing_strict": 60, "bm25_search": 20,
+    "dedup_incremental": 200, "tpch_q9": 168, "tpch_q21": 12,
+    "duplicated_spans": 251, "charset_extract": 146, "host_pagerank": 97,
+}
+ORACLE_CHECKED = ("tpch_q3", "tpch_q9", "tpch_q21", "join_broadcast",
+                  "minhash_signatures", "dedup_incremental", "host_pagerank")
+
+# Spark setting the benchmark pins and records
 MAX_PARTITION_BYTES = 4 << 20
-ARROW_BATCH_ROWS = 256
 
 STAGES = ("resume_plan", "extract_and_stage", "lineage_submit", "key_stats",
           "sink_and_manifest", "counters", "lineage_join")
-DIALECTS = ("utf8", "legacy_8bit", "cjk", "utf16")
 EVENT_METRICS = ("executor_run_s", "executor_cpu_s", "gc_s",
                  "shuffle_bytes", "spill_bytes", "tasks", "spark_jobs")
-
-PER_LAYER = (
-    ["session.get_spark_s", "session.warm_s",
-     "kernel.html.docs_per_s_core", "kernel.html.mb_per_s_core"]
-    + [f"kernel.html.{d}.docs_per_s_core" for d in DIALECTS]
-    + ["kernel.pdf.docs_per_s_core", "kernel.oversized.docs_per_s_core",
-       "kernel.error.docs_per_s_core", "kernel.html_share",
-       "operators.extract.arrow_to_pandas_s_per_kdoc",
-       "operators.extract.frame_build_s_per_kdoc",
-       "operators.extract.pandas_to_arrow_s_per_kdoc",
-       "operators.extract.boundary_share",
-       "operators.extract.noop_sink_s",
-       "plans.pipeline.stage_flat_s", "plans.pipeline.stage_bucketed_s",
-       "operators.partitioning.extract_task_skew",
-       "plans.pipeline.extract_tasks"]
-    + [f"plans.pipeline.{s}_s" for s in STAGES]
-    + ["plans.pipeline.extract_attributed_share",
-       "plans.pipeline.error_doc_share"]
-    + [f"plans.pipeline.{m}" for m in EVENT_METRICS]
-    + [f"sources.tables.{m}" for m in (
-        "files_rewritten", "files_pruned", "bytes_rewritten",
-        "rewrite_amplification", "compactions", "max_files_per_bucket",
-        "sink_files", "read_recover_s", "sink_bytes_per_input_byte",
-        "rewrite_bytes_per_new_byte")]
-    + ["operators.resume.skipped_docs", "trace.op_s"]
-)
 
 
 def median(values) -> float:
@@ -80,13 +75,17 @@ def log(msg: str) -> None:
 
 
 def input_bytes(path: str, first_rows: int | None = None) -> int:
-    """Payload bytes of a pages directory (optionally its first rows)."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as ds
+    """Payload bytes of a pages directory (optionally of its first
+    rows), from the size sidecars ``inputs.py`` writes next to each
+    part."""
+    import json
 
-    html = ds.dataset(path, format="parquet").to_table(columns=["html"])
-    col = html["html"] if first_rows is None else html["html"][:first_rows]
-    return int(pc.sum(pc.binary_length(col)).as_py() or 0)
+    sizes = []
+    for name in sorted(os.listdir(path)):
+        if name.startswith("_bytes-"):
+            with open(os.path.join(path, name), encoding="utf-8") as fh:
+                sizes += json.load(fh)
+    return sum(sizes[:first_rows])
 
 
 def _sink_layout(out_dir: str) -> dict:
@@ -117,9 +116,34 @@ def _norm_spans(spans) -> list[tuple] | None:
     return [(s["block_id"], s["start"], s["end"], s["tag"]) for s in spans]
 
 
+def _cell(v) -> str:
+    """One result cell in the order-insensitive digest form of the
+    repository's oracle tests: floats to 6 places, NULL and NaN alike."""
+    import numpy as np
+    import pandas as pd
+
+    if v is None or (isinstance(v, (float, np.floating)) and math.isnan(v)):
+        return "<null>"
+    if isinstance(v, (float, np.floating)):
+        return f"{round(float(v), 6):.6f}"
+    if isinstance(v, (bool, np.bool_)):
+        return str(bool(v)).lower()
+    if isinstance(v, np.integer):
+        return str(int(v))
+    if isinstance(v, pd.Timestamp):
+        return v.isoformat()
+    return str(v)
+
+
+def _digest(pdf) -> tuple[list[str], list[tuple]]:
+    cols = sorted(pdf.columns)
+    return cols, sorted(tuple(_cell(v) for v in row)
+                        for row in pdf[cols].itertuples(index=False))
+
+
 @dataclass
 class Op:
-    """One timed operation: a job, or a delta sequence."""
+    """One timed operation: a job, a delta sequence or a query."""
 
     seconds: float
     results: list = field(default_factory=list)
@@ -127,6 +151,7 @@ class Op:
     tags: list = field(default_factory=list)
     layout: dict = field(default_factory=dict)
     read_recover_s: float = 0.0
+    name: str = ""
 
 
 class Bench:
@@ -135,7 +160,7 @@ class Bench:
         self.seed = seed
         self.cores = cores
         self.spark = None
-        self.setups: list[tuple[float, float]] = []
+        self.get_spark_s = self.warm_s = 0.0
         self.attempted = 0
         self.failed = 0
         self.tracer = None
@@ -149,32 +174,26 @@ class Bench:
 
     # ------------------------------------------------------------- setup
     def setup(self, warm_pages: str) -> None:
+        """``get_spark`` plus one warm extraction job."""
         from westa_ocr_spark import session
         from westa_ocr_spark.plans import pipeline
 
         self.warm_out = os.path.join(self.work, "warm")
-        for _ in range(SETUPS):
-            if self.spark is not None:
-                self.spark.stop()
-            t0 = time.perf_counter()
-            spark = session.get_spark(
-                app_name="perfbench", master=f"local[{self.cores}]",
-                max_partition_bytes=MAX_PARTITION_BYTES)
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                           str(ARROW_BATCH_ROWS))
-            t1 = time.perf_counter()
-            shutil.rmtree(self.warm_out, ignore_errors=True)
-            res = pipeline.run_extraction_job(
-                spark, warm_pages, self.warm_out, resume=False,
-                run_id="warm", job_group="warm")
-            t2 = time.perf_counter()
-            self.spark = spark
-            self.setups.append((t1 - t0, t2 - t1))
-            log(f"setup get_spark {t1 - t0:.2f} s, warm job {t2 - t1:.2f} s")
-            self.check(res.docs_in == WARM_DOCS, "warm job docs_in")
+        t0 = time.perf_counter()
+        self.spark = session.get_spark(
+            app_name="perfbench", master=f"local[{self.cores}]",
+            max_partition_bytes=MAX_PARTITION_BYTES)
+        t1 = time.perf_counter()
+        res = pipeline.run_extraction_job(
+            self.spark, warm_pages, self.warm_out, resume=False,
+            run_id="warm", job_group="warm")
+        t2 = time.perf_counter()
+        self.get_spark_s, self.warm_s = t1 - t0, t2 - t1
+        log(f"setup get_spark {t1 - t0:.2f} s, warm job {t2 - t1:.2f} s")
+        self.check(res.docs_in == WARM_DOCS, "warm job docs_in")
 
     def setup_s(self) -> float:
-        return median(a + b for a, b in self.setups)
+        return self.get_spark_s + self.warm_s
 
     # ------------------------------------------------------------ one job
     def _job(self, pages: str, out: str, run_id: str, **kwargs):
@@ -274,6 +293,10 @@ class Bench:
             op.seconds = sum(op.run_seconds)
             op.layout = _sink_layout(sink)
             op.read_recover_s = self._spans_since(mark)
+            compactions = sum(r.compacted for r in op.results)
+            self.check(compactions == COMPACTIONS,
+                       f"sequence compacted {compactions} times, "
+                       f"expected {COMPACTIONS}")
             self.check_incremental_output(sink, op)
             ops.append(op)
         return ops
@@ -294,6 +317,62 @@ class Bench:
         self.check(last.docs_in == expected
                    and last.docs_done + last.docs_error == last.docs_in,
                    f"done + error == docs_in == {expected}")
+
+    # ------------------------------------------------- registry queries
+    def _query(self, name: str, sf_dir: str, tag: str) -> Op | None:
+        from westa_ocr_spark.registry import QUERIES
+
+        self.attempted += 1
+        self.spark.sparkContext.setJobGroup(tag, f"query {name}")
+        t0 = time.perf_counter()
+        try:
+            rows = QUERIES[name][0](self.spark, sf_dir).count()
+        except Exception as exc:  # an op failure is counted, not fatal
+            self.failed += 1
+            log(f"{tag} {name} failed: {exc!r}")
+            return None
+        secs = time.perf_counter() - t0
+        self.check(rows == QUERY_ROWS[name],
+                   f"{name}: {rows} rows, expected {QUERY_ROWS[name]}")
+        return Op(secs, [rows], [secs], [tag], name=name)
+
+    def query_pass(self, sf_dir: str, tag: str,
+                   deadline: float) -> list[Op]:
+        """Each ``QUERY_ROWS`` query once, followed by ``count()``, in a
+        seeded order; none is started after ``deadline``
+        (``perf_counter`` seconds)."""
+        order = sorted(QUERY_ROWS)
+        random.Random(self.seed).shuffle(order)
+        ops = []
+        for k, name in enumerate(order):
+            if time.perf_counter() > deadline:
+                log(f"{tag}: deadline reached, {len(order) - k} "
+                    "queries not run")
+                break
+            op = self._query(name, sf_dir, f"{tag}_{name}")
+            if op is not None:
+                ops.append(op)
+        log(f"{tag} queries {sum(op.seconds for op in ops):.2f} s")
+        return ops
+
+    def check_registry_output(self, sf_dir: str, tables) -> None:
+        """The rows of one seed-chosen query equal its DuckDB oracle's,
+        compared order-insensitively."""
+        import duckdb
+
+        from westa_ocr_spark.registry import QUERIES
+
+        name = random.Random(self.seed).choice(ORACLE_CHECKED)
+        fn, sql = QUERIES[name]
+        got = _digest(fn(self.spark, sf_dir).toPandas())
+        con = duckdb.connect()
+        for t in tables:
+            path = os.path.join(sf_dir, f"{t}.parquet")
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                        f"read_parquet('{path}')")
+        want = _digest(con.execute(sql).fetchdf())
+        con.close()
+        self.check(got == want, f"{name} rows equal its DuckDB oracle")
 
     # ------------------------------------------------------ stage probes
     def stage_variants(self, pages: str) -> dict[str, float]:
