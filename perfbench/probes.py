@@ -16,6 +16,7 @@ import time
 from collections import defaultdict
 
 _PAGE = os.sysconf("SC_PAGE_SIZE")
+_TICKS = os.sysconf("SC_CLK_TCK")
 
 
 def _stat_fields(pid: str) -> list[str] | None:
@@ -50,6 +51,21 @@ def descendants(root: int) -> list[int]:
         found += kids
         todo += kids
     return found
+
+
+def tree_cpu_s(root: int) -> float:
+    """CPU seconds (user + system) used so far by ``root`` and every
+    live process below it, each with its reaped children's, so a Python
+    worker that exits still counts through the process that waited for
+    it. Time the hypervisor stole from the guest is not in these
+    counters."""
+    ticks = 0
+    for pid in [root] + descendants(root):
+        fields = _stat_fields(str(pid))
+        if fields is not None:
+            # stat fields 14-17: utime, stime, cutime, cstime
+            ticks += sum(int(f) for f in fields[11:15])
+    return ticks / _TICKS
 
 
 def _peak_rss_bytes(pid: int) -> int:

@@ -18,13 +18,17 @@ import sys
 import time
 from dataclasses import dataclass, field
 
-# Sizes keep one run near 45-70 s on 4 cores: a cold set-up takes
-# 25-30 s (JVM ~9 s, warm job ~16 s), a fresh job ~9 s, a delta run
-# 7-18 s (the first is the JVM's first resume run), most of it fixed
-# per-job cost.
+# Sizes keep one run near 55-90 s on 4 cores: a cold set-up takes
+# 25-30 s (JVM ~9 s, warm job ~16 s); the first fresh job ~10 s and
+# the later ones ~7 s; the first resume run ~14 s, then ~11 s for a
+# delta run that compacts and ~6.5 s for one that does not, most of it
+# fixed per-job cost. Each window starts with one untimed warm-up
+# operation, so the JVM's first pass over the workload's code paths
+# stays out of the timed figures.
 WARM_DOCS = 64            # warm job input; also incremental_merge's base
 FRESH_DOCS = 1000
 FRESH_PARTS = 4           # input files of the fresh corpus
+FRESH_MIN_JOBS = 2        # timed fresh jobs per window, at the least
 DELTA_NEW = 30            # new urls per delta run
 DELTA_RESENT = 10         # re-sent committed urls per delta run
 DELTAS = 3                # delta runs per incremental sequence
@@ -143,7 +147,8 @@ def _digest(pdf) -> tuple[list[str], list[tuple]]:
 
 @dataclass
 class Op:
-    """One timed operation: a job, a delta sequence or a query."""
+    """One timed operation: a job, a delta sequence or a query, with the
+    wall and process-tree CPU seconds of each of its jobs."""
 
     seconds: float
     results: list = field(default_factory=list)
@@ -152,6 +157,7 @@ class Op:
     layout: dict = field(default_factory=dict)
     read_recover_s: float = 0.0
     name: str = ""
+    run_cpu: list = field(default_factory=list)  # CPU s per job
 
 
 class Bench:
@@ -199,7 +205,11 @@ class Bench:
     def _job(self, pages: str, out: str, run_id: str, **kwargs):
         from westa_ocr_spark.plans import pipeline
 
+        from probes import tree_cpu_s
+
         self.attempted += 1
+        me = os.getpid()
+        c0 = tree_cpu_s(me)
         t0 = time.perf_counter()
         try:
             res = pipeline.run_extraction_job(
@@ -208,10 +218,11 @@ class Bench:
         except Exception as exc:  # an op failure is counted, not fatal
             self.failed += 1
             log(f"{run_id} failed: {exc!r}")
-            return None, 0.0
+            return None, 0.0, 0.0
         secs = time.perf_counter() - t0
-        log(f"{run_id} {secs:.2f} s")
-        return res, secs
+        cpu = tree_cpu_s(me) - c0
+        log(f"{run_id} {secs:.2f} s, cpu {cpu:.2f} s")
+        return res, secs, cpu
 
     def _spans_since(self, mark: int) -> float:
         if self.tracer is None:
@@ -220,22 +231,31 @@ class Bench:
                 + self.tracer.total_s("sources.tables.ParquetTable.read", mark))
 
     # ---------------------------------------------------- fresh_extract
+    def fresh_warm_up(self, pages: str) -> None:
+        """One untimed fresh job, checked like the timed ones."""
+        out = os.path.join(self.work, "fresh")
+        res, _, _ = self._job(pages, out, "fresh_warm_up", resume=False)
+        if res is not None:
+            self.check(res.docs_in == FRESH_DOCS,
+                       f"fresh_warm_up: docs_in == {FRESH_DOCS}")
+        shutil.rmtree(out, ignore_errors=True)
+
     def fresh_window(self, pages: str, seconds: float, tag: str) -> list[Op]:
         out = os.path.join(self.work, "fresh")
         ops: list[Op] = []
         end = time.perf_counter() + seconds
-        while not ops or time.perf_counter() < end:
+        while len(ops) < FRESH_MIN_JOBS or time.perf_counter() < end:
             shutil.rmtree(out, ignore_errors=True)
             mark = len(self.tracer.spans) if self.tracer else 0
             run_id = f"{tag}{len(ops)}"
-            res, secs = self._job(pages, out, run_id, resume=False)
+            res, secs, cpu = self._job(pages, out, run_id, resume=False)
             if res is None:
                 break
             self.check(res.docs_in == FRESH_DOCS
                        and res.docs_done + res.docs_error == res.docs_in,
                        f"{run_id}: done + error == docs_in == {FRESH_DOCS}")
             ops.append(Op(secs, [res], [secs], [run_id], _sink_layout(out),
-                          self._spans_since(mark)))
+                          self._spans_since(mark), run_cpu=[cpu]))
         return ops
 
     def check_fresh_output(self, pages: str) -> None:
@@ -268,6 +288,19 @@ class Bench:
             self.check(got == want, f"committed rows of {row['url']}")
 
     # ------------------------------------------------ incremental_merge
+    def incremental_warm_up(self, deltas: list[str]) -> None:
+        """The first delta, untimed, onto a throwaway copy of the
+        committed sink: the JVM's first resume run."""
+        sink = os.path.join(self.work, "incremental_warm_up")
+        shutil.copytree(self.warm_out, sink)
+        res, _, _ = self._job(
+            deltas[0], sink, "incremental_warm_up", resume=True,
+            compact_files_per_bucket=COMPACT_FILES_PER_BUCKET)
+        if res is not None:
+            self.check(res.docs_processed == DELTA_NEW,
+                       "incremental_warm_up: resume skips the re-sent urls")
+        shutil.rmtree(sink, ignore_errors=True)
+
     def incremental_window(self, deltas: list[str], seconds: float,
                            tag: str) -> list[Op]:
         sink = os.path.join(self.work, "incremental")
@@ -280,15 +313,18 @@ class Bench:
             op = Op(0.0)
             for k, pages in enumerate(deltas):
                 run_id = f"{tag}{len(ops)}d{k}"
-                res, secs = self._job(
+                res, secs, cpu = self._job(
                     pages, sink, run_id, resume=True,
                     compact_files_per_bucket=COMPACT_FILES_PER_BUCKET)
                 if res is None:
                     return ops
+                if res.compacted:
+                    log(f"{run_id} compacted the sink")
                 self.check(res.docs_processed == DELTA_NEW,
                            f"{run_id}: resume skips the re-sent urls")
                 op.results.append(res)
                 op.run_seconds.append(secs)
+                op.run_cpu.append(cpu)
                 op.tags.append(run_id)
             op.seconds = sum(op.run_seconds)
             op.layout = _sink_layout(sink)
