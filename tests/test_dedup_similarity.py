@@ -502,6 +502,9 @@ def test_dedup_against_store_across_runs(spark, tmp_path):
     assert {r["doc_id"] for r in out2b.collect()} == {11, 13}
     reg = {r["fp"]: r["doc_id"] for r in store.read(spark).collect()}
     assert sorted(reg.values()) == [1, 2, 11, 13]
+    # merge_upsert(unique_keys=True) skips the sink's key dedup, so the
+    # caller's promise must hold: no fingerprint is stored twice
+    assert store.read(spark).count() == len(reg)
 
 
 def test_fp_bucket_store_modulus_pinned(spark, tmp_path):

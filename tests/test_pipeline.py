@@ -177,6 +177,8 @@ def test_cancellation_interrupts_run_and_resume_recovers(
     assert not t.is_alive()
     assert errs, "cancelled run must raise, not succeed"
     assert _time.time() - t0 < 30  # interrupted, not run to completion
+    # killed before the sink's first commit: the sink does not exist
+    assert not ParquetTable(f"{out}/extracted").exists()
 
     # recovery: plain resume run completes with the full result
     res = run_extraction_job(spark, base, out, resume=True, run_id="r2")

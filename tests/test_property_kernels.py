@@ -2,7 +2,7 @@
 arbitrary inputs, not just the seeded corpus."""
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from westa_ocr_spark.kernel.html_extract import extract_html
@@ -251,6 +251,9 @@ def test_gif_decoder_total(data):
 
 @settings(max_examples=300, deadline=None)
 @given(st.integers(0, 10**9), st.integers(0, 255), st.integers(0, 10**9))
+# an interlaced PNG whose corrupted height asked np.zeros for 15.8 GiB
+# before the IDAT length was checked (MemoryError, not ValueError)
+@example(pos=60680, val=72, seed=125)
 def test_png_gif_mutation_total(pos, val, seed):
     """Single-byte corruption of REAL png/gif files (incl. interlaced
     and local-palette layouts) either decodes or raises ValueError —
@@ -281,6 +284,9 @@ def test_png_gif_mutation_total(pos, val, seed):
 
 @settings(max_examples=400, deadline=None)
 @given(st.integers(0, 10**9), st.integers(0, 255), st.integers(0, 4))
+# a DRI segment whose length byte was zeroed (struct.error, not
+# ValueError)
+@example(pos=635680932, val=0, which=3)
 def test_jpeg_mutation_total(pos, val, which):
     """Single-byte corruption of real baseline/progressive color
     JPEGs (all subsamplings + restarts) raises ONLY ValueError —

@@ -72,47 +72,145 @@ def test_keyed_table_picks_parquet_without_iceberg(spark, tmp_path):
     assert isinstance(t, ParquetTable)
 
 
-def test_recover_promotes_stranded_tmp(spark, tbl, tmp_path):
-    """Crash between the two swap renames: path absent, merged data in
-    __tmp, prior data in __old -> read() recovers the NEWER (__tmp)."""
+class _Killed(Exception):
+    """Stands in for the process dying at a chosen point of a write."""
+
+
+def _die(*args, **kwargs):
+    raise _Killed
+
+
+_COLS = ["k", "p", "v", "b"]
+_BASE = [(k, 1, f"v{k}", k % 4) for k in range(8)]
+_BATCH = [(0, 1, "NEW", 0), (99, 1, "add", 3)]
+
+
+def _expect(rows):
+    return {(k, p): v for k, p, v, _ in rows}
+
+
+# op -> (partitioned table, the write, the rows once it has committed)
+_OPS = {
+    "append": (True, lambda s, t, b: t.append(b.filter("k = 99")),
+               _expect(_BASE + _BATCH[1:])),
+    "overwrite": (True, lambda s, t, b: t.overwrite(b), _expect(_BATCH)),
+    "merge_upsert": (True,
+                     lambda s, t, b: t.merge_upsert(s, b, keys=["k", "p"]),
+                     _expect(_BASE[1:] + _BATCH)),
+    "merge_upsert_flat": (False,
+                          lambda s, t, b: t.merge_upsert(s, b,
+                                                         keys=["k", "p"]),
+                          _expect(_BASE[1:] + _BATCH)),
+    "compact": (True, lambda s, t, b: t.compact(s), _expect(_BASE)),
+}
+
+
+def _files(tbl):
+    """Every file under the table but its commit log, relative."""
     import os
-    import time
 
-    df1 = spark.createDataFrame([(1, 1, "old")], ["k", "p", "v"])
-    tbl.merge_upsert(spark, df1, keys=["k", "p"])
-    # simulate the crash window: stage a completed merged dir as __tmp
-    # and move the live dir aside as __old
-    df2 = spark.createDataFrame([(1, 1, "new"), (2, 1, "b")],
-                                ["k", "p", "v"])
-    tmp = f"{tbl.path}__tmp_deadbeef"
-    df2.write.mode("overwrite").parquet(tmp)
-    time.sleep(0.05)
-    os.rename(tbl.path, f"{tbl.path}__old_cafebabe")
-    # make __tmp the newest candidate (mtime order decides)
-    os.utime(tmp)
-    assert tbl.exists()  # triggers recovery
-    assert _rows(spark, tbl) == {(1, 1): "new", (2, 1): "b"}
-    # leftovers swept
-    parent = os.path.dirname(tbl.path)
-    assert [n for n in os.listdir(parent) if "__old_" in n or "__tmp_" in n] == []
+    return {
+        os.path.relpath(os.path.join(root, n), tbl.path)
+        for root, _, names in os.walk(tbl.path)
+        if not os.path.relpath(root, tbl.path).startswith("_log")
+        for n in names
+    }
 
 
-def test_recover_restores_old_when_no_tmp(spark, tbl):
+def _committed(tbl):
+    """The file list of the newest commit file."""
+    import json
     import os
 
-    df1 = spark.createDataFrame([(1, 1, "a")], ["k", "p", "v"])
-    tbl.merge_upsert(spark, df1, keys=["k", "p"])
-    os.rename(tbl.path, f"{tbl.path}__old_cafebabe")
+    log = os.path.join(tbl.path, "_log")
+    newest = max(int(n.split(".")[0]) for n in os.listdir(log))
+    with open(os.path.join(log, f"{newest}.json")) as fh:
+        return set(json.load(fh)["files"])
+
+
+def _kill_write(spark, tmp_path, monkeypatch, op, before_commit):
+    """Run ``op`` on a committed table and kill it just before its
+    commit file is created, or just after (before any file is deleted).
+    Checks that the next read leaves exactly the committed files and
+    that a copy of the crashed directory reads the same rows."""
+    import shutil
+
+    partitioned, write, _ = _OPS[op]
+    tbl = ParquetTable(str(tmp_path / "t"),
+                       partition_by="b" if partitioned else None)
+    tbl.append(spark.createDataFrame(_BASE, _COLS).repartition(2))
+    old_files = _committed(tbl)
+    batch = spark.createDataFrame(_BATCH, _COLS)
+    with monkeypatch.context() as m:
+        if before_commit:
+            m.setattr(ParquetTable, "_commit", _die)
+            with pytest.raises(_Killed):
+                write(spark, tbl, batch)
+        else:
+            m.setattr(ParquetTable, "_vacuum", lambda self, keep: None)
+            write(spark, tbl, batch)
+    assert _files(tbl) != _committed(tbl)  # the kill left files behind
+    copy = ParquetTable(str(tmp_path / "copy"), partition_by=tbl.partition_by)
+    shutil.copytree(tbl.path, copy.path)
+    rows = _rows(spark, tbl)
+    assert _files(tbl) == _committed(tbl)
+    assert _rows(spark, copy) == rows
+    return tbl, old_files, rows
+
+
+@pytest.mark.parametrize("op", sorted(_OPS))
+def test_kill_before_commit_keeps_old_rows(spark, tmp_path, monkeypatch, op):
+    tbl, old_files, rows = _kill_write(spark, tmp_path, monkeypatch, op,
+                                       before_commit=True)
+    assert rows == _expect(_BASE)
+    assert _committed(tbl) == old_files
+
+
+@pytest.mark.parametrize("op", sorted(_OPS))
+def test_kill_after_commit_serves_new_rows(spark, tmp_path, monkeypatch, op):
+    tbl, old_files, rows = _kill_write(spark, tmp_path, monkeypatch, op,
+                                       before_commit=False)
+    assert rows == _OPS[op][2]
+    assert _committed(tbl) != old_files
+
+
+def test_killed_first_write_leaves_no_table(spark, tbl, monkeypatch):
+    """No commit file means nothing happened, also for the first write:
+    the table does not exist, and the next write starts clean."""
+    df = spark.createDataFrame([(1, 1, "a")], ["k", "p", "v"])
+    with monkeypatch.context() as m:
+        m.setattr(ParquetTable, "_commit", _die)
+        with pytest.raises(_Killed):
+            tbl.append(df)
+    assert not tbl.exists()
+    tbl.append(df)
+    assert _rows(spark, tbl) == {(1, 1): "a"}
+    assert _files(tbl) == _committed(tbl)
+
+
+def test_torn_commit_file_never_happened(spark, tbl):
+    """A commit file created but never filled (killed during its own
+    write) does not count: reads serve the commit before it, and the
+    next write takes its version."""
+    import os
+
+    tbl.append(spark.createDataFrame([(1, 1, "a")], ["k", "p", "v"]))
+    open(os.path.join(tbl.path, "_log", "1.json"), "w").close()
     assert tbl.exists()
     assert _rows(spark, tbl) == {(1, 1): "a"}
+    assert os.listdir(os.path.join(tbl.path, "_log")) == ["0.json"]
+    tbl.append(spark.createDataFrame([(2, 1, "b")], ["k", "p", "v"]))
+    assert sorted(os.listdir(os.path.join(tbl.path, "_log"))) == [
+        "0.json", "1.json"]
+    assert _rows(spark, tbl) == {(1, 1): "a", (2, 1): "b"}
 
 
 def test_partitioned_merge_rewrites_only_affected_buckets(
         spark, tmp_path):
     """Bucket-scoped merge: a batch touching one bucket must leave
-    every other bucket's data FILES untouched (renamed into the new
-    generation, not rewritten) — the parquet stand-in for Iceberg's
-    file-level MERGE."""
+    every other bucket's data FILES untouched (left in place, not
+    rewritten) — the parquet stand-in for Iceberg's file-level
+    MERGE."""
     import os
 
     tbl = ParquetTable(str(tmp_path / "pt"), partition_by="b")
@@ -133,13 +231,92 @@ def test_partitioned_merge_rewrites_only_affected_buckets(
         [(0, 1, "NEW", 0), (99, 1, "added", 0)], ["k", "p", "v", "b"]
     )
     tbl.merge_upsert(spark, batch, keys=["k", "p"])
-    # untouched buckets: identical file names AND inodes (renamed dirs)
+    # untouched buckets: identical file names AND inodes (left in place)
     for b in (1, 2, 3):
         assert bucket_files(b) == before[b], f"bucket {b} was rewritten"
     assert bucket_files(0) != before[0]
     got = _rows(spark, tbl)
     assert got[(0, 1)] == "NEW" and got[(99, 1)] == "added"
     assert len(got) == 17
+
+
+_PBASE = [(k, 1, f"v{k}", k % 4) for k in range(8)]
+_PBATCH = [(0, 1, "NEWGEN", 0), (4, 1, "v4", 0)]
+
+
+def _pexpect():
+    expect = _expect(_PBASE)
+    expect[(0, 1)] = "NEWGEN"
+    return expect
+
+
+def test_partitioned_merge_swap_phase_crash_promotes_tmp(
+        spark, tmp_path, monkeypatch):
+    """A partitioned merge killed right after its commit file is
+    created (the swap from the old generation to the new) and before
+    any old file is deleted: old and new part files of the affected
+    bucket sit side by side. The next read promotes the new ones —
+    serves the merged rows and deletes the replaced files — and every
+    unaffected bucket keeps its files, same inodes."""
+    import os
+
+    tbl = ParquetTable(str(tmp_path / "pt"), partition_by="b")
+    tbl.merge_upsert(spark, spark.createDataFrame(_PBASE, _COLS),
+                     keys=["k", "p"])
+    before = _committed(tbl)
+    inodes = {f: os.stat(os.path.join(tbl.path, f)).st_ino
+              for f in before if not f.startswith("b=0" + os.sep)}
+    with monkeypatch.context() as m:
+        m.setattr(ParquetTable, "_vacuum", lambda self, keep: None)
+        tbl.merge_upsert(spark, spark.createDataFrame(_PBATCH, _COLS),
+                         keys=["k", "p"])
+    after = _committed(tbl)
+    replaced = before - after
+    assert replaced
+    assert all(f.startswith("b=0" + os.sep) for f in replaced)
+    assert replaced <= _files(tbl)  # still on disk after the kill
+    assert _rows(spark, tbl) == _pexpect()
+    assert _files(tbl) == after
+    for f, ino in inodes.items():
+        assert os.stat(os.path.join(tbl.path, f)).st_ino == ino
+
+
+def test_partitioned_merge_cleanup_phase_crash_drops_marker(
+        spark, tmp_path, monkeypatch):
+    """A partitioned merge killed during its clean-up, after its commit
+    file and after deleting only one of the files it replaced: the next
+    read finishes the clean-up — it deletes the other replaced file and
+    Spark's ``_SUCCESS`` marker, neither listed by the commit — and
+    serves the merged rows."""
+    import os
+
+    tbl = ParquetTable(str(tmp_path / "pt"), partition_by="b")
+    base = spark.createDataFrame(_PBASE, _COLS)
+    # two appends: bucket b=0 gets one file per key, both overlapping
+    # the batch, so the merge replaces two files
+    tbl.append(base.filter("k != 4"))
+    tbl.append(base.filter("k = 4"))
+    before = _committed(tbl)
+    vacuum = ParquetTable._vacuum
+
+    def killed_midway(self, keep):
+        if not before - keep:  # a read's clean-up, not the commit's
+            return vacuum(self, keep)
+        os.remove(os.path.join(self.path, sorted(before - keep)[0]))
+        raise _Killed
+
+    with monkeypatch.context() as m:
+        m.setattr(ParquetTable, "_vacuum", killed_midway)
+        with pytest.raises(_Killed):
+            tbl.merge_upsert(spark, spark.createDataFrame(_PBATCH, _COLS),
+                             keys=["k", "p"])
+    after = _committed(tbl)
+    assert len(before - after) == 2
+    assert len((before - after) & _files(tbl)) == 1
+    assert "_SUCCESS" in _files(tbl)
+    assert _rows(spark, tbl) == _pexpect()
+    assert _files(tbl) == after
+    assert not os.path.exists(os.path.join(tbl.path, "_SUCCESS"))
 
 
 def test_compact_collapses_bucket_files(spark, tmp_path):
@@ -165,37 +342,6 @@ def test_compact_collapses_bucket_files(spark, tmp_path):
     tbl.compact(spark)
     assert all(n_files(b) == 1 for b in range(4))
     assert _rows(spark, tbl) == before
-
-
-def test_partitioned_merge_move_phase_crash_recovers(spark, tmp_path):
-    """Crash mid-move (marker present in __tmp): recovery must move
-    the committed unaffected bucket dirs BACK and discard the
-    uncommitted merge."""
-    import os
-    import shutil
-
-    tbl = ParquetTable(str(tmp_path / "pt"), partition_by="b")
-    base = spark.createDataFrame(
-        [(k, 1, f"v{k}", k % 4) for k in range(8)], ["k", "p", "v", "b"]
-    )
-    tbl.merge_upsert(spark, base, keys=["k", "p"])
-    # simulate a half-done move phase: affected bucket b=0 freshly
-    # written into __tmp, marker still present, and unaffected b=1
-    # already moved over from the live table
-    tmp = f"{tbl.path}__tmp_deadbeef"
-    spark.createDataFrame([(0, 1, "UNCOMMITTED", 0)],
-                          ["k", "p", "v", "b"]) \
-        .write.partitionBy("b").mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, "_MERGE_MOVES"), "w") as fh:
-        fh.write("b=0")
-    os.rename(os.path.join(tbl.path, "b=1"), os.path.join(tmp, "b=1"))
-    assert shutil.os.path.isdir(os.path.join(tmp, "b=1"))
-    assert tbl.exists()  # triggers recovery
-    got = _rows(spark, tbl)
-    # original table fully restored, uncommitted merge discarded
-    assert got == {(k, 1): f"v{k}" for k in range(8)}
-    parent = os.path.dirname(tbl.path)
-    assert [n for n in os.listdir(parent) if "__tmp_" in n] == []
 
 
 class _StubCatalog:
@@ -256,74 +402,10 @@ def test_iceberg_merge_contract():
     assert re.sub(r"\s+", " ", sess.sqls[0]) == expected
 
 
-def test_partitioned_merge_swap_phase_crash_promotes_tmp(spark, tmp_path):
-    """3->4 window (round-4 fix): path already renamed to __old, tmp
-    complete but still marker-bearing. Recovery must promote the tmp
-    — it holds the full new generation — not treat it as a half-done
-    move phase."""
-    import os
-
-    tbl = ParquetTable(str(tmp_path / "pt"), partition_by="b")
-    base = spark.createDataFrame(
-        [(k, 1, f"v{k}", k % 4) for k in range(8)], ["k", "p", "v", "b"]
-    )
-    tbl.merge_upsert(spark, base, keys=["k", "p"])
-    # build a complete new generation in __tmp: merged b=0 plus every
-    # unaffected bucket dir moved over, marker still present
-    tmp = f"{tbl.path}__tmp_cafef00d"
-    spark.createDataFrame(
-        [(0, 1, "NEWGEN", 0), (4, 1, "v4", 0)], ["k", "p", "v", "b"]
-    ).write.partitionBy("b").mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, "_MERGE_MOVES"), "w") as fh:
-        fh.write("b=0")
-    for b in (1, 2, 3):
-        os.rename(os.path.join(tbl.path, f"b={b}"),
-                  os.path.join(tmp, f"b={b}"))
-    # phase 3 done: live path renamed away
-    os.rename(tbl.path, f"{tbl.path}__old_dead0001")
-
-    assert tbl.exists()  # recovery promotes the tmp
-    got = _rows(spark, tbl)
-    expect = {(k, 1): f"v{k}" for k in range(8)}
-    expect[(0, 1)] = "NEWGEN"
-    assert got == expect
-    parent = os.path.dirname(tbl.path)
-    leftovers = [n for n in os.listdir(parent)
-                 if "__tmp_" in n or "__old_" in n]
-    assert leftovers == []
-    assert not os.path.exists(os.path.join(tbl.path, "_MERGE_MOVES"))
-
-
-def test_partitioned_merge_cleanup_phase_crash_drops_marker(
-        spark, tmp_path):
-    """Phase-5 window: swap completed, marker still in the live path,
-    __old not yet deleted. Recovery keeps the live table, drops the
-    marker, sweeps the old generation."""
-    import os
-    import shutil
-
-    tbl = ParquetTable(str(tmp_path / "pt"), partition_by="b")
-    base = spark.createDataFrame(
-        [(k, 1, f"v{k}", k % 4) for k in range(8)], ["k", "p", "v", "b"]
-    )
-    tbl.merge_upsert(spark, base, keys=["k", "p"])
-    with open(os.path.join(tbl.path, "_MERGE_MOVES"), "w") as fh:
-        fh.write("b=0")
-    old = f"{tbl.path}__old_dead0002"
-    shutil.copytree(tbl.path, old)
-
-    assert tbl.exists()
-    assert _rows(spark, tbl) == {(k, 1): f"v{k}" for k in range(8)}
-    parent = os.path.dirname(tbl.path)
-    assert [n for n in os.listdir(parent) if "__old_" in n] == []
-    assert not os.path.exists(os.path.join(tbl.path, "_MERGE_MOVES"))
-
-
 def test_file_scoped_merge_prunes_nonoverlapping_files(spark, tmp_path):
     """O(delta) scoping: files in an affected bucket whose footer key
-    range cannot intersect the batch are hard-linked (same inode) into
-    the new generation, and the stats report the measured rewrite
-    amplification."""
+    range cannot intersect the batch stay in place (same inode), and
+    the stats report the measured rewrite amplification."""
     import os
 
     tbl = ParquetTable(str(tmp_path / "pt"), partition_by="b")
@@ -364,8 +446,8 @@ def test_file_scoped_merge_prunes_nonoverlapping_files(spark, tmp_path):
         n: os.stat(os.path.join(bucket, n)).st_ino
         for n in os.listdir(bucket) if n.endswith(".parquet")
     }
-    # the non-overlapping file survived as the SAME inode (linked, not
-    # rewritten)
+    # the non-overlapping file survived as the SAME inode (left in
+    # place, not rewritten)
     for n in lo_files:
         assert files_after[n] == files_before[n]
     got = _rows(spark, tbl)

@@ -121,6 +121,22 @@ def test_lang_id_twelve_languages(spark):
     }
     assert got == {lang: lang for lang in samples}
 
+    # missing text is 'und', never a crash: a Spark NULL, and None or
+    # NaN as they arrive in a pandas batch
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from westa_ocr_spark.functions.textfns import _lang_id_batches
+
+    nulls = spark.createDataFrame(
+        [(None,)], T.StructType([T.StructField("text", T.StringType())])
+    )
+    assert [r["lang_id"] for r in with_lang_id(nulls, "text").collect()] \
+        == ["und"]
+    (batch,) = _lang_id_batches([pd.Series([np.nan, None], dtype=object)])
+    assert batch.tolist() == ["und", "und"]
+
 
 def test_with_lang_id_matches_jvm_form(spark):
     """Round 6: with_lang_id moved to a vectorized Arrow batch (the

@@ -185,7 +185,7 @@ def _lang_id_py(text, contrib, cjk) -> str:
 
     n = len(_LANGS_SORTED)
     counts = [0] * n
-    if text:
+    if isinstance(text, str):  # None and pandas' NaN give 'und'
         for w, c in Counter(text.split(" ")).items():
             v = contrib.get(w)
             if v is not None:

@@ -971,6 +971,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             pos = ent_end
             continue
         elif marker == 0xDD:
+            if len(body) < 2:
+                raise ValueError("jpeg: truncated DRI segment")
             (restart_interval,) = struct.unpack(">H", body[:2])
         pos += 2 + seglen
     if not saw_scan or h is None:

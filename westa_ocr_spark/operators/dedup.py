@@ -805,9 +805,10 @@ def fp_bucket_store(path: str, n_buckets: int = N_FP_BUCKETS):
     want few buckets (8-16) while a 10^12-doc store wants enough that
     one bucket's fingerprint column still fits an executor scan
     (1024+). The count is pinned in a ``<path>.fp_buckets`` sidecar
-    (OUTSIDE the table dir — merges swap whole generations of it) at
-    creation and re-read on open, so later batches can never bucket
-    with a different modulus than the store was laid out with.
+    (OUTSIDE the table dir — a table read deletes every file there
+    that its commit log does not list) at creation and re-read on
+    open, so later batches can never bucket with a different modulus
+    than the store was laid out with.
     """
     import os
 
@@ -885,9 +886,9 @@ def dedup_against_store(spark, docs: DataFrame, store,
         if bucketed:
             known = known.filter(F.col(FP_BUCKET_COL).isin(buckets))
         # no second checkpoint: the anti-join plan reads the CURRENT
-        # store generation and is evaluated exactly once, inside
+        # commit's files and is evaluated exactly once, inside
         # merge_upsert's write — which completes before the commit
-        # swaps generations, so the files it reads still exist; the
+        # deletes any file, so the files it reads still exist; the
         # batch side is already checkpointed above
         canon = canon.join(known.select("fp"), "fp", "left_anti")
     # register FIRST, then derive the survivor set from the COMMITTED
@@ -907,10 +908,10 @@ def dedup_against_store(spark, docs: DataFrame, store,
     admitted = (
         post.join(fps, ["fp", "doc_id"], "left_semi")
         .select(F.col("doc_id").alias("__surv_id"))
-        # ADVICE r4: admitted ids are tiny but lazily read THIS store
-        # generation — checkpoint so a caller that defers evaluation
-        # past the next merge/compaction (which swap-deletes these
-        # files) still resolves the same survivor set
+        # ADVICE r4: admitted ids are tiny but lazily read THIS
+        # commit's files — checkpoint so a caller that defers
+        # evaluation past the next merge/compaction (whose commit
+        # deletes these files) still resolves the same survivor set
         .localCheckpoint(eager=True)
     )
     survivors = _gated_broadcast(admitted)

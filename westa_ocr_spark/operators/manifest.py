@@ -1,4 +1,4 @@
-"""Per-document manifest + per-partition lineage aggregation.
+"""Per-document manifest aggregation.
 
 Re-expresses the reference's job-summary counters as a single hash
 aggregation (Catalyst partial+final covers the reference's incremental
@@ -15,12 +15,8 @@ per-page counting):
   every input doc yields at least one extracted row (DONE-empty or
   ERROR), mirroring ``/root/reference/app/worker.py:236-254``.
 
-Lineage mirrors the reference's ``gemini_logs`` request-snapshot table
-(``/root/reference/app/repository.py:84-97``,
-``/root/reference/app/worker.py:567-595``) at partition granularity:
-one row per executor partition with row/byte/error counts — metrics,
-never row data, so runtime nondeterminism (partition ids) stays out of
-the result tables.
+The per-partition lineage table is aggregated in
+``plans/pipeline.py``, next to the staged files it reads.
 """
 
 from __future__ import annotations
@@ -34,13 +30,6 @@ def build_manifest(extracted: DataFrame) -> DataFrame:
     is_done = F.col("status") == "DONE"
     agg = extracted.groupBy("url").agg(
         F.count(F.lit(1)).cast("int").alias("total_blocks"),
-        # distinct (url, page_index) keys this url contributes — rides
-        # the same shuffle; summing it globally lets the pipeline's
-        # J5 dup-key check reuse this aggregation instead of running
-        # its own countDistinct scan over the staged output
-        F.countDistinct("page_index").cast("int").alias(
-            "distinct_blocks"
-        ),
         F.count(F.when(is_done, F.lit(1))).cast("int").alias(
             "processed_blocks"
         ),
@@ -59,7 +48,6 @@ def build_manifest(extracted: DataFrame) -> DataFrame:
     return agg.select(
         "url",
         "total_blocks",
-        "distinct_blocks",
         "processed_blocks",
         F.greatest(
             F.lit(0), F.col("total_blocks") - F.col("processed_blocks")
@@ -73,30 +61,3 @@ def build_manifest(extracted: DataFrame) -> DataFrame:
         ).alias("last_error"),
     )
 
-
-def build_lineage(extracted_with_pid: DataFrame, run_id: str) -> DataFrame:
-    """Per-partition lineage manifest for one pipeline run.
-
-    Expects a ``_pid`` column captured with ``spark_partition_id()`` in
-    the same stage as the extraction (so it reflects the real executor
-    partitions, not a later scan's).
-    """
-    return (
-        extracted_with_pid.groupBy("_pid")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.countDistinct("url").alias("docs"),
-            F.sum("input_bytes").alias("input_bytes"),
-            F.sum(
-                F.when(F.col("status") == "ERROR", 1).otherwise(0)
-            ).alias("errors"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.col("_pid").alias("partition_id"),
-            "rows",
-            "docs",
-            "input_bytes",
-            "errors",
-        )
-    )

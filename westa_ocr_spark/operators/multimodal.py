@@ -609,12 +609,13 @@ def decode_png_pixels(data: bytes):
         raw += dec.flush()
     except zlib.error as exc:
         raise ValueError(f"corrupt PNG (IDAT inflate: {exc})") from exc
+    # checked before any pixel buffer exists, so the allocation below
+    # is bounded by the inflated data, not by the header's dimensions
+    if len(raw) != expected:
+        raise ValueError("corrupt PNG (IDAT size mismatch)")
     bpp = max(1, channels * depth // 8)  # filter distance in bytes
     if interlace == 0:
-        stride = row_stride(w)
-        if len(raw) != (stride + 1) * h:
-            raise ValueError("corrupt PNG (IDAT size mismatch)")
-        px = unpack_rows(_png_unfilter(raw, h, stride, bpp), w)
+        px = unpack_rows(_png_unfilter(raw, h, row_stride(w), bpp), w)
     else:  # Adam7 (round 5): 7 independently-filtered sub-images
         px = np.zeros((h, w, channels), dtype=np.uint8)
         offset = 0
@@ -624,14 +625,9 @@ def decode_png_pixels(data: bytes):
             if pw <= 0 or ph <= 0:
                 continue
             pstride = row_stride(pw)
-            need = (pstride + 1) * ph
-            if offset + need > len(raw):
-                raise ValueError("corrupt PNG (Adam7 pass underrun)")
             sub = unpack_rows(_png_unfilter(raw, ph, pstride, bpp, offset), pw)
             px[y0::dy, x0::dx] = sub
-            offset += need
-        if offset != len(raw):
-            raise ValueError("corrupt PNG (Adam7 trailing data)")
+            offset += (pstride + 1) * ph
     if ctype == 3:  # palette indices -> RGB
         if plte is None or len(plte) % 3:
             raise ValueError("corrupt PNG (palette missing/ragged)")

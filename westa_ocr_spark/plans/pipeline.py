@@ -2,7 +2,7 @@
 
     read pages -> [resume anti-join] -> skew split (oversized leg)
       -> mapInPandas(extract)        -> staged write (single pass)
-      -> key-dedupe check / promote / merge into keyed sink
+      -> key-dedupe check / commit or merge into keyed sink
       -> per-partition lineage       -> groupBy(url) manifest
 
 Reference lifecycle: ``/root/reference/app/worker.py:170-505``.
@@ -17,17 +17,23 @@ duplicate inputs for never shuffling raw payload bytes — at 100 TB
 the payload shuffle is the single most expensive thing a plan can do,
 and extracted text is ~5-10x smaller than the html it came from.
 
-The extract stage executes once: its output is staged to parquet and
-the lineage, the key-dedupe check, the sink promote/merge, and the
-manifest all derive from the staged files. On a fresh sink with no
-duplicate keys the staging directory simply *is* the sink (written in
-place, no rewrite); re-runs and dup-bearing batches pay the
-parquet-fallback merge (Iceberg MERGE INTO makes that a metadata
-commit on a real deployment — see sources/tables.py).
+The extract stage executes once, and the tail runs its steps in order
+on the calling thread. On a fresh sink the extract output is committed
+straight into the sink (written once, no rewrite); an incremental run
+stages it and merges it in (Iceberg MERGE INTO makes that a metadata
+commit on a real deployment — see sources/tables.py). Lineage, the
+key-dedupe check and the manifest all derive from the staged files.
+
+Crash rule: the extracted, manifest and lineage tables commit through
+their own logs (``ParquetTable``), so a killed run leaves each table at
+its last commit, and a rerun converges from there. The incremental
+staging directory is the only state outside those logs; the next run
+deletes it.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 import time
 from dataclasses import dataclass, field
@@ -67,8 +73,6 @@ COMPACT_FILES_PER_BUCKET = 64
 
 def _max_files_per_bucket(path: str) -> int:
     """Fullest partition directory's parquet-file count (0 if none)."""
-    import os
-
     worst = 0
     if not os.path.isdir(path):
         return 0
@@ -101,9 +105,9 @@ def cancel_extraction(spark: SparkSession, job_group: str) -> None:
 
     The batch analogue of the reference's job cancellation (T6,
     ``/root/reference/app/worker.py`` cancel path): every Spark action
-    of the tagged run is interrupted; the staging/sink state it leaves
-    behind is exactly what checkpointed resume recovers from, so a
-    cancelled run re-runs safely.
+    of the tagged run is interrupted; a write cut off before its commit
+    never happened, and resume starts again from the committed tables,
+    so a cancelled run re-runs safely.
     """
     spark.sparkContext.cancelJobGroup(job_group)
 
@@ -170,16 +174,13 @@ def run_extraction_job(
     manifest_tbl = ParquetTable(f"{out_dir}/manifest")
     lineage_tbl = ParquetTable(f"{out_dir}/lineage")
 
-    # sweep leftovers of cancelled/crashed runs: every temp dir is
-    # re-derived from scratch by the run that needs it, so stale ones
-    # are pure garbage (committed state lives only in the three
-    # tables above, which have their own crash recovery)
-    import os
-
+    # the incremental staging directory is the one piece of run state
+    # outside the tables' commit logs: a cancelled or crashed run's
+    # leftover is re-derived from scratch by the run that needs it
+    staging_path = f"{out_dir}/_staging_{run_id}"
     if os.path.isdir(out_dir):
         for name in os.listdir(out_dir):
-            if name.startswith(("_staging_", "_manifest_opt_",
-                                "_dedup_")):
+            if name.startswith("_staging_"):
                 shutil.rmtree(os.path.join(out_dir, name),
                               ignore_errors=True)
 
@@ -187,21 +188,19 @@ def run_extraction_job(
     # reads only url+html (ReadSchema pruning).
     work = pages.select("url", "html")
 
+    first_run = not extracted_tbl.exists()
     resumed_skipped = 0
-    if resume and extracted_tbl.exists():
+    if resume and not first_run and manifest_tbl.exists():
         # the done-keys side is the MANIFEST (one tiny row per
         # committed url) rather than the per-page sink: the anti-join
         # probe shrinks by the pages-per-doc factor and never touches
-        # the wide table. A crash between sink merge and manifest
-        # upsert can only UNDER-report done urls — those docs
+        # the wide table. A crash between the sink commit and the
+        # manifest commit can only UNDER-report done urls — those docs
         # re-extract and the idempotent keyed sink absorbs them
-        # (at-least-once, the T4/T5 contract).
-        if manifest_tbl.exists():
-            done = manifest_tbl.read(spark)
-            resumed_skipped = done.count()
-        else:
-            done = extracted_tbl.read(spark)
-            resumed_skipped = done.select("url").distinct().count()
+        # (at-least-once, the T4/T5 contract); with no manifest at all
+        # (a first run killed there) every doc re-extracts.
+        done = manifest_tbl.read(spark)
+        resumed_skipped = done.count()
         work = resume_filter(work, done, key="url")
         _mark("resume_plan")
     work = skew_split(work, oversized_threshold=oversized_threshold,
@@ -212,19 +211,15 @@ def run_extraction_job(
         F.pmod(F.xxhash64("url"), F.lit(sink_buckets)).cast("int"),
     )
 
-    # single execution: stage to parquet (in place on a fresh sink —
-    # hive-partitioned by url_bucket so later incremental runs get
-    # pruned reads and bucket-scoped merges; the narrow extract write
-    # stays shuffle-free, each task fans its rows into bucket dirs).
-    first_run = not extracted_tbl.exists()
-    staging_path = (
-        extracted_tbl.path if first_run
-        else f"{out_dir}/_staging_{run_id}"
-    )
-    writer = extracted.write.mode("overwrite")
+    # single execution: on a fresh sink the extract output is committed
+    # straight into it (hive-partitioned by url_bucket so later
+    # incremental runs get pruned reads and bucket-scoped merges; the
+    # narrow extract write stays shuffle-free, each task fans its rows
+    # into bucket dirs); an incremental run stages it for the merge.
     if first_run:
-        writer = writer.partitionBy("url_bucket")
-    writer.parquet(staging_path)
+        extracted_tbl.append(extracted)
+    else:
+        extracted.write.mode("overwrite").parquet(staging_path)
     _mark("extract_and_stage")
 
     # The bucket-partitioned staging dir holds tasks x buckets SMALL
@@ -243,19 +238,16 @@ def run_extraction_job(
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(128 << 20))
     spark.conf.set("spark.sql.files.openCostInBytes", str(1 << 20))
     try:
-        staged = spark.read.parquet(staging_path)
+        staged = (
+            extracted_tbl.read(spark) if first_run
+            else spark.read.parquet(staging_path)
+        )
 
         # per-partition lineage from the staged part files (one file per
         # extract partition) — the gemini_logs analogue
-        # (/root/reference/app/repository.py:84-97), metrics only. The
-        # lineage job is independent of everything downstream, so it runs
-        # on its OWN thread while the key-stats/manifest jobs proceed —
-        # Spark schedules concurrent jobs from one session fine, and at
-        # bench scale these tail jobs are scheduling-bound constants that
-        # would otherwise serialize (measured ~1.5 s saved per run).
-        import threading
-
-        lineage = (
+        # (/root/reference/app/repository.py:84-97), metrics only; it
+        # runs first, while the staged files are still this run's output
+        lineage_tbl.append(
             staged.groupBy(
                 F.regexp_extract(F.input_file_name(), r"part-(\d+)", 1)
                 .cast("int")
@@ -270,96 +262,18 @@ def run_extraction_job(
             )
             .select(F.lit(run_id).alias("run_id"), "*")
         )
-        lineage_err: list[BaseException] = []
+        _mark("lineage")
 
-        def _lineage_job() -> None:
-            try:
-                # job groups are thread-local: re-tag inside the thread so
-                # cancel_extraction reaches the lineage job too
-                if job_group is not None:
-                    spark.sparkContext.setJobGroup(
-                        job_group, f"extraction {run_id} (lineage)",
-                        interruptOnCancel=True,
-                    )
-                lineage_tbl.append(lineage)
-            except BaseException as exc:  # re-raised on join
-                lineage_err.append(exc)
-
-        lineage_thread = threading.Thread(target=_lineage_job, daemon=True)
-        lineage_thread.start()
-        _mark("lineage_submit")
-
-        def _join_lineage() -> None:
-            # The lineage job scans ``staged``'s files; call this BEFORE
-            # any branch that deletes or replaces them (staging rmtree,
-            # dup-key sink rewrite), or the still-running scan would hit
-            # missing files and fail a run whose sink already committed.
-            lineage_thread.join()
-            if lineage_err:
-                raise lineage_err[0]
-
-        # fresh-sink runs: build the manifest OPTIMISTICALLY on a thread
-        # overlapping the lineage job, confirmed by an atomic rename.
-        # The J5 dup-key check NO LONGER runs its own countDistinct
-        # scan: build_manifest's per-url ``distinct_blocks`` rides the
-        # manifest shuffle, and summing the (tiny) manifest output
-        # yields the global key stats — one scan of the staged files
-        # where round 2 had two. (``first_run`` was decided before
-        # staging — staging writes INTO the sink path on a fresh run,
-        # so re-probing here would lie.)
-        manifest_err: list[BaseException] = []
-        opt_manifest_path = f"{out_dir}/_manifest_opt_{run_id}"
-        manifest_thread = None
-        if first_run:
-
-            def _manifest_job() -> None:
-                try:
-                    if job_group is not None:
-                        spark.sparkContext.setJobGroup(
-                            job_group, f"extraction {run_id} (manifest)",
-                            interruptOnCancel=True,
-                        )
-                    build_manifest(staged).write.mode("overwrite").parquet(
-                        opt_manifest_path
-                    )
-                except BaseException as exc:
-                    manifest_err.append(exc)
-
-            manifest_thread = threading.Thread(
-                target=_manifest_job, daemon=True
-            )
-            manifest_thread.start()
-
-        if first_run:
-            manifest_thread.join()
-            if manifest_err:
-                raise manifest_err[0]
-            # global key stats from the manifest output (one row per
-            # url): dup detection is still GLOBAL — per-url distinct
-            # page counts sum to the corpus-wide distinct key count.
-            mstats = (
-                spark.read.parquet(opt_manifest_path)
-                .agg(
-                    F.sum("total_blocks").alias("rows"),
-                    F.sum("distinct_blocks").alias("keys"),
-                    F.count(F.lit(1)).alias("docs"),
-                    F.count(
-                        F.when(F.col("status") == "ERROR", F.lit(1))
-                    ).alias("err_docs"),
-                )
-                .collect()[0]
-            )
-        else:
-            # incremental runs have no manifest thread: one keys-only
-            # aggregation over the (small) staged batch
-            mstats = staged.agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.countDistinct("url", "page_index").alias("keys"),
-                F.countDistinct("url").alias("docs"),
-                F.countDistinct(
-                    F.when(F.col("status") == "ERROR", F.col("url"))
-                ).alias("err_docs"),
-            ).collect()[0]
+        # J5 key stats: one aggregation over this run's staged rows.
+        # Duplicate-key detection is GLOBAL over the run's output.
+        mstats = staged.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.countDistinct("url", "page_index").alias("keys"),
+            F.countDistinct("url").alias("docs"),
+            F.countDistinct(
+                F.when(F.col("status") == "ERROR", F.col("url"))
+            ).alias("err_docs"),
+        ).collect()[0]
         run_rows, run_keys, run_docs = (
             int(mstats["rows"]), int(mstats["keys"]), int(mstats["docs"])
         )
@@ -368,29 +282,13 @@ def run_extraction_job(
         _mark("key_stats")
         if first_run:
             if has_dup_keys:
-                # rare: duplicate urls inside the very first batch —
-                # rewrite the sink deduplicated; the optimistic manifest
-                # summarized pre-dedup rows, so discard and rebuild.
-                # Lineage still reads the pre-rewrite files: drain it
-                # before replacing them.
-                _join_lineage()
-                shutil.rmtree(opt_manifest_path, ignore_errors=True)
-                deduped = staged.dropDuplicates(["url", "page_index"])
-                tmp = ParquetTable(
-                    f"{out_dir}/_dedup_{run_id}", partition_by="url_bucket"
+                # rare: duplicate urls inside the very first batch
+                extracted_tbl.overwrite(
+                    staged.dropDuplicates(["url", "page_index"])
                 )
-                tmp.overwrite(deduped)
-                shutil.rmtree(extracted_tbl.path, ignore_errors=True)
-                shutil.move(tmp.path, extracted_tbl.path)
-                manifest_tbl.overwrite(
-                    build_manifest(extracted_tbl.read(spark))
-                )
-            else:
-                if manifest_err:
-                    raise manifest_err[0]
-                # confirm the optimistically-built manifest atomically
-                shutil.rmtree(manifest_tbl.path, ignore_errors=True)
-                shutil.move(opt_manifest_path, manifest_tbl.path)
+            manifest_tbl.overwrite(
+                build_manifest(extracted_tbl.read(spark))
+            )
         else:
             merge_stats = extracted_tbl.merge_upsert(
                 spark, staged, keys=["url", "page_index"]
@@ -407,7 +305,6 @@ def run_extraction_job(
                 )
             )
             manifest_tbl.merge_upsert(spark, run_manifest, keys=["url"])
-            _join_lineage()  # lineage scans staging_path — drain first
             shutil.rmtree(staging_path, ignore_errors=True)
             # small-file maintenance: each run fans tasks x buckets
             # files into the sink; when the fullest bucket crosses the
@@ -421,7 +318,7 @@ def run_extraction_job(
 
         if first_run and not has_dup_keys:
             # fresh sink, no dup keys: all-time == this run, and the
-            # key-stats shuffle already produced every counter — no
+            # key-stats job already produced every counter — no
             # manifest-scan job needed (manifest status is ERROR iff the
             # url has >=1 error row, exactly countDistinct(ERROR url)).
             docs_in, rows_written = run_docs, run_rows
@@ -445,9 +342,6 @@ def run_extraction_job(
             docs_in = sum(r["docs"] for r in stats)
             rows_written = sum(r["rows"] for r in stats)
         _mark("counters")
-
-        _join_lineage()  # no-op if a branch above already drained it
-        _mark("lineage_join")
     finally:
         for _k, _v in conf_saved.items():
             spark.conf.set(_k, _v)

@@ -5,33 +5,32 @@ The reference's core sink is an idempotent keyed upsert —
 (``/root/reference/app/repository.py:230-265``). The Spark-native
 equivalent is Iceberg ``MERGE INTO`` on ``(url, page_index)`` with
 snapshot-isolated commits. The Iceberg runtime jar is not available in
-this sandbox, so the same interface is served by a parquet-directory
-implementation whose upsert is read -> anti-join old vs new keys ->
-union -> atomic directory swap. Tests and the local pipeline run on the
+this sandbox, so the same interface is served by ``ParquetTable``: a
+hive-partitioned parquet directory with a Delta-Lake-style commit log
+(Armbrust et al., VLDB 2020). Data files are immutable; every write
+adds new part files and then commits by creating ``_log/<n>.json``,
+which lists the table's files, the files added and removed, and the
+merge stats. One commit file means the write happened; no commit file
+means nothing happened. Tests and the local pipeline run on the
 fallback; on a real cluster ``IcebergTable`` is selected automatically
 when the catalog is configured.
 
-Scale note (parquet fallback): the rewrite is O(table), acceptable only
-for incremental local runs — which is exactly why the real deployment
-target is Iceberg, where MERGE rewrites only matching data files and
-the commit is an O(1) metadata swap.
+Scale note (parquet fallback): a merge rewrites whole key-overlapping
+files and each commit carries the full file list, acceptable for
+incremental local runs — which is exactly why the real deployment
+target is Iceberg, whose manifests scale the same design out.
 """
 
 from __future__ import annotations
 
+import json
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col as F_col
 
-
-def _dir_nonempty(path: str) -> bool:
-    return os.path.isdir(path) and any(
-        name.endswith(".parquet") or name == "_SUCCESS"
-        for name in os.listdir(path)
-    )
+_LOG = "_log"
 
 
 def _parquet_key_range(path: str, col: str):
@@ -67,19 +66,32 @@ def _parquet_key_range(path: str, col: str):
 
 
 class ParquetTable:
-    """Directory-of-parquet keyed table with upsert semantics.
+    """Directory-of-parquet keyed table with upsert semantics and a
+    commit log.
+
+    Every write (``append``, ``overwrite``, ``merge_upsert``,
+    ``compact``) appends new part files into the table's own hive
+    ``col=value`` directories, then commits with one ``O_EXCL`` create
+    of ``_log/<n>.json`` (so of two racing writers, the second fails),
+    then deletes the files the commit removed. Each commit lists every
+    file of the table, so a reader needs only the latest one.
+
+    Crash rule: ``exists()`` means a commit exists, and ``read()`` first
+    deletes every file under the table that the latest commit does not
+    list. A write killed before its commit leaves only unlisted files,
+    so reads return the old rows; a write killed after it leaves
+    removed files behind, which the next read deletes. A commit file
+    cut short by a crash during its own write never happened. Paths in
+    the log are relative, so a copied table reads the same.
 
     ``partition_by`` names a hive-style partition column (e.g.
     ``url_bucket = pmod(xxhash64(url), N)``). A partitioned table
     buys two things at scale: partition-PRUNED incremental reads
     (the manifest semi-join scans only this run's buckets) and a
-    merge that rewrites only the AFFECTED buckets — unaffected bucket
-    directories are renamed into the new table generation, an O(1)
-    metadata move per bucket instead of an O(table) rewrite. This is
-    the parquet approximation of Iceberg's file-level MERGE.
+    merge that rewrites only key-overlapping files of the AFFECTED
+    buckets — every other file stays where it is, untouched. This is
+    the parquet form of Iceberg's file-level MERGE.
     """
-
-    _MOVE_MARKER = "_MERGE_MOVES"
 
     def __init__(self, path: str, partition_by: str | None = None) -> None:
         self.path = path
@@ -87,114 +99,93 @@ class ParquetTable:
         #: rewrite-amplification stats of the last partitioned merge
         self.last_merge_stats: dict | None = None
 
-    def _recover(self) -> None:
-        """Heal the crash windows of ``merge_upsert``.
+    def _latest(self) -> tuple[int, list[str]]:
+        """Version and files of the latest commit; (-1, []) without one."""
+        log = os.path.join(self.path, _LOG)
+        if not os.path.isdir(log):
+            return -1, []
+        for v in sorted((int(n[:-5]) for n in os.listdir(log)
+                         if n.endswith(".json")), reverse=True):
+            entry = os.path.join(log, f"{v}.json")
+            try:
+                with open(entry, encoding="utf-8") as fh:
+                    return v, json.load(fh)["files"]
+            except ValueError:  # torn by a crash while it was written
+                os.remove(entry)
+        return -1, []
 
-        Phase order on a partitioned merge: (1) write affected buckets
-        to ``__tmp`` + write a ``_MERGE_MOVES`` marker naming them,
-        (2) rename unaffected bucket dirs ``path -> __tmp``,
-        (3) rename ``path -> __old``, (4) rename ``__tmp -> path``
-        (the marker travels with it), (5) remove the marker from the
-        live path, (6) delete ``__old``. The marker survives through
-        BOTH swap renames (round-3 bug: deleting it before the swap
-        left a crash window where the live path held only the stale
-        affected buckets yet recovery served it as complete).
-
-        Recovery discrimination:
-
-        * marker in the LIVE path -> phase-5 crash: the swap finished
-          and the table is complete; drop the marker, sweep leftovers.
-        * marker-bearing ``__tmp`` while ``path`` EXISTS -> phase-2
-          window: the committed generation is (path + the unaffected
-          dirs already moved into tmp); move those dirs back and
-          discard the uncommitted merge.
-        * marker-bearing ``__tmp`` while ``path`` is ABSENT -> the
-          3->4 window: phase 2 must have completed (phase 3 only runs
-          after), so tmp IS the complete new generation; promote it
-          and drop the marker.
-
-        After that the classic swap-window logic applies: ``path``
-        absent with a complete marker-free ``__tmp`` promotes it, else
-        the newest ``__old`` is restored; leftovers are swept.
-        """
-        parent = os.path.dirname(self.path) or "."
-        base = os.path.basename(self.path)
-        if not os.path.isdir(parent):
-            return
-
-        def _sweep() -> None:
-            for name in list(os.listdir(parent)):
-                if (name.startswith(f"{base}__tmp_")
-                        or name.startswith(f"{base}__old_")):
-                    shutil.rmtree(os.path.join(parent, name),
-                                  ignore_errors=True)
-
-        live_marker = os.path.join(self.path, self._MOVE_MARKER)
-        if os.path.isfile(live_marker):
-            # phase-5 crash: swap done, only cleanup remained
-            os.remove(live_marker)
-            _sweep()
-            return
-        for name in list(os.listdir(parent)):
-            full = os.path.join(parent, name)
-            marker = os.path.join(full, self._MOVE_MARKER)
-            if not (name.startswith(f"{base}__tmp_")
-                    and os.path.isfile(marker)):
+    def _vacuum(self, keep: set[str]) -> None:
+        """Delete every file under the table but ``_log/`` and ``keep``
+        (relative paths), then the directories left empty."""
+        for root, _, names in os.walk(self.path, topdown=False):
+            rel = os.path.relpath(root, self.path)
+            if rel.split(os.sep)[0] == _LOG:
                 continue
-            if os.path.exists(self.path):
-                # phase-2 window: undo — move committed unaffected
-                # dirs back, discard the uncommitted merge
-                with open(marker, encoding="utf-8") as fh:
-                    affected = set(fh.read().split())
-                for entry in os.listdir(full):
-                    src = os.path.join(full, entry)
-                    if (os.path.isdir(src) and entry not in affected
-                            and not os.path.exists(
-                                os.path.join(self.path, entry))):
-                        os.rename(src, os.path.join(self.path, entry))
-                shutil.rmtree(full, ignore_errors=True)
-            else:
-                # 3->4 window: tmp holds the complete new generation
-                os.rename(full, self.path)
-                os.remove(os.path.join(self.path, self._MOVE_MARKER))
-                _sweep()
-                return
-        if _dir_nonempty(self.path):
-            return
-        tmps, olds = [], []
-        for name in os.listdir(parent):
-            full = os.path.join(parent, name)
-            if name.startswith(f"{base}__tmp_") and _dir_nonempty(full):
-                tmps.append(full)
-            elif name.startswith(f"{base}__old_") and _dir_nonempty(full):
-                olds.append(full)
-        candidates = sorted(tmps, key=os.path.getmtime) or sorted(
-            olds, key=os.path.getmtime
-        )
-        if candidates:
-            os.rename(candidates[-1], self.path)
-        for leftover in tmps + olds:
-            shutil.rmtree(leftover, ignore_errors=True)
+            for name in names:
+                if os.path.normpath(os.path.join(rel, name)) not in keep:
+                    os.remove(os.path.join(root, name))
+            if rel != "." and not os.listdir(root):
+                os.rmdir(root)
+
+    def _snapshot(self) -> tuple[int, list[str]]:
+        """The latest commit, with the directory reduced to its files.
+        A directory without ``_log/`` was never written by this class
+        and is left alone."""
+        version, files = self._latest()
+        if os.path.isdir(os.path.join(self.path, _LOG)):
+            self._vacuum(set(files))
+        return version, files
 
     def exists(self) -> bool:
-        self._recover()
-        return _dir_nonempty(self.path)
+        return self._latest()[0] >= 0
 
     def read(self, spark: SparkSession) -> DataFrame:
-        self._recover()
+        # a directory read, not a file list: a long explicit file list
+        # costs Spark an extra listing job, and partition pruning works
+        # either way
+        self._snapshot()
         return spark.read.parquet(self.path)
 
-    def _writer(self, df: DataFrame):
+    def _write(self, df: DataFrame) -> tuple[int, list[str], list[str]]:
+        """Append ``df`` as new part files, uncommitted. Returns the
+        version and files of the commit it builds on, and the new files."""
+        os.makedirs(os.path.join(self.path, _LOG), exist_ok=True)
+        version, files = self._snapshot()
         w = df.write
         if self.partition_by and self.partition_by in df.columns:
             w = w.partitionBy(self.partition_by)
-        return w
+        # append, never overwrite: overwrite mode would delete _log/
+        w.mode("append").parquet(self.path)
+        # the new part files are the ones Spark reads (no "_"/"."
+        # prefix, which also skips _log/ and Spark's _SUCCESS and .crc
+        # files) that the last commit does not list
+        written = set()
+        for root, dirs, names in os.walk(self.path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            rel = os.path.relpath(root, self.path)
+            written.update(os.path.normpath(os.path.join(rel, n))
+                           for n in names if not n.startswith(("_", ".")))
+        return version, files, sorted(written.difference(files))
+
+    def _commit(self, version: int, files: list[str], added: list[str],
+                removed: list[str], stats: dict | None = None) -> None:
+        """Create ``_log/<version + 1>.json``, then delete every file
+        it does not list: ``removed`` and Spark's write leftovers."""
+        live = sorted(set(files).difference(removed).union(added))
+        entry = os.path.join(self.path, _LOG, f"{version + 1}.json")
+        fd = os.open(entry, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
+        with os.fdopen(fd, "w", encoding="utf-8") as fh:
+            json.dump({"files": live, "added": added,
+                       "removed": sorted(removed), "stats": stats}, fh)
+        self._vacuum(set(live))
 
     def append(self, df: DataFrame) -> None:
-        self._writer(df).mode("append").parquet(self.path)
+        version, files, added = self._write(df)
+        self._commit(version, files, added, [])
 
     def overwrite(self, df: DataFrame) -> None:
-        self._writer(df).mode("overwrite").parquet(self.path)
+        version, files, added = self._write(df)
+        self._commit(version, files, added, files)
 
     def merge_upsert(
         self, spark: SparkSession, df: DataFrame, keys: list[str],
@@ -222,13 +213,7 @@ class ParquetTable:
             return self._merge_partitioned(spark, df, keys)
         existing = self.read(spark)
         kept = existing.join(df.select(*keys).distinct(), keys, "left_anti")
-        merged = kept.unionByName(df.select(*existing.columns))
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = f"{self.path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
+        self.overwrite(kept.unionByName(df.select(*existing.columns)))
 
     def compact(self, spark: SparkSession) -> None:
         """Small-file compaction: rewrite the table so each partition
@@ -236,22 +221,13 @@ class ParquetTable:
         bucket dir, so files accumulate as tasks x buckets x runs —
         the same reason Iceberg ships rewrite_data_files). One shuffle
         hash-partitioned on the partition column routes each bucket to
-        exactly one task; the swap reuses the crash-safe tmp/old
-        rename protocol."""
+        exactly one task; the commit replaces every old file."""
         df = self.read(spark)
         if self.partition_by and self.partition_by in df.columns:
             df = df.repartition(F_col(self.partition_by))
         else:
             df = df.coalesce(1)
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        w = df.write
-        if self.partition_by and self.partition_by in df.columns:
-            w = w.partitionBy(self.partition_by)
-        w.mode("overwrite").parquet(tmp)
-        old = f"{self.path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
+        self.overwrite(df)
 
     def _merge_partitioned(
         self, spark: SparkSession, df: DataFrame, keys: list[str]
@@ -262,57 +238,49 @@ class ParquetTable:
         Two pruning levels, mirroring Iceberg's partition- then
         file-level planning:
 
-        * unaffected bucket DIRECTORIES are renamed (not copied) into
-          the new table generation — O(1) metadata per bucket;
+        * files of unaffected bucket DIRECTORIES are not touched;
         * within an affected bucket, a parquet FILE whose footer
           ``keys[0]`` min/max range cannot intersect the batch's key
-          range for that bucket is hard-linked into the new generation
-          untouched (links leave the committed copy in place, so the
-          crash journal needs no new phase) — only genuinely
-          key-overlapping files are read, anti-joined and rewritten.
+          range for that bucket stays too — only genuinely
+          key-overlapping files are read, anti-joined, rewritten as
+          new files and removed by the commit.
 
         Returns rewrite-amplification stats (also kept on
-        ``self.last_merge_stats``) so callers can record the measured
-        cost of each incremental run: ``bytes_rewritten /
-        bytes_incoming`` is the number Iceberg would drive to ~1.
+        ``self.last_merge_stats`` and in the commit) so callers can
+        record the measured cost of each incremental run:
+        ``bytes_rewritten / bytes_incoming`` is the number Iceberg
+        would drive to ~1.
         """
         from pyspark.sql import functions as F
 
         pcol = self.partition_by
         kcol = keys[0]
         ranges = {
-            r[0]: (r[1], r[2])
+            f"{pcol}={r[0]}": (r[1], r[2])
             for r in df.groupBy(pcol)
             .agg(F.min(kcol).alias("lo"), F.max(kcol).alias("hi"))
             .collect()
         }
-        affected_vals = sorted(ranges)
-        affected_dirs = {f"{pcol}={v}" for v in affected_vals}
-        rewrite_files: list[str] = []
-        kept_files: list[tuple[str, str]] = []  # (bucket dir, filename)
-        bytes_rewritten = bytes_kept = 0
-        for v in affected_vals:
-            dirname = f"{pcol}={v}"
-            d = os.path.join(self.path, dirname)
-            if not os.path.isdir(d):
-                continue
-            lo, hi = ranges[v]
-            for fname in os.listdir(d):
-                if not fname.endswith(".parquet"):
-                    continue
-                fpath = os.path.join(d, fname)
-                fr = _parquet_key_range(fpath, kcol)
-                if fr is not None and (fr[1] < lo or fr[0] > hi):
-                    kept_files.append((dirname, fname))
-                    bytes_kept += os.path.getsize(fpath)
-                else:
-                    rewrite_files.append(fpath)
-                    bytes_rewritten += os.path.getsize(fpath)
         cols = self.read(spark).columns
+        rewrite_files: list[str] = []
+        files_pruned = bytes_rewritten = bytes_kept = 0
+        for rel in self._latest()[1]:
+            if os.path.dirname(rel) not in ranges:
+                continue
+            lo, hi = ranges[os.path.dirname(rel)]
+            fpath = os.path.join(self.path, rel)
+            fr = _parquet_key_range(fpath, kcol)
+            if fr is not None and (fr[1] < lo or fr[0] > hi):
+                files_pruned += 1
+                bytes_kept += os.path.getsize(fpath)
+            else:
+                rewrite_files.append(rel)
+                bytes_rewritten += os.path.getsize(fpath)
         if rewrite_files:
             existing = (
                 spark.read.option("basePath", self.path)
-                .parquet(*rewrite_files)
+                .parquet(*(os.path.join(self.path, f)
+                           for f in rewrite_files))
             )
             kept = existing.join(
                 df.select(*keys).distinct(), keys, "left_anti"
@@ -320,28 +288,13 @@ class ParquetTable:
             merged = kept.unionByName(df.select(*cols))
         else:
             merged = df.select(*cols)
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        merged.write.partitionBy(pcol).mode("overwrite").parquet(tmp)
+        version, files, added = self._write(merged)
         bytes_out = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, fs in os.walk(tmp)
-            for f in fs if f.endswith(".parquet")
+            os.path.getsize(os.path.join(self.path, f)) for f in added
         )
-        # hard-link pruned files into the new generation: the committed
-        # copies stay in place until the atomic swap, so a crash here
-        # is recovered by the unchanged phase-2 journal
-        for dirname, fname in kept_files:
-            dst_dir = os.path.join(tmp, dirname)
-            os.makedirs(dst_dir, exist_ok=True)
-            src = os.path.join(self.path, dirname, fname)
-            dst = os.path.join(dst_dir, fname)
-            try:
-                os.link(src, dst)
-            except OSError:  # pragma: no cover - cross-device fallback
-                shutil.copy2(src, dst)
         self.last_merge_stats = {
             "files_rewritten": len(rewrite_files),
-            "files_pruned": len(kept_files),
+            "files_pruned": files_pruned,
             "bytes_rewritten": bytes_rewritten,
             "bytes_pruned": bytes_kept,
             "bytes_out": bytes_out,
@@ -350,22 +303,8 @@ class ParquetTable:
                 if bytes_out else 0.0
             ),
         }
-        # journal the move phase so _recover can undo a half-done one
-        with open(os.path.join(tmp, self._MOVE_MARKER), "w",
-                  encoding="utf-8") as fh:
-            fh.write("\n".join(sorted(affected_dirs)))
-        for entry in os.listdir(self.path):
-            src = os.path.join(self.path, entry)
-            if os.path.isdir(src) and entry not in affected_dirs:
-                os.rename(src, os.path.join(tmp, entry))
-        # marker survives both swap renames; deleting it earlier opened
-        # a window where the live path held only stale affected buckets
-        # yet recovery's nonempty check served it as complete
-        old = f"{self.path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        os.remove(os.path.join(self.path, self._MOVE_MARKER))
-        shutil.rmtree(old, ignore_errors=True)
+        self._commit(version, files, added, rewrite_files,
+                     self.last_merge_stats)
         return self.last_merge_stats
 
 
