@@ -4,7 +4,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from westa_ocr_spark.corpus import write_pages_parquet
-from westa_ocr_spark.operators.partitioning import skew_repartition
+from westa_ocr_spark.operators.partitioning import skew_split
 from westa_ocr_spark.plans.pipeline import run_extraction_job
 from westa_ocr_spark.sources.tables import ParquetTable
 
@@ -12,9 +12,7 @@ from westa_ocr_spark.sources.tables import ParquetTable
 @pytest.fixture(scope="module")
 def job(spark, pages_parquet, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("job") / "out")
-    res = run_extraction_job(
-        spark, pages_parquet, out, num_partitions=4, run_id="r1"
-    )
+    res = run_extraction_job(spark, pages_parquet, out, run_id="r1")
     return res
 
 
@@ -56,9 +54,7 @@ def test_resume_skips_committed_work(spark, job, tmp_path_factory):
     # first 200 rows are identical, so resume must skip exactly 200.
     bigger = str(tmp_path_factory.mktemp("corpus2") / "pages")
     write_pages_parquet(bigger, n=250, seed=42, rows_per_file=50)
-    res2 = run_extraction_job(
-        spark, bigger, job.out_dir, num_partitions=4, run_id="r2"
-    )
+    res2 = run_extraction_job(spark, bigger, job.out_dir, run_id="r2")
     assert res2.resumed_skipped == 200
     assert res2.docs_processed == 50  # only the new urls extracted
     assert res2.docs_in == 250
@@ -74,8 +70,7 @@ def test_upsert_is_idempotent(spark, job, pages_parquet):
     }
     # re-run without resume: every row rewritten via merge, results equal
     res = run_extraction_job(
-        spark, pages_parquet, job.out_dir, num_partitions=4,
-        resume=False, run_id="r3",
+        spark, pages_parquet, job.out_dir, resume=False, run_id="r3",
     )
     after = {
         (r["url"], r["page_index"]): r["text"]
@@ -85,12 +80,17 @@ def test_upsert_is_idempotent(spark, job, pages_parquet):
     assert res.resumed_skipped == 0
 
 
-def test_skew_repartition_balances_oversized(spark, pages_parquet):
+def test_skew_split_balances_oversized(spark, pages_parquet):
     from pyspark.sql import functions as F
 
     pages = spark.read.parquet(pages_parquet).select("url", "html")
-    parted = skew_repartition(pages, 4, big_partitions=2)
+    parted = skew_split(pages)
     assert parted.count() == 200  # split legs lose nothing
+    n_small = pages.rdd.getNumPartitions()
+    # the oversized leg gets one round-robin partition per core
+    assert parted.rdd.getNumPartitions() == (
+        n_small + spark.sparkContext.defaultParallelism
+    )
     sizes = (
         parted.withColumn("pid", F.spark_partition_id())
         .withColumn("big", F.octet_length("html") >= 256 * 1024)
@@ -101,12 +101,13 @@ def test_skew_repartition_balances_oversized(spark, pages_parquet):
         )
         .collect()
     )
-    # oversized rows (i in {71,171} -> 2 rows) leave the hash leg and
-    # land in round-robin partitions (count preserved; with only 2
-    # rows the balance guarantee is statistical, so assert placement
-    # not spread)
-    big_counts = [r["n_big"] for r in sizes if r["n_big"] > 0]
-    assert sum(big_counts) == 2
+    # oversized rows (i in {71,171} -> 2 rows) leave the input's
+    # partitions and land in the round-robin leg, which holds nothing
+    # else (with only 2 rows the balance guarantee is statistical, so
+    # assert placement, not spread)
+    assert sum(r["n_big"] for r in sizes) == 2
+    for r in sizes:
+        assert r["n_big"] == (r["n"] if r["pid"] >= n_small else 0)
 
 
 def test_cancellation_interrupts_run_and_resume_recovers(
@@ -203,8 +204,8 @@ def test_incremental_runs_bound_files_and_measure_merges(
         pages = str(root / f"pages{step}")
         write_pages_parquet(pages, n=n, seed=42, rows_per_file=50)
         res = run_extraction_job(
-            spark, pages, out, num_partitions=4,
-            run_id=f"inc{step}", compact_files_per_bucket=bound,
+            spark, pages, out, run_id=f"inc{step}",
+            compact_files_per_bucket=bound,
         )
         if step > 0:
             assert res.merge_stats is not None

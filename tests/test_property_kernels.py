@@ -1,12 +1,15 @@
 """Property-based kernel tests (hypothesis): the contracts hold for
 arbitrary inputs, not just the seeded corpus."""
 
+import codecs
+
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from westa_ocr_spark.kernel.html_extract import extract_html
 from westa_ocr_spark.kernel.pdf_mini import extract_pdf_pages, write_pdf
+from westa_ocr_spark.operators.extract import _MEDIA_MAGIC, extract_rows
 
 # text without the PDF-hostile control chars we never emit
 pdf_text = st.text(
@@ -283,13 +286,14 @@ def test_png_gif_mutation_total(pos, val, seed):
 
 
 @settings(max_examples=400, deadline=None)
-@given(st.integers(0, 10**9), st.integers(0, 255), st.integers(0, 4))
+@given(st.integers(0, 10**9), st.integers(0, 255), st.integers(0, 5))
 # a DRI segment whose length byte was zeroed (struct.error, not
 # ValueError)
 @example(pos=635680932, val=0, which=3)
 def test_jpeg_mutation_total(pos, val, which):
-    """Single-byte corruption of real baseline/progressive color
-    JPEGs (all subsamplings + restarts) raises ONLY ValueError —
+    """Single-byte corruption of real baseline gray and
+    baseline/progressive color JPEGs (all subsamplings + restarts)
+    raises ONLY ValueError —
     round-5 fuzz found DHT count/value mismatches, truncated SOF/SOS
     headers, out-of-range DC categories (unbounded predictors) and
     double-SOF grid re-dimensioning escaping as
@@ -301,6 +305,7 @@ def test_jpeg_mutation_total(pos, val, which):
         write_jpeg_color,
         write_jpeg_progressive,
     )
+    from westa_ocr_spark.operators.multimodal import write_jpeg
 
     yy, xx = np.mgrid[0:24, 0:40]
     rgb = np.stack(
@@ -310,6 +315,7 @@ def test_jpeg_mutation_total(pos, val, which):
     bases = [write_jpeg_color(rgb, s) for s in ("420", "422", "444")]
     bases.append(write_jpeg_color(rgb, "420", restart_interval=2))
     bases.append(write_jpeg_progressive(rgb, "420"))
+    bases.append(write_jpeg(16, 12))
     base = bytearray(bases[which])
     base[pos % len(base)] = val
     try:
@@ -343,3 +349,96 @@ def test_jpeg_sos_zero_components_is_valueerror():
     buf[sos + 4] = 0
     with pytest.raises(ValueError, match="jpeg: "):
         decode_jpeg(bytes(buf))
+
+
+def test_jpeg_undefined_huffman_table_is_valueerror():
+    """A corrupted DHT class/id byte (the second DHT's Tc/Th, 0x10,
+    set to 171) leaves the AC table the scan names undefined; the
+    Huffman decode then tested membership in None (TypeError)."""
+    from westa_ocr_spark.kernel.jpeg_mini import decode_jpeg
+    from westa_ocr_spark.operators.multimodal import write_jpeg
+
+    buf = bytearray(write_jpeg(16, 12))
+    assert buf[139] == 0x10
+    buf[139] = 171
+    with pytest.raises(ValueError, match="jpeg: missing tables"):
+        decode_jpeg(bytes(buf))
+
+
+# ---------------------------------------------------------------------------
+# the decoders' shared MAX_PIXELS cap: checked right after the header
+# parse, before any inflate or allocation sized from it
+
+
+def test_jpeg_pixel_cap():
+    """17 bytes (SOI, a one-component 65535x65535 SOF0, EOI) once
+    asked np.zeros for 32 GiB of coefficients (MemoryError)."""
+    import struct
+
+    from westa_ocr_spark.kernel.jpeg_mini import decode_jpeg
+
+    data = (b"\xff\xd8\xff\xc0"
+            + struct.pack(">HBHHB", 11, 8, 65535, 65535, 1)
+            + bytes([1, 0x11, 0]) + b"\xff\xd9")
+    assert len(data) == 17
+    with pytest.raises(ValueError, match="MAX_PIXELS"):
+        decode_jpeg(data)
+
+
+def test_png_pixel_cap():
+    """A ~249 KB 8000x8000 RGBA PNG of zero scanlines once inflated
+    256 MB and allocated 256 MB of pixels."""
+    import struct
+    import zlib
+
+    from westa_ocr_spark.operators.multimodal import (
+        _png_chunk,
+        decode_png_pixels,
+    )
+
+    w = h = 8000
+    z = zlib.compressobj()
+    row = bytes(w * 4 + 1)  # filter byte 0 + one zero RGBA scanline
+    idat = b"".join(z.compress(row) for _ in range(h)) + z.flush()
+    assert len(idat) < 300_000
+    data = (b"\x89PNG\r\n\x1a\n"
+            + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 6,
+                                              0, 0, 0))
+            + _png_chunk(b"IDAT", idat) + _png_chunk(b"IEND", b""))
+    with pytest.raises(ValueError, match="MAX_PIXELS"):
+        decode_png_pixels(data)
+
+
+def test_gif_pixel_cap():
+    """An image descriptor of 65535x65535 once ran the LZW decode
+    before failing on the raster underrun."""
+    from westa_ocr_spark.operators.multimodal import (
+        decode_gif_pixels,
+        write_gif,
+    )
+
+    buf = bytearray(write_gif(4, 4))
+    assert buf[25] == 0x2C  # image separator after the 4-entry palette
+    buf[30:34] = b"\xff\xff\xff\xff"
+    with pytest.raises(ValueError, match="MAX_PIXELS"):
+        decode_gif_pixels(bytes(buf))
+
+
+_PREFIXES = (
+    [b"", b"%PDF-", codecs.BOM_UTF8, codecs.BOM_UTF16_LE,
+     codecs.BOM_UTF16_BE, codecs.BOM_UTF32_LE, codecs.BOM_UTF32_BE]
+    + [magic for magic, _kind in _MEDIA_MAGIC]
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.sampled_from(_PREFIXES), st.binary(max_size=2000),
+       st.sampled_from([None, "Shift_JIS", "x-bogus-label"]))
+def test_extract_rows_total(prefix, data, charset):
+    """Any bytes behind any PDF / BOM / media prefix, with no, a valid
+    or a junk charset hint: extract_rows returns >= 1 row, each DONE
+    or ERROR, pages numbered 1..n — and never raises."""
+    rows = extract_rows("u", prefix + data, charset)
+    assert rows
+    assert {r["status"] for r in rows} <= {"DONE", "ERROR"}
+    assert [r["page_index"] for r in rows] == list(range(1, len(rows) + 1))

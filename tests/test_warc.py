@@ -392,6 +392,34 @@ def test_content_type_charset_drives_extraction(spark, tmp_path):
     assert out["https://cs.example/plain"]["text"] == "plain ascii page"
 
 
+def test_pipeline_keeps_transport_charset(spark, tmp_path):
+    """run_extraction_job carries the pages frame's `charset` column
+    into extraction: a no-meta Shift_JIS page whose only charset is
+    the HTTP Content-Type header reads back from the sink decoded."""
+    from westa_ocr_spark.plans.pipeline import run_extraction_job
+    from westa_ocr_spark.sources.tables import ParquetTable
+    from westa_ocr_spark.sources.warc import read_warc_pages, write_warc
+
+    probe = "日本語の本文テキストです"
+    body = f"<html><body><p>{probe}</p></body></html>".encode("cp932")
+    seg = tmp_path / "warc"
+    seg.mkdir()
+    (seg / "seg-00000.warc.gz").write_bytes(write_warc([{
+        "url": "https://cs.example/sjis",
+        "date": "2025-01-01T00:00:00Z",
+        "html": body,
+        "charset": "Shift_JIS",
+    }]))
+    out = str(tmp_path / "out")
+    res = run_extraction_job(spark, read_warc_pages(spark, str(seg)), out,
+                             run_id="cs")
+    assert res.docs_done == 1
+    rows = ParquetTable(f"{out}/extracted").read(spark).collect()
+    assert [(r["url"], r["text"]) for r in rows] == [
+        ("https://cs.example/sjis", probe)
+    ]
+
+
 def test_decompression_bombs_are_bounded():
     """Round 5: a small gzip body expanding past the 64 MB cap flags a
     per-record decode error (never an executor OOM); a WARC member

@@ -11,3 +11,18 @@ from westa_ocr_spark.kernel.pdf_mini import (  # noqa: F401
     extract_pdf_pages,
     write_pdf,
 )
+
+# One pixel cap for the image decoders (PNG, GIF, JPEG): each checks a
+# header's w*h against it before any inflate or allocation, so a few
+# header bytes cannot ask for gigabytes (4096x4096 still decodes).
+MAX_PIXELS = 1 << 24
+
+
+def check_pixels(fmt: str, w: int, h: int) -> None:
+    """Raise ``ValueError`` when a ``w`` x ``h`` header exceeds
+    :data:`MAX_PIXELS`."""
+    if w * h > MAX_PIXELS:
+        raise ValueError(
+            f"{fmt}: {w}x{h} exceeds the MAX_PIXELS cap of "
+            f"{MAX_PIXELS} pixels"
+        )

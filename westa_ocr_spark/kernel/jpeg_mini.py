@@ -24,6 +24,8 @@ import struct
 
 import numpy as np
 
+from westa_ocr_spark.kernel import check_pixels
+
 # ITU T.81 Annex K luminance quantization table (quality ~50 base)
 _QTABLE = np.array([
     [16, 11, 10, 16, 24, 40, 51, 61],
@@ -690,39 +692,6 @@ def _extend(bits: int, cat: int) -> int:
     return bits
 
 
-def _decode_block(br: _BitReader, dct: dict, act: dict, qt: np.ndarray,
-                  prev_dc: int) -> tuple[np.ndarray, int]:
-    """Huffman-decode + dequantize one block; returns (block, new DC)."""
-    zz = np.zeros(64, dtype=np.int64)
-    cat = _read_symbol(br, dct)
-    if cat > 15:
-        raise ValueError("jpeg: DC category out of range")
-    diff = _extend(br.bits(cat), cat) if cat else 0
-    prev_dc += diff
-    if abs(prev_dc) > (1 << 40):
-        raise ValueError("jpeg: DC predictor out of range")
-    zz[0] = prev_dc
-    k = 1
-    while k < 64:
-        sym = _read_symbol(br, act)
-        if sym == 0x00:  # EOB
-            break
-        run, cat = sym >> 4, sym & 0x0F
-        if cat == 0:
-            if run != 15:
-                raise ValueError("jpeg: bad AC symbol")
-            k += 16  # ZRL
-            continue
-        k += run
-        if k >= 64:
-            raise ValueError("jpeg: AC coefficient overflow")
-        zz[k] = _extend(br.bits(cat), cat)
-        k += 1
-    q = np.zeros(64, dtype=np.float64)
-    q[_ZIGZAG] = zz
-    return q.reshape(8, 8) * qt, prev_dc
-
-
 # -- scan executor (shared by baseline and progressive, round 4) --------
 # Decoding happens in the COEFFICIENT domain: every scan (a baseline
 # file has one full-range scan; a progressive file has many partial
@@ -901,6 +870,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 raise ValueError("jpeg: 1 or 3 components only")
             if len(body) < 6 + 3 * ncomp:
                 raise ValueError("jpeg: truncated SOF header")
+            check_pixels("jpeg", ww, hh)  # before the coefficient grids
             h, w = hh, ww
             for ci in range(ncomp):
                 cid = body[6 + 3 * ci]
@@ -1017,6 +987,10 @@ def _run_scan(br, scan_comps, comps, coefs, ss, se, ah, al,
               restart_interval, n_mcu_x, n_mcu_y, h, w, hmax,
               vmax) -> None:
     """Execute one entropy-coded scan into the coefficient grids."""
+    for _ci, dct, act in scan_comps:
+        # a DHT whose class/id byte was corrupted leaves a table unset
+        if (ss == 0 and ah == 0 and dct is None) or (se > 0 and act is None):
+            raise ValueError("jpeg: missing tables")
     interleaved = len(scan_comps) > 1
     dcpred = [0] * len(comps)
     eobrun = 0
@@ -1037,15 +1011,10 @@ def _run_scan(br, scan_comps, comps, coefs, ss, se, ah, al,
                 _restart_check()
                 for ci, dct, act in scan_comps:
                     _cid, hi, vi, _tq = comps[ci]
-                    if ss == 0 and ah == 0 and dct is None:
-                        raise ValueError("jpeg: missing tables")
                     for v in range(vi):
                         for u in range(hi):
                             cof = coefs[ci][my * vi + v, mx * hi + u]
                             if ah == 0:
-                                if se > 0 and act is None:
-                                    raise ValueError(
-                                        "jpeg: missing tables")
                                 dcpred[ci], eobrun = _coef_block_first(
                                     br, cof, dct, act, ss, se, al,
                                     dcpred[ci], eobrun,
@@ -1061,10 +1030,6 @@ def _run_scan(br, scan_comps, comps, coefs, ss, se, ah, al,
         ch = (h * vi + vmax - 1) // vmax
         cw = (w * hi + hmax - 1) // hmax
         bh, bw_ = (ch + 7) // 8, (cw + 7) // 8
-        if ss > 0 and act is None:
-            raise ValueError("jpeg: missing tables")
-        if ss == 0 and ah == 0 and dct is None:
-            raise ValueError("jpeg: missing tables")
         for by in range(bh):
             for bx in range(bw_):
                 _restart_check()

@@ -10,7 +10,11 @@ Spark-first re-expression of the reference's per-page extraction stage
 * HTML main-content extraction via the deterministic kernel;
 * per-row error capture — a malformed payload yields a
   ``status='ERROR'`` row, never a task failure (reference behavior:
-  ``/root/reference/app/worker.py:798-823``);
+  the reference's ``app/worker.py:798-823``): :func:`extract_rows`
+  catches every ``Exception`` itself, and the batch loop is the
+  shared :func:`~westa_ocr_spark.operators.per_doc.map_documents`,
+  whose catch-all turns anything left into the same
+  :func:`error_row`;
 * content-type dispatch by magic bytes (the reference gates on
   ``splitMode`` — ``/root/reference/app/worker.py:219-220`` — we
   dispatch per row and support both).
@@ -21,14 +25,12 @@ is no per-row Python at the driver and no RDD usage.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from westa_ocr_spark.kernel.html_extract import extract_html
 from westa_ocr_spark.kernel.pdf_mini import extract_pdf_pages
+from westa_ocr_spark.operators.per_doc import map_documents
 
 SPAN_TYPE = T.ArrayType(
     T.StructType(
@@ -98,6 +100,24 @@ def _media_magic(data: bytes) -> str | None:
     return None
 
 
+def error_row(url: str, data: bytes | None, error: str) -> dict:
+    """The one ERROR row of the extraction contract: page 1, no text,
+    ``error`` = ``"extract: <reason>"`` (the reference's
+    ``"{prefix}: {exc}"`` concat, the reference's ``app/worker.py:821``).
+    """
+    return {
+        "url": url,
+        "page_index": 1,
+        "text": None,
+        "spans": None,
+        "status": "ERROR",
+        "error": f"extract: {error}",
+        "kind": "error",
+        "input_bytes": 0 if data is None else len(data),
+        "n_blocks": 0,
+    }
+
+
 def extract_rows(url: str, data: bytes,
                  charset: str | None = None) -> list[dict]:
     """Pure per-document extraction: 1 doc -> N page rows.
@@ -106,60 +126,27 @@ def extract_rows(url: str, data: bytes,
     byte-identity contract has a single definition. ``charset`` is
     the transport-layer decode hint (round 5: the WARC source's HTTP
     Content-Type charset) — WHATWG precedence: BOM > this hint >
-    <meta charset> > strict UTF-8.
+    <meta charset> > strict UTF-8. Total on its own: every failure is
+    an :func:`error_row`.
     """
     if data is None:
         # Null payloads must surface as ERROR rows, not vanish:
         # skew_split routes them here via coalesce(octet_length, 0).
-        return [
-            {
-                "url": url,
-                "page_index": 1,
-                "text": None,
-                "spans": None,
-                "status": "ERROR",
-                "error": "extract: null payload",
-                "kind": "error",
-                "input_bytes": 0,
-                "n_blocks": 0,
-            }
-        ]
+        return [error_row(url, data, "null payload")]
     input_bytes = len(data)
     if input_bytes > MAX_PAYLOAD_BYTES:
-        return [
-            {
-                "url": url,
-                "page_index": 1,
-                "text": None,
-                "spans": None,
-                "status": "ERROR",
-                "error": (
-                    f"extract: payload {input_bytes} bytes exceeds cap "
-                    f"{MAX_PAYLOAD_BYTES}"
-                ),
-                "kind": "error",
-                "input_bytes": input_bytes,
-                "n_blocks": 0,
-            }
-        ]
+        return [error_row(
+            url, data,
+            f"payload {input_bytes} bytes exceeds cap {MAX_PAYLOAD_BYTES}",
+        )]
     media = _media_magic(data)
     if media is not None:
         # a known non-document payload (image/audio/video bytes in the
         # html column): name the kind instead of surfacing a cryptic
         # charset decode error (round 5 error-taxonomy polish)
-        return [
-            {
-                "url": url,
-                "page_index": 1,
-                "text": None,
-                "spans": None,
-                "status": "ERROR",
-                "error": f"extract: unsupported media kind {media}",
-                "kind": "error",
-                "input_bytes": input_bytes,
-                "n_blocks": 0,
-            }
-        ]
+        return [error_row(url, data, f"unsupported media kind {media}")]
+    if not isinstance(charset, str):
+        charset = None  # a null pandas cell arrives as None or NaN
     try:
         if data.startswith(b"%PDF-"):
             pages = extract_pdf_pages(data)
@@ -192,48 +179,10 @@ def extract_rows(url: str, data: bytes,
             }
         ]
     except Exception as exc:  # noqa: BLE001 - T7: per-row error capture
-        # ANY per-document failure becomes an ERROR row, never a task
-        # failure — the reference catches Exception around the whole
-        # page stage (/root/reference/app/worker.py:798-823); round 4
-        # widened this from (ValueError, UnicodeDecodeError) after
-        # finding stdlib html.parser can raise AssertionError on
-        # crafted marked sections, which would have killed the task.
-        # error-prefix concat contract: "{prefix}: {exc}"
-        # (/root/reference/app/worker.py:821)
-        return [
-            {
-                "url": url,
-                "page_index": 1,
-                "text": None,
-                "spans": None,
-                "status": "ERROR",
-                "error": f"extract: {exc}",
-                "kind": "error",
-                "input_bytes": input_bytes,
-                "n_blocks": 0,
-            }
-        ]
-
-
-_COLS = [f.name for f in EXTRACTED_SCHEMA.fields]
-
-
-def _extract_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for batch in batches:
-        out: list[dict] = []
-        charsets = (
-            batch["charset"]
-            if "charset" in batch.columns
-            else [None] * len(batch)
-        )
-        for url, data, cs in zip(batch["url"], batch["html"], charsets):
-            out.extend(
-                extract_rows(url, data, cs if isinstance(cs, str) else None)
-            )
-        # dict-of-lists: pandas skips per-row dict inference this way
-        yield pd.DataFrame({c: [r[c] for r in out] for c in _COLS})
+        # the same catch-all as map_documents: round 4 widened this
+        # from (ValueError, UnicodeDecodeError) after stdlib
+        # html.parser raised AssertionError on crafted marked sections
+        return [error_row(url, data, str(exc))]
 
 
 def extract_pages(pages: DataFrame) -> DataFrame:
@@ -247,6 +196,8 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     cols = ["url", "html"] + (
         ["charset"] if "charset" in pages.columns else []
     )
-    return pages.select(*cols).mapInPandas(
-        _extract_batches, schema=EXTRACTED_SCHEMA
+    return map_documents(
+        pages, cols, extract_rows, EXTRACTED_SCHEMA,
+        # values are (url, html[, charset]); the exception comes last
+        lambda url, data, *rest: error_row(url, data, str(rest[-1])),
     )

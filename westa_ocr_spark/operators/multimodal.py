@@ -1,9 +1,13 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Images/audio/video ride as ``binary`` columns with a struct of typed
-metadata, processed by Arrow-batched ``mapInPandas`` stages — the same
-plumbing as HTML/PDF extraction (schema, partitioning, batch shape are
-real and tested).
+metadata. Each operator is a per-document function plus an ERROR-row
+builder run through
+:func:`~westa_ocr_spark.operators.per_doc.map_documents`, the same
+Arrow-batched ``mapInPandas`` loop as HTML/PDF extraction: its
+catch-all turns any ``Exception`` of one payload (a corrupt byte, a
+header past the decoders' shared ``MAX_PIXELS`` cap) into that
+payload's ERROR row, never a task failure.
 
 What's REAL here: magic-byte sniffing; true image dimensions parsed
 from the container headers — PNG IHDR, JPEG SOF segment walk, GIF
@@ -22,20 +26,20 @@ feature vectors. No image stub remains; an embedding MODEL (vs these
 hand statistics) would swap in one function body. ``sample_frames``
 still fakes the video codec with a byte-slice while keeping the
 1-row->N-frames fan-out contract real.
-
-The skew story matches HTML: oversized media uses the same skew_split.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from westa_ocr_spark.kernel import check_pixels
+from westa_ocr_spark.operators.per_doc import map_documents
+
 
 def media_kind(col: F.Column) -> F.Column:
     """Sniff media type from magic bytes (JVM-side, codegen'd)."""
@@ -368,6 +372,7 @@ def decode_gif_pixels(data: bytes):
     if pos + 10 > len(data):
         raise ValueError("corrupt GIF (truncated image descriptor)")
     _l, _t, w, h, ipacked = struct.unpack("<HHHHB", data[pos + 1 : pos + 10])
+    check_pixels("gif", w, h)  # before the LZW output grows to w*h
     interlaced = bool(ipacked & 0x40)
     pos += 10
     if ipacked & 0x80:  # local color table overrides the global one
@@ -551,6 +556,7 @@ def decode_png_pixels(data: bytes):
     w, h, depth, ctype, comp, filt, interlace = struct.unpack(
         ">IIBBBBB", ihdr[:13]
     )
+    check_pixels("png", w, h)  # before the inflate sized from IHDR
     if depth not in (1, 2, 4, 8, 16):
         raise ValueError(f"unsupported PNG bit depth {depth}")
     if interlace not in (0, 1):
@@ -684,6 +690,34 @@ def _channel_stat_features(px) -> list[float]:
     return feats
 
 
+_PIXEL_FEATURES = {
+    "png": png_pixel_features,
+    "gif": gif_pixel_features,
+    "jpeg": jpeg_pixel_features,
+}
+
+
+def _image_rows(url: str, data: bytes) -> list[dict]:
+    if not data:
+        raise ValueError("empty payload")
+    blob = bytes(data)
+    kind, w, h = parse_image_dimensions(blob)
+    return [{"url": url, "kind": kind, "n_bytes": len(blob), "width": w,
+             "height": h, "feature": _PIXEL_FEATURES[kind](blob),
+             "status": "DONE", "error": None}]
+
+
+def _image_error(url: str, data: bytes | None, exc: Exception) -> dict:
+    return {"url": url, "kind": "unknown",
+            "n_bytes": len(data) if data is not None else 0,
+            "width": None, "height": None, "feature": None,
+            "status": "ERROR", "error": f"decode: {exc}"}
+
+
+def _media_cols(url_col: str, data_col: str) -> list[F.Column]:
+    return [F.col(url_col).alias("url"), F.col(data_col).alias("data")]
+
+
 def extract_image_features(media: DataFrame, url_col: str = "url",
                            data_col: str = "data") -> DataFrame:
     """Arrow-batched image metadata + feature extraction over binary rows.
@@ -696,45 +730,8 @@ def extract_image_features(media: DataFrame, url_col: str = "url",
     unknown or corrupt payloads become ``status='ERROR'`` rows, never
     task failures.
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: list[dict] = []
-            for url, data in zip(pdf[url_col], pdf[data_col]):
-                row = {
-                    "url": url,
-                    "kind": "unknown",
-                    "n_bytes": len(data) if data is not None else 0,
-                    "width": None,
-                    "height": None,
-                    "feature": None,
-                    "status": "DONE",
-                    "error": None,
-                }
-                try:
-                    if not data:
-                        raise ValueError("empty payload")
-                    blob = bytes(data)
-                    kind, w, h = parse_image_dimensions(blob)
-                    if kind == "png":
-                        feature = png_pixel_features(blob)
-                    elif kind == "gif":
-                        feature = gif_pixel_features(blob)
-                    else:
-                        feature = jpeg_pixel_features(blob)
-                    row.update(
-                        kind=kind, width=w, height=h, feature=feature,
-                    )
-                except ValueError as exc:
-                    row.update(status="ERROR", error=f"decode: {exc}")
-                out.append(row)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields]
-            )
-
-    return media.select(
-        F.col(url_col).alias("url"), F.col(data_col).alias("data")
-    ).mapInPandas(batches, schema=IMAGE_FEATURES_SCHEMA)
+    return map_documents(media, _media_cols(url_col, data_col),
+                         _image_rows, IMAGE_FEATURES_SCHEMA, _image_error)
 
 
 # --------------------------------------------------------------------------
@@ -882,64 +879,52 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
+def _audio_rows(url: str, data: bytes) -> list[dict]:
+    import numpy as np
+
+    if not data:
+        raise ValueError("empty payload")
+    blob = bytes(data)
+    row = {"url": url, "n_bytes": len(blob), "rms": None, "peak": None,
+           "zcr": None, "status": "DONE", "error": None}
+    if blob[:4] == b"RIFF":
+        rate, s = decode_wav(blob)
+        sf = s.astype(np.float64) / 32768.0
+        n = len(sf)
+        row.update(
+            kind="wav", sample_rate=rate,
+            duration_s=round(n / rate, 6),
+            rms=round(float(np.sqrt((sf ** 2).mean())), 6) if n else 0.0,
+            peak=round(float(np.abs(sf).max()), 6) if n else 0.0,
+            zcr=round(float(
+                (np.diff(np.signbit(sf)) != 0).sum() / max(n - 1, 1)
+            ), 6),
+        )
+    elif blob[:3] == b"ID3" or blob[:2] == b"\xff\xfb":
+        kbps, rate = parse_mp3_header(blob)
+        row.update(kind="mp3", sample_rate=rate,
+                   duration_s=round(len(blob) / (kbps * 125), 6))
+    else:
+        raise ValueError("unsupported audio container")
+    return [row]
+
+
+def _audio_error(url: str, data: bytes | None, exc: Exception) -> dict:
+    return {"url": url, "kind": "unknown",
+            "n_bytes": len(data) if data is not None else 0,
+            "sample_rate": None, "duration_s": None, "rms": None,
+            "peak": None, "zcr": None, "status": "ERROR",
+            "error": f"audio: {exc}"}
+
+
 def extract_audio_features(media: DataFrame, url_col: str = "url",
                            data_col: str = "data") -> DataFrame:
     """Arrow-batched audio features over binary rows: WAV payloads
     decode fully (REAL rms / peak / zero-crossing-rate from PCM
     samples); MP3 payloads yield header metadata + estimated duration
     (entropy decode out of scope); anything else is a per-row ERROR."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in AUDIO_FEATURES_SCHEMA.fields]
-        for pdf in it:
-            out: list[dict] = []
-            for url, data in zip(pdf[url_col], pdf[data_col]):
-                row = {
-                    "url": url, "kind": "unknown",
-                    "n_bytes": len(data) if data is not None else 0,
-                    "sample_rate": None, "duration_s": None,
-                    "rms": None, "peak": None, "zcr": None,
-                    "status": "DONE", "error": None,
-                }
-                try:
-                    if not data:
-                        raise ValueError("empty payload")
-                    blob = bytes(data)
-                    if blob[:4] == b"RIFF":
-                        rate, s = decode_wav(blob)
-                        sf = s.astype(np.float64) / 32768.0
-                        n = len(sf)
-                        row.update(
-                            kind="wav", sample_rate=rate,
-                            duration_s=round(n / rate, 6),
-                            rms=round(float(np.sqrt((sf ** 2).mean())), 6)
-                            if n else 0.0,
-                            peak=round(float(np.abs(sf).max()), 6)
-                            if n else 0.0,
-                            zcr=round(float(
-                                (np.diff(np.signbit(sf)) != 0).sum()
-                                / max(n - 1, 1)
-                            ), 6),
-                        )
-                    elif blob[:3] == b"ID3" or blob[:2] == b"\xff\xfb":
-                        kbps, rate = parse_mp3_header(blob)
-                        row.update(
-                            kind="mp3", sample_rate=rate,
-                            duration_s=round(
-                                len(blob) / (kbps * 125), 6
-                            ),
-                        )
-                    else:
-                        raise ValueError("unsupported audio container")
-                except ValueError as exc:
-                    row.update(status="ERROR", error=f"audio: {exc}")
-                out.append(row)
-            yield pd.DataFrame({c: [r[c] for r in out] for c in cols})
-
-    return media.select(
-        F.col(url_col).alias("url"), F.col(data_col).alias("data")
-    ).mapInPandas(batches, schema=AUDIO_FEATURES_SCHEMA)
+    return map_documents(media, _media_cols(url_col, data_col),
+                         _audio_rows, AUDIO_FEATURES_SCHEMA, _audio_error)
 
 
 FRAME_SAMPLE_SCHEMA = T.StructType(
@@ -998,44 +983,26 @@ def sample_frames(media: DataFrame, every_n: int = 10,
     fallback so the fan-out plumbing stays exercised for them too.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: list[dict] = []
-            for url, data in zip(pdf[url_col], pdf[data_col]):
-                if not data:
-                    out.append(
-                        {"url": url, "frame_index": 1, "frame": None,
-                         "status": "ERROR"}
-                    )
-                    continue
-                blob = bytes(data)
-                frames = (
-                    split_mjpeg_frames(blob)
-                    if blob[:3] == b"\xff\xd8\xff" else []
-                )
-                if len(frames) > 1:  # real MJPEG: sample real JPEGs
-                    picked = frames[::every_n][:max_frames] or frames[:1]
-                    for idx, fr in enumerate(picked, start=1):
-                        out.append(
-                            {"url": url, "frame_index": idx,
-                             "frame": fr, "status": "DONE"}
-                        )
-                    continue
-                n = min(max_frames, max(1, len(blob) // every_n))
-                step = max(1, len(blob) // n)
-                for idx in range(1, n + 1):
-                    out.append(
-                        {
-                            "url": url,
-                            "frame_index": idx,
-                            "frame": blob[(idx - 1) * step : idx * step],
-                            "status": "DONE",
-                        }
-                    )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in FRAME_SAMPLE_SCHEMA.fields]
-            )
+    def frame_rows(url: str, data: bytes) -> list[dict]:
+        if not data:
+            raise ValueError("empty payload")
+        blob = bytes(data)
+        frames = (
+            split_mjpeg_frames(blob) if blob[:3] == b"\xff\xd8\xff" else []
+        )
+        if len(frames) > 1:  # real MJPEG: sample real JPEGs
+            picked = frames[::every_n][:max_frames] or frames[:1]
+        else:
+            n = min(max_frames, max(1, len(blob) // every_n))
+            step = max(1, len(blob) // n)
+            picked = [blob[i * step : (i + 1) * step] for i in range(n)]
+        return [{"url": url, "frame_index": idx, "frame": fr,
+                 "status": "DONE"}
+                for idx, fr in enumerate(picked, start=1)]
 
-    return media.select(
-        F.col(url_col).alias("url"), F.col(data_col).alias("data")
-    ).mapInPandas(batches, schema=FRAME_SAMPLE_SCHEMA)
+    def frame_error(url: str, _data, _exc: Exception) -> dict:
+        return {"url": url, "frame_index": 1, "frame": None,
+                "status": "ERROR"}
+
+    return map_documents(media, _media_cols(url_col, data_col),
+                         frame_rows, FRAME_SAMPLE_SCHEMA, frame_error)

@@ -8,10 +8,11 @@ for joins/aggs, not a size-skewed mapInPandas stage, so oversized
 payloads are balanced explicitly (SURVEY.md §4.3).
 
 Strategy:
-* normal rows -> hash-partition on ``xxhash64(url)`` (uniform, and
-  co-locates re-runs of the same url deterministically);
+* normal rows -> kept in the input's own partitioning (no shuffle of
+  the payload bytes);
 * oversized rows (``octet_length(html) >= threshold``) -> round-robin
-  ``repartition(k)``: balances counts with zero global coordination.
+  ``repartition(k)``, k = the default parallelism: balances counts
+  with zero global coordination.
   (An exact row_number+range assignment was tried first and reverted:
   its global window sorts the whole oversized leg through one task —
   a measured serial bottleneck. Round-robin's worst case is a small
@@ -33,13 +34,11 @@ OVERSIZED_THRESHOLD = 256 * 1024
 
 
 def skew_split(
-    pages: DataFrame,
-    oversized_threshold: int = OVERSIZED_THRESHOLD,
-    big_partitions: int | None = None,
-    payload_col: str = "html",
-    key_col: str = "url",
+    pages: DataFrame, oversized_threshold: int = OVERSIZED_THRESHOLD
 ) -> DataFrame:
-    """Split oversized payloads into their own balanced partitions.
+    """Split oversized ``html`` payloads into their own balanced
+    partitions, one per default-parallelism slot (one per core in
+    local mode).
 
     Assumes the input is already usefully partitioned (in the
     pipeline, ``dropDuplicates(url)``'s exchange provides url-hash
@@ -58,33 +57,8 @@ def skew_split(
     and reach the per-row ERROR path; a bare octet_length(NULL) is
     NULL and would fail BOTH filters, silently dropping the row.
     """
-    size = F.coalesce(F.octet_length(F.col(payload_col)), F.lit(0))
+    size = F.coalesce(F.octet_length(F.col("html")), F.lit(0))
     small = pages.filter(size < F.lit(oversized_threshold))
-    k = big_partitions or 32
+    k = pages.sparkSession.sparkContext.defaultParallelism
     big = pages.filter(size >= F.lit(oversized_threshold)).repartition(k)
-    return small.unionByName(big)
-
-
-def skew_repartition(
-    pages: DataFrame,
-    num_partitions: int,
-    oversized_threshold: int = OVERSIZED_THRESHOLD,
-    big_partitions: int | None = None,
-    payload_col: str = "html",
-    key_col: str = "url",
-) -> DataFrame:
-    """skew_split plus an explicit url-hash repartition of the small
-    leg — for callers whose input has no useful partitioning yet."""
-    size = F.coalesce(F.octet_length(F.col(payload_col)), F.lit(0))
-    small = (
-        pages.filter(size < F.lit(oversized_threshold))
-        .repartition(num_partitions, F.xxhash64(F.col(key_col)))
-    )
-    big = skew_split(
-        pages.filter(size >= F.lit(oversized_threshold)),
-        oversized_threshold=oversized_threshold,
-        big_partitions=big_partitions or num_partitions,
-        payload_col=payload_col,
-        key_col=key_col,
-    )
     return small.unionByName(big)

@@ -5,7 +5,10 @@ Direct Spark re-expression of the reference's ``split_pdf`` stage
 ``/root/reference/app/worker.py:284-286``): each PDF byte stream
 becomes N rows ``(url, page_index [1-based], data [one-page PDF],
 mime_type ['application/pdf'])``. Non-PDF or broken payloads become a
-``status='ERROR'`` row (``/root/reference/app/worker.py:798-823``).
+``status='ERROR'`` row (the reference's ``app/worker.py:798-823``):
+the batch loop is the shared
+:func:`~westa_ocr_spark.operators.per_doc.map_documents`, whose
+catch-all maps any ``Exception`` of one document to its ERROR row.
 
 The main extraction pipeline skips this materialized intermediate
 (it extracts text per page directly), but the operator exists for
@@ -15,13 +18,11 @@ e.g. routing individual pages to downstream binary consumers.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from westa_ocr_spark.kernel.pdf_mini import split_pdf
+from westa_ocr_spark.operators.per_doc import map_documents
 
 PAGE_PAYLOAD_SCHEMA = T.StructType(
     [
@@ -35,43 +36,24 @@ PAGE_PAYLOAD_SCHEMA = T.StructType(
 )
 
 
+def _page_rows(url: str, data: bytes) -> list[dict]:
+    return [
+        {"url": url, "page_index": idx, "data": page,
+         "mime_type": "application/pdf", "status": "DONE", "error": None}
+        for idx, page in enumerate(split_pdf(bytes(data)), start=1)
+    ]
+
+
+def _error_row(url: str, _data, exc: Exception) -> dict:
+    return {"url": url, "page_index": 1, "data": None,
+            "mime_type": "application/pdf", "status": "ERROR",
+            "error": f"split: {exc}"}
+
+
 def split_pdf_payloads(pages: DataFrame, url_col: str = "url",
                        data_col: str = "html") -> DataFrame:
     """Arrow-batched page split over (url, pdf-bytes) rows."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: list[dict] = []
-            for url, data in zip(pdf[url_col], pdf[data_col]):
-                try:
-                    for idx, page in enumerate(
-                        split_pdf(bytes(data)), start=1
-                    ):
-                        out.append(
-                            {
-                                "url": url,
-                                "page_index": idx,
-                                "data": page,
-                                "mime_type": "application/pdf",
-                                "status": "DONE",
-                                "error": None,
-                            }
-                        )
-                except (ValueError, TypeError) as exc:
-                    out.append(
-                        {
-                            "url": url,
-                            "page_index": 1,
-                            "data": None,
-                            "mime_type": "application/pdf",
-                            "status": "ERROR",
-                            "error": f"split: {exc}",
-                        }
-                    )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in PAGE_PAYLOAD_SCHEMA.fields]
-            )
-
-    return pages.select(url_col, data_col).mapInPandas(
-        batches, schema=PAGE_PAYLOAD_SCHEMA
+    return map_documents(
+        pages, [url_col, data_col], _page_rows, PAGE_PAYLOAD_SCHEMA,
+        _error_row,
     )

@@ -43,10 +43,7 @@ from pyspark.sql import functions as F
 
 from westa_ocr_spark.operators.extract import extract_pages
 from westa_ocr_spark.operators.manifest import build_manifest
-from westa_ocr_spark.operators.partitioning import (
-    OVERSIZED_THRESHOLD,
-    skew_split,
-)
+from westa_ocr_spark.operators.partitioning import skew_split
 from westa_ocr_spark.operators.resume import resume_filter
 from westa_ocr_spark.sources.tables import ParquetTable
 
@@ -135,18 +132,17 @@ def run_extraction_job(
     pages: DataFrame | str,
     out_dir: str,
     *,
-    num_partitions: int | None = None,
     resume: bool = True,
     run_id: str = "run",
-    oversized_threshold: int = OVERSIZED_THRESHOLD,
     job_group: str | None = None,
-    sink_buckets: int = SINK_BUCKETS,
     compact_files_per_bucket: int = COMPACT_FILES_PER_BUCKET,
 ) -> ExtractionResult:
     """Run the full extraction lifecycle; returns counters.
 
     ``pages`` is a DataFrame or a parquet path of the input table
-    (url, warc_ts, html, text, lang). Pass ``job_group`` to make the
+    (url, warc_ts, html, text, lang); its optional ``charset`` column
+    (the WARC source's transport hint) rides along into extraction.
+    Pass ``job_group`` to make the
     run cancellable via :func:`cancel_extraction` (interrupt-on-cancel
     is set so running tasks stop, not just queued ones).
     """
@@ -184,9 +180,11 @@ def run_extraction_job(
                 shutil.rmtree(os.path.join(out_dir, name),
                               ignore_errors=True)
 
-    # prune to the two columns extraction needs; the parquet scan then
-    # reads only url+html (ReadSchema pruning).
-    work = pages.select("url", "html")
+    # prune to the columns extraction needs; the parquet scan then
+    # reads only url+html[+charset] (ReadSchema pruning).
+    work = pages.select(
+        "url", "html", *(["charset"] if "charset" in pages.columns else [])
+    )
 
     first_run = not extracted_tbl.exists()
     resumed_skipped = 0
@@ -203,12 +201,11 @@ def run_extraction_job(
         resumed_skipped = done.count()
         work = resume_filter(work, done, key="url")
         _mark("resume_plan")
-    work = skew_split(work, oversized_threshold=oversized_threshold,
-                      big_partitions=num_partitions)
+    work = skew_split(work)
 
     extracted = extract_pages(work).withColumn(
         "url_bucket",
-        F.pmod(F.xxhash64("url"), F.lit(sink_buckets)).cast("int"),
+        F.pmod(F.xxhash64("url"), F.lit(SINK_BUCKETS)).cast("int"),
     )
 
     # single execution: on a fresh sink the extract output is committed

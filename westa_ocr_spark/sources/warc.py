@@ -22,7 +22,9 @@ shards (tens of thousands of ~1 GiB segments per crawl). Per-record
 gzip membership means memory per task is bounded by one record, not
 one file, when streaming decompression is used (we decompress member
 by member). Malformed records surface as ERROR rows, never task
-failures (the pipeline's per-row error-capture contract).
+failures (the pipeline's per-row error-capture contract): the batch
+loop is the shared ``operators.per_doc.map_documents``, whose
+catch-all maps any ``Exception`` of one file to that file's ERROR row.
 """
 
 from __future__ import annotations
@@ -35,6 +37,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from westa_ocr_spark.operators.per_doc import map_documents
 
 _CRLF = b"\r\n"
 
@@ -441,67 +445,43 @@ def _warc_ts(date: str | None):
         return None
 
 
+def _page_row(rec: dict, fpath: str) -> dict:
+    """One ``response`` record as a pages row. A failed body decoding
+    is a per-RECORD error row (html withheld: the raw bytes are
+    framing noise, not content)."""
+    decode_err = rec["error"]
+    return {
+        "url": rec["url"], "warc_ts": _warc_ts(rec["date"]),
+        "html": None if decode_err else rec["payload"],
+        "text": "", "lang": "", "warc_file": fpath,
+        "record_type": rec["type"],
+        "status": "ERROR" if decode_err else "OK",
+        "error": decode_err, "charset": rec["charset"],
+    }
+
+
+def _warc_file_rows(fpath: str, content: bytes) -> list[dict]:
+    """Page rows of one WARC file: only ``response`` records."""
+    return [_page_row(rec, fpath) for rec in parse_warc(bytes(content))
+            if rec["type"] == "response"]
+
+
+def _warc_file_error(fpath: str, _content, exc: Exception) -> dict:
+    return {"url": None, "warc_ts": None, "html": None, "text": "",
+            "lang": "", "warc_file": fpath, "record_type": "error",
+            "status": "ERROR", "error": f"warc: {exc}", "charset": None}
+
+
 def read_warc_pages(spark: SparkSession, path: str) -> DataFrame:
     """Spark source: directory/glob of WARC files -> pages-shaped rows.
 
     ``binaryFile`` scan (one task per file — Common Crawl's sharding
-    unit) -> Arrow-batched parse. Only ``response`` records become
-    page rows; a file that fails to parse yields ONE ERROR row
-    carrying the file path, so ingest failures are visible in the
-    same frame, not lost in logs.
+    unit) -> Arrow-batched parse through
+    :func:`~westa_ocr_spark.operators.per_doc.map_documents`. Only
+    ``response`` records become page rows; a file that fails to parse
+    (any ``Exception``) yields ONE ERROR row carrying the file path, so
+    ingest failures are visible in the same frame, not lost in logs.
     """
-    import pandas as pd
-
-    files = spark.read.format("binaryFile").load(path).select(
-        "path", "content"
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in WARC_PAGES_SCHEMA.fields]
-        for pdf in it:
-            rows: list[dict] = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    for rec in parse_warc(bytes(content)):
-                        if rec["type"] != "response":
-                            continue
-                        # a failed body decoding is a per-RECORD error
-                        # row (html withheld: the raw bytes are framing
-                        # noise, not content)
-                        decode_err = rec.get("error")
-                        rows.append(
-                            {
-                                "url": rec["url"],
-                                "warc_ts": _warc_ts(rec["date"]),
-                                "html": (
-                                    None if decode_err else rec["payload"]
-                                ),
-                                "text": "",
-                                "lang": "",
-                                "warc_file": fpath,
-                                "record_type": rec["type"],
-                                "status": (
-                                    "ERROR" if decode_err else "OK"
-                                ),
-                                "error": decode_err,
-                                "charset": rec.get("charset"),
-                            }
-                        )
-                except ValueError as exc:
-                    rows.append(
-                        {
-                            "url": None,
-                            "warc_ts": None,
-                            "html": None,
-                            "text": "",
-                            "lang": "",
-                            "warc_file": fpath,
-                            "record_type": "error",
-                            "status": "ERROR",
-                            "error": f"warc: {exc}",
-                            "charset": None,
-                        }
-                    )
-            yield pd.DataFrame({c: [r[c] for r in rows] for c in cols})
-
-    return files.mapInPandas(batches, schema=WARC_PAGES_SCHEMA)
+    files = spark.read.format("binaryFile").load(path)
+    return map_documents(files, ["path", "content"], _warc_file_rows,
+                         WARC_PAGES_SCHEMA, _warc_file_error)

@@ -12,9 +12,10 @@ Partition planning mirrors Common Crawl's sharding: ONE input
 partition per WARC file (tens of thousands of ~1 GiB segments per
 crawl), planned on the driver from a filesystem glob; each executor
 task parses only its own file, decompressing gzip members one at a
-time so memory is bounded by a record, not a file. Malformed files
-yield a single ERROR row (per-row error-capture contract), never a
-task failure.
+time so memory is bounded by a record, not a file. A file that fails
+with any ``Exception`` yields a single ERROR row after the records
+read before the failure (the same catch-all as
+``operators.per_doc.map_documents``), never a task failure.
 
 Local/posix paths only (the sandbox has no distributed FS client);
 on a real cluster the same class works wherever the executors mount
@@ -43,9 +44,16 @@ from pyspark.sql.datasource import (
 
 from westa_ocr_spark.sources.warc import (
     WARC_PAGES_SCHEMA,
-    _warc_ts,
+    _page_row,
+    _warc_file_error,
     iter_warc_file,
 )
+
+_FIELDS = WARC_PAGES_SCHEMA.fieldNames()
+
+
+def _as_tuple(row: dict) -> tuple:
+    return tuple(row[c] for c in _FIELDS)
 
 
 class _WarcFilePartition(InputPartition):
@@ -157,26 +165,11 @@ class WarcReader(DataSourceReader):
                     )
                 ):
                     continue
-                decode_err = rec.get("error")
-                yield (
-                    url,
-                    _warc_ts(rec["date"]),
-                    None if decode_err else rec["payload"],
-                    "",
-                    "",
-                    fpath,
-                    rec["type"],
-                    "ERROR" if decode_err else "OK",
-                    decode_err,
-                    rec.get("charset"),
-                )
-        except ValueError as exc:
+                yield _as_tuple(_page_row(rec, fpath))
+        except Exception as exc:  # noqa: BLE001 - per-file capture
             if self._url_preds:
                 return  # NULL url satisfies no consumed url predicate
-            yield (
-                None, None, None, "", "", fpath, "error", "ERROR",
-                f"warc: {exc}", None,
-            )
+            yield _as_tuple(_warc_file_error(fpath, None, exc))
 
 
 class WarcDataSource(DataSource):
