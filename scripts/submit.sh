@@ -16,12 +16,11 @@ if [[ "${1:-}" == "--master" ]]; then
   MASTER="$2"; shift 2
 fi
 
-# Iceberg sink (optional): point ICEBERG_JAR at the
-# iceberg-spark-runtime jar to enable the MERGE INTO keyed sink
-# (sources/tables.py IcebergTable — selected automatically once an
-# iceberg catalog is configured; contract-tested in
-# tests/test_tables.py since no jar ships in this sandbox). Without
-# it the parquet-directory fallback runs.
+# Iceberg catalog (optional): point ICEBERG_JAR at the
+# iceberg-spark-runtime jar to configure the catalog that
+# sources/tables.py IcebergTable's MERGE INTO needs (contract-tested in
+# tests/test_tables.py). The extraction pipeline writes ParquetTable
+# either way; only a caller that passes an IcebergTable uses it.
 ICEBERG_ARGS=()
 if [[ -n "${ICEBERG_JAR:-}" ]]; then
   ICEBERG_ARGS=(

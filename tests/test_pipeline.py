@@ -62,6 +62,29 @@ def test_resume_skips_committed_work(spark, job, tmp_path_factory):
     assert man.count() == 250
 
 
+def test_resume_counts_only_skipped_input_docs(spark, tmp_path_factory):
+    """resumed_skipped counts the input docs resume skipped, not every
+    committed doc: a 64-doc sink, then a delta of 30 new and 10 re-sent
+    urls, skips 10."""
+    from pyspark.sql import functions as F
+
+    from westa_ocr_spark.corpus import url_for
+
+    base = tmp_path_factory.mktemp("skipc")
+    write_pages_parquet(str(base / "all"), n=94, seed=42, rows_per_file=50)
+    every = spark.read.parquet(str(base / "all"))
+    first = every.filter(F.col("url").isin([url_for(i) for i in range(64)]))
+    delta = every.filter(F.col("url").isin(
+        [url_for(i) for i in [*range(64, 94), *range(0, 60, 6)]]
+    ))
+    out = str(base / "out")
+    run_extraction_job(spark, first, out, run_id="s1")
+    res = run_extraction_job(spark, delta, out, run_id="s2")
+    assert res.resumed_skipped == 10
+    assert res.docs_processed == 30
+    assert res.docs_in == 94
+
+
 def test_upsert_is_idempotent(spark, job, pages_parquet):
     ext = ParquetTable(f"{job.out_dir}/extracted")
     before = {

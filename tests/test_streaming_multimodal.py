@@ -548,43 +548,90 @@ def test_stateful_first_seen_dedupe(spark, tmp_path_factory):
     assert seen_ts["e"] == base + dt.timedelta(minutes=8)
 
 
-def test_streaming_upsert_sink_is_idempotent(spark, tmp_path_factory):
-    """foreachBatch -> merge_upsert: re-running the drained stream
-    against a FRESH checkpoint (simulated replay of all batches)
-    leaves the keyed table unchanged — the streaming version of the
-    at-least-once + dedupe contract."""
-    from westa_ocr_spark.corpus import write_pages_parquet
+def _stream_tables(spark, out):
+    """(extracted rows by key, extracted row count, manifest rows by
+    url, manifest row count, lineage run ids) of a stream's out dir."""
     from westa_ocr_spark.sources.tables import ParquetTable
+
+    ext = ParquetTable(f"{out}/extracted").read(spark).collect()
+    man = ParquetTable(f"{out}/manifest").read(spark).collect()
+    lin = ParquetTable(f"{out}/lineage").read(spark).collect()
+    return (
+        {(r["url"], r["page_index"]): (r["status"], r["text"]) for r in ext},
+        len(ext),
+        {r["url"]: r.asDict(recursive=True) for r in man},
+        len(man),
+        {r["run_id"] for r in lin},
+    )
+
+
+def test_streaming_upsert_sink_is_idempotent(spark, tmp_path_factory):
+    """Every micro-batch runs run_extraction_job: 20 input files make
+    two micro-batches (fresh sink, then merge), and replaying them all
+    with the checkpoint deleted leaves the extracted rows and the
+    manifest unchanged — the streaming version of the at-least-once +
+    dedupe contract."""
+    import shutil
+
+    from westa_ocr_spark.corpus import write_pages_parquet
     from westa_ocr_spark.streaming.stream_pipeline import (
-        start_extraction_upsert_stream,
+        start_extraction_stream,
     )
 
     src = str(tmp_path_factory.mktemp("upsrc") / "pages")
-    write_pages_parquet(src, n=40, rows_per_file=10)
-    out = tmp_path_factory.mktemp("upout")
-    table_path = str(out / "table")
+    write_pages_parquet(src, n=40, rows_per_file=2)
+    out = str(tmp_path_factory.mktemp("upout") / "o")
 
-    q = start_extraction_upsert_stream(
-        spark, src, table_path, str(out / "_cp1")
-    )
-    q.awaitTermination(300)
-    t = ParquetTable(table_path)
-    first = {
-        (r["url"], r["page_index"]): r["status"]
-        for r in t.read(spark).collect()
-    }
-    assert len(first) >= 40  # PDFs fan out to >1 page
+    start_extraction_stream(spark, src, out).awaitTermination(300)
+    rows, n_rows, man, n_man, runs = _stream_tables(spark, out)
+    assert runs == {"batch0", "batch1"}
+    assert len(rows) == n_rows >= 40  # a PDF may fan out to >1 page
+    assert len(man) == n_man == 40
 
-    # replay EVERYTHING (fresh checkpoint): at-least-once delivery
-    q2 = start_extraction_upsert_stream(
-        spark, src, table_path, str(out / "_cp2")
+    # replay EVERYTHING (no checkpoint): at-least-once delivery
+    shutil.rmtree(f"{out}/_checkpoint")
+    start_extraction_stream(spark, src, out).awaitTermination(300)
+    rows2, n_rows2, man2, n_man2, _ = _stream_tables(spark, out)
+    assert (rows2, n_rows2) == (rows, n_rows)
+    assert (man2, n_man2) == (man, n_man)
+
+
+def test_streaming_resent_url_upserts(spark, tmp_path_factory):
+    """A url re-sent in a later file is extracted again and its new
+    rows replace the old ones: one row per (url, page_index) key and
+    one manifest row per url."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from westa_ocr_spark.corpus import url_for, write_pages_parquet
+    from westa_ocr_spark.streaming.stream_pipeline import (
+        start_extraction_stream,
     )
-    q2.awaitTermination(300)
-    second = {
-        (r["url"], r["page_index"]): r["status"]
-        for r in t.read(spark).collect()
-    }
-    assert second == first  # exactly-once table despite full replay
+
+    src = tmp_path_factory.mktemp("resrc") / "pages"
+    write_pages_parquet(str(src), n=40, rows_per_file=2)
+    out = str(tmp_path_factory.mktemp("reout") / "o")
+    start_extraction_stream(spark, str(src), out).awaitTermination(300)
+
+    first = pq.read_table(str(src / "part-00000.parquet"))
+    url = url_for(0)
+    assert first.column("url")[0].as_py() == url
+    html = b"<html><body><p>resent page text</p></body></html>"
+    pq.write_table(
+        first.slice(0, 1).set_column(
+            first.schema.get_field_index("html"), "html",
+            pa.array([html], pa.binary()),
+        ),
+        str(src / "resent.parquet"),
+    )
+    start_extraction_stream(spark, str(src), out).awaitTermination(300)
+
+    rows, n_rows, man, n_man, _ = _stream_tables(spark, out)
+    assert n_rows == len(rows)
+    assert {u for u, _ in rows} == {url_for(i) for i in range(40)}
+    assert rows[(url, 1)] == ("DONE", "resent page text")
+    assert len(man) == n_man == 40
+    assert man[url]["total_blocks"] == 1
 
 
 def test_watermark_drops_late_data(spark, tmp_path_factory):

@@ -2,7 +2,7 @@
 
 import pytest
 
-from westa_ocr_spark.sources.tables import ParquetTable, keyed_table
+from westa_ocr_spark.sources.tables import ParquetTable
 
 
 @pytest.fixture()
@@ -65,11 +65,6 @@ def test_upsert_unique_keys_fastpath_matches_default(spark, tmp_path):
         assert _rows(spark, a) == _rows(spark, b) == {
             (1, 1): "new", (2, 2): "keep", (3, 1): "add"
         }
-
-
-def test_keyed_table_picks_parquet_without_iceberg(spark, tmp_path):
-    t = keyed_table(spark, str(tmp_path / "x"))
-    assert isinstance(t, ParquetTable)
 
 
 class _Killed(Exception):
@@ -405,7 +400,9 @@ def test_iceberg_merge_contract():
 def test_file_scoped_merge_prunes_nonoverlapping_files(spark, tmp_path):
     """O(delta) scoping: files in an affected bucket whose footer key
     range cannot intersect the batch stay in place (same inode), and
-    the stats report the measured rewrite amplification."""
+    the stats report the measured rewrite amplification and are the
+    ones the merge's commit records."""
+    import json
     import os
 
     tbl = ParquetTable(str(tmp_path / "pt"), partition_by="b")
@@ -440,7 +437,10 @@ def test_file_scoped_merge_prunes_nonoverlapping_files(spark, tmp_path):
     assert stats["files_pruned"] >= 1
     assert stats["files_rewritten"] >= 1
     assert stats["rewrite_amplification"] >= 0.0
-    assert stats == tbl.last_merge_stats
+    log = os.path.join(tbl.path, "_log")
+    newest = max(int(n[:-5]) for n in os.listdir(log) if n.endswith(".json"))
+    with open(os.path.join(log, f"{newest}.json"), encoding="utf-8") as fh:
+        assert json.load(fh)["stats"] == stats
 
     files_after = {
         n: os.stat(os.path.join(bucket, n)).st_ino

@@ -89,7 +89,7 @@ class ExtractionResult:
     docs_done: int
     docs_error: int
     out_dir: str
-    resumed_skipped: int = 0
+    resumed_skipped: int = 0  # input docs the resume anti-join skipped
     stages: dict = field(default_factory=dict)
     # measured rewrite amplification of this run's incremental merge
     # (None on fresh runs / resume-skips) — the O(delta) evidence
@@ -187,8 +187,8 @@ def run_extraction_job(
     )
 
     first_run = not extracted_tbl.exists()
-    resumed_skipped = 0
-    if resume and not first_run and manifest_tbl.exists():
+    resumed = resume and not first_run and manifest_tbl.exists()
+    if resumed:
         # the done-keys side is the MANIFEST (one tiny row per
         # committed url) rather than the per-page sink: the anti-join
         # probe shrinks by the pages-per-doc factor and never touches
@@ -197,9 +197,7 @@ def run_extraction_job(
         # re-extract and the idempotent keyed sink absorbs them
         # (at-least-once, the T4/T5 contract); with no manifest at all
         # (a first run killed there) every doc re-extracts.
-        done = manifest_tbl.read(spark)
-        resumed_skipped = done.count()
-        work = resume_filter(work, done, key="url")
+        work = resume_filter(work, manifest_tbl.read(spark), key="url")
         _mark("resume_plan")
     work = skew_split(work)
 
@@ -219,13 +217,14 @@ def run_extraction_job(
         extracted.write.mode("overwrite").parquet(staging_path)
     _mark("extract_and_stage")
 
-    # The bucket-partitioned staging dir holds tasks x buckets SMALL
-    # files. The session's input-split size is tuned for the big scan
-    # (small splits = extract parallelism); re-reading ~1000 tiny
-    # staged files under the same setting fans the tail jobs
-    # (key-stats, lineage, manifest) into hundreds of near-empty
-    # tasks whose scheduling dominates. Pack them: bump split size /
-    # drop per-file open cost for the tail, restore on exit.
+    # The tail re-reads small files: the incremental staging write is
+    # flat, one file per extract task, and a fresh run's read of the
+    # bucketed sink sees tasks x buckets files. The session's
+    # input-split size is tuned for the big scan (small splits =
+    # extract parallelism); under the same setting the tail jobs
+    # (key-stats, lineage, manifest) fan out into near-empty tasks
+    # whose scheduling dominates. Pack them: bump split size / drop
+    # per-file open cost for the tail, restore on exit.
     conf_saved = {
         "spark.sql.files.maxPartitionBytes":
             spark.conf.get("spark.sql.files.maxPartitionBytes"),
@@ -262,19 +261,30 @@ def run_extraction_job(
         _mark("lineage")
 
         # J5 key stats: one aggregation over this run's staged rows.
-        # Duplicate-key detection is GLOBAL over the run's output.
-        mstats = staged.agg(
-            F.count(F.lit(1)).alias("rows"),
+        # Duplicate-key detection is GLOBAL over the run's output. On a
+        # resumed run the input's urls join the same job as rows without
+        # a page_index, so the docs resume skipped are the input docs
+        # minus the extracted ones. Otherwise ``page`` is a literal and
+        # the plan folds back to the staged rows' aggregation alone.
+        keyed, page = staged, F.lit(True)
+        if resumed:
+            keyed = staged.unionByName(pages.select("url"),
+                                       allowMissingColumns=True)
+            page = F.col("page_index").isNotNull()
+        mstats = keyed.agg(
+            F.count(F.when(page, F.lit(1))).alias("rows"),
             F.countDistinct("url", "page_index").alias("keys"),
-            F.countDistinct("url").alias("docs"),
+            F.countDistinct(F.when(page, F.col("url"))).alias("docs"),
             F.countDistinct(
                 F.when(F.col("status") == "ERROR", F.col("url"))
             ).alias("err_docs"),
+            F.countDistinct("url").alias("in_docs"),
         ).collect()[0]
         run_rows, run_keys, run_docs = (
             int(mstats["rows"]), int(mstats["keys"]), int(mstats["docs"])
         )
         run_err_docs = int(mstats["err_docs"])
+        resumed_skipped = int(mstats["in_docs"]) - run_docs
         has_dup_keys = run_keys != run_rows
         _mark("key_stats")
         if first_run:

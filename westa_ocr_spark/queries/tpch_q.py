@@ -72,20 +72,21 @@ def _q_tpch_q3(spark, sf):
     li = _t(spark, sf, "lineitem")
     price = F.col("l_extendedprice").cast("decimal(18,4)")
     disc = F.col("l_discount").cast("decimal(5,3)")
-    # Round 6 (guide §3.1): reduce the broadcast side BEFORE the fact
+    # Round 6 (guide §3.1): reduce the build side BEFORE the fact
     # join — the planner was broadcasting ALL 1.5M orders (building the
     # hash relation is the query's critical path) and dropping the 4/5
     # non-BUILDING rows only after the lineitem probe. Joining
     # orders⋈customer first shrinks the build side 5x and the probe
     # output falls out pre-filtered (measured 1.8 -> 1.25 s at sf1.0;
     # inner equi-join reorder + exact decimal sums, so the result is
-    # unchanged).
+    # unchanged). That side is ~300k rows at sf1 and grows with sf, so
+    # it is not forced into a broadcast: AQE broadcasts it at runtime
+    # while it is small.
     orders_bldg = orders.join(
         F.broadcast(cust), orders.o_custkey == cust.c_custkey
     ).select("o_orderkey", "o_orderdate")
     return (
-        li.join(F.broadcast(orders_bldg),
-                li.l_orderkey == F.col("o_orderkey"))
+        li.join(orders_bldg, li.l_orderkey == F.col("o_orderkey"))
         .groupBy("o_orderkey", "o_orderdate")
         .agg(
             round_det(

@@ -1,24 +1,25 @@
-"""Keyed-table sink abstraction: Iceberg MERGE INTO with parquet fallback.
+"""Keyed-table sink: a commit-logged parquet table, and an Iceberg twin.
 
 The reference's core sink is an idempotent keyed upsert —
 ``INSERT ... ON CONFLICT(job_id,page_index) DO UPDATE``
 (``/root/reference/app/repository.py:230-265``). The Spark-native
 equivalent is Iceberg ``MERGE INTO`` on ``(url, page_index)`` with
-snapshot-isolated commits. The Iceberg runtime jar is not available in
-this sandbox, so the same interface is served by ``ParquetTable``: a
+snapshot-isolated commits. No Iceberg runtime jar ships with this
+package, so the extraction pipeline writes ``ParquetTable``: a
 hive-partitioned parquet directory with a Delta-Lake-style commit log
 (Armbrust et al., VLDB 2020). Data files are immutable; every write
 adds new part files and then commits by creating ``_log/<n>.json``,
 which lists the table's files, the files added and removed, and the
 merge stats. One commit file means the write happened; no commit file
-means nothing happened. Tests and the local pipeline run on the
-fallback; on a real cluster ``IcebergTable`` is selected automatically
-when the catalog is configured.
+means nothing happened. ``IcebergTable`` serves the same upsert
+interface through ``MERGE INTO`` on a configured catalog, for callers
+that pass it in as their store (``operators.dedup.dedup_against_store``);
+``run_extraction_job`` always writes ``ParquetTable``.
 
-Scale note (parquet fallback): a merge rewrites whole key-overlapping
+Scale note: a ``ParquetTable`` merge rewrites whole key-overlapping
 files and each commit carries the full file list, acceptable for
-incremental local runs — which is exactly why the real deployment
-target is Iceberg, whose manifests scale the same design out.
+incremental local runs — Iceberg's manifests scale the same design
+out.
 """
 
 from __future__ import annotations
@@ -96,8 +97,6 @@ class ParquetTable:
     def __init__(self, path: str, partition_by: str | None = None) -> None:
         self.path = path
         self.partition_by = partition_by
-        #: rewrite-amplification stats of the last partitioned merge
-        self.last_merge_stats: dict | None = None
 
     def _latest(self) -> tuple[int, list[str]]:
         """Version and files of the latest commit; (-1, []) without one."""
@@ -245,9 +244,9 @@ class ParquetTable:
           key-overlapping files are read, anti-joined, rewritten as
           new files and removed by the commit.
 
-        Returns rewrite-amplification stats (also kept on
-        ``self.last_merge_stats`` and in the commit) so callers can
-        record the measured cost of each incremental run:
+        Returns rewrite-amplification stats (also recorded as the
+        commit's ``stats``) so callers can record the measured cost of
+        each incremental run:
         ``bytes_rewritten / bytes_incoming`` is the number Iceberg
         would drive to ~1.
         """
@@ -292,7 +291,7 @@ class ParquetTable:
         bytes_out = sum(
             os.path.getsize(os.path.join(self.path, f)) for f in added
         )
-        self.last_merge_stats = {
+        stats = {
             "files_rewritten": len(rewrite_files),
             "files_pruned": files_pruned,
             "bytes_rewritten": bytes_rewritten,
@@ -303,9 +302,8 @@ class ParquetTable:
                 if bytes_out else 0.0
             ),
         }
-        self._commit(version, files, added, rewrite_files,
-                     self.last_merge_stats)
-        return self.last_merge_stats
+        self._commit(version, files, added, rewrite_files, stats)
+        return stats
 
 
 class IcebergTable:
@@ -346,29 +344,6 @@ class IcebergTable:
             "WHEN NOT MATCHED THEN INSERT *"
         )
         spark.catalog.dropTempView(view)
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is configured on this session."""
-    try:
-        conf = spark.conf
-        for key in ("spark.sql.catalog.spark_catalog",
-                    "spark.sql.catalog.iceberg"):
-            try:
-                if "iceberg" in (conf.get(key) or "").lower():
-                    return True
-            except Exception:
-                continue
-    except Exception:
-        pass
-    return False
-
-
-def keyed_table(spark: SparkSession, location: str):
-    """Pick the best available keyed-table implementation."""
-    if iceberg_available(spark) and "/" not in location:
-        return IcebergTable(location)  # pragma: no cover
-    return ParquetTable(location)
 
 
 def write_bucketed(df: DataFrame, table_name: str, key: str,

@@ -1,25 +1,30 @@
 """Structured Streaming variant of the extraction pipeline.
 
-The reference is a continuous service (queue + worker threads,
-``/root/reference/app/main.py:363,386-400``); its batch semantics are
-fully covered by the checkpointed-resume batch job (SURVEY.md §2.8 —
-no watermarks/event-time state exist in the reference), but a
-file-source streaming deployment is the natural continuous-ingest
-shape: new page files land in a directory, each micro-batch extracts
-and appends, and the checkpoint directory provides exactly-once
-progress tracking (the streaming analogue of the reference's startup
-re-enqueue, ``/root/reference/app/main.py:402-406``).
-
-``mapInPandas`` works unchanged on streaming DataFrames, so the exact
-same Arrow-batched extraction operator serves both modes.
+The reference is a continuous service (queue + worker threads, its
+``app/main.py:363,386-400``); a file-source stream is the natural
+continuous-ingest shape of it: new page files land in a directory and
+each micro-batch goes through the one extraction lifecycle,
+:func:`~westa_ocr_spark.plans.pipeline.run_extraction_job` — keyed
+upsert into the ``url_bucket`` sink, J5 key check, manifest, lineage,
+compaction. Batch and streaming writers share the tables' commit logs,
+as in Delta Lake (Armbrust et al., VLDB 2020). The checkpoint directory
+tracks which files were consumed (the streaming analogue of the
+reference's startup re-enqueue, ``app/main.py:402-406``), and the keyed
+upsert makes a replayed micro-batch converge.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+import shutil
+import tempfile
+import uuid
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from westa_ocr_spark.operators.extract import extract_pages
+from westa_ocr_spark.plans.pipeline import run_extraction_job
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -31,14 +36,17 @@ PAGES_SCHEMA = T.StructType(
     ]
 )
 
+# files a production stream takes per micro-batch
+FILES_PER_TRIGGER = 16
 
-def read_pages_stream(spark: SparkSession, input_dir: str,
-                      max_files_per_trigger: int = 16) -> DataFrame:
-    """File-source stream over a directory of pages parquet files."""
+
+def _file_stream(spark: SparkSession, path: str, schema: T.StructType,
+                 files_per_trigger: int = FILES_PER_TRIGGER) -> DataFrame:
+    """File-source stream over a directory of parquet files."""
     return (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", files_per_trigger)
+        .parquet(path)
     )
 
 
@@ -62,13 +70,7 @@ def start_windowed_counts_stream(
     result equals the batch ``groupBy(window(...), key)`` over the
     same files minus still-open windows.
     """
-    from pyspark.sql import functions as F
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 16)
-        .parquet(input_dir)
-    )
+    stream = _file_stream(spark, input_dir, schema)
     # watermarks require TIMESTAMP (not NTZ); session tz is UTC so the
     # cast is a pure reinterpretation
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
@@ -105,25 +107,69 @@ def start_extraction_stream(
     *,
     trigger_available_now: bool = True,
 ):
-    """Extract pages continuously: stream -> mapInPandas -> append sink.
+    """Extract pages continuously: every micro-batch is one
+    ``run_extraction_job`` run into ``out_dir``.
 
     ``availableNow`` drains everything currently in the directory and
     stops (batch-equivalent, used by tests); drop the trigger for a
-    long-running tail. The checkpoint makes restarts resume from the
-    last committed micro-batch — per-file exactly-once, the streaming
-    counterpart of the batch anti-join resume.
+    long-running tail. The checkpoint at ``{out_dir}/_checkpoint``
+    makes a restart resume after the last committed micro-batch. A
+    batch replayed after a crash between its table commits and the
+    checkpoint commit re-upserts the same keys (``resume=False``: a
+    re-sent url is extracted again and its new rows win), so the
+    tables converge.
     """
-    stream = read_pages_stream(spark, input_dir)
-    extracted = extract_pages(stream)
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        run_extraction_job(batch_df.sparkSession, batch_df, out_dir,
+                           resume=False, run_id=f"batch{batch_id}")
+
     writer = (
-        extracted.writeStream.format("parquet")
-        .option("path", f"{out_dir}/extracted")
+        _file_stream(spark, input_dir, PAGES_SCHEMA)
+        .writeStream.foreachBatch(sink)
         .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .outputMode("append")
     )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _drain_complete(spark: SparkSession, events: DataFrame, ts_col: str,
+                    key_col: str, window: Column, n_files: int,
+                    out_cols: list) -> DataFrame:
+    """Count ``events`` per (``window`` over ``ts``, ``key``) through a
+    complete-mode stream and return ``out_cols`` of the drained rows.
+
+    Stages ``events`` (as ``ts``, ``key``) in ``n_files`` parquet
+    files and streams them back one file per micro-batch, so the
+    aggregation state genuinely crosses batch boundaries. Complete mode
+    re-emits the whole aggregate each trigger, so the drained memory
+    sink (``win``, ``key``, ``n``) equals the batch ``groupBy``
+    exactly.
+    """
+    tag = uuid.uuid4().hex[:8]
+    stage = os.path.join(tempfile.gettempdir(), f"cstream_{tag}")
+    src = events.select(
+        F.col(ts_col).cast("timestamp").alias("ts"),
+        F.col(key_col).alias("key"),
+    )
+    src.repartition(n_files).write.mode("overwrite").parquet(stage)
+    name = f"complete_{tag}"
+    (
+        _file_stream(spark, stage, src.schema, files_per_trigger=1)
+        .groupBy(window.alias("win"), "key")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    # the memory sink is session-lived; materialize rows so the staged
+    # files can be deleted before returning
+    out = spark.table(name).select(*out_cols).localCheckpoint(eager=True)
+    shutil.rmtree(stage, ignore_errors=True)
+    return out
 
 
 def windowed_counts_complete(
@@ -137,104 +183,21 @@ def windowed_counts_complete(
 ) -> DataFrame:
     """Batch-equivalence proof for streaming windowed counts.
 
-    Stages ``events`` as ``n_files`` parquet files, streams them back
-    one file per micro-batch (so aggregation state genuinely crosses
-    batch boundaries), and aggregates tumbling-window counts in
-    COMPLETE mode into a memory sink. Unlike the watermarked append
-    pipeline (:func:`start_windowed_counts_stream` — the production
-    shape, which trades completeness of trailing windows for bounded
-    state), complete mode re-emits the full aggregate each trigger, so
-    the drained result equals the batch ``groupBy(window, key)``
+    Unlike the watermarked append pipeline
+    (:func:`start_windowed_counts_stream` — the production shape, which
+    trades completeness of trailing windows for bounded state), the
+    complete-mode drain equals the batch ``groupBy(window, key)``
     EXACTLY — which is what lets the DuckDB oracle verify the
     streaming surface (registry ``stream_windowed_counts``).
 
     Output: (window_start epoch-seconds, key, n) — epoch longs so the
     oracle compare is exact across engines.
     """
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    tag = uuid.uuid4().hex[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"wstream_{tag}")
-    src = events.select(
-        F.col(ts_col).cast("timestamp").alias("ts"),
-        F.col(key_col).alias("key"),
-    )
-    src.repartition(n_files).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    agg = (
-        stream.groupBy(
-            F.window("ts", f"{window_minutes} minutes").alias("win"),
-            "key",
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    name = f"wcounts_{tag}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = (
-        spark.table(name)
-        .select(
-            F.col("win.start").cast("long").alias("window_start"),
-            F.col("key").alias(key_col),
-            "n",
-        )
-        # the memory sink is session-lived; materialize rows so the
-        # staged files can be deleted before returning
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(stage, ignore_errors=True)
-    return out
-
-
-def start_extraction_upsert_stream(
-    spark: SparkSession,
-    input_dir: str,
-    table_path: str,
-    checkpoint_dir: str,
-):
-    """Streaming extraction into the IDEMPOTENT keyed sink.
-
-    ``foreachBatch`` hands each micro-batch to the same
-    ``merge_upsert`` the batch pipeline uses (keys ``(url,
-    page_index)``), so the combination delivers the reference's
-    at-least-once + dedupe contract continuously: a replayed
-    micro-batch (restart between sink write and checkpoint commit)
-    re-upserts the same keys and the table stays exactly-once. On a
-    real deployment the table is Iceberg and each batch is one
-    snapshot commit; here the parquet fallback provides the same
-    interface (sources/tables.py).
-    """
-    from westa_ocr_spark.sources.tables import keyed_table
-
-    table = keyed_table(spark, table_path)
-
-    def sink(batch_df, batch_id: int) -> None:
-        table.merge_upsert(
-            batch_df.sparkSession, batch_df, keys=["url", "page_index"]
-        )
-
-    stream = read_pages_stream(spark, input_dir)
-    return (
-        extract_pages(stream)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain_complete(
+        spark, events, ts_col, key_col,
+        F.window("ts", f"{window_minutes} minutes"), n_files,
+        [F.col("win.start").cast("long").alias("window_start"),
+         F.col("key").alias(key_col), "n"],
     )
 
 
@@ -253,58 +216,18 @@ def session_windows_complete(
     ``F.session_window`` merges a key's window state whenever a new
     event lands within ``gap_minutes`` of the session's end — the
     stateful operation that distinguishes sessions from tumbling
-    windows. Complete mode + availableNow over multiple micro-batches
-    exercises cross-batch session merging, and the drained result
-    equals the batch ``groupBy(session_window(...))`` — which in turn
-    equals the classic gap-island SQL (lag + running flag sum), so
-    DuckDB can verify the whole thing (registry
-    ``stream_session_windows``).
+    windows. The complete-mode drain over multiple micro-batches
+    exercises cross-batch session merging, and equals the batch
+    ``groupBy(session_window(...))`` — which in turn equals the
+    classic gap-island SQL (lag + running flag sum), so DuckDB can
+    verify the whole thing (registry ``stream_session_windows``).
 
     Output: (user_id, session_start epoch-seconds, n_events).
     """
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    tag = uuid.uuid4().hex[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"sstream_{tag}")
-    src = events.select(
-        F.col(ts_col).cast("timestamp").alias("ts"),
-        F.col(key_col).alias("key"),
+    return _drain_complete(
+        spark, events, ts_col, key_col,
+        F.session_window("ts", f"{gap_minutes} minutes"), n_files,
+        [F.col("key").alias(key_col),
+         F.col("win.start").cast("long").alias("session_start"),
+         F.col("n").alias("n_events")],
     )
-    src.repartition(n_files).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    agg = (
-        stream.groupBy(
-            F.session_window("ts", f"{gap_minutes} minutes").alias("win"),
-            "key",
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    name = f"sessions_{tag}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = (
-        spark.table(name)
-        .select(
-            F.col("key").alias(key_col),
-            F.col("win.start").cast("long").alias("session_start"),
-            "n_events",
-        )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(stage, ignore_errors=True)
-    return out
