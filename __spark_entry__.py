@@ -25,9 +25,8 @@ def entry(spark: SparkSession) -> DataFrame:
     from westa_ocr_spark.functions import textfns
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    profiled = docs.select(
-        "doc_id",
-        textfns.lang_id(F.col("text")).alias("lang_id"),
+    profiled = textfns.with_lang_id(docs.select("text"), "text").select(
+        "lang_id",
         textfns.quality_score(F.col("text")).alias("quality"),
         textfns.token_count(F.col("text")).alias("ws_tokens"),
         textfns.fingerprint(F.col("text")).alias("fp"),

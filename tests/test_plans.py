@@ -148,36 +148,6 @@ def test_lsh_pair_join_is_hash_not_nl(spark):
     )
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):
-    """write-once bucketing: an equi-join of two tables bucketed on
-    the same key must run WITHOUT a shuffle exchange (and without
-    sorting if sortBy matched) — the co-located-join contract."""
-    import pyspark.sql.functions as F
-
-    from westa_ocr_spark.sources.tables import write_bucketed
-
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    a = spark.range(0, 10_000).select(
-        F.col("id").alias("url_id"), (F.col("id") % 97).alias("v")
-    )
-    b = spark.range(0, 5_000).select(
-        F.col("id").alias("url_id"), (F.col("id") % 13).alias("w")
-    )
-    write_bucketed(a, "bkt_a", "url_id")
-    write_bucketed(b, "bkt_b", "url_id")
-    try:
-        joined = spark.table("bkt_a").join(spark.table("bkt_b"), "url_id")
-        plan = _plan(joined)
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 5_000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       "10485760")
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
-
-
 def test_partition_pruning_reaches_scan(spark, tmp_path_factory):
     """Hive-style partitioned layout (the 100-TB crawl layout:
     partition by lang/date): a filter on the partition column must

@@ -2,6 +2,7 @@
 arbitrary inputs, not just the seeded corpus."""
 
 import codecs
+import io
 
 import pytest
 from hypothesis import example, given, settings
@@ -118,16 +119,21 @@ def test_pdf_parser_total_under_mutation(pages, pos, junk):
         pass
 
 
+def _warc_records(data: bytes) -> list[dict]:
+    """Every record of an in-memory WARC, through the framer."""
+    from westa_ocr_spark.sources.warc import iter_warc_records
+
+    return list(iter_warc_records(io.BytesIO(data)))
+
+
 @settings(max_examples=150, deadline=None)
 @given(st.binary(max_size=2000))
 def test_warc_parser_total_on_arbitrary_bytes(data):
-    """parse_warc never crashes with anything but ValueError."""
-    from westa_ocr_spark.sources.warc import parse_warc
-
+    """The WARC framer never crashes with anything but ValueError."""
     for payload in (data, b"WARC/1.0\r\n" + data,
                     b"\x1f\x8b" + data):
         try:
-            recs = parse_warc(payload)
+            recs = _warc_records(payload)
             assert isinstance(recs, list)
         except ValueError:
             pass
@@ -148,14 +154,14 @@ def test_warc_parser_total_on_arbitrary_bytes(data):
     st.booleans(),
 )
 def test_warc_roundtrip_arbitrary_payloads(items, gz):
-    from westa_ocr_spark.sources.warc import parse_warc, write_warc
+    from westa_ocr_spark.sources.warc import write_warc
 
     recs = [
         {"url": f"https://x.example/{u}", "date": "2025-01-01T00:00:00Z",
          "html": b}
         for u, b in items
     ]
-    parsed = parse_warc(write_warc(recs, gzip_members=gz))
+    parsed = _warc_records(write_warc(recs, gzip_members=gz))
     assert [r["payload"] for r in parsed] == [r["html"] for r in recs]
     assert [r["url"] for r in parsed] == [r["url"] for r in recs]
 

@@ -52,19 +52,6 @@ def media_df(spark):
     return spark.createDataFrame(rows, ["url", "data"])
 
 
-def test_media_kind_sniffing(spark, media_df):
-    from westa_ocr_spark.operators.multimodal import media_kind
-
-    kinds = {
-        r["url"]: r["kind"]
-        for r in media_df.select(
-            "url", media_kind(F.col("data")).alias("kind")
-        ).collect()
-    }
-    assert kinds == {"u1": "jpeg", "u2": "png", "u3": "unknown",
-                     "u4": "riff"}
-
-
 def test_image_features_deterministic_stub(spark, media_df):
     from westa_ocr_spark.operators.multimodal import extract_image_features
 

@@ -24,10 +24,10 @@ def _one(df, col, rid):
 
 
 def test_lang_id(spark, tdf):
-    from westa_ocr_spark.functions.textfns import lang_id
+    from westa_ocr_spark.functions.textfns import with_lang_id
 
-    vals = {r["id"]: r["v"] for r in
-            tdf.select("id", lang_id(F.col("text")).alias("v")).collect()}
+    vals = {r["id"]: r["lang_id"] for r in
+            with_lang_id(tdf, "text").select("id", "lang_id").collect()}
     assert vals[0] == "en"
     assert vals[1] == "de"
     assert vals[2] == "fr"
@@ -72,21 +72,6 @@ def test_fingerprint_normalization(spark):
     fps = [r["v"] for r in
            df.select(fingerprint(F.col("text")).alias("v")).collect()]
     assert fps[0] == fps[1] == fps[2]
-
-
-def test_rolling_fingerprints(spark):
-    from westa_ocr_spark.functions.textfns import rolling_fingerprints
-
-    df = spark.createDataFrame(
-        [(0, " ".join(f"w{i}" for i in range(12))), (1, "short text")],
-        ["id", "text"],
-    )
-    vals = {r["id"]: r["v"] for r in df.select(
-        "id", rolling_fingerprints(F.col("text"), 8).alias("v")
-    ).collect()}
-    assert len(vals[0]) == 5   # 12 - 8 + 1
-    assert len(vals[1]) == 1   # short doc -> one (short) window
-    assert len(set(vals[0])) == 5  # all distinct
 
 
 def test_lang_id_twelve_languages(spark):
@@ -182,12 +167,11 @@ def test_with_lang_id_matches_jvm_form(spark):
 
 
 def test_lang_id_und_for_no_markers(spark):
-    from westa_ocr_spark.functions.textfns import lang_id
-    from pyspark.sql import functions as F
+    from westa_ocr_spark.functions.textfns import with_lang_id
 
     df = spark.createDataFrame([("xyzzy qwerty",), ("",)], ["text"])
-    rows = df.select(lang_id(F.col("text")).alias("l")).collect()
-    assert [r["l"] for r in rows] == ["und", "und"]
+    rows = with_lang_id(df, "text").collect()
+    assert [r["lang_id"] for r in rows] == ["und", "und"]
 
 
 def test_gopher_flags_semantics(spark):

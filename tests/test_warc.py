@@ -1,12 +1,20 @@
 """WARC source: roundtrip, gzip members, Spark ingest, error capture."""
 
+import io
+
 import pytest
 
 from westa_ocr_spark.sources.warc import (
-    parse_warc,
+    iter_warc_records,
     read_warc_pages,
     write_warc,
 )
+
+
+def _records(data: bytes, **kw) -> list[dict]:
+    """Every record of an in-memory WARC, through the framer."""
+    return list(iter_warc_records(io.BytesIO(data), **kw))
+
 
 RECORDS = [
     {"url": "https://a.example/x", "date": "2025-01-01T00:00:00Z",
@@ -21,7 +29,7 @@ def test_roundtrip(gz):
     data = write_warc(RECORDS, gzip_members=gz)
     if gz:
         assert data[:2] == b"\x1f\x8b"
-    recs = parse_warc(data)
+    recs = _records(data)
     assert [r["url"] for r in recs] == [r["url"] for r in RECORDS]
     assert [r["payload"] for r in recs] == [r["html"] for r in RECORDS]
     assert all(r["type"] == "response" for r in recs)
@@ -36,11 +44,11 @@ def test_truncated_raises():
     # cut inside the second record's header section
     second = data.index(b"WARC/1.0", 1)
     with pytest.raises(ValueError):
-        parse_warc(data[: second + 20])
+        _records(data[: second + 20])
     # and inside a declared Content-Length block
     body_at = data.index(b"alpha doc")
     with pytest.raises(ValueError):
-        parse_warc(data[: body_at - 2])
+        _records(data[: body_at - 2])
 
 
 def test_spark_ingest_and_extract(spark, tmp_path):
@@ -85,29 +93,58 @@ def test_spark_ingest_and_extract(spark, tmp_path):
 def test_warc_python_datasource_matches_binaryfile_path(spark, tmp_path):
     """spark.read.format('warc') (the Spark 4 Python DataSource) must
     produce exactly the rows the binaryFile+mapInPandas composition
-    produces: one partition per file, response records only, ERROR
-    row per corrupt file."""
-    from westa_ocr_spark.sources.warc import read_warc_pages
+    produces: one partition per file, response records only, and for a
+    damaged file its good records followed by one ERROR row — for a
+    gzip and a plain file cut inside their third record alike."""
     from westa_ocr_spark.sources.warc_datasource import register
+
+    three = RECORDS + [
+        {"url": "https://c.example/z", "date": "2025-02-03T08:00:00Z",
+         "html": b"<html><body><p>gamma doc</p></body></html>"}]
+    gz_members = [write_warc([r]) for r in three]
+    gz = b"".join(gz_members)
+    plain = write_warc(three, gzip_members=False)
+    third = plain.index(b"WARC/1.0", plain.index(b"beta doc"))
 
     wdir = tmp_path / "warcs"
     wdir.mkdir()
     (wdir / "seg-0.warc.gz").write_bytes(write_warc(RECORDS))
     (wdir / "seg-bad.warc.gz").write_bytes(b"\x1f\x8bgarbage not gzip")
+    (wdir / "seg-cut.warc.gz").write_bytes(
+        gz[: len(gz) - len(gz_members[2]) // 2])
+    (wdir / "seg-cut.warc").write_bytes(
+        plain[: (third + len(plain)) // 2])
 
     register(spark)
     via_ds = spark.read.format("warc").load(str(wdir))
-    assert via_ds.rdd.getNumPartitions() == 2  # one per file
-    expected = read_warc_pages(spark, str(wdir)).drop("warc_file")
-    got = via_ds.drop("warc_file")
-    assert got.schema == expected.schema
-    key = lambda r: (str(r["url"]), str(r["status"]))  # noqa: E731
-    assert sorted(map(key, got.collect())) == sorted(
-        map(key, expected.collect())
-    )
-    gv = {r["url"]: r for r in via_ds.collect()}
-    assert gv["https://a.example/x"]["html"] is not None
-    assert gv[None]["status"] == "ERROR"
+    assert via_ds.rdd.getNumPartitions() == 4  # one per file
+    via_bf = read_warc_pages(spark, str(wdir))
+    assert via_ds.schema == via_bf.schema
+
+    def rows(df):
+        # binaryFile names files by URI, the DataSource by path
+        return sorted(
+            (r["warc_file"].rsplit("/", 1)[-1], str(r["url"]),
+             *(r[c] for c in df.columns if c not in ("warc_file", "url")))
+            for r in df.collect()
+        )
+
+    got = rows(via_ds)
+    assert got == rows(via_bf)
+    by_file: dict = {}
+    for r in got:
+        by_file.setdefault(r[0], []).append(r[1])
+    assert by_file["seg-bad.warc.gz"] == ["None"]
+    for cut in ("seg-cut.warc.gz", "seg-cut.warc"):
+        assert by_file[cut] == [
+            "None", "https://a.example/x", "https://b.example/y"]
+    gv = {(r["warc_file"].rsplit("/", 1)[-1], r["url"]): r
+          for r in via_ds.collect()}
+    assert gv[("seg-0.warc.gz", "https://a.example/x")]["html"] is not None
+    for f in ("seg-bad.warc.gz", "seg-cut.warc.gz", "seg-cut.warc"):
+        assert gv[(f, None)]["status"] == "ERROR"
+    assert all(gv[(f, u)]["status"] == "OK"
+               for f, u in gv if u is not None)
 
 
 def test_warc_datasource_filter_pushdown_prunes_files(spark, tmp_path):
@@ -142,8 +179,7 @@ def test_warc_datasource_filter_pushdown_prunes_files(spark, tmp_path):
 
 def test_warc_datasource_empty_glob_returns_empty_df(spark, tmp_path):
     """Zero-match glob is an empty DataFrame (ADVICE r3), consistent
-    with the post-pushFilters path; failOnEmpty=true restores the
-    planning-time error."""
+    with the post-pushFilters path."""
     from westa_ocr_spark.sources.warc_datasource import register
 
     wdir = tmp_path / "empty"
@@ -151,14 +187,6 @@ def test_warc_datasource_empty_glob_returns_empty_df(spark, tmp_path):
     register(spark)
     df = spark.read.format("warc").load(str(wdir))
     assert df.count() == 0
-    strict = (
-        spark.read.format("warc").option("failOnEmpty", "true")
-        .load(str(wdir))
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="no files match"):
-        strict.count()
 
 
 def test_warc_datasource_inlist_and_range_pushdown(spark, tmp_path):
@@ -242,8 +270,6 @@ def test_http_body_decodings():
     import gzip as _gzip
     import zlib as _zlib
 
-    from westa_ocr_spark.sources.warc import parse_warc
-
     doc = b"<html><body><p>hello encodings</p></body></html>"
 
     def rec(http):
@@ -261,12 +287,12 @@ def test_http_body_decodings():
         b"%x\r\n" % len(doc[16:])) + doc[16:] + b"\r\n0\r\n\r\n"
     http = (b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n"
             + chunks)
-    assert parse_warc(rec(http))[0]["payload"] == doc
+    assert _records(rec(http))[0]["payload"] == doc
 
     # gzip
     http = (b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip\r\n\r\n"
             + _gzip.compress(doc))
-    assert parse_warc(rec(http))[0]["payload"] == doc
+    assert _records(rec(http))[0]["payload"] == doc
 
     # deflate (zlib-wrapped and raw)
     for blob in (_zlib.compress(doc),
@@ -278,26 +304,26 @@ def test_http_body_decodings():
     for blob in (_zlib.compress(doc), raw_deflate):
         http = (b"HTTP/1.1 200 OK\r\nContent-Encoding: deflate\r\n\r\n"
                 + blob)
-        assert parse_warc(rec(http))[0]["payload"] == doc
+        assert _records(rec(http))[0]["payload"] == doc
 
     # chunked + gzip stacked
     gz = _gzip.compress(doc)
     chunks = (b"%x\r\n" % len(gz)) + gz + b"\r\n0\r\n\r\n"
     http = (b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip\r\n"
             b"Transfer-Encoding: chunked\r\n\r\n" + chunks)
-    assert parse_warc(rec(http))[0]["payload"] == doc
+    assert _records(rec(http))[0]["payload"] == doc
 
     # broken gzip: raw body returned WITH a decode error flagged
     # (round 5: consumers turn this into an ERROR row, the framed
     # bytes never masquerade as content)
     http = (b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip\r\n\r\n"
             b"\x1f\x8bGARBAGE")
-    out = parse_warc(rec(http))[0]
+    out = _records(rec(http))[0]
     assert out["payload"] == b"\x1f\x8bGARBAGE"
     assert out["error"] and "gzip" in out["error"]
     # clean records carry error=None
     http = b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + doc
-    assert parse_warc(rec(http))[0]["error"] is None
+    assert _records(rec(http))[0]["error"] is None
 
 
 def test_http_body_decoding_header_variants():
@@ -305,8 +331,6 @@ def test_http_body_decoding_header_variants():
     and stacked codings in one header all decode; an unrecognized
     coding is flagged as a decode error, not passed through raw."""
     import gzip as _gzip
-
-    from westa_ocr_spark.sources.warc import parse_warc
 
     doc = b"<html><body><p>variant encodings</p></body></html>"
 
@@ -326,25 +350,25 @@ def test_http_body_decoding_header_variants():
     chunks = (b"%x\r\n" % len(gz)) + gz + b"\r\n0\r\n\r\n"
     http = (b"HTTP/1.1 200 OK\r\nTransfer-Encoding: gzip, chunked\r\n\r\n"
             + chunks)
-    out = parse_warc(rec(http))[0]
+    out = _records(rec(http))[0]
     assert out["payload"] == doc and out["error"] is None
 
     # no-space colon + mixed case
     http = (b"HTTP/1.1 200 OK\r\ncontent-ENCODING:GZIP\r\n\r\n"
             + _gzip.compress(doc))
-    out = parse_warc(rec(http))[0]
+    out = _records(rec(http))[0]
     assert out["payload"] == doc and out["error"] is None
 
     # x-gzip alias inside a list with identity
     http = (b"HTTP/1.1 200 OK\r\nContent-Encoding: identity, x-gzip\r\n\r\n"
             + _gzip.compress(doc))
-    out = parse_warc(rec(http))[0]
+    out = _records(rec(http))[0]
     assert out["payload"] == doc and out["error"] is None
 
     # unrecognized coding (br is not shipped here): decode error
     http = (b"HTTP/1.1 200 OK\r\nContent-Encoding: br\r\n\r\n"
             b"\x00\x01\x02")
-    out = parse_warc(rec(http))[0]
+    out = _records(rec(http))[0]
     assert out["error"] and "br" in out["error"]
 
 
@@ -353,11 +377,6 @@ def test_content_type_charset_drives_extraction(spark, tmp_path):
     as the `charset` column and decodes no-meta non-UTF-8 pages
     end-to-end (WARC -> pages -> extract_pages)."""
     from westa_ocr_spark.operators.extract import extract_pages
-    from westa_ocr_spark.sources.warc import (
-        parse_warc,
-        read_warc_pages,
-        write_warc,
-    )
 
     probe = "日本語の本文テキストです"
     body = f"<html><body><p>{probe}</p></body></html>".encode("cp932")
@@ -376,7 +395,7 @@ def test_content_type_charset_drives_extraction(spark, tmp_path):
     ]
     blob = write_warc(recs)
     # parser surfaces the charset
-    parsed = {r["url"]: r for r in parse_warc(blob)}
+    parsed = {r["url"]: r for r in _records(blob)}
     assert parsed["https://cs.example/sjis"]["charset"] == "Shift_JIS"
     assert parsed["https://cs.example/plain"]["charset"] is None
 
@@ -426,8 +445,6 @@ def test_decompression_bombs_are_bounded():
     bomb is a file-level ValueError."""
     import gzip as _gzip
 
-    from westa_ocr_spark.sources.warc import parse_warc
-
     bomb = _gzip.compress(b"\x00" * (70 * 1024 * 1024))  # ~70 KB in
     http = (b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip\r\n\r\n" + bomb)
     head = (
@@ -437,24 +454,22 @@ def test_decompression_bombs_are_bounded():
         + f"Content-Length: {len(http)}\r\n".encode()
         + b"\r\n"
     )
-    rec = parse_warc(head + http + b"\r\n\r\n")[0]
+    rec = _records(head + http + b"\r\n\r\n")[0]
     assert rec["error"] and "cap" in rec["error"]
 
     # member-level bomb: the gzip MEMBER itself inflates past the cap
     member_bomb = _gzip.compress(b"\x00" * (300 * 1024 * 1024))
     with pytest.raises(ValueError, match="cap"):
-        parse_warc(member_bomb)
+        _records(member_bomb)
 
 
 def test_streaming_iterator_equivalent_to_inmemory_parse(tmp_path):
-    """Round 5: iter_warc_file (O(member) memory, 1 MB read chunks)
-    yields exactly parse_warc's records for gzip-member AND plain
-    layouts, including multi-record members, decode errors and
-    charset hints — verified with a tiny chunk size so every buffer
-    boundary is exercised."""
+    """The framer yields the same records at any read size, for
+    gzip-member AND plain layouts, multi-record members and charset
+    hints — tiny chunk sizes exercise every buffer boundary — and those
+    records are the ones write_warc was given. Truncated and corrupt
+    gzip raises."""
     import gzip as _gzip
-
-    from westa_ocr_spark.sources.warc import iter_warc_file, parse_warc
 
     recs = [
         {"url": f"https://s{i}.example/p", "date": "2025-01-01T00:00:00Z",
@@ -463,19 +478,33 @@ def test_streaming_iterator_equivalent_to_inmemory_parse(tmp_path):
          **({"charset": "Shift_JIS"} if i % 3 == 0 else {})}
         for i in range(7)
     ]
+    written = [(r["url"], r["html"], r.get("charset")) for r in recs]
     for gz in (True, False):
         blob = write_warc(recs, gzip_members=gz)
-        path = tmp_path / f"seg_{int(gz)}.warc.gz"
+        whole = _records(blob)
+        assert [(r["url"], r["payload"], r["charset"]) for r in whole] \
+            == written
+        assert all(r["type"] == "response" and r["error"] is None
+                   for r in whole)
+        assert _records(blob, chunk_size=37) == whole
+        assert _records(blob, chunk_size=11) == whole
+        # and straight off the disk, as the DataSource reads it
+        path = tmp_path / f"seg_{int(gz)}.warc"
         path.write_bytes(blob)
-        streamed = list(iter_warc_file(str(path), chunk_size=37))
-        assert streamed == parse_warc(blob)
-    # multi-record single member + broken-gzip body flagged identically
+        with open(path, "rb") as fh:
+            assert list(iter_warc_records(fh, chunk_size=37)) == whole
+    # multi-record single member
     multi = _gzip.compress(write_warc(recs[:3], gzip_members=False))
-    p2 = tmp_path / "multi.warc.gz"
-    p2.write_bytes(multi)
-    assert list(iter_warc_file(str(p2), chunk_size=11)) == parse_warc(multi)
-    # corrupt file raises in both
-    p3 = tmp_path / "bad.warc.gz"
-    p3.write_bytes(b"\x1f\x8bnot really gzip data")
+    assert _records(multi, chunk_size=11) == _records(multi)
+    assert [r["url"] for r in _records(multi)] == [r["url"] for r in recs[:3]]
+    # a record split across two members is corrupt
+    raw = write_warc(recs[:1], gzip_members=False)
+    split = _gzip.compress(raw[:40]) + _gzip.compress(raw[40:])
     with pytest.raises(ValueError):
-        list(iter_warc_file(str(p3)))
+        _records(split)
+    # a file cut inside a member's gzip header is truncated too
+    with pytest.raises(ValueError, match="truncated"):
+        _records(write_warc(recs[:2]) + write_warc(recs[2:3])[:5])
+    # corrupt file raises
+    with pytest.raises(ValueError):
+        _records(b"\x1f\x8bnot really gzip data")

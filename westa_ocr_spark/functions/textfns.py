@@ -137,17 +137,6 @@ def lang_from_best(best: Column) -> Column:
     ).otherwise(F.lit("und"))
 
 
-def lang_id(col: Column) -> Column:
-    """Stopword-heuristic language ID (argmax; all-zero -> 'und').
-
-    Compact single-expression form: the argmax struct is evaluated
-    once per reference (twice here). For wide scans prefer
-    :func:`with_lang_id`, which stages the struct as its own
-    projection so the 96 occurrence counters run exactly once per row.
-    """
-    return lang_from_best(lang_best_struct(col))
-
-
 _LANGS_SORTED = sorted(_LANG_STOPWORDS)
 
 
@@ -301,23 +290,6 @@ def normalize_text(col: Column) -> Column:
 def fingerprint(col: Column) -> Column:
     """Deterministic content fingerprint (md5 of normalized text)."""
     return F.md5(normalize_text(col))
-
-
-def rolling_fingerprints(col: Column, window_tokens: int = 8) -> Column:
-    """Rolling window fingerprints: md5 of each ``window_tokens``-gram
-    of the normalized text (array column, document fingerprinting for
-    near-dup / contamination checks)."""
-    words = F.split(normalize_text(col), " ")
-    n = F.size(words)
-    # greatest(..., 1): Spark sequence(1, 0) would generate a
-    # DESCENDING [1, 0]; short docs get one (shorter) window instead.
-    idx = F.sequence(
-        F.lit(1), F.greatest(n - F.lit(window_tokens - 1), F.lit(1))
-    )
-    return F.transform(
-        idx,
-        lambda i: F.md5(F.concat_ws(" ", F.slice(words, i, window_tokens))),
-    )
 
 
 def with_quality_flags(df, text_col: str):

@@ -502,9 +502,6 @@ def _aes_expand_key(key: bytes) -> list[list[int]]:
     ]
 
 
-_SHIFT = [0, 5, 10, 15, 4, 9, 14, 3, 8, 13, 2, 7, 12, 1, 6, 11]
-_INV_SHIFT = [0, 13, 10, 7, 4, 1, 14, 11, 8, 5, 2, 15, 12, 9, 6, 3]
-
 # T-tables (classic 4x256-word AES formulation): fold SubBytes +
 # ShiftRows + MixColumns into four table lookups per output column.
 # ~6x over the byte-wise rounds in pure python — the hardened-hash
@@ -1294,7 +1291,6 @@ def decode_pdf_string(b: bytes) -> str:
         return b.decode("latin-1")
 
 
-_SHOW_OPS = {b"Tj", b"'", b'"'}
 _NEWLINE_OPS = {b"Td", b"TD", b"T*", b"Tm"}
 
 

@@ -41,21 +41,6 @@ from westa_ocr_spark.kernel import check_pixels
 from westa_ocr_spark.operators.per_doc import map_documents
 
 
-def media_kind(col: F.Column) -> F.Column:
-    """Sniff media type from magic bytes (JVM-side, codegen'd)."""
-    hexpfx = F.hex(F.substring(col, 1, 4))
-    return (
-        F.when(hexpfx.startswith("FFD8FF"), F.lit("jpeg"))
-        .when(hexpfx == "89504E47", F.lit("png"))
-        .when(hexpfx.startswith("47494638"), F.lit("gif"))
-        .when(hexpfx.startswith("52494646"), F.lit("riff"))  # wav/avi
-        .when(hexpfx.startswith("494433"), F.lit("mp3"))
-        .when(F.substring(col, 5, 4) == F.lit(b"ftyp"), F.lit("mp4"))
-        .when(hexpfx.startswith("255044"), F.lit("pdf"))
-        .otherwise(F.lit("unknown"))
-    )
-
-
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),

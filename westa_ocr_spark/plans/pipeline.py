@@ -36,6 +36,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,17 +69,12 @@ SINK_BUCKETS = 16
 COMPACT_FILES_PER_BUCKET = 64
 
 
-def _max_files_per_bucket(path: str) -> int:
-    """Fullest partition directory's parquet-file count (0 if none)."""
-    worst = 0
-    if not os.path.isdir(path):
-        return 0
-    for name in os.listdir(path):
-        d = os.path.join(path, name)
-        if "=" in name and os.path.isdir(d):
-            n = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
-            worst = max(worst, n)
-    return worst
+def _max_files_per_bucket(tbl: ParquetTable) -> int:
+    """Fullest partition directory's file count in the table's latest
+    commit (0 if none); the commit leaves exactly its listed files on
+    disk."""
+    per_bucket = Counter(os.path.dirname(f) for f in tbl.files())
+    return max(per_bucket.values(), default=0)
 
 
 @dataclass
@@ -317,7 +313,7 @@ def run_extraction_job(
             # files into the sink; when the fullest bucket crosses the
             # bound, repack to one file per bucket so read-side task
             # counts stay O(buckets), not O(buckets x runs)
-            if (_max_files_per_bucket(extracted_tbl.path)
+            if (_max_files_per_bucket(extracted_tbl)
                     > compact_files_per_bucket):
                 extracted_tbl.compact(spark)
                 compacted = True

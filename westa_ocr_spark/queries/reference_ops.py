@@ -623,8 +623,6 @@ FROM lines WHERE len(cells) >= 15
 # expectations the byte-identity pytest gate uses, so the driver now
 # verifies extraction VALUES, not just row counts (VERDICT r4 #4).
 
-_EXTRACT_FIXTURE = None  # resolved lazily so the module imports anywhere
-
 
 def _extract_fixture_path() -> str:
     import os

@@ -138,6 +138,10 @@ class ParquetTable:
     def exists(self) -> bool:
         return self._latest()[0] >= 0
 
+    def files(self) -> list[str]:
+        """The latest commit's files, as paths relative to the table."""
+        return self._latest()[1]
+
     def read(self, spark: SparkSession) -> DataFrame:
         # a directory read, not a file list: a long explicit file list
         # costs Spark an extra listing job, and partition pruning works
@@ -263,7 +267,7 @@ class ParquetTable:
         cols = self.read(spark).columns
         rewrite_files: list[str] = []
         files_pruned = bytes_rewritten = bytes_kept = 0
-        for rel in self._latest()[1]:
+        for rel in self.files():
             if os.path.dirname(rel) not in ranges:
                 continue
             lo, hi = ranges[os.path.dirname(rel)]
@@ -345,23 +349,3 @@ class IcebergTable:
         )
         spark.catalog.dropTempView(view)
 
-
-def write_bucketed(df: DataFrame, table_name: str, key: str,
-                   n_buckets: int = 8) -> None:
-    """Persist a frame bucketed+sorted by ``key`` (saveAsTable — the
-    bucket metadata lives in the session catalog).
-
-    Bucketing pre-shuffles ONCE at write time: any later equi-join or
-    aggregation on ``key`` between tables bucketed the same way runs
-    with NO exchange — the 100-TB pattern for repeatedly-joined keyed
-    state (committed extractions, manifests, dedup groups), where one
-    write-time shuffle amortizes across every downstream run. The
-    plan-audit test asserts the bucketed self-join is exchange-free.
-    """
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )

@@ -1,9 +1,10 @@
 """WARC as a registered Spark 4 Python DataSource: ``format("warc")``.
 
 The Data Source API (``pyspark.sql.datasource``, Spark 4) lets the
-WARC reader plug into the normal reader surface instead of the
-binaryFile+mapInPandas composition in :mod:`westa_ocr_spark.sources.
-warc` (which remains the oracle twin and works on any Spark 3.4+):
+WARC reader plug into the normal reader surface next to the
+binaryFile+mapInPandas composition of
+:func:`westa_ocr_spark.sources.warc.read_warc_pages` (which works on
+any Spark 3.4+):
 
     spark.dataSource.register(WarcDataSource)
     df = spark.read.format("warc").load("/crawl/segments/*.warc.gz")
@@ -11,11 +12,11 @@ warc` (which remains the oracle twin and works on any Spark 3.4+):
 Partition planning mirrors Common Crawl's sharding: ONE input
 partition per WARC file (tens of thousands of ~1 GiB segments per
 crawl), planned on the driver from a filesystem glob; each executor
-task parses only its own file, decompressing gzip members one at a
-time so memory is bounded by a record, not a file. A file that fails
-with any ``Exception`` yields a single ERROR row after the records
-read before the failure (the same catch-all as
-``operators.per_doc.map_documents``), never a task failure.
+task streams only its own file from disk, so task memory is bounded by
+a record, not a file. Rows come from the same
+:func:`~westa_ocr_spark.sources.warc.warc_file_rows` as the binaryFile
+reader, so the two agree row for row: a file that faults yields its
+good records, then a single ERROR row, never a task failure.
 
 Local/posix paths only (the sandbox has no distributed FS client);
 on a real cluster the same class works wherever the executors mount
@@ -42,12 +43,7 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 
-from westa_ocr_spark.sources.warc import (
-    WARC_PAGES_SCHEMA,
-    _page_row,
-    _warc_file_error,
-    iter_warc_file,
-)
+from westa_ocr_spark.sources.warc import WARC_PAGES_SCHEMA, warc_file_rows
 
 _FIELDS = WARC_PAGES_SCHEMA.fieldNames()
 
@@ -67,13 +63,6 @@ class WarcReader(DataSourceReader):
         if not path:
             raise ValueError("warc datasource requires .load(<path>)")
         self._path = path
-        # fail_on_empty: planning a zero-match glob is an error only
-        # when asked for — the default mirrors Spark's own behavior
-        # for an empty directory (empty DataFrame) and the module's
-        # per-row error-capture contract (ADVICE r3).
-        self._fail_on_empty = str(
-            options.get("failOnEmpty", "false")
-        ).lower() in ("1", "true", "yes")
         # file-level predicates on warc_file, applied at planning time
         self._file_preds: list = []
         # record-level predicates on url, applied while scanning
@@ -134,42 +123,30 @@ class WarcReader(DataSourceReader):
             pattern = os.path.join(self._path, "*")
         else:
             pattern = self._path
+        # a zero-match glob plans no partitions: an empty DataFrame,
+        # as Spark's own readers give for an empty directory
         files = sorted(
-            f for f in _glob.glob(pattern) if os.path.isfile(f)
+            f for f in _glob.glob(pattern)
+            if os.path.isfile(f)
+            and all(self._matches(f, p) for p in self._file_preds)
         )
-        if not files and self._fail_on_empty:
-            raise ValueError(f"warc datasource: no files match {pattern}")
-        files = [
-            f for f in files
-            if all(self._matches(f, p) for p in self._file_preds)
-        ]
         return [_WarcFilePartition(f) for f in files]
 
     def read(self, partition: _WarcFilePartition) -> Iterator[tuple]:
         if partition is None:  # empty plan: Spark sends one None task
             return
         fpath = partition.path
-        try:
-            # STREAMING read (round 5): records come off the file one
-            # gzip member at a time, so task memory is bounded by one
-            # capture plus a 1 MB read chunk — not by the ~1 GiB
-            # segment the binaryFile composition must hold whole
-            for rec in iter_warc_file(fpath):
-                if rec["type"] != "response":
-                    continue
-                url = rec["url"]
+        with open(fpath, "rb") as fh:
+            for row in warc_file_rows(fpath, fh):
+                # consumed url predicates hold EXACTLY: a NULL url (the
+                # file's ERROR row) satisfies none of them
+                url = row["url"]
                 if self._url_preds and (
                     url is None
-                    or not all(
-                        self._matches(url, p) for p in self._url_preds
-                    )
+                    or not all(self._matches(url, p) for p in self._url_preds)
                 ):
                     continue
-                yield _as_tuple(_page_row(rec, fpath))
-        except Exception as exc:  # noqa: BLE001 - per-file capture
-            if self._url_preds:
-                return  # NULL url satisfies no consumed url predicate
-            yield _as_tuple(_warc_file_error(fpath, None, exc))
+                yield _as_tuple(row)
 
 
 class WarcDataSource(DataSource):
