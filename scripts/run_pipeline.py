@@ -6,7 +6,9 @@ Usage:
     spark-submit --py-files westa_ocr_spark.zip scripts/run_pipeline.py ...
 
 Generates (or reuses) a seeded synthetic pages table, runs the full
-extraction job, prints one JSON line of counters + docs/sec.
+extraction job, prints one JSON line of counters + docs/sec and the
+number of Spark jobs the run started (``spark_jobs``, counted by its
+job group).
 """
 
 from __future__ import annotations
@@ -62,14 +64,18 @@ def main() -> None:
             os.path.join(args.out, "_warmup")
         )
     t0 = time.time()
+    group = f"run_pipeline_{args.run_id}"
     res = run_extraction_job(
         spark,
         pages,
         args.out,
         resume=not args.no_resume,
         run_id=args.run_id,
+        job_group=group,
     )
     elapsed = time.time() - t0
+    tracker = spark.sparkContext.statusTracker()
+    spark_jobs = len(tracker.getJobIdsForGroup(group))
     processed = res.docs_processed
     print(
         json.dumps(
@@ -83,6 +89,7 @@ def main() -> None:
                 "elapsed_sec": round(elapsed, 2),
                 "docs_per_sec": round(processed / elapsed, 2),
                 "stages": res.stages,
+                "spark_jobs": spark_jobs,
                 "out": res.out_dir,
             }
         )

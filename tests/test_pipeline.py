@@ -242,3 +242,30 @@ def test_incremental_runs_bound_files_and_measure_merges(
     assert all(a >= 0.0 for a in amps)
     man = ParquetTable(f"{out}/manifest").read(spark)
     assert man.count() == 40 + 20 * 9
+
+
+def test_spark_jobs_per_run(spark, tmp_path_factory):
+    """Spark jobs of a fresh run and of a resumed delta onto its sink,
+    counted per job group. Each is the input's schema inference plus
+    the extract, lineage, key-stats, merge, manifest and counters jobs;
+    a new collect or a table read that infers its schema shows here."""
+    from pyspark.sql import functions as F
+
+    from westa_ocr_spark.corpus import url_for
+
+    base = tmp_path_factory.mktemp("jobs")
+    write_pages_parquet(str(base / "all"), n=94, seed=42, rows_per_file=50)
+    every = spark.read.parquet(str(base / "all"))
+    for name, ids in (("first", range(64)),
+                      ("delta", [*range(64, 94), *range(0, 60, 6)])):
+        every.filter(F.col("url").isin([url_for(i) for i in ids])) \
+            .write.parquet(str(base / name))
+    out = str(base / "out")
+    tracker = spark.sparkContext.statusTracker()
+    jobs = {}
+    for name, resume in (("first", False), ("delta", True)):
+        group = f"jobs_{name}"
+        run_extraction_job(spark, str(base / name), out, resume=resume,
+                           run_id=name, job_group=group)
+        jobs[name] = len(tracker.getJobIdsForGroup(group))
+    assert jobs == {"first": 10, "delta": 22}

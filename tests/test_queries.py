@@ -173,3 +173,25 @@ def test_rows_only_queries_run(spark, name, fn):
     pdf = fn(spark, SF_DIR).toPandas()
     assert len(pdf.columns) > 0
     _canon(pdf, name, "spark")
+
+
+def test_scratch_dir_is_removed_by_its_exit_hook(monkeypatch):
+    """A query's scratch directory outlives the query (the lazy frame
+    it returns still reads the directory) and is removed by the hook
+    the helper registers for interpreter exit."""
+    import atexit
+    import os
+
+    from westa_ocr_spark.queries.common import _scratch_dir
+
+    hooks = []
+    monkeypatch.setattr(atexit, "register",
+                        lambda fn, *args, **kw: hooks.append((fn, args, kw)))
+    path = _scratch_dir("westa_q_test_")
+    with open(os.path.join(path, "part"), "w") as fh:
+        fh.write("x")
+    assert os.path.basename(path).startswith("westa_q_test_")
+    assert len(hooks) == 1
+    fn, args, kw = hooks[0]
+    fn(*args, **kw)
+    assert not os.path.exists(path)

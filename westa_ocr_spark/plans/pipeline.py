@@ -106,21 +106,18 @@ def cancel_extraction(spark: SparkSession, job_group: str) -> None:
 
 
 def committed_for_run(
-    spark: SparkSession, extracted_tbl: ParquetTable, staged: DataFrame
+    spark: SparkSession, extracted_tbl: ParquetTable, buckets: list[int]
 ) -> DataFrame:
     """Partition-pruned view of the committed sink for one run.
 
-    Filters the sink scan to the run's ``url_bucket`` values BEFORE
-    the url semi-join, so the parquet read carries PartitionFilters
-    (plan-asserted in tests/test_plans.py) instead of scanning every
-    bucket of an arbitrarily large table.
+    Filters the sink scan to the run's ``url_bucket`` values (the
+    buckets of its staged rows, which the key-stats aggregation names)
+    BEFORE the url semi-join, so the parquet read carries
+    PartitionFilters (plan-asserted in tests/test_plans.py) instead of
+    scanning every bucket of an arbitrarily large table.
     """
-    buckets = [
-        r[0] for r in staged.select("url_bucket").distinct().collect()
-    ]
     return extracted_tbl.read(spark).filter(
-        F.col("url_bucket").isin(buckets)
-    )
+        F.col("url_bucket").isin(buckets))
 
 
 def run_extraction_job(
@@ -197,10 +194,8 @@ def run_extraction_job(
         _mark("resume_plan")
     work = skew_split(work)
 
-    extracted = extract_pages(work).withColumn(
-        "url_bucket",
-        F.pmod(F.xxhash64("url"), F.lit(SINK_BUCKETS)).cast("int"),
-    )
+    bucket = F.pmod(F.xxhash64("url"), F.lit(SINK_BUCKETS)).cast("int")
+    extracted = extract_pages(work).withColumn("url_bucket", bucket)
 
     # single execution: on a fresh sink the extract output is committed
     # straight into it (hive-partitioned by url_bucket so later
@@ -221,18 +216,15 @@ def run_extraction_job(
     # (key-stats, lineage, manifest) fan out into near-empty tasks
     # whose scheduling dominates. Pack them: bump split size / drop
     # per-file open cost for the tail, restore on exit.
-    conf_saved = {
-        "spark.sql.files.maxPartitionBytes":
-            spark.conf.get("spark.sql.files.maxPartitionBytes"),
-        "spark.sql.files.openCostInBytes":
-            spark.conf.get("spark.sql.files.openCostInBytes"),
-    }
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(128 << 20))
-    spark.conf.set("spark.sql.files.openCostInBytes", str(1 << 20))
+    tail_conf = {"spark.sql.files.maxPartitionBytes": str(128 << 20),
+                 "spark.sql.files.openCostInBytes": str(1 << 20)}
+    conf_saved = {k: spark.conf.get(k) for k in tail_conf}
+    for k, v in tail_conf.items():
+        spark.conf.set(k, v)
     try:
         staged = (
             extracted_tbl.read(spark) if first_run
-            else spark.read.parquet(staging_path)
+            else spark.read.schema(extracted.schema).parquet(staging_path)
         )
 
         # per-partition lineage from the staged part files (one file per
@@ -256,18 +248,22 @@ def run_extraction_job(
         )
         _mark("lineage")
 
-        # J5 key stats: one aggregation over this run's staged rows.
-        # Duplicate-key detection is GLOBAL over the run's output. On a
-        # resumed run the input's urls join the same job as rows without
-        # a page_index, so the docs resume skipped are the input docs
-        # minus the extracted ones. Otherwise ``page`` is a literal and
-        # the plan folds back to the staged rows' aggregation alone.
+        # J5 key stats: one aggregation over this run's staged rows,
+        # grouped by url_bucket. A url maps to exactly one bucket, so the
+        # global counts are the sums of the bucket counts, and the same
+        # <= SINK_BUCKETS rows name the buckets and url ranges the merge
+        # and the manifest upsert touch. On a resumed run the input's
+        # urls join the same job as rows without a page_index, so the
+        # docs resume skipped are the input docs minus the extracted
+        # ones. Otherwise ``page`` is a literal and the plan folds back
+        # to the staged rows' aggregation alone.
         keyed, page = staged, F.lit(True)
         if resumed:
-            keyed = staged.unionByName(pages.select("url"),
-                                       allowMissingColumns=True)
+            keyed = staged.unionByName(
+                pages.select("url", bucket.alias("url_bucket")),
+                allowMissingColumns=True)
             page = F.col("page_index").isNotNull()
-        mstats = keyed.agg(
+        by_bucket = keyed.groupBy("url_bucket").agg(
             F.count(F.when(page, F.lit(1))).alias("rows"),
             F.countDistinct("url", "page_index").alias("keys"),
             F.countDistinct(F.when(page, F.col("url"))).alias("docs"),
@@ -275,13 +271,16 @@ def run_extraction_job(
                 F.when(F.col("status") == "ERROR", F.col("url"))
             ).alias("err_docs"),
             F.countDistinct("url").alias("in_docs"),
-        ).collect()[0]
-        run_rows, run_keys, run_docs = (
-            int(mstats["rows"]), int(mstats["keys"]), int(mstats["docs"])
-        )
-        run_err_docs = int(mstats["err_docs"])
-        resumed_skipped = int(mstats["in_docs"]) - run_docs
+            F.min(F.when(page, F.col("url"))).alias("lo"),
+            F.max(F.when(page, F.col("url"))).alias("hi"),
+        ).collect()
+        run_rows, run_keys, run_docs, run_err_docs, in_docs = (
+            sum(int(r[c]) for r in by_bucket)
+            for c in ("rows", "keys", "docs", "err_docs", "in_docs"))
+        resumed_skipped = in_docs - run_docs
         has_dup_keys = run_keys != run_rows
+        ranges = {r["url_bucket"]: (r["lo"], r["hi"])
+                  for r in by_bucket if r["rows"]}
         _mark("key_stats")
         if first_run:
             if has_dup_keys:
@@ -294,14 +293,14 @@ def run_extraction_job(
             )
         else:
             merge_stats = extracted_tbl.merge_upsert(
-                spark, staged, keys=["url", "page_index"]
+                spark, staged, keys=["url", "page_index"], ranges=ranges
             )
             # manifest is maintained INCREMENTALLY: summarize only this
             # run's urls and upsert by url — re-summarizing the whole
             # committed table every run would be an O(table) pass that
             # dwarfs small incremental runs. Post-merge the sink rows for
             # this run's urls are final, so their manifest rows are too.
-            committed = committed_for_run(spark, extracted_tbl, staged)
+            committed = committed_for_run(spark, extracted_tbl, list(ranges))
             run_manifest = build_manifest(
                 committed.join(
                     staged.select("url").distinct(), "url", "left_semi"

@@ -4,6 +4,10 @@ used by more than one domain module."""
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
@@ -14,6 +18,15 @@ from westa_ocr_spark.functions import textfns
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A new, uniquely named directory under the system temp dir (so
+    concurrent sweeps never share one), removed at interpreter exit:
+    the lazy frame a query returns still reads it after the return."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def _sql_round_det(expr: str, digits: int = 6) -> str:

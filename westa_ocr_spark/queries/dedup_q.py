@@ -13,7 +13,7 @@ from westa_ocr_spark.queries.common import (  # noqa: F401
     _sql_lang_scores, _sql_occ, _sql_punct_ratio, _sql_quality,
     _sql_round_det, _sql_shingles, _sql_simhash16,
     _sql_simhash64_query, _sql_stop_ratio,
-    _sql_token_count, _t,
+    _sql_token_count, _scratch_dir, _t,
 )
 
 from westa_ocr_spark.operators import dedup  # noqa: F401
@@ -49,22 +49,19 @@ def _q_dedup_incremental(spark, sf):
     ids (same content). The re-crawl must be dropped by the STORE
     (not batch-internal dedup) — the incremental-corpus-growth shape.
     Returns run 2's surviving doc ids."""
-    import tempfile
-    import uuid
-
     from westa_ocr_spark.operators.dedup import (
         dedup_against_store,
         fp_bucket_store,
     )
 
-    # per-run uuid path (VERDICT r4 hygiene): concurrent sweeps on one
-    # host must not share/clobber a fixed staging dir. Bucketed store:
-    # the incremental anti-join prunes to the batch's fp buckets.
-    # n_buckets=8 sizes the layout to these few-hundred-doc batches
-    # (every merge pays O(touched buckets) in tasks/files); a crawl
-    # store would use the 64+ default — see fp_bucket_store.
-    base = tempfile.gettempdir() + f"/westa_q_dedup_{uuid.uuid4().hex[:8]}"
-    store = fp_bucket_store(base, n_buckets=8)
+    # Bucketed store: the incremental anti-join prunes to the batch's
+    # fp buckets. n_buckets=8 sizes the layout to these few-hundred-doc
+    # batches (every merge pays O(touched buckets) in tasks/files); a
+    # crawl store would use the 64+ default — see fp_bucket_store. The
+    # store's bucket-count sidecar sits next to it, inside the scratch
+    # directory.
+    store = fp_bucket_store(f"{_scratch_dir('westa_q_dedup_')}/store",
+                            n_buckets=8)
     docs = _t(spark, sf, "documents")
     b1 = docs.filter(F.col("doc_id") < 300).select("doc_id", "text")
     b2 = (

@@ -13,7 +13,7 @@ from westa_ocr_spark.queries.common import (  # noqa: F401
     _SQL_NORM, _SQL_WORDS, _sql_lang_best, _sql_lang_from_best,
     _sql_lang_scores, _sql_occ, _sql_punct_ratio, _sql_quality,
     _sql_round_det, _sql_shingles, _sql_simhash16, _sql_stop_ratio,
-    _sql_token_count, _t,
+    _sql_token_count, _scratch_dir, _t,
 )
 
 from westa_ocr_spark.operators.parse_details import parse_detail_rows  # noqa: F401
@@ -1009,8 +1009,6 @@ def _q_warc_ingest(spark, sf):
     binaryFile + mapInPandas source, and extract. Covers the
     source -> pages -> extraction composition end-to-end."""
     import os
-    import tempfile
-    import uuid
 
     from westa_ocr_spark.operators.extract import extract_pages
     from westa_ocr_spark.sources.warc import read_warc_pages, write_warc
@@ -1021,10 +1019,7 @@ def _q_warc_ingest(spark, sf):
         .select("doc_id", "text")
         .collect()
     )
-    stage = os.path.join(
-        tempfile.gettempdir(), f"warc_q_{uuid.uuid4().hex[:8]}"
-    )
-    os.makedirs(stage, exist_ok=True)
+    stage = _scratch_dir("warc_q_")
     per_seg = 50
     for seg in range(0, len(docs), per_seg):
         recs = [
@@ -1085,8 +1080,6 @@ def _q_merge_upsert(spark, sf):
     (new-rows-win UNION ALL base anti-join). The batch contains
     in-batch duplicate rows (identical, so the key-dedup is
     deterministic) and keys 1000-2999 overlap base keys 0-1999."""
-    import tempfile
-
     from westa_ocr_spark.sources.tables import ParquetTable
 
     orders = _t(spark, sf, "orders")
@@ -1106,11 +1099,7 @@ def _q_merge_upsert(spark, sf):
         F.lit("U").alias("st"),
         (F.col("o_orderkey") % 8).cast("int").alias("b"),
     )
-    import uuid
-
-    # per-run uuid path (VERDICT r4 hygiene): no fixed shared /tmp dir
-    path = tempfile.gettempdir() + f"/westa_q_mu_{uuid.uuid4().hex[:8]}"
-    tbl = ParquetTable(path, partition_by="b")
+    tbl = ParquetTable(_scratch_dir("westa_q_mu_"), partition_by="b")
     tbl.merge_upsert(spark, base, keys=["k"])
     tbl.merge_upsert(spark, batch.unionByName(batch), keys=["k"])
     return tbl.read(spark).select("k", "ck", "price", "st", "b")

@@ -12,7 +12,7 @@ from westa_ocr_spark.queries.common import (  # noqa: F401
     _SQL_NORM, _SQL_WORDS, _sql_lang_best, _sql_lang_from_best,
     _sql_lang_scores, _sql_occ, _sql_punct_ratio, _sql_quality,
     _sql_round_det, _sql_shingles, _sql_simhash16, _sql_stop_ratio,
-    _sql_token_count, _t,
+    _sql_token_count, _scratch_dir, _t,
 )
 
 # ---------------------------------------------------------------------------
@@ -76,18 +76,13 @@ def _q_stream_first_seen(spark, sf):
     are exactly SQL min(ts)/count-1 per key — the property that makes
     a custom stateful operator DuckDB-verifiable). Keys are the
     events' user ids; 500 users x ~20 events each."""
-    import tempfile
-
     from westa_ocr_spark.streaming.stateful import start_first_seen_stream
 
     ev = _t(spark, sf, "events").filter(F.col("event_id") < 10000).select(
         F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("url"),
         F.col("ts").cast("timestamp").alias("ts"),
     )
-    import uuid
-
-    # per-run uuid path (VERDICT r4 hygiene): no fixed shared /tmp dir
-    base = tempfile.gettempdir() + f"/westa_q_fs_{uuid.uuid4().hex[:8]}"
+    base = _scratch_dir("westa_q_fs_")
     src, out = f"{base}/src", f"{base}/out"
     ev.coalesce(1).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
@@ -120,15 +115,11 @@ def _q_stream_stream_join(spark, sf):
     drain equals the batch self-join — which is exactly what the
     DuckDB oracle computes. ts cast from NTZ first (no watermark
     support on TIMESTAMP_NTZ)."""
-    import tempfile
-    import uuid
-
     ev = _t(spark, sf, "events").select(
         "event_id", "user_id", "event_type",
         F.col("ts").cast("timestamp").alias("ts"),
     )
-    # per-run uuid path (VERDICT r4 hygiene): no fixed shared /tmp dir
-    base = tempfile.gettempdir() + f"/westa_q_ssj_{uuid.uuid4().hex[:8]}"
+    base = _scratch_dir("westa_q_ssj_")
     src, out, chk = f"{base}/src", f"{base}/out", f"{base}/chk"
     ev.coalesce(1).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema

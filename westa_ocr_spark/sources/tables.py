@@ -9,9 +9,11 @@ package, so the extraction pipeline writes ``ParquetTable``: a
 hive-partitioned parquet directory with a Delta-Lake-style commit log
 (Armbrust et al., VLDB 2020). Data files are immutable; every write
 adds new part files and then commits by creating ``_log/<n>.json``,
-which lists the table's files, the files added and removed, and the
-merge stats. One commit file means the write happened; no commit file
-means nothing happened. ``IcebergTable`` serves the same upsert
+which lists the table's files, the files added and removed, the merge
+stats and the table schema (Delta's ``metaData`` action), so a read
+passes the schema instead of inferring it from a part file's footer.
+One commit file means the write happened; no commit file means nothing
+happened. ``IcebergTable`` serves the same upsert
 interface through ``MERGE INTO`` on a configured catalog, for callers
 that pass it in as their store (``operators.dedup.dedup_against_store``);
 ``run_extraction_job`` always writes ``ParquetTable``.
@@ -28,8 +30,9 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql.functions import col as F_col
+from pyspark.sql.types import StructType
 
 _LOG = "_log"
 
@@ -66,6 +69,14 @@ def _parquet_key_range(path: str, col: str):
         return None
 
 
+def _reader(spark: SparkSession, entry: dict) -> DataFrameReader:
+    """A parquet reader that takes a commit's schema when it has one,
+    instead of inferring it."""
+    schema = entry.get("schema")
+    return (spark.read.schema(StructType.fromJson(schema)) if schema
+            else spark.read)
+
+
 class ParquetTable:
     """Directory-of-parquet keyed table with upsert semantics and a
     commit log.
@@ -75,7 +86,11 @@ class ParquetTable:
     ``col=value`` directories, then commits with one ``O_EXCL`` create
     of ``_log/<n>.json`` (so of two racing writers, the second fails),
     then deletes the files the commit removed. Each commit lists every
-    file of the table, so a reader needs only the latest one.
+    file of the table and its schema (the written DataFrame's, with the
+    partition column last, as Spark reads it back), so a reader needs
+    only the latest one and runs no schema-inference job. A commit
+    without a schema, written before commits held one, reads by
+    inference; the next write adds it.
 
     Crash rule: ``exists()`` means a commit exists, and ``read()`` first
     deletes every file under the table that the latest commit does not
@@ -98,20 +113,21 @@ class ParquetTable:
         self.path = path
         self.partition_by = partition_by
 
-    def _latest(self) -> tuple[int, list[str]]:
-        """Version and files of the latest commit; (-1, []) without one."""
+    def _latest(self) -> tuple[int, dict]:
+        """Version and entry of the latest commit; (-1, {"files": []})
+        without one."""
         log = os.path.join(self.path, _LOG)
         if not os.path.isdir(log):
-            return -1, []
+            return -1, {"files": []}
         for v in sorted((int(n[:-5]) for n in os.listdir(log)
                          if n.endswith(".json")), reverse=True):
             entry = os.path.join(log, f"{v}.json")
             try:
                 with open(entry, encoding="utf-8") as fh:
-                    return v, json.load(fh)["files"]
+                    return v, json.load(fh)
             except ValueError:  # torn by a crash while it was written
                 os.remove(entry)
-        return -1, []
+        return -1, {"files": []}
 
     def _vacuum(self, keep: set[str]) -> None:
         """Delete every file under the table but ``_log/`` and ``keep``
@@ -126,34 +142,34 @@ class ParquetTable:
             if rel != "." and not os.listdir(root):
                 os.rmdir(root)
 
-    def _snapshot(self) -> tuple[int, list[str]]:
+    def _snapshot(self) -> tuple[int, dict]:
         """The latest commit, with the directory reduced to its files.
         A directory without ``_log/`` was never written by this class
         and is left alone."""
-        version, files = self._latest()
+        version, entry = self._latest()
         if os.path.isdir(os.path.join(self.path, _LOG)):
-            self._vacuum(set(files))
-        return version, files
+            self._vacuum(set(entry["files"]))
+        return version, entry
 
     def exists(self) -> bool:
         return self._latest()[0] >= 0
 
     def files(self) -> list[str]:
         """The latest commit's files, as paths relative to the table."""
-        return self._latest()[1]
+        return self._latest()[1]["files"]
 
     def read(self, spark: SparkSession) -> DataFrame:
         # a directory read, not a file list: a long explicit file list
         # costs Spark an extra listing job, and partition pruning works
         # either way
-        self._snapshot()
-        return spark.read.parquet(self.path)
+        return _reader(spark, self._snapshot()[1]).parquet(self.path)
 
     def _write(self, df: DataFrame) -> tuple[int, list[str], list[str]]:
         """Append ``df`` as new part files, uncommitted. Returns the
         version and files of the commit it builds on, and the new files."""
         os.makedirs(os.path.join(self.path, _LOG), exist_ok=True)
-        version, files = self._snapshot()
+        version, entry = self._snapshot()
+        files = entry["files"]
         w = df.write
         if self.partition_by and self.partition_by in df.columns:
             w = w.partitionBy(self.partition_by)
@@ -171,28 +187,34 @@ class ParquetTable:
         return version, files, sorted(written.difference(files))
 
     def _commit(self, version: int, files: list[str], added: list[str],
-                removed: list[str], stats: dict | None = None) -> None:
+                removed: list[str], schema: StructType,
+                stats: dict | None = None) -> None:
         """Create ``_log/<version + 1>.json``, then delete every file
-        it does not list: ``removed`` and Spark's write leftovers."""
+        it does not list: ``removed`` and Spark's write leftovers.
+        ``schema`` is the written DataFrame's; the commit holds it the
+        way Spark reads the files back, partition column last."""
         live = sorted(set(files).difference(removed).union(added))
+        part = [f for f in schema.fields if f.name == self.partition_by]
+        fields = [f for f in schema.fields if f not in part] + part
         entry = os.path.join(self.path, _LOG, f"{version + 1}.json")
         fd = os.open(entry, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
         with os.fdopen(fd, "w", encoding="utf-8") as fh:
             json.dump({"files": live, "added": added,
-                       "removed": sorted(removed), "stats": stats}, fh)
+                       "removed": sorted(removed), "stats": stats,
+                       "schema": StructType(fields).jsonValue()}, fh)
         self._vacuum(set(live))
 
     def append(self, df: DataFrame) -> None:
         version, files, added = self._write(df)
-        self._commit(version, files, added, [])
+        self._commit(version, files, added, [], df.schema)
 
     def overwrite(self, df: DataFrame) -> None:
         version, files, added = self._write(df)
-        self._commit(version, files, added, files)
+        self._commit(version, files, added, files, df.schema)
 
     def merge_upsert(
         self, spark: SparkSession, df: DataFrame, keys: list[str],
-        unique_keys: bool = False,
+        unique_keys: bool = False, ranges: dict | None = None,
     ) -> dict | None:
         """Upsert df by keys: new rows win over existing rows.
 
@@ -205,7 +227,9 @@ class ParquetTable:
         dedup shuffle, which the partitioned path would otherwise pay
         once per evaluation of ``df`` (round 6, guide §2.4). On the
         partitioned path, returns the measured rewrite-amplification
-        stats.
+        stats; a caller that already knows each partition's ``keys[0]``
+        (min, max) in ``df`` passes them as ``ranges`` (partition value
+        -> (lo, hi)) to save the merge its own aggregation job.
         """
         if not unique_keys:
             df = df.dropDuplicates(keys)
@@ -213,7 +237,7 @@ class ParquetTable:
             self.overwrite(df)
             return None
         if self.partition_by and self.partition_by in df.columns:
-            return self._merge_partitioned(spark, df, keys)
+            return self._merge_partitioned(spark, df, keys, ranges)
         existing = self.read(spark)
         kept = existing.join(df.select(*keys).distinct(), keys, "left_anti")
         self.overwrite(kept.unionByName(df.select(*existing.columns)))
@@ -233,7 +257,8 @@ class ParquetTable:
         self.overwrite(df)
 
     def _merge_partitioned(
-        self, spark: SparkSession, df: DataFrame, keys: list[str]
+        self, spark: SparkSession, df: DataFrame, keys: list[str],
+        ranges: dict | None,
     ) -> dict:
         """File-scoped merge: IO approaches O(delta), the parquet
         stand-in for Iceberg's file-level MERGE INTO.
@@ -258,16 +283,20 @@ class ParquetTable:
 
         pcol = self.partition_by
         kcol = keys[0]
-        ranges = {
-            f"{pcol}={r[0]}": (r[1], r[2])
-            for r in df.groupBy(pcol)
-            .agg(F.min(kcol).alias("lo"), F.max(kcol).alias("hi"))
-            .collect()
-        }
-        cols = self.read(spark).columns
+        if ranges is None:
+            ranges = {
+                r[0]: (r[1], r[2])
+                for r in df.groupBy(pcol)
+                .agg(F.min(kcol).alias("lo"), F.max(kcol).alias("hi"))
+                .collect()
+            }
+        ranges = {f"{pcol}={p}": lo_hi for p, lo_hi in ranges.items()}
+        _, entry = self._snapshot()
+        cols = (StructType.fromJson(entry["schema"]).fieldNames()
+                if entry.get("schema") else self.read(spark).columns)
         rewrite_files: list[str] = []
         files_pruned = bytes_rewritten = bytes_kept = 0
-        for rel in self.files():
+        for rel in entry["files"]:
             if os.path.dirname(rel) not in ranges:
                 continue
             lo, hi = ranges[os.path.dirname(rel)]
@@ -281,7 +310,7 @@ class ParquetTable:
                 bytes_rewritten += os.path.getsize(fpath)
         if rewrite_files:
             existing = (
-                spark.read.option("basePath", self.path)
+                _reader(spark, entry).option("basePath", self.path)
                 .parquet(*(os.path.join(self.path, f)
                            for f in rewrite_files))
             )
@@ -306,7 +335,8 @@ class ParquetTable:
                 if bytes_out else 0.0
             ),
         }
-        self._commit(version, files, added, rewrite_files, stats)
+        self._commit(version, files, added, rewrite_files, merged.schema,
+                     stats)
         return stats
 
 
