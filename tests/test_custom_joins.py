@@ -94,53 +94,3 @@ def test_binned_range_join_matches_naive(spark):
         .collect()
     )
     assert got == naive and len(got) > 30
-
-
-def test_salted_join_matches_plain_join(spark):
-    """Correctness: salted result == plain join result on a skewed
-    key distribution (one key holds 90% of rows); the join key is
-    (key, salt) so the hot key spreads over n_salts reducers."""
-    from pyspark.sql import functions as F
-
-    from westa_ocr_spark.operators.joins import salted_join
-
-    skewed = spark.range(0, 5000).select(
-        F.when(F.col("id") % 10 < 9, F.lit("hot"))
-        .otherwise(F.concat(F.lit("k"), (F.col("id") % 7).cast("string")))
-        .alias("k"),
-        F.col("id").alias("v"),
-    )
-    dim = spark.createDataFrame(
-        [("hot", 1), ("k0", 2), ("k3", 3), ("missing", 4)], ["k", "w"]
-    )
-    plain = skewed.join(dim, "k").select("k", "v", "w")
-    salted = salted_join(skewed, dim, "k").select("k", "v", "w")
-    assert sorted(map(tuple, salted.collect())) == sorted(
-        map(tuple, plain.collect())
-    )
-    # determinism across evaluations (xxhash64 salt, not rand())
-    again = salted_join(skewed, dim, "k").select("k", "v", "w")
-    assert sorted(map(tuple, again.collect())) == sorted(
-        map(tuple, plain.collect())
-    )
-
-
-def test_salted_join_left_and_rejects_outer(spark):
-    """Left joins preserve unmatched skewed rows exactly once; right/
-    full joins are rejected (the replicated small side would emit
-    n_salts copies of every unmatched small-side row)."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from westa_ocr_spark.operators.joins import salted_join
-
-    skewed = spark.createDataFrame(
-        [("hot", i) for i in range(20)] + [("lonely", 99)], ["k", "v"]
-    )
-    dim = spark.createDataFrame([("hot", 1), ("unmatched", 2)], ["k", "w"])
-    left = salted_join(skewed, dim, "k", how="left").select("k", "v", "w")
-    rows = sorted(map(tuple, left.collect()))
-    assert ("lonely", 99, None) in rows and len(rows) == 21
-    for how in ("right", "full", "outer"):
-        with _pytest.raises(ValueError, match="unsupported"):
-            salted_join(skewed, dim, "k", how=how)

@@ -40,14 +40,6 @@ def test_minhash_identical_docs_share_signature(spark, docs):
     assert 5 not in sigs  # empty doc has no shingles
 
 
-def test_minhash_lsh_buckets_catch_dups(spark, docs):
-    from westa_ocr_spark.operators.dedup import minhash_lsh_buckets
-
-    buckets = minhash_lsh_buckets(docs).collect()
-    canon = {r["canonical_id"] for r in buckets}
-    assert 0 in canon and 3 in canon
-
-
 def test_ngram_jaccard_ranks_near_dup_first(spark, docs):
     from westa_ocr_spark.operators.dedup import ngram_jaccard_pairs
 
@@ -433,38 +425,6 @@ def test_cms_absent_key_estimates_zero(spark):
     # chance an absent key collides in ALL depths is ~(4/1024)^4; 64
     # independent probes must therefore all see an empty depth -> 0
     assert all(v == 0 for v in est.values()), est
-
-
-def test_run_dedup_job_end_to_end(spark):
-    """Exact dup, near-dup chain, and unique docs all resolved in one
-    job: 7 in -> 3 out (1 exact dup dropped, 2 near-dup chain members
-    dropped, canonical + uniques survive)."""
-    from westa_ocr_spark.plans.dedup_pipeline import run_dedup_job
-
-    base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
-            "lambda mu nu xi omicron pi rho sigma tau upsilon phi chi")
-    words = base.split()
-    near1 = list(words); near1[3] = "changed"
-    near2 = list(near1); near2[-1] = "altered"
-    rows = [
-        (1, base),
-        (2, base),                      # exact dup of 1
-        (3, " ".join(near1)),           # near-dup of 1
-        (4, " ".join(near2)),           # near-dup of 3 (chain)
-        (5, "a completely different document about spark and arrow "
-            "with plenty of its own words to stand alone in a corpus"),
-        (6, "yet another standalone text concerning parquet footers "
-            "and shuffle partitions that resembles nothing else here"),
-        (7, ""),                        # empty doc
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    res = run_dedup_job(docs)
-    assert res.docs_in == 7
-    assert res.exact_survivors == 6        # doc 2 dropped (exact)
-    assert res.near_dup_groups == 1        # {1, 3, 4}
-    ids = sorted(r["doc_id"] for r in res.survivors.collect())
-    assert ids == [1, 5, 6, 7]
-    assert res.docs_out == 4
 
 
 def test_dedup_against_store_across_runs(spark, tmp_path):

@@ -269,3 +269,38 @@ def test_spark_jobs_per_run(spark, tmp_path_factory):
                            run_id=name, job_group=group)
         jobs[name] = len(tracker.getJobIdsForGroup(group))
     assert jobs == {"first": 10, "delta": 22}
+
+
+def test_damaged_warc_file_gives_error_row_not_job_failure(
+        spark, tmp_path_factory):
+    """A WARC directory holding one cut file: read_warc_pages gives the
+    file's good records and one NULL-url ERROR row, and the job over
+    it completes. The NULL-url row has no (url, page_index) key, so
+    the sink and the manifest hold exactly the good urls."""
+    from westa_ocr_spark.sources.warc import read_warc_pages, write_warc
+
+    def rec(name):
+        return {"url": f"https://{name}.example/p",
+                "date": "2025-01-01T00:00:00Z",
+                "html": f"<html><body><p>{name} doc</p></body></html>"
+                .encode()}
+
+    base = tmp_path_factory.mktemp("cutwarc")
+    wdir = base / "warcs"
+    wdir.mkdir()
+    (wdir / "seg-0.warc.gz").write_bytes(write_warc([rec("a"), rec("b")]))
+    members = [write_warc([rec(n)]) for n in ("c", "d", "e")]
+    cut = b"".join(members)[: -len(members[2]) // 2]
+    (wdir / "seg-cut.warc.gz").write_bytes(cut)
+
+    pages = read_warc_pages(spark, str(wdir))
+    assert pages.filter("url IS NULL AND status = 'ERROR'").count() == 1
+    out = str(base / "out")
+    res = run_extraction_job(spark, pages, out, run_id="warc")
+    good = {f"https://{n}.example/p" for n in "abcd"}
+    sink = ParquetTable(f"{out}/extracted").read(spark).collect()
+    man = ParquetTable(f"{out}/manifest").read(spark).collect()
+    assert {r["url"] for r in sink} == good
+    assert {r["url"] for r in man} == good
+    assert all(r["status"] == "DONE" for r in sink)
+    assert (res.docs_in, res.docs_done, res.docs_error) == (4, 4, 0)

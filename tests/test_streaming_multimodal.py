@@ -279,37 +279,38 @@ def test_jpeg_codec_roundtrip_bounds():
     import pytest as _pytest
 
     from westa_ocr_spark.kernel.jpeg_mini import (
-        decode_jpeg_gray,
+        decode_jpeg,
         write_jpeg_gray,
     )
 
     flat = np.full((16, 24), 97, dtype=np.uint8)
-    out = decode_jpeg_gray(write_jpeg_gray(flat))
+    out = decode_jpeg(write_jpeg_gray(flat))
+    assert out.ndim == 2  # one component decodes to (h, w)
     assert len(np.unique(out)) == 1  # still perfectly flat
     assert abs(int(out[0, 0]) - 97) <= 1  # DC quant half-step
     # a DC multiple of the quant step roundtrips exactly
     exact = np.full((8, 8), 128, dtype=np.uint8)
-    assert (decode_jpeg_gray(write_jpeg_gray(exact)) == 128).all()
+    assert (decode_jpeg(write_jpeg_gray(exact)) == 128).all()
 
     y, x = np.mgrid[0:33, 0:47]
     grad = ((x * 3 + y * 2) % 256).astype(np.uint8)
-    out = decode_jpeg_gray(write_jpeg_gray(grad))
+    out = decode_jpeg(write_jpeg_gray(grad))
     assert out.shape == grad.shape
     err = np.abs(out.astype(int) - grad.astype(int))
     assert err.max() <= 4 and err.mean() < 1.5
 
     with _pytest.raises(ValueError, match="not a JPEG"):
-        decode_jpeg_gray(b"\x89PNG....")
+        decode_jpeg(b"\x89PNG....")
     # SOF2 accepted since round 4 (progressive support): a baseline
     # stream relabeled progressive decodes identically under the
     # unified coefficient-domain executor
     blob = write_jpeg_gray(flat).replace(b"\xff\xc0", b"\xff\xc2", 1)
-    assert (decode_jpeg_gray(blob) == decode_jpeg_gray(
+    assert (decode_jpeg(blob) == decode_jpeg(
         write_jpeg_gray(flat))).all()
     # lossless/arithmetic SOF markers still rejected cleanly
     blob2 = write_jpeg_gray(flat).replace(b"\xff\xc0", b"\xff\xc3", 1)
     with _pytest.raises(ValueError, match="SOF0/SOF2"):
-        decode_jpeg_gray(blob2)
+        decode_jpeg(blob2)
 
 
 def test_jpeg_features_are_real_pixel_stats():
@@ -337,7 +338,7 @@ def test_mjpeg_frame_sampling_yields_decodable_frames(spark):
     fallback."""
     import numpy as np
 
-    from westa_ocr_spark.kernel.jpeg_mini import decode_jpeg_gray
+    from westa_ocr_spark.kernel.jpeg_mini import decode_jpeg
     from westa_ocr_spark.operators.multimodal import (
         sample_frames,
         write_mjpeg,
@@ -357,7 +358,8 @@ def test_mjpeg_frame_sampling_yields_decodable_frames(spark):
     y, x = np.mgrid[0:16, 0:16]
     base = (x * 31 + y * 17) % 256
     for idx, blob in v1:
-        px = decode_jpeg_gray(blob)  # every sampled frame decodes
+        px = decode_jpeg(blob)  # every sampled frame decodes
+        assert px.ndim == 2
         expect = (base + 11 * (3 * (idx - 1))) % 256
         err = np.abs(px.astype(int) - expect.astype(int))
         assert err.mean() < 20  # lossy but clearly the right frame
@@ -448,49 +450,6 @@ def test_frame_sampling_fanout(spark, media_df):
     for url, idxs in by_url.items():
         assert sorted(idxs) == list(range(1, len(idxs) + 1))  # 1-based
     assert by_url["u3"] == [1]  # error row still emitted
-
-
-def test_windowed_counts_stream(spark, tmp_path_factory):
-    """Watermarked tumbling-window counts match the batch equivalent
-    for windows the watermark has finalized."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from westa_ocr_spark.streaming.stream_pipeline import (
-        start_windowed_counts_stream,
-    )
-
-    import shutil
-
-    src = "/root/testdata/sf0.001/events.parquet"
-    src_dir = tmp_path_factory.mktemp("winsrc")
-    shutil.copy(src, src_dir / "events.parquet")  # file source needs a dir
-    schema = spark.read.parquet(src).schema
-    out = str(tmp_path_factory.mktemp("winstream") / "o")
-    q = start_windowed_counts_stream(spark, str(src_dir), out, schema)
-    q.awaitTermination(300)
-
-    streamed = {
-        (r["window_start"], r["event_type"]): r["n"]
-        for r in spark.read.parquet(f"{out}/windowed").collect()
-    }
-    batch = {
-        (r["win"]["start"], r["event_type"]): r["n"]
-        for r in (
-            spark.read.parquet(src)
-            .groupBy(
-                F.window("ts", "10 minutes").alias("win"), "event_type"
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-    }
-    assert streamed, "no finalized windows emitted"
-    # every emitted (finalized) window matches batch exactly
-    for key, n in streamed.items():
-        assert batch[key] == n
-    # only still-open tail windows may be missing
-    assert len(batch) - len(streamed) <= 5 * 4  # types x few tail wins
 
 
 def test_stateful_first_seen_dedupe(spark, tmp_path_factory):
@@ -619,64 +578,6 @@ def test_streaming_resent_url_upserts(spark, tmp_path_factory):
     assert rows[(url, 1)] == ("DONE", "resent page text")
     assert len(man) == n_man == 40
     assert man[url]["total_blocks"] == 1
-
-
-def test_watermark_drops_late_data(spark, tmp_path_factory):
-    """Late-data contract: once the watermark has passed a window, a
-    straggler row for that window (arriving in a later restart) must
-    NOT re-open it — append mode emits each finalized window exactly
-    once and the late row vanishes."""
-    import datetime as dt
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from westa_ocr_spark.streaming.stream_pipeline import (
-        start_windowed_counts_stream,
-    )
-
-    src = tmp_path_factory.mktemp("latesrc")
-    base = dt.datetime(2024, 6, 1)
-
-    def write_file(name, rows):
-        pq.write_table(
-            pa.table(
-                {
-                    "ts": [base + dt.timedelta(minutes=m) for m, _ in rows],
-                    "event_type": [e for _, e in rows],
-                }
-            ),
-            str(src / name),
-        )
-
-    # batch 1: events spanning 0..120 min -> watermark advances to
-    # 120-30=90 min; windows ending <= 90 min are finalized
-    write_file("f1.parquet", [(m, "x") for m in range(0, 121, 5)])
-    schema = spark.read.parquet(str(src)).schema
-    out = str(tmp_path_factory.mktemp("lateout") / "o")
-    q = start_windowed_counts_stream(spark, str(src), out, schema)
-    q.awaitTermination(300)
-    first = {
-        (r["window_start"], r["n"])
-        for r in spark.read.parquet(f"{out}/windowed").collect()
-    }
-    assert first, "no finalized windows"
-
-    # batch 2 (same checkpoint): one LATE row for minute 3 — its
-    # window was finalized long ago -> must be dropped, not re-emitted
-    write_file("f2.parquet", [(3, "x")])
-    q2 = start_windowed_counts_stream(spark, str(src), out, schema)
-    q2.awaitTermination(300)
-    second = {
-        (r["window_start"], r["n"])
-        for r in spark.read.parquet(f"{out}/windowed").collect()
-    }
-    # nothing about already-finalized windows changed: no duplicate
-    # emission of the minute-0 window with a bumped count
-    starts_first = sorted(s for s, _ in first)
-    assert (base, 3) not in (second - first)
-    for s, n in second - first:
-        assert s > starts_first[0], (s, n)
 
 
 def test_color_jpeg_codec_roundtrip_bounds():
@@ -820,18 +721,18 @@ def test_jpeg_restart_markers_roundtrip():
 
     from westa_ocr_spark.kernel.jpeg_mini import (
         decode_jpeg,
-        decode_jpeg_gray,
         write_jpeg_color,
         write_jpeg_gray,
     )
 
     yy, xx = np.mgrid[0:40, 0:56]
     gray = np.clip(yy * 3 + xx * 2, 0, 255).astype(np.uint8)
-    base = decode_jpeg_gray(write_jpeg_gray(gray))
+    base = decode_jpeg(write_jpeg_gray(gray))
+    assert base.ndim == 2
     for ri in (1, 2, 5):
         blob = write_jpeg_gray(gray, restart_interval=ri)
         assert b"\xff\xdd" in blob and b"\xff\xd0" in blob
-        assert (decode_jpeg_gray(blob) == base).all()
+        assert (decode_jpeg(blob) == base).all()
 
     rgb = np.stack(
         [np.clip(yy * 3 + 20, 0, 255), np.clip(xx * 2 + 40, 0, 255),
@@ -849,7 +750,7 @@ def test_jpeg_restart_markers_roundtrip():
     at = bytes(blob).find(b"\xff\xd0")
     blob[at + 1] = 0xD5
     with _pytest.raises(ValueError, match="restart"):
-        decode_jpeg_gray(bytes(blob))
+        decode_jpeg(bytes(blob))
 
 
 def test_progressive_jpeg_decodes_identical_to_baseline():

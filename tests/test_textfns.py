@@ -124,18 +124,19 @@ def test_lang_id_twelve_languages(spark):
 
 
 def test_with_lang_id_matches_jvm_form(spark):
-    """Round 6: with_lang_id moved to a vectorized Arrow batch (the
-    JVM higher-order-function form was the bench's slowest query).
-    Marker counts are integers, so the two forms must agree EXACTLY —
-    including ties (argmax to the alphabetically smallest language),
+    """with_lang_id (a vectorized Arrow batch) must agree EXACTLY with
+    the expression form of the same argmax — the DuckDB twin
+    ``queries.common._sql_lang_best`` / ``_sql_lang_from_best``, the
+    registry's lang-ID oracle. Marker counts are integers, so the two
+    agree on ties (argmax to the alphabetically smallest language),
     consecutive stopwords, shared markers (' de ' in nl and pt), CJK
     substring counts, empty and null text."""
-    from pyspark.sql import functions as F
+    import duckdb
 
-    from westa_ocr_spark.functions.textfns import (
-        lang_best_struct,
-        lang_from_best,
-        with_lang_id,
+    from westa_ocr_spark.functions.textfns import with_lang_id
+    from westa_ocr_spark.queries.common import (
+        _sql_lang_best,
+        _sql_lang_from_best,
     )
 
     rows = [
@@ -151,19 +152,21 @@ def test_with_lang_id_matches_jvm_form(spark):
         (9, "the und le el il o de och i и の 的"),  # 12-way spread
         (10, "word " * 40 + " the and of"),
     ]
-    df = spark.createDataFrame(rows, ["id", "text"])
-    jvm = {
-        r["id"]: r["l"]
-        for r in df.select(
-            "id",
-            lang_from_best(lang_best_struct(F.col("text"))).alias("l"),
-        ).collect()
-    }
+    df = spark.createDataFrame(rows, "id int, text string")
     arrow = {
         r["id"]: r["lang_id"]
         for r in with_lang_id(df, "text").select("id", "lang_id").collect()
     }
-    assert arrow == jvm
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (id INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", rows)
+    twin = dict(con.execute(
+        f"SELECT id, {_sql_lang_from_best('best')} FROM "
+        f"(SELECT id, {_sql_lang_best('text')} AS best FROM docs)"
+    ).fetchall())
+    assert arrow == twin
+    assert [twin[i] for i in range(len(rows))] == [
+        "und", "und", "en", "nl", "ja", "und", "en", "es", "it", "pt", "en"]
 
 
 def test_lang_id_und_for_no_markers(spark):

@@ -91,13 +91,10 @@ def test_spark_ingest_and_extract(spark, tmp_path):
 
 
 def test_warc_python_datasource_matches_binaryfile_path(spark, tmp_path):
-    """spark.read.format('warc') (the Spark 4 Python DataSource) must
-    produce exactly the rows the binaryFile+mapInPandas composition
-    produces: one partition per file, response records only, and for a
-    damaged file its good records followed by one ERROR row — for a
-    gzip and a plain file cut inside their third record alike."""
-    from westa_ocr_spark.sources.warc_datasource import register
-
+    """read_warc_pages over damaged files: response records only, and
+    for a damaged file its good records followed by one NULL-url ERROR
+    row naming the file — for a gzip and a plain file cut inside their
+    third record alike, and for a file that is not gzip at all."""
     three = RECORDS + [
         {"url": "https://c.example/z", "date": "2025-02-03T08:00:00Z",
          "html": b"<html><body><p>gamma doc</p></body></html>"}]
@@ -115,151 +112,26 @@ def test_warc_python_datasource_matches_binaryfile_path(spark, tmp_path):
     (wdir / "seg-cut.warc").write_bytes(
         plain[: (third + len(plain)) // 2])
 
-    register(spark)
-    via_ds = spark.read.format("warc").load(str(wdir))
-    assert via_ds.rdd.getNumPartitions() == 4  # one per file
-    via_bf = read_warc_pages(spark, str(wdir))
-    assert via_ds.schema == via_bf.schema
-
-    def rows(df):
-        # binaryFile names files by URI, the DataSource by path
-        return sorted(
-            (r["warc_file"].rsplit("/", 1)[-1], str(r["url"]),
-             *(r[c] for c in df.columns if c not in ("warc_file", "url")))
-            for r in df.collect()
-        )
-
-    got = rows(via_ds)
-    assert got == rows(via_bf)
+    rows = read_warc_pages(spark, str(wdir)).collect()
     by_file: dict = {}
-    for r in got:
-        by_file.setdefault(r[0], []).append(r[1])
-    assert by_file["seg-bad.warc.gz"] == ["None"]
-    for cut in ("seg-cut.warc.gz", "seg-cut.warc"):
-        assert by_file[cut] == [
-            "None", "https://a.example/x", "https://b.example/y"]
-    gv = {(r["warc_file"].rsplit("/", 1)[-1], r["url"]): r
-          for r in via_ds.collect()}
+    for r in rows:
+        by_file.setdefault(r["warc_file"].rsplit("/", 1)[-1], []).append(
+            str(r["url"]))
+    assert {f: sorted(u) for f, u in by_file.items()} == {
+        "seg-0.warc.gz": ["https://a.example/x", "https://b.example/y"],
+        "seg-bad.warc.gz": ["None"],
+        "seg-cut.warc.gz": [
+            "None", "https://a.example/x", "https://b.example/y"],
+        "seg-cut.warc": [
+            "None", "https://a.example/x", "https://b.example/y"],
+    }
+    gv = {(r["warc_file"].rsplit("/", 1)[-1], r["url"]): r for r in rows}
     assert gv[("seg-0.warc.gz", "https://a.example/x")]["html"] is not None
     for f in ("seg-bad.warc.gz", "seg-cut.warc.gz", "seg-cut.warc"):
         assert gv[(f, None)]["status"] == "ERROR"
+        assert gv[(f, None)]["error"].startswith("warc: ")
     assert all(gv[(f, u)]["status"] == "OK"
                for f, u in gv if u is not None)
-
-
-def test_warc_datasource_filter_pushdown_prunes_files(spark, tmp_path):
-    """An equality filter on warc_file must reach pushFilters and
-    prune PARTITIONS (only the named segment is read), not just rows
-    post-scan."""
-    from pyspark.sql import functions as F
-
-    from westa_ocr_spark.sources.warc_datasource import register
-
-    wdir = tmp_path / "warcs"
-    wdir.mkdir()
-    (wdir / "seg-0.warc.gz").write_bytes(write_warc(RECORDS))
-    (wdir / "seg-1.warc.gz").write_bytes(
-        write_warc(
-            [{"url": "https://c.example/z",
-              "date": "2025-02-03T08:00:00Z",
-              "html": b"<html><body><p>gamma doc</p></body></html>"}]
-        )
-    )
-    register(spark)
-    target = str(wdir / "seg-1.warc.gz")
-    df = (
-        spark.read.format("warc").load(str(wdir))
-        .filter(F.col("warc_file") == target)
-    )
-    # partition pruning is visible in the task count and the rows
-    assert df.rdd.getNumPartitions() == 1
-    rows = df.collect()
-    assert [r["url"] for r in rows] == ["https://c.example/z"]
-
-
-def test_warc_datasource_empty_glob_returns_empty_df(spark, tmp_path):
-    """Zero-match glob is an empty DataFrame (ADVICE r3), consistent
-    with the post-pushFilters path."""
-    from westa_ocr_spark.sources.warc_datasource import register
-
-    wdir = tmp_path / "empty"
-    wdir.mkdir()
-    register(spark)
-    df = spark.read.format("warc").load(str(wdir))
-    assert df.count() == 0
-
-
-def test_warc_datasource_inlist_and_range_pushdown(spark, tmp_path):
-    """IN-lists and prefix/range predicates on warc_file prune files
-    at planning time (VERDICT r3 #6): fewer partitions, correct
-    rows."""
-    from pyspark.sql import functions as F
-
-    from westa_ocr_spark.sources.warc_datasource import register
-
-    wdir = tmp_path / "warcs"
-    wdir.mkdir()
-    for i in range(4):
-        (wdir / f"seg-{i}.warc.gz").write_bytes(
-            write_warc(
-                [{"url": f"https://s{i}.example/p",
-                  "date": "2025-02-03T08:00:00Z",
-                  "html": b"<html><body><p>doc</p></body></html>"}]
-            )
-        )
-    register(spark)
-    base = spark.read.format("warc").load(str(wdir))
-    assert base.rdd.getNumPartitions() == 4
-
-    two = base.filter(
-        F.col("warc_file").isin(
-            str(wdir / "seg-0.warc.gz"), str(wdir / "seg-3.warc.gz")
-        )
-    )
-    assert two.rdd.getNumPartitions() == 2
-    assert sorted(r["url"] for r in two.collect()) == [
-        "https://s0.example/p", "https://s3.example/p",
-    ]
-
-    ranged = base.filter(
-        (F.col("warc_file") >= str(wdir / "seg-1"))
-        & (F.col("warc_file") < str(wdir / "seg-3"))
-    )
-    assert ranged.rdd.getNumPartitions() == 2
-    assert sorted(r["url"] for r in ranged.collect()) == [
-        "https://s1.example/p", "https://s2.example/p",
-    ]
-
-    prefix = base.filter(F.col("warc_file").startswith(str(wdir / "seg-2")))
-    assert prefix.rdd.getNumPartitions() == 1
-
-
-def test_warc_datasource_url_record_skip(spark, tmp_path):
-    """url prefix/equality predicates are consumed record-level: the
-    scan yields only matching records (and suppresses the NULL-url
-    ERROR row, per SQL NULL semantics)."""
-    from pyspark.sql import functions as F
-
-    from westa_ocr_spark.sources.warc_datasource import register
-
-    wdir = tmp_path / "warcs"
-    wdir.mkdir()
-    (wdir / "seg-0.warc.gz").write_bytes(write_warc(RECORDS))
-    (wdir / "seg-bad.warc.gz").write_bytes(b"\x1f\x8bgarbage not gzip")
-    register(spark)
-    base = spark.read.format("warc").load(str(wdir))
-    urls_all = [r["url"] for r in base.collect() if r["url"]]
-    want_prefix = sorted(u for u in urls_all
-                         if u.startswith("https://a."))
-    assert want_prefix  # fixture sanity
-
-    got = (
-        base.filter(F.col("url").startswith("https://a."))
-        .select("url", "status")
-        .collect()
-    )
-    assert sorted(r["url"] for r in got) == want_prefix
-    assert all(r["status"] == "OK" for r in got)  # ERROR row suppressed
 
 
 def test_http_body_decodings():
@@ -488,7 +360,7 @@ def test_streaming_iterator_equivalent_to_inmemory_parse(tmp_path):
                    for r in whole)
         assert _records(blob, chunk_size=37) == whole
         assert _records(blob, chunk_size=11) == whole
-        # and straight off the disk, as the DataSource reads it
+        # and straight off the disk, through a file handle
         path = tmp_path / f"seg_{int(gz)}.warc"
         path.write_bytes(blob)
         with open(path, "rb") as fh:

@@ -104,39 +104,6 @@ def lang_scores(col: Column, words: Column | None = None
     return out
 
 
-def lang_best_struct(col: Column, words: Column | None = None) -> Column:
-    """argmax over language scores as ONE array_max expression.
-
-    Each struct is (score, -rank) with langs in sorted order, so the
-    lexicographic struct max picks the highest score and breaks ties
-    toward the alphabetically smallest language. Every score
-    expression appears exactly once — with 12 languages x 8 markers a
-    per-branch CASE (the 4-language round-1 shape) would replicate the
-    96 occurrence counters into every comparison.
-    """
-    scores = lang_scores(col, words)
-    langs = sorted(scores)
-    return F.array_max(
-        F.array(
-            *[
-                F.struct(scores[lang].alias("s"), F.lit(-i).alias("r"))
-                for i, lang in enumerate(langs)
-            ]
-        )
-    )
-
-
-def lang_from_best(best: Column) -> Column:
-    """Decode the (score, -rank) argmax struct to a language code."""
-    langs = sorted(_LANG_STOPWORDS)
-    return F.when(
-        best["s"] > 0,
-        F.element_at(
-            F.array(*[F.lit(lang) for lang in langs]), -best["r"] + 1
-        ),
-    ).otherwise(F.lit("und"))
-
-
 _LANGS_SORTED = sorted(_LANG_STOPWORDS)
 
 
@@ -163,7 +130,7 @@ def _lang_marker_tables():
 
 
 def _lang_id_py(text, contrib, cjk) -> str:
-    """Per-document language ID, integer-exact twin of the JVM
+    """Per-document language ID, integer-exact twin of the DuckDB
     expression form: split-on-space token membership counts for
     space-delimited languages (Counter collapses the token scan to one
     dict probe per DISTINCT token), non-overlapping substring counts
@@ -209,18 +176,18 @@ def _lang_id_udf():
 def with_lang_id(df, text_col: str, out_col: str = "lang_id"):
     """Staged language ID: adds ``out_col`` to ``df`` (the scale path).
 
-    Round 6: vectorized Arrow path (optimization guide §4.2). The JVM
-    expression form (:func:`lang_best_struct`) is 10 interpreted
-    higher-order ``filter`` lambdas plus 16 padded-replace chains per
-    row — CodegenFallback, measured 4.8 s over 50k docs at sf1.0; the
-    batched Python form with one dict probe per distinct token runs
-    the same integer counts in 0.95 s. Marker-hit counts are integers,
-    so the argmax (ties to the alphabetically smallest language,
-    all-zero -> 'und') is engine-exact and bit-identical to the JVM
-    form and the DuckDB twin; equality is pinned by
-    tests/test_textfns.py::test_with_lang_id_matches_jvm_form. Only
-    ``text_col`` crosses the Python boundary (ArrowEvalPython sees one
-    column regardless of df width)."""
+    Vectorized Arrow path: a JVM expression form of the same argmax
+    (an ``array_max`` over per-language score structs) is 10
+    interpreted higher-order ``filter`` lambdas plus 16 padded-replace
+    chains per row — CodegenFallback, measured 4.8 s over 50k docs at
+    sf1.0; the batched Python form with one dict probe per distinct
+    token runs the same integer counts in 0.95 s. Marker-hit counts
+    are integers, so the argmax (ties to the alphabetically smallest
+    language, all-zero -> 'und') is engine-exact and equal to the
+    DuckDB twin (``queries.common._sql_lang_best``); equality is
+    pinned by tests/test_textfns.py::test_with_lang_id_matches_jvm_form.
+    Only ``text_col`` crosses the Python boundary (ArrowEvalPython sees
+    one column regardless of df width)."""
     return df.withColumn(out_col, _lang_id_udf()(F.col(text_col)))
 
 

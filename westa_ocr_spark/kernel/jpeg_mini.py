@@ -1045,14 +1045,4 @@ def _run_scan(br, scan_comps, comps, coefs, ss, se, ah, al,
                     )
 
 
-def decode_jpeg_gray(data: bytes) -> np.ndarray:
-    """Decode a baseline single-component JPEG to (h, w) uint8 (the
-    round-3 API; color files raise so gray-only callers stay exact)."""
-    px = decode_jpeg(data)
-    if px.ndim != 2:
-        raise ValueError("jpeg: not a grayscale file")
-    return px
-
-
-__all__ = ["write_jpeg_gray", "write_jpeg_color", "decode_jpeg",
-           "decode_jpeg_gray"]
+__all__ = ["write_jpeg_gray", "write_jpeg_color", "decode_jpeg"]

@@ -130,46 +130,6 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     return exploded.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_lsh_buckets(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text",
-                        bands: int = 2) -> DataFrame:
-    """LSH banding: bucket = md5 of a band's concatenated signature.
-
-    Returns buckets holding >1 document (duplicate candidates):
-    (band, bucket, n_docs, canonical_id).
-    """
-    sig = minhash_signatures(docs, id_col, text_col)
-    per_band = len(MINHASH_SEEDS) // bands
-    # ONE explode fan-out, not a union of per-band selects: a union
-    # would re-run the whole signature aggregation once per band
-    # (Spark does not dedupe identical subplans across union branches)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[f"mh_{b * per_band + j}" for j in range(per_band)],
-                    )
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
-    bucketed = sig.select(
-        "doc_id", F.explode(band_structs).alias("bb")
-    ).select("doc_id", "bb.band", "bb.bucket")
-    return (
-        bucketed.groupBy("band", "bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("canonical_id"),
-        )
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", k: int = 3,
                         min_jaccard: float = 0.0,
@@ -491,10 +451,11 @@ def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     only formed WITHIN buckets, never all-pairs."""
     sig = minhash_signatures_fast(docs, id_col, text_col, num_perm)
     per_band = num_perm // bands
-    # ONE explode fan-out (see minhash_lsh_buckets): a 16-branch union
-    # would run the 128-min aggregation 16 times. The self-join's two
-    # sides share one canonical subplan, so Spark's ReuseExchange
-    # computes the aggregation + shuffle once.
+    # ONE explode fan-out, not a union of per-band selects: Spark does
+    # not dedupe identical subplans across union branches, so a
+    # 16-branch union would run the 128-min aggregation 16 times. The
+    # self-join's two sides share one canonical subplan, so Spark's
+    # ReuseExchange computes the aggregation + shuffle once.
     band_structs = _cached_cols(
         "band_structs", (num_perm, bands),
         lambda: F.array(

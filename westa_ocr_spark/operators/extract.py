@@ -26,6 +26,7 @@ is no per-row Python at the driver and no RDD usage.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from westa_ocr_spark.kernel.html_extract import extract_html
@@ -192,12 +193,17 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     ``charset`` hint column when the source provides one (the WARC
     reader does) — before the Python boundary, so the scan reads only
     those columns.
+
+    Rows with a NULL ``url`` are dropped first: the output is keyed by
+    (url, page_index) and has no key for them. A damaged WARC file's
+    ERROR row is such a row: it reports the file, not a document.
     """
     cols = ["url", "html"] + (
         ["charset"] if "charset" in pages.columns else []
     )
     return map_documents(
-        pages, cols, extract_rows, EXTRACTED_SCHEMA,
+        pages.filter(F.col("url").isNotNull()), cols, extract_rows,
+        EXTRACTED_SCHEMA,
         # values are (url, html[, charset]); the exception comes last
         lambda url, data, *rest: error_row(url, data, str(rest[-1])),
     )

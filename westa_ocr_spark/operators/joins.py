@@ -110,48 +110,3 @@ def binned_range_join(
         & (F.col("_rsec") < F.col("_lsec") + w)
     )
     return joined.drop("_bin", "_lsec", "_rsec")
-
-
-def salted_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    on: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join that survives a hot key: salt the skewed side,
-    replicate the other.
-
-    A plain shuffle join sends every row of a hot key to ONE reducer —
-    the straggler that stalls a 1000-executor stage. Here the skewed
-    side gets a deterministic salt (xxhash64 of the whole row, mod
-    n_salts — NOT rand(): retries/speculative tasks must re-salt
-    identically), the small side is exploded n_salts times, and the
-    join key becomes (key, salt), spreading the hot key over n_salts
-    reducers. Use when AQE's skew-join (which only splits oversized
-    shuffle blocks post-hoc) isn't enough or isn't available — e.g.
-    bucketed/sort-merge paths or stateful joins.
-
-    ``small`` is typically dimension-sized; its n_salts-way explode is
-    the price of balance. All columns of both frames survive.
-
-    Only inner/left joins are supported: the small side exists in
-    n_salts replicated copies, so a right/full join would emit
-    n_salts duplicates of every unmatched small-side row.
-    """
-    if how not in ("inner", "left", "left_outer", "leftouter",
-                   "left_semi", "leftsemi", "left_anti", "leftanti"):
-        raise ValueError(
-            f"salted_join: how={how!r} unsupported — the replicated "
-            "small side would duplicate unmatched rows under "
-            "right/full joins"
-        )
-    salt = F.pmod(
-        F.xxhash64(*[F.col(c) for c in skewed.columns]), F.lit(n_salts)
-    )
-    left = skewed.withColumn("_salt", salt)
-    right = small.withColumn(
-        "_salt",
-        F.explode(F.array(*[F.lit(i) for i in range(n_salts)])),
-    )
-    return left.join(right, on=[on, "_salt"], how=how).drop("_salt")

@@ -41,10 +41,10 @@ def skew_split(
     local mode).
 
     Assumes the input is already usefully partitioned (in the
-    pipeline, ``dropDuplicates(url)``'s exchange provides url-hash
-    partitioning for free); the small leg is passed through untouched
-    (filters preserve partitioning — NO extra shuffle of the payload
-    bytes), while the oversized leg is round-robin rebalanced.
+    pipeline: the input scan's splits, or on a resumed run the resume
+    anti-join's output partitions); the small leg is passed through
+    untouched (filters preserve partitioning — NO extra shuffle of the
+    payload bytes), while the oversized leg is round-robin rebalanced.
 
     Round-robin (``repartition(k)`` without columns) balances counts
     without any global coordination. A row_number window would balance

@@ -10,8 +10,9 @@ idempotent keyed sink makes re-runs safe.
 
 At scale the done-keys side is a single-column projection of the output
 table (column-pruned parquet/Iceberg scan of ``url`` only); the anti
-join shuffles on the same url-hash the extraction repartition uses, and
-AQE turns it into a broadcast when the remaining work is small.
+join shuffles both sides on ``url``, and AQE turns it into a broadcast
+when the done side is small. The extract stage then runs over the
+join's output partitions.
 """
 
 from __future__ import annotations

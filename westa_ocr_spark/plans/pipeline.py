@@ -2,8 +2,8 @@
 
     read pages -> [resume anti-join] -> skew split (oversized leg)
       -> mapInPandas(extract)        -> staged write (single pass)
-      -> key-dedupe check / commit or merge into keyed sink
-      -> per-partition lineage       -> groupBy(url) manifest
+      -> per-partition lineage       -> key-dedupe check
+      -> commit or merge into keyed sink -> groupBy(url) manifest
 
 Reference lifecycle: ``/root/reference/app/worker.py:170-505``.
 

@@ -66,9 +66,10 @@ def _sql_lang_scores(col: str) -> dict[str, str]:
 
 
 def _sql_lang_best(col: str) -> str:
-    """DuckDB twin of textfns.lang_best_struct: list_max of
+    """DuckDB twin of textfns.with_lang_id's argmax: list_max of
     (score, -rank) structs — lexicographic struct compare, ties to the
-    alphabetically smallest language."""
+    alphabetically smallest language (decoded by
+    :func:`_sql_lang_from_best`)."""
     scores = _sql_lang_scores(col)
     langs = sorted(scores)
     items = ", ".join(

@@ -53,10 +53,6 @@ def get_spark(
             str(ARROW_BATCH_ROWS),
         )
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-        # Python DataSource filter pushdown (Spark 4.1, off by
-        # default): lets WarcReader.pushFilters prune WARC segment
-        # partitions from warc_file equality predicates
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # local mode: the driver JVM is the only memory pool (takes
         # effect at first session creation; under spark-submit the
         # submit-time flags win)

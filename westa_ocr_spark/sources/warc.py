@@ -21,17 +21,16 @@ whole file. This module provides, pure stdlib:
   html, text, lang), ready for ``extract_pages`` or an Iceberg
   materialization.
 
-Both Spark readers produce their rows through :func:`warc_file_rows`,
-so they agree row for row, damaged files included. They differ in what
-a task holds: a ``binaryFile`` row is a whole file, while the
-``format("warc")`` DataSource (:mod:`westa_ocr_spark.sources.
-warc_datasource`) streams the file from disk and holds one record.
-
-Scale notes: one WARC file maps to one task in either reader, so
-parallelism = number of files — exactly how Common Crawl shards (tens
-of thousands of ~1 GiB segments per crawl). Malformed records surface
-as ERROR rows, never task failures (the pipeline's per-row
-error-capture contract).
+Scale notes: a WARC file is never split across tasks, so parallelism
+is bounded by the number of files — exactly how Common Crawl shards
+(tens of thousands of ~1 GiB segments per crawl). Malformed records
+surface as ERROR rows, never task failures (the pipeline's per-row
+error-capture contract); a damaged file's ERROR row has a NULL url.
+Known limit: a ``binaryFile`` row is a whole file, so a task holds
+each of its segments whole in memory (the framer over those bytes
+holds one record at a time); a segment must fit executor memory.
+``binaryFile`` reads through Hadoop's filesystem layer, so the reader
+works on any store Spark can list, not only a posix mount.
 """
 
 from __future__ import annotations

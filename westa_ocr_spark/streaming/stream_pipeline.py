@@ -50,56 +50,6 @@ def _file_stream(spark: SparkSession, path: str, schema: T.StructType,
     )
 
 
-def start_windowed_counts_stream(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    schema: T.StructType,
-    *,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window_minutes: int = 10,
-    watermark_minutes: int = 30,
-):
-    """Watermarked event-time tumbling-window counts over a file stream.
-
-    The late-data contract: rows older than ``watermark_minutes``
-    behind the max observed event time are dropped; windows are
-    emitted once finalized (append mode), so the sink holds exactly
-    one row per (window, key). With ``availableNow`` the drained
-    result equals the batch ``groupBy(window(...), key)`` over the
-    same files minus still-open windows.
-    """
-    stream = _file_stream(spark, input_dir, schema)
-    # watermarks require TIMESTAMP (not NTZ); session tz is UTC so the
-    # cast is a pure reinterpretation
-    stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    counts = (
-        stream.withWatermark(ts_col, f"{watermark_minutes} minutes")
-        .groupBy(
-            F.window(F.col(ts_col), f"{window_minutes} minutes").alias(
-                "win"
-            ),
-            F.col(key_col),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            key_col,
-            "n",
-        )
-    )
-    return (
-        counts.writeStream.format("parquet")
-        .option("path", f"{out_dir}/windowed")
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def start_extraction_stream(
     spark: SparkSession,
     input_dir: str,
@@ -183,12 +133,11 @@ def windowed_counts_complete(
 ) -> DataFrame:
     """Batch-equivalence proof for streaming windowed counts.
 
-    Unlike the watermarked append pipeline
-    (:func:`start_windowed_counts_stream` — the production shape, which
-    trades completeness of trailing windows for bounded state), the
-    complete-mode drain equals the batch ``groupBy(window, key)``
-    EXACTLY — which is what lets the DuckDB oracle verify the
-    streaming surface (registry ``stream_windowed_counts``).
+    Unlike a watermarked append stream (which trades completeness of
+    trailing windows for bounded state), the complete-mode drain
+    equals the batch ``groupBy(window, key)`` EXACTLY — which is what
+    lets the DuckDB oracle verify the streaming surface (registry
+    ``stream_windowed_counts``).
 
     Output: (window_start epoch-seconds, key, n) — epoch longs so the
     oracle compare is exact across engines.
