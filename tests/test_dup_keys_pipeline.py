@@ -48,3 +48,31 @@ def test_first_run_dedupes_sink(spark, dup_pages, tmp_path_factory):
         r["total_blocks"] == r["processed_blocks"] + r["skipped_blocks"]
         for r in man.collect()
     )
+
+
+def test_incremental_run_dedupes_sink(spark, dup_pages, tmp_path_factory):
+    """The same duplicated batch, re-sent without resume onto the
+    committed sink, goes through the incremental merge: the sink keys
+    stay unique, each url keeps one manifest row with consistent
+    counters, and the run's staging directory is gone."""
+    import os
+
+    out = str(tmp_path_factory.mktemp("dupinc") / "o")
+    run_extraction_job(spark, dup_pages, out, run_id="d1")
+    res = run_extraction_job(spark, dup_pages, out, resume=False,
+                             run_id="d2")
+    assert res.merge_stats is not None  # the merge path ran
+    ext = ParquetTable(f"{out}/extracted").read(spark)
+    keys = ext.select("url", "page_index")
+    assert keys.count() == keys.distinct().count()
+    man = ParquetTable(f"{out}/manifest").read(spark).collect()
+    assert len(man) == len({r["url"] for r in man}) == 60
+    pages_per_url = {
+        r["url"]: r["count"] for r in ext.groupBy("url").count().collect()}
+    for r in man:
+        assert r["total_blocks"] == pages_per_url[r["url"]]
+        assert r["total_blocks"] == (
+            r["processed_blocks"] + r["skipped_blocks"])
+    assert res.docs_in == 60
+    assert res.rows_written == keys.count()
+    assert not [n for n in os.listdir(out) if n.startswith("_staging_")]

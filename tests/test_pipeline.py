@@ -103,6 +103,41 @@ def test_upsert_is_idempotent(spark, job, pages_parquet):
     assert res.resumed_skipped == 0
 
 
+def test_resent_url_replaces_its_whole_page_set(spark, tmp_path_factory):
+    """A url re-sent is a new version of its document, and the new
+    version's pages replace the old version's whole page set: a 3-page
+    PDF re-sent as a 1-page HTML doc leaves one sink row, and its
+    manifest row counts one block."""
+    from westa_ocr_spark.kernel.pdf_mini import write_pdf
+
+    out = str(tmp_path_factory.mktemp("resent") / "out")
+    url = "https://resent.example/doc"
+    versions = (write_pdf(["page one", "page two", "page three"]),
+                b"<html><body><p>the new version</p></body></html>")
+    for run, html in enumerate(versions):
+        pages = spark.createDataFrame([(url, html)], "url string, html binary")
+        run_extraction_job(spark, pages, out, resume=False, run_id=f"v{run}")
+        rows = ParquetTable(f"{out}/extracted").read(spark).collect()
+        assert len(rows) == (3, 1)[run]
+    assert [(r["page_index"], r["kind"]) for r in rows] == [(1, "html")]
+    man = ParquetTable(f"{out}/manifest").read(spark).collect()
+    assert len(man) == 1
+    assert man[0]["total_blocks"] == man[0]["processed_blocks"] == 1
+
+
+def test_failed_run_clears_its_job_group(spark, tmp_path_factory):
+    """A run that raises leaves no job group on the calling thread, so
+    the caller's later jobs cannot be cancelled with the run's group."""
+    from pyspark.errors import AnalysisException
+
+    out = str(tmp_path_factory.mktemp("failgroup") / "out")
+    with pytest.raises(AnalysisException):
+        run_extraction_job(spark, "/nonexistent", out, job_group="g")
+    sc = spark.sparkContext
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    assert sc.getLocalProperty("spark.job.interruptOnCancel") is None
+
+
 def test_skew_split_balances_oversized(spark, pages_parquet):
     from pyspark.sql import functions as F
 
@@ -268,7 +303,7 @@ def test_spark_jobs_per_run(spark, tmp_path_factory):
         run_extraction_job(spark, str(base / name), out, resume=resume,
                            run_id=name, job_group=group)
         jobs[name] = len(tracker.getJobIdsForGroup(group))
-    assert jobs == {"first": 10, "delta": 22}
+    assert jobs == {"first": 10, "delta": 21}
 
 
 def test_damaged_warc_file_gives_error_row_not_job_failure(

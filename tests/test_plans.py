@@ -170,27 +170,28 @@ def test_partition_pruning_reaches_scan(spark, tmp_path_factory):
     assert n_en == docs.filter("lang = 'en'").count()
 
 
-def test_incremental_sink_read_is_partition_pruned(
-        spark, pages_parquet, tmp_path_factory):
-    """The incremental manifest path must read the committed sink with
-    PartitionFilters on url_bucket (this run's buckets only) — not a
-    full-table scan that grows with the sink."""
-    from westa_ocr_spark.plans.pipeline import (
-        committed_for_run,
-        run_extraction_job,
-    )
-    from westa_ocr_spark.sources.tables import ParquetTable
+def test_delta_manifest_reads_no_sink_file(
+        spark, pages_parquet, tmp_path_factory, monkeypatch):
+    """A delta run's manifest rows are summarized from the run's own
+    staged rows, which the merge committed as the sink rows of the
+    run's urls: the manifest input scans no file of the sink, whose
+    size grows with every run."""
+    from westa_ocr_spark.plans import pipeline
+
+    scanned: list[list[str]] = []
+    real = pipeline.build_manifest
+
+    def build_manifest(df):
+        scanned.append(df.inputFiles())
+        return real(df)
 
     out = str(tmp_path_factory.mktemp("inc") / "job")
-    run_extraction_job(spark, pages_parquet, out, run_id="r1")
-    tbl = ParquetTable(f"{out}/extracted", partition_by="url_bucket")
-    # a small "second batch" whose staged rows fall in buckets 0 and 1
-    # (the run's key-stats aggregation names them)
-    pruned = committed_for_run(spark, tbl, [0, 1])
-    plan = _plan(pruned)
-    assert "PartitionFilters" in plan and "url_bucket" in plan, plan
-    # the filter names only the staged buckets, so pruning is real
-    assert pruned.select("url_bucket").distinct().count() <= 2
+    pipeline.run_extraction_job(spark, pages_parquet, out, run_id="r1")
+    monkeypatch.setattr(pipeline, "build_manifest", build_manifest)
+    pipeline.run_extraction_job(spark, pages_parquet, out, resume=False,
+                                run_id="r2")
+    assert len(scanned) == 1 and scanned[0], scanned
+    assert not [f for f in scanned[0] if "/extracted/" in f], scanned[0]
 
 
 def test_dedup_store_antijoin_is_partition_pruned(spark, tmp_path_factory):

@@ -545,39 +545,57 @@ def test_streaming_upsert_sink_is_idempotent(spark, tmp_path_factory):
 def test_streaming_resent_url_upserts(spark, tmp_path_factory):
     """A url re-sent in a later file is extracted again and its new
     rows replace the old ones: one row per (url, page_index) key and
-    one manifest row per url."""
+    one manifest row per url. A 3-page PDF re-sent as a 1-page HTML doc
+    loses its old pages 2 and 3."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from westa_ocr_spark.corpus import url_for, write_pages_parquet
+    from westa_ocr_spark.kernel.pdf_mini import write_pdf
     from westa_ocr_spark.streaming.stream_pipeline import (
         start_extraction_stream,
     )
 
     src = tmp_path_factory.mktemp("resrc") / "pages"
     write_pages_parquet(str(src), n=40, rows_per_file=2)
+    first = pq.read_table(str(src / "part-00000.parquet"))
+    url, pdf_url = url_for(0), "https://resent.example/pdf"
+    assert first.column("url")[0].as_py() == url
+
+    def one_row(row_url, html):
+        row = first.slice(0, 1)
+        for name, value, typ in (("url", row_url, pa.string()),
+                                 ("html", html, pa.binary())):
+            row = row.set_column(row.schema.get_field_index(name), name,
+                                 pa.array([value], typ))
+        return row
+
+    pq.write_table(
+        one_row(pdf_url, write_pdf(["page one", "page two", "page three"])),
+        str(src / "pdf.parquet"),
+    )
     out = str(tmp_path_factory.mktemp("reout") / "o")
     start_extraction_stream(spark, str(src), out).awaitTermination(300)
+    rows = _stream_tables(spark, out)[0]
+    assert {k for k in rows if k[0] == pdf_url} == {
+        (pdf_url, i) for i in (1, 2, 3)}
 
-    first = pq.read_table(str(src / "part-00000.parquet"))
-    url = url_for(0)
-    assert first.column("url")[0].as_py() == url
     html = b"<html><body><p>resent page text</p></body></html>"
-    pq.write_table(
-        first.slice(0, 1).set_column(
-            first.schema.get_field_index("html"), "html",
-            pa.array([html], pa.binary()),
-        ),
-        str(src / "resent.parquet"),
-    )
+    pq.write_table(pa.concat_tables([one_row(url, html),
+                                     one_row(pdf_url, html)]),
+                   str(src / "resent.parquet"))
     start_extraction_stream(spark, str(src), out).awaitTermination(300)
 
     rows, n_rows, man, n_man, _ = _stream_tables(spark, out)
     assert n_rows == len(rows)
-    assert {u for u, _ in rows} == {url_for(i) for i in range(40)}
+    assert {u for u, _ in rows} == {url_for(i) for i in range(40)} | {
+        pdf_url}
     assert rows[(url, 1)] == ("DONE", "resent page text")
-    assert len(man) == n_man == 40
+    assert {k: v for k, v in rows.items() if k[0] == pdf_url} == {
+        (pdf_url, 1): ("DONE", "resent page text")}
+    assert len(man) == n_man == 41
     assert man[url]["total_blocks"] == 1
+    assert man[pdf_url]["total_blocks"] == 1
 
 
 def test_color_jpeg_codec_roundtrip_bounds():

@@ -13,6 +13,7 @@ reverse, which is enough for a guard.
 from __future__ import annotations
 
 import ast
+import importlib.util
 from collections import defaultdict
 from pathlib import Path
 
@@ -88,7 +89,13 @@ def _package_graph():
                 roots |= used
     for pattern in HARNESS_GLOBS:
         for path in ROOT.glob(pattern):
-            roots |= _used_names(ast.parse(path.read_text()))
+            tree = ast.parse(path.read_text())
+            # a harness may name its targets as strings (getattr, as
+            # perfbench's probes do), so a string that is a name is a use
+            roots |= _used_names(tree) | {
+                n.value for n in ast.walk(tree)
+                if isinstance(n, ast.Constant) and isinstance(n.value, str)
+                and n.value.isidentifier()}
     return nodes, roots
 
 
@@ -115,3 +122,30 @@ def test_every_package_name_is_reachable():
         "allowed, but now reachable or gone": sorted(
             ALLOWED_UNREACHABLE - set(dead)),
     }
+
+
+def test_perfbench_finds_the_package_names_it_uses():
+    """The benchmark harness reaches into the package by import and by
+    name: each ``from westa_ocr_spark... import X`` in ``perfbench/``
+    resolves, and ``probes.wrap_package`` finds every function it
+    wraps (a missing one fails the traced run before its first op)."""
+    for path in sorted(ROOT.glob("perfbench/*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.ImportFrom) and node.module
+                    and node.module.split(".")[0] == PACKAGE.name):
+                module = importlib.import_module(node.module)
+                for alias in node.names:
+                    assert hasattr(module, alias.name) or \
+                        importlib.util.find_spec(
+                            f"{node.module}.{alias.name}"), (
+                        f"{path.name}: {node.module}.{alias.name}")
+
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_probes", ROOT / "perfbench" / "probes.py")
+    probes = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(probes)
+    tracer = probes.Tracer()
+    try:
+        probes.wrap_package(tracer)
+    finally:
+        tracer.unwrap_all()

@@ -4,8 +4,9 @@ Brand-new implementation of the per-document extraction dataflow of the
 reference repo ``ryunosuke0305/westa-ocr`` (see SURVEY.md), re-expressed
 Spark-first:
 
-    read pages table -> dropDuplicates(url) -> skew-aware repartition
-      -> mapInPandas(extract, Arrow-batched) -> idempotent keyed sink
+    read pages table -> [resume anti-join] -> skew split (oversized leg)
+      -> mapInPandas(extract, Arrow-batched)
+      -> dropDuplicates(url, page_index) -> sink merge by url
       -> groupBy(url).agg(counters) manifest -> structured parse stage
 
 The extraction itself (HTML boilerplate strip via text/link-density DOM

@@ -2,8 +2,9 @@
 
     read pages -> [resume anti-join] -> skew split (oversized leg)
       -> mapInPandas(extract)        -> staged write (single pass)
-      -> per-partition lineage       -> key-dedupe check
-      -> commit or merge into keyed sink -> groupBy(url) manifest
+      -> per-partition lineage       -> key stats
+      -> dropDuplicates(url, page_index) -> commit, or merge by url
+      -> groupBy(url) manifest of the same rows
 
 Reference lifecycle: ``/root/reference/app/worker.py:170-505``.
 
@@ -20,9 +21,10 @@ and extracted text is ~5-10x smaller than the html it came from.
 The extract stage executes once, and the tail runs its steps in order
 on the calling thread. On a fresh sink the extract output is committed
 straight into the sink (written once, no rewrite); an incremental run
-stages it and merges it in (Iceberg MERGE INTO makes that a metadata
-commit on a real deployment — see sources/tables.py). Lineage, the
-key-dedupe check and the manifest all derive from the staged files.
+stages it and merges it in, replacing each re-sent url's whole page
+set (Iceberg MERGE INTO makes that a metadata commit on a real
+deployment — see sources/tables.py). Lineage, the key stats and the
+manifest all derive from the run's own staged rows.
 
 Crash rule: the extracted, manifest and lineage tables commit through
 their own logs (``ParquetTable``), so a killed run leaves each table at
@@ -49,9 +51,8 @@ from westa_ocr_spark.operators.resume import resume_filter
 from westa_ocr_spark.sources.tables import ParquetTable
 
 # Hive-partition count for the extracted sink: url_bucket =
-# pmod(xxhash64(url), SINK_BUCKETS). Buys partition-PRUNED
-# incremental manifest reads and bucket-scoped merges (only touched
-# buckets rewrite). The sink write fans each extract task into one
+# pmod(xxhash64(url), SINK_BUCKETS). Buys bucket-scoped merges (only
+# touched buckets rewrite). The sink write fans each extract task into one
 # file PER bucket, so file count = tasks x buckets — measured locally
 # (50k docs, 32 cores): 32 buckets 7.9s, 16 buckets 5.3s, 8 buckets
 # 4.6s end-to-end. 16 balances prune granularity against small-file
@@ -105,19 +106,16 @@ def cancel_extraction(spark: SparkSession, job_group: str) -> None:
     spark.sparkContext.cancelJobGroup(job_group)
 
 
-def committed_for_run(
-    spark: SparkSession, extracted_tbl: ParquetTable, buckets: list[int]
-) -> DataFrame:
-    """Partition-pruned view of the committed sink for one run.
+def committed_for_run(staged: DataFrame) -> DataFrame:
+    """The run's rows as the sink holds them once committed: the staged
+    rows, one per (url, page_index) key (J5 idempotency — duplicate
+    requests collapse to one row, westa-ocr ``app/main.py:165-188``).
 
-    Filters the sink scan to the run's ``url_bucket`` values (the
-    buckets of its staged rows, which the key-stats aggregation names)
-    BEFORE the url semi-join, so the parquet read carries
-    PartitionFilters (plan-asserted in tests/test_plans.py) instead of
-    scanning every bucket of an arbitrarily large table.
+    The merge replaces each of the run's urls whole, so after it these
+    are exactly the sink rows of the run's urls, and the run's manifest
+    rows are built from them without reading the sink back.
     """
-    return extracted_tbl.read(spark).filter(
-        F.col("url_bucket").isin(buckets))
+    return staged.dropDuplicates(["url", "page_index"])
 
 
 def run_extraction_job(
@@ -142,86 +140,86 @@ def run_extraction_job(
     stages: dict[str, float] = {}
     merge_stats: dict | None = None
     compacted = False
+    conf_saved: dict[str, str] = {}
     _t0 = time.time()
-
-    if job_group is not None:
-        spark.sparkContext.setJobGroup(
-            job_group, f"extraction {run_id}", interruptOnCancel=True
-        )
 
     def _mark(name: str) -> None:
         nonlocal _t0
         stages[name] = round(time.time() - _t0, 3)
         _t0 = time.time()
 
-    if isinstance(pages, str):
-        pages = spark.read.parquet(pages)
-
-    extracted_tbl = ParquetTable(
-        f"{out_dir}/extracted", partition_by="url_bucket"
-    )
-    manifest_tbl = ParquetTable(f"{out_dir}/manifest")
-    lineage_tbl = ParquetTable(f"{out_dir}/lineage")
-
-    # the incremental staging directory is the one piece of run state
-    # outside the tables' commit logs: a cancelled or crashed run's
-    # leftover is re-derived from scratch by the run that needs it
-    staging_path = f"{out_dir}/_staging_{run_id}"
-    if os.path.isdir(out_dir):
-        for name in os.listdir(out_dir):
-            if name.startswith("_staging_"):
-                shutil.rmtree(os.path.join(out_dir, name),
-                              ignore_errors=True)
-
-    # prune to the columns extraction needs; the parquet scan then
-    # reads only url+html[+charset] (ReadSchema pruning).
-    work = pages.select(
-        "url", "html", *(["charset"] if "charset" in pages.columns else [])
-    )
-
-    first_run = not extracted_tbl.exists()
-    resumed = resume and not first_run and manifest_tbl.exists()
-    if resumed:
-        # the done-keys side is the MANIFEST (one tiny row per
-        # committed url) rather than the per-page sink: the anti-join
-        # probe shrinks by the pages-per-doc factor and never touches
-        # the wide table. A crash between the sink commit and the
-        # manifest commit can only UNDER-report done urls — those docs
-        # re-extract and the idempotent keyed sink absorbs them
-        # (at-least-once, the T4/T5 contract); with no manifest at all
-        # (a first run killed there) every doc re-extracts.
-        work = resume_filter(work, manifest_tbl.read(spark), key="url")
-        _mark("resume_plan")
-    work = skew_split(work)
-
-    bucket = F.pmod(F.xxhash64("url"), F.lit(SINK_BUCKETS)).cast("int")
-    extracted = extract_pages(work).withColumn("url_bucket", bucket)
-
-    # single execution: on a fresh sink the extract output is committed
-    # straight into it (hive-partitioned by url_bucket so later
-    # incremental runs get pruned reads and bucket-scoped merges; the
-    # narrow extract write stays shuffle-free, each task fans its rows
-    # into bucket dirs); an incremental run stages it for the merge.
-    if first_run:
-        extracted_tbl.append(extracted)
-    else:
-        extracted.write.mode("overwrite").parquet(staging_path)
-    _mark("extract_and_stage")
-
-    # The tail re-reads small files: the incremental staging write is
-    # flat, one file per extract task, and a fresh run's read of the
-    # bucketed sink sees tasks x buckets files. The session's
-    # input-split size is tuned for the big scan (small splits =
-    # extract parallelism); under the same setting the tail jobs
-    # (key-stats, lineage, manifest) fan out into near-empty tasks
-    # whose scheduling dominates. Pack them: bump split size / drop
-    # per-file open cost for the tail, restore on exit.
-    tail_conf = {"spark.sql.files.maxPartitionBytes": str(128 << 20),
-                 "spark.sql.files.openCostInBytes": str(1 << 20)}
-    conf_saved = {k: spark.conf.get(k) for k in tail_conf}
-    for k, v in tail_conf.items():
-        spark.conf.set(k, v)
+    if job_group is not None:
+        spark.sparkContext.setJobGroup(
+            job_group, f"extraction {run_id}", interruptOnCancel=True
+        )
     try:
+        if isinstance(pages, str):
+            pages = spark.read.parquet(pages)
+
+        extracted_tbl = ParquetTable(
+            f"{out_dir}/extracted", partition_by="url_bucket"
+        )
+        manifest_tbl = ParquetTable(f"{out_dir}/manifest")
+        lineage_tbl = ParquetTable(f"{out_dir}/lineage")
+
+        # the incremental staging directory is the one piece of run state
+        # outside the tables' commit logs: a cancelled or crashed run's
+        # leftover is re-derived from scratch by the run that needs it
+        staging_path = f"{out_dir}/_staging_{run_id}"
+        if os.path.isdir(out_dir):
+            for name in os.listdir(out_dir):
+                if name.startswith("_staging_"):
+                    shutil.rmtree(os.path.join(out_dir, name),
+                                  ignore_errors=True)
+
+        # prune to the columns extraction needs; the parquet scan then
+        # reads only url+html[+charset] (ReadSchema pruning).
+        work = pages.select(
+            "url", "html", *(["charset"] if "charset" in pages.columns else [])
+        )
+
+        first_run = not extracted_tbl.exists()
+        resumed = resume and not first_run and manifest_tbl.exists()
+        if resumed:
+            # the done-keys side is the MANIFEST (one tiny row per
+            # committed url) rather than the per-page sink: the anti-join
+            # probe shrinks by the pages-per-doc factor and never touches
+            # the wide table. A crash between the sink commit and the
+            # manifest commit can only UNDER-report done urls — those docs
+            # re-extract and the idempotent keyed sink absorbs them
+            # (at-least-once, the T4/T5 contract); with no manifest at all
+            # (a first run killed there) every doc re-extracts.
+            work = resume_filter(work, manifest_tbl.read(spark), key="url")
+            _mark("resume_plan")
+        work = skew_split(work)
+
+        bucket = F.pmod(F.xxhash64("url"), F.lit(SINK_BUCKETS)).cast("int")
+        extracted = extract_pages(work).withColumn("url_bucket", bucket)
+
+        # single execution: on a fresh sink the extract output is committed
+        # straight into it (hive-partitioned by url_bucket so later
+        # incremental runs get bucket-scoped merges; the
+        # narrow extract write stays shuffle-free, each task fans its rows
+        # into bucket dirs); an incremental run stages it for the merge.
+        if first_run:
+            extracted_tbl.append(extracted)
+        else:
+            extracted.write.mode("overwrite").parquet(staging_path)
+        _mark("extract_and_stage")
+
+        # The tail re-reads small files: the incremental staging write is
+        # flat, one file per extract task, and a fresh run's read of the
+        # bucketed sink sees tasks x buckets files. The session's
+        # input-split size is tuned for the big scan (small splits =
+        # extract parallelism); under the same setting the tail jobs
+        # (key-stats, lineage, manifest) fan out into near-empty tasks
+        # whose scheduling dominates. Pack them: bump split size / drop
+        # per-file open cost for the tail, restore on exit.
+        tail_conf = {"spark.sql.files.maxPartitionBytes": str(128 << 20),
+                     "spark.sql.files.openCostInBytes": str(1 << 20)}
+        conf_saved = {k: spark.conf.get(k) for k in tail_conf}
+        for k, v in tail_conf.items():
+            spark.conf.set(k, v)
         staged = (
             extracted_tbl.read(spark) if first_run
             else spark.read.schema(extracted.schema).parquet(staging_path)
@@ -252,7 +250,7 @@ def run_extraction_job(
         # grouped by url_bucket. A url maps to exactly one bucket, so the
         # global counts are the sums of the bucket counts, and the same
         # <= SINK_BUCKETS rows name the buckets and url ranges the merge
-        # and the manifest upsert touch. On a resumed run the input's
+        # touches. On a resumed run the input's
         # urls join the same job as rows without a page_index, so the
         # docs resume skipped are the input docs minus the extracted
         # ones. Otherwise ``page`` is a literal and the plan folds back
@@ -285,28 +283,30 @@ def run_extraction_job(
         if first_run:
             if has_dup_keys:
                 # rare: duplicate urls inside the very first batch
-                extracted_tbl.overwrite(
-                    staged.dropDuplicates(["url", "page_index"])
-                )
+                extracted_tbl.overwrite(committed_for_run(staged))
             manifest_tbl.overwrite(
                 build_manifest(extracted_tbl.read(spark))
             )
         else:
+            # a re-sent url is a new version of its document: the merge
+            # replaces its whole page set (keyed by url), so a version
+            # with fewer pages leaves no stale tail pages behind. Keep
+            # the key dedupe in front of the merge even when the staged
+            # rows are key-unique: its shuffle also decides how many
+            # files the merge writes per bucket. Merged straight in,
+            # each staged file adds a file to every bucket it touches,
+            # and the sink reaches the compaction bound sooner
+            # (perfbench's incremental sequence then compacts twice).
+            committed = committed_for_run(staged)
             merge_stats = extracted_tbl.merge_upsert(
-                spark, staged, keys=["url", "page_index"], ranges=ranges
-            )
-            # manifest is maintained INCREMENTALLY: summarize only this
-            # run's urls and upsert by url — re-summarizing the whole
-            # committed table every run would be an O(table) pass that
-            # dwarfs small incremental runs. Post-merge the sink rows for
-            # this run's urls are final, so their manifest rows are too.
-            committed = committed_for_run(spark, extracted_tbl, list(ranges))
-            run_manifest = build_manifest(
-                committed.join(
-                    staged.select("url").distinct(), "url", "left_semi"
-                )
-            )
-            manifest_tbl.merge_upsert(spark, run_manifest, keys=["url"])
+                spark, committed, keys=["url"], unique_keys=True,
+                ranges=ranges)
+            # the manifest is maintained incrementally: only this run's
+            # urls are summarized, from the rows just merged, and
+            # upserted by url; a groupBy(url) output is url-unique
+            manifest_tbl.merge_upsert(
+                spark, build_manifest(committed), keys=["url"],
+                unique_keys=True)
             shutil.rmtree(staging_path, ignore_errors=True)
             # small-file maintenance: each run fans tasks x buckets
             # files into the sink; when the fullest bucket crosses the
@@ -345,16 +345,15 @@ def run_extraction_job(
             rows_written = sum(r["rows"] for r in stats)
         _mark("counters")
     finally:
-        for _k, _v in conf_saved.items():
-            spark.conf.set(_k, _v)
-
-    if job_group is not None:
-        # job groups are sticky per thread: don't tag the caller's
-        # unrelated later jobs with this run's cancellable group
-        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-        spark.sparkContext.setLocalProperty(
-            "spark.job.interruptOnCancel", None
-        )
+        for k, v in conf_saved.items():
+            spark.conf.set(k, v)
+        if job_group is not None:
+            # job groups are sticky per thread: don't leave the caller's
+            # later unrelated jobs in this run's cancellable group, on a
+            # failed or cancelled run too
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                spark.sparkContext.setLocalProperty(key, None)
 
     return ExtractionResult(
         docs_in=docs_in,

@@ -2,11 +2,15 @@
 
 The reference's core sink is an idempotent keyed upsert —
 ``INSERT ... ON CONFLICT(job_id,page_index) DO UPDATE``
-(``/root/reference/app/repository.py:230-265``). The Spark-native
-equivalent is Iceberg ``MERGE INTO`` on ``(url, page_index)`` with
-snapshot-isolated commits. No Iceberg runtime jar ships with this
-package, so the extraction pipeline writes ``ParquetTable``: a
-hive-partitioned parquet directory with a Delta-Lake-style commit log
+(westa-ocr ``app/repository.py:230-265``), where a new version of a
+document is a new job. Here the url is the document, so the pipeline
+merges a batch, deduplicated on ``(url, page_index)``, with
+``keys=["url"]``: a re-sent url's whole page set is replaced. The
+Spark-native equivalent is an Iceberg ``MERGE INTO`` with
+snapshot-isolated commits (docs/ICEBERG.md). No Iceberg runtime jar
+ships with this package, so the extraction pipeline writes
+``ParquetTable``: a hive-partitioned parquet directory with a
+Delta-Lake-style commit log
 (Armbrust et al., VLDB 2020). Data files are immutable; every write
 adds new part files and then commits by creating ``_log/<n>.json``,
 which lists the table's files, the files added and removed, the merge
@@ -102,11 +106,10 @@ class ParquetTable:
 
     ``partition_by`` names a hive-style partition column (e.g.
     ``url_bucket = pmod(xxhash64(url), N)``). A partitioned table
-    buys two things at scale: partition-PRUNED incremental reads
-    (the manifest semi-join scans only this run's buckets) and a
-    merge that rewrites only key-overlapping files of the AFFECTED
-    buckets — every other file stays where it is, untouched. This is
-    the parquet form of Iceberg's file-level MERGE.
+    buys partition-pruned reads and a merge that rewrites only
+    key-overlapping files of the AFFECTED buckets — every other file
+    stays where it is, untouched. This is the parquet form of
+    Iceberg's file-level MERGE.
     """
 
     def __init__(self, path: str, partition_by: str | None = None) -> None:
@@ -218,18 +221,22 @@ class ParquetTable:
     ) -> dict | None:
         """Upsert df by keys: new rows win over existing rows.
 
-        Mirrors the reference's ON CONFLICT DO UPDATE
-        (``/root/reference/app/repository.py:256-262``). The incoming
-        batch is key-deduplicated first (J5 idempotency — duplicate
-        requests collapse to one row, ``/root/reference/app/main.py:
-        165-188``); a caller whose batch is ALREADY key-unique (e.g. a
-        groupBy(keys) output) passes ``unique_keys=True`` to skip the
-        dedup shuffle, which the partitioned path would otherwise pay
-        once per evaluation of ``df`` (round 6, guide §2.4). On the
-        partitioned path, returns the measured rewrite-amplification
-        stats; a caller that already knows each partition's ``keys[0]``
-        (min, max) in ``df`` passes them as ``ranges`` (partition value
-        -> (lo, hi)) to save the merge its own aggregation job.
+        Mirrors the reference's ON CONFLICT DO UPDATE (westa-ocr
+        ``app/repository.py:256-262``): every existing row whose
+        ``keys`` match a batch row is replaced by the batch's rows of
+        that key. The incoming batch is key-deduplicated first (J5
+        idempotency — duplicate requests collapse to one row,
+        westa-ocr ``app/main.py:165-188``); a caller that has already
+        deduplicated the batch (a groupBy(keys) output, or pages
+        deduplicated on ``(url, page_index)`` and merged with
+        ``keys=["url"]``, so several rows share a key) passes
+        ``unique_keys=True`` to skip the dedup shuffle, which the
+        partitioned path would otherwise pay once per evaluation of
+        ``df``. On the partitioned path, returns the measured
+        rewrite-amplification stats; a caller that already knows each
+        partition's ``keys[0]`` (min, max) in ``df`` passes them as
+        ``ranges`` (partition value -> (lo, hi)) to save the merge its
+        own aggregation job.
         """
         if not unique_keys:
             df = df.dropDuplicates(keys)
