@@ -75,4 +75,4 @@ def test_incremental_run_dedupes_sink(spark, dup_pages, tmp_path_factory):
             r["processed_blocks"] + r["skipped_blocks"])
     assert res.docs_in == 60
     assert res.rows_written == keys.count()
-    assert not [n for n in os.listdir(out) if n.startswith("_staging_")]
+    assert not [n for n in os.listdir(out) if n.startswith("staging_")]

@@ -40,13 +40,21 @@ def test_manifest_semantics(spark, job):
             assert r["errors"] == [] and r["last_error"] == ""
 
 
-def test_lineage_totals(spark, job):
-    lin = ParquetTable(f"{job.out_dir}/lineage").read(spark)
-    agg = lin.groupBy().sum("rows", "errors").collect()[0]
-    assert agg[0] == job.rows_written
-    assert agg[1] == 2
+def test_lineage_totals(job):
+    """The run's lineage is its record in the manifest's last commit,
+    not a table of its own."""
+    import os
+
+    history = ParquetTable(f"{job.out_dir}/manifest").history()
+    records = [e["record"] for e in history if e["record"]]
+    assert [r["run_id"] for r in records] == ["r1"]
+    assert history[-1]["record"] is records[0]  # the run's last commit
+    lin = records[0]["lineage"]
+    assert sum(p["rows"] for p in lin) == job.rows_written
+    assert sum(p["errors"] for p in lin) == 2
     # one lineage row per staged extract partition
-    assert lin.select("partition_id").distinct().count() == lin.count()
+    assert len({p["partition_id"] for p in lin}) == len(lin)
+    assert not os.path.exists(f"{job.out_dir}/lineage")
 
 
 def test_resume_skips_committed_work(spark, job, tmp_path_factory):
@@ -282,8 +290,9 @@ def test_incremental_runs_bound_files_and_measure_merges(
 def test_spark_jobs_per_run(spark, tmp_path_factory):
     """Spark jobs of a fresh run and of a resumed delta onto its sink,
     counted per job group. Each is the input's schema inference plus
-    the extract, lineage, key-stats, merge, manifest and counters jobs;
-    a new collect or a table read that infers its schema shows here."""
+    the extract, lineage collect, key-stats, merge, manifest and
+    counters jobs (the lineage rides in the manifest commit); a new
+    collect or a table read that infers its schema shows here."""
     from pyspark.sql import functions as F
 
     from westa_ocr_spark.corpus import url_for

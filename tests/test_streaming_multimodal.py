@@ -496,18 +496,19 @@ def test_stateful_first_seen_dedupe(spark, tmp_path_factory):
 
 def _stream_tables(spark, out):
     """(extracted rows by key, extracted row count, manifest rows by
-    url, manifest row count, lineage run ids) of a stream's out dir."""
+    url, manifest row count, the run ids of the manifest history's run
+    records) of a stream's out dir."""
     from westa_ocr_spark.sources.tables import ParquetTable
 
     ext = ParquetTable(f"{out}/extracted").read(spark).collect()
-    man = ParquetTable(f"{out}/manifest").read(spark).collect()
-    lin = ParquetTable(f"{out}/lineage").read(spark).collect()
+    manifest = ParquetTable(f"{out}/manifest")
+    man = manifest.read(spark).collect()
     return (
         {(r["url"], r["page_index"]): (r["status"], r["text"]) for r in ext},
         len(ext),
         {r["url"]: r.asDict(recursive=True) for r in man},
         len(man),
-        {r["run_id"] for r in lin},
+        {e["record"]["run_id"] for e in manifest.history() if e["record"]},
     )
 
 

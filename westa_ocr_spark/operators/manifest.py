@@ -15,8 +15,10 @@ per-page counting):
   every input doc yields at least one extracted row (DONE-empty or
   ERROR), mirroring ``/root/reference/app/worker.py:236-254``.
 
-The per-partition lineage table is aggregated in
-``plans/pipeline.py``, next to the staged files it reads.
+A run's per-partition lineage is not a table: ``plans/pipeline.py``
+aggregates it next to the staged files it reads and writes it into the
+manifest's commit as the run's record, read back with
+``ParquetTable(f"{out_dir}/manifest").history()``.
 """
 
 from __future__ import annotations

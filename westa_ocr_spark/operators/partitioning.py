@@ -10,9 +10,9 @@ payloads are balanced explicitly (SURVEY.md §4.3).
 Strategy:
 * normal rows -> kept in the input's own partitioning (no shuffle of
   the payload bytes);
-* oversized rows (``octet_length(html) >= threshold``) -> round-robin
-  ``repartition(k)``, k = the default parallelism: balances counts
-  with zero global coordination.
+* oversized rows (``octet_length(html) >= OVERSIZED_THRESHOLD``) ->
+  round-robin ``repartition(k)``, k = the default parallelism: balances
+  counts with zero global coordination.
   (An exact row_number+range assignment was tried first and reverted:
   its global window sorts the whole oversized leg through one task —
   a measured serial bottleneck. Round-robin's worst case is a small
@@ -33,12 +33,10 @@ from pyspark.sql import functions as F
 OVERSIZED_THRESHOLD = 256 * 1024
 
 
-def skew_split(
-    pages: DataFrame, oversized_threshold: int = OVERSIZED_THRESHOLD
-) -> DataFrame:
-    """Split oversized ``html`` payloads into their own balanced
-    partitions, one per default-parallelism slot (one per core in
-    local mode).
+def skew_split(pages: DataFrame) -> DataFrame:
+    """Split oversized ``html`` payloads (``OVERSIZED_THRESHOLD`` bytes
+    and up) into their own balanced partitions, one per
+    default-parallelism slot (one per core in local mode).
 
     Assumes the input is already usefully partitioned (in the
     pipeline: the input scan's splits, or on a resumed run the resume
@@ -58,7 +56,7 @@ def skew_split(
     NULL and would fail BOTH filters, silently dropping the row.
     """
     size = F.coalesce(F.octet_length(F.col("html")), F.lit(0))
-    small = pages.filter(size < F.lit(oversized_threshold))
+    small = pages.filter(size < F.lit(OVERSIZED_THRESHOLD))
     k = pages.sparkSession.sparkContext.defaultParallelism
-    big = pages.filter(size >= F.lit(oversized_threshold)).repartition(k)
+    big = pages.filter(size >= F.lit(OVERSIZED_THRESHOLD)).repartition(k)
     return small.unionByName(big)

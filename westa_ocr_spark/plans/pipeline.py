@@ -2,9 +2,11 @@
 
     read pages -> [resume anti-join] -> skew split (oversized leg)
       -> mapInPandas(extract)        -> staged write (single pass)
-      -> per-partition lineage       -> key stats
+      -> per-partition lineage (collected) -> key stats
       -> dropDuplicates(url, page_index) -> commit, or merge by url
-      -> groupBy(url) manifest of the same rows
+      -> [compaction]
+      -> groupBy(url) manifest of the same rows, upserted by url in
+         one commit with the run record {run_id, lineage}
 
 Reference lifecycle: ``/root/reference/app/worker.py:170-505``.
 
@@ -26,11 +28,15 @@ set (Iceberg MERGE INTO makes that a metadata commit on a real
 deployment — see sources/tables.py). Lineage, the key stats and the
 manifest all derive from the run's own staged rows.
 
-Crash rule: the extracted, manifest and lineage tables commit through
-their own logs (``ParquetTable``), so a killed run leaves each table at
-its last commit, and a rerun converges from there. The incremental
-staging directory is the only state outside those logs; the next run
-deletes it.
+Crash rule: the extracted and manifest tables commit through their own
+logs (``ParquetTable``), so a killed run leaves each table at its last
+commit, and a rerun converges from there. The manifest commit is the
+run's last one and carries the run's record (its ``run_id`` and
+per-partition lineage), read back by
+``ParquetTable(f"{out_dir}/manifest").history()``: a run has a record
+iff it finished, and a rerun of a killed run writes it once. The
+incremental staging directory is the only state outside those logs;
+the next run deletes it.
 """
 
 from __future__ import annotations
@@ -160,15 +166,15 @@ def run_extraction_job(
             f"{out_dir}/extracted", partition_by="url_bucket"
         )
         manifest_tbl = ParquetTable(f"{out_dir}/manifest")
-        lineage_tbl = ParquetTable(f"{out_dir}/lineage")
 
         # the incremental staging directory is the one piece of run state
         # outside the tables' commit logs: a cancelled or crashed run's
-        # leftover is re-derived from scratch by the run that needs it
-        staging_path = f"{out_dir}/_staging_{run_id}"
+        # leftover is re-derived from scratch by the run that needs it.
+        # No "_"/"." prefix: Spark skips such paths as hidden files.
+        staging_path = f"{out_dir}/staging_{run_id}"
         if os.path.isdir(out_dir):
             for name in os.listdir(out_dir):
-                if name.startswith("_staging_"):
+                if name.startswith("staging_"):
                     shutil.rmtree(os.path.join(out_dir, name),
                                   ignore_errors=True)
 
@@ -228,22 +234,23 @@ def run_extraction_job(
         # per-partition lineage from the staged part files (one file per
         # extract partition) — the gemini_logs analogue
         # (/root/reference/app/repository.py:84-97), metrics only; it
-        # runs first, while the staged files are still this run's output
-        lineage_tbl.append(
-            staged.groupBy(
+        # runs first, while the staged files are still this run's output.
+        # It is committed with the manifest, the run's last commit, so a
+        # run has a record iff it finished and a rerun cannot repeat it;
+        # sorted, since collect() order is not stable across reruns.
+        lineage = sorted(
+            (r.asDict() for r in staged.groupBy(
                 F.regexp_extract(F.input_file_name(), r"part-(\d+)", 1)
                 .cast("int")
                 .alias("partition_id")
-            )
-            .agg(
+            ).agg(
                 F.count(F.lit(1)).alias("rows"),
                 F.sum("input_bytes").alias("input_bytes"),
                 F.sum(
                     F.when(F.col("status") == "ERROR", 1).otherwise(0)
                 ).alias("errors"),
-            )
-            .select(F.lit(run_id).alias("run_id"), "*")
-        )
+            ).collect()),
+            key=lambda r: r["partition_id"])
         _mark("lineage")
 
         # J5 key stats: one aggregation over this run's staged rows,
@@ -284,9 +291,8 @@ def run_extraction_job(
             if has_dup_keys:
                 # rare: duplicate urls inside the very first batch
                 extracted_tbl.overwrite(committed_for_run(staged))
-            manifest_tbl.overwrite(
-                build_manifest(extracted_tbl.read(spark))
-            )
+            # re-read: that overwrite deleted files ``staged`` lists
+            committed = extracted_tbl.read(spark)
         else:
             # a re-sent url is a new version of its document: the merge
             # replaces its whole page set (keyed by url), so a version
@@ -301,13 +307,6 @@ def run_extraction_job(
             merge_stats = extracted_tbl.merge_upsert(
                 spark, committed, keys=["url"], unique_keys=True,
                 ranges=ranges)
-            # the manifest is maintained incrementally: only this run's
-            # urls are summarized, from the rows just merged, and
-            # upserted by url; a groupBy(url) output is url-unique
-            manifest_tbl.merge_upsert(
-                spark, build_manifest(committed), keys=["url"],
-                unique_keys=True)
-            shutil.rmtree(staging_path, ignore_errors=True)
             # small-file maintenance: each run fans tasks x buckets
             # files into the sink; when the fullest bucket crosses the
             # bound, repack to one file per bucket so read-side task
@@ -316,6 +315,14 @@ def run_extraction_job(
                     > compact_files_per_bucket):
                 extracted_tbl.compact(spark)
                 compacted = True
+        # the run's last commit: the manifest rows of this run's urls,
+        # built from the rows just committed (a groupBy(url) output is
+        # url-unique) and upserted by url — an overwrite on a fresh
+        # sink — with the run's record
+        manifest_tbl.merge_upsert(
+            spark, build_manifest(committed), keys=["url"],
+            unique_keys=True, record={"run_id": run_id, "lineage": lineage})
+        shutil.rmtree(staging_path, ignore_errors=True)
         _mark("sink_and_manifest")
 
         if first_run and not has_dup_keys:

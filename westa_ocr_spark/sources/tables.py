@@ -14,7 +14,8 @@ Delta-Lake-style commit log
 (Armbrust et al., VLDB 2020). Data files are immutable; every write
 adds new part files and then commits by creating ``_log/<n>.json``,
 which lists the table's files, the files added and removed, the merge
-stats and the table schema (Delta's ``metaData`` action), so a read
+stats, the writer's record (Delta's ``commitInfo``; the pipeline's run
+record) and the table schema (Delta's ``metaData`` action), so a read
 passes the schema instead of inferring it from a part file's footer.
 One commit file means the write happened; no commit file means nothing
 happened. ``IcebergTable`` serves the same upsert
@@ -51,11 +52,8 @@ def _parquet_key_range(path: str, col: str):
         import pyarrow.parquet as pq
 
         md = pq.ParquetFile(path).metadata
-        idx = None
-        for i in range(md.num_columns):
-            if md.schema.column(i).name == col:
-                idx = i
-                break
+        idx = next((i for i in range(md.num_columns)
+                    if md.schema.column(i).name == col), None)
         if idx is None:
             return None
         lo = hi = None
@@ -94,7 +92,8 @@ class ParquetTable:
     partition column last, as Spark reads it back), so a reader needs
     only the latest one and runs no schema-inference job. A commit
     without a schema, written before commits held one, reads by
-    inference; the next write adds it.
+    inference; the next write adds it. ``history()`` returns every
+    commit's entry, with the ``record`` a ``merge_upsert`` carried.
 
     Crash rule: ``exists()`` means a commit exists, and ``read()`` first
     deletes every file under the table that the latest commit does not
@@ -124,13 +123,16 @@ class ParquetTable:
             return -1, {"files": []}
         for v in sorted((int(n[:-5]) for n in os.listdir(log)
                          if n.endswith(".json")), reverse=True):
-            entry = os.path.join(log, f"{v}.json")
             try:
-                with open(entry, encoding="utf-8") as fh:
-                    return v, json.load(fh)
+                return v, self._entry(v)
             except ValueError:  # torn by a crash while it was written
-                os.remove(entry)
+                os.remove(os.path.join(log, f"{v}.json"))
         return -1, {"files": []}
+
+    def _entry(self, version: int) -> dict:
+        with open(os.path.join(self.path, _LOG, f"{version}.json"),
+                  encoding="utf-8") as fh:
+            return json.load(fh)
 
     def _vacuum(self, keep: set[str]) -> None:
         """Delete every file under the table but ``_log/`` and ``keep``
@@ -160,6 +162,12 @@ class ParquetTable:
     def files(self) -> list[str]:
         """The latest commit's files, as paths relative to the table."""
         return self._latest()[1]["files"]
+
+    def history(self) -> list[dict]:
+        """Every commit's entry, oldest first; a write's ``record`` is
+        under that key (``None`` when it passed none)."""
+        latest, _ = self._latest()  # drops a commit torn by a crash
+        return [self._entry(v) for v in range(latest + 1)]
 
     def read(self, spark: SparkSession) -> DataFrame:
         # a directory read, not a file list: a long explicit file list
@@ -191,11 +199,13 @@ class ParquetTable:
 
     def _commit(self, version: int, files: list[str], added: list[str],
                 removed: list[str], schema: StructType,
-                stats: dict | None = None) -> None:
+                stats: dict | None = None, record: dict | None = None) -> None:
         """Create ``_log/<version + 1>.json``, then delete every file
         it does not list: ``removed`` and Spark's write leftovers.
         ``schema`` is the written DataFrame's; the commit holds it the
-        way Spark reads the files back, partition column last."""
+        way Spark reads the files back, partition column last.
+        ``record`` is the caller's own JSON data for the commit, kept
+        as given (Delta Lake's ``commitInfo``)."""
         live = sorted(set(files).difference(removed).union(added))
         part = [f for f in schema.fields if f.name == self.partition_by]
         fields = [f for f in schema.fields if f not in part] + part
@@ -204,6 +214,7 @@ class ParquetTable:
         with os.fdopen(fd, "w", encoding="utf-8") as fh:
             json.dump({"files": live, "added": added,
                        "removed": sorted(removed), "stats": stats,
+                       "record": record,
                        "schema": StructType(fields).jsonValue()}, fh)
         self._vacuum(set(live))
 
@@ -218,6 +229,7 @@ class ParquetTable:
     def merge_upsert(
         self, spark: SparkSession, df: DataFrame, keys: list[str],
         unique_keys: bool = False, ranges: dict | None = None,
+        record: dict | None = None,
     ) -> dict | None:
         """Upsert df by keys: new rows win over existing rows.
 
@@ -236,18 +248,21 @@ class ParquetTable:
         rewrite-amplification stats; a caller that already knows each
         partition's ``keys[0]`` (min, max) in ``df`` passes them as
         ``ranges`` (partition value -> (lo, hi)) to save the merge its
-        own aggregation job.
+        own aggregation job. ``record`` is stored as is in the merge's
+        commit (the pipeline's run record, see :meth:`history`). On a
+        table without a commit the merge is an overwrite.
         """
         if not unique_keys:
             df = df.dropDuplicates(keys)
-        if not self.exists():
-            self.overwrite(df)
-            return None
-        if self.partition_by and self.partition_by in df.columns:
-            return self._merge_partitioned(spark, df, keys, ranges)
-        existing = self.read(spark)
-        kept = existing.join(df.select(*keys).distinct(), keys, "left_anti")
-        self.overwrite(kept.unionByName(df.select(*existing.columns)))
+        exists = self.exists()
+        if exists and self.partition_by and self.partition_by in df.columns:
+            return self._merge_partitioned(spark, df, keys, ranges, record)
+        if exists:
+            old = self.read(spark)
+            kept = old.join(df.select(*keys).distinct(), keys, "left_anti")
+            df = kept.unionByName(df.select(*old.columns))
+        version, files, added = self._write(df)
+        self._commit(version, files, added, files, df.schema, record=record)
 
     def compact(self, spark: SparkSession) -> None:
         """Small-file compaction: rewrite the table so each partition
@@ -265,7 +280,7 @@ class ParquetTable:
 
     def _merge_partitioned(
         self, spark: SparkSession, df: DataFrame, keys: list[str],
-        ranges: dict | None,
+        ranges: dict | None, record: dict | None,
     ) -> dict:
         """File-scoped merge: IO approaches O(delta), the parquet
         stand-in for Iceberg's file-level MERGE INTO.
@@ -343,7 +358,7 @@ class ParquetTable:
             ),
         }
         self._commit(version, files, added, rewrite_files, merged.schema,
-                     stats)
+                     stats, record)
         return stats
 
 

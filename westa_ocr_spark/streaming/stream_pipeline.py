@@ -5,8 +5,11 @@ The reference is a continuous service (queue + worker threads, its
 continuous-ingest shape of it: new page files land in a directory and
 each micro-batch goes through the one extraction lifecycle,
 :func:`~westa_ocr_spark.plans.pipeline.run_extraction_job` — keyed
-upsert into the ``url_bucket`` sink, J5 key check, manifest, lineage,
-compaction. Batch and streaming writers share the tables' commit logs,
+upsert into the ``url_bucket`` sink, J5 key check, compaction, and the
+manifest commit that carries the micro-batch's run record (``run_id``
+``batch<id>`` and its lineage; ``ParquetTable.history()`` of the
+manifest lists one per finished micro-batch, and one more per
+replayed one). Batch and streaming writers share the tables' commit logs,
 as in Delta Lake (Armbrust et al., VLDB 2020). The checkpoint directory
 tracks which files were consumed (the streaming analogue of the
 reference's startup re-enqueue, ``app/main.py:402-406``), and the keyed
