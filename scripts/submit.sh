@@ -17,10 +17,9 @@ if [[ "${1:-}" == "--master" ]]; then
 fi
 
 # Iceberg catalog (optional): point ICEBERG_JAR at the
-# iceberg-spark-runtime jar to configure the catalog that
-# sources/tables.py IcebergTable's MERGE INTO needs (contract-tested in
-# tests/test_tables.py). The extraction pipeline writes ParquetTable
-# either way; only a caller that passes an IcebergTable uses it.
+# iceberg-spark-runtime jar to configure the session catalog that the
+# MERGE INTO of docs/ICEBERG.md needs. The extraction pipeline writes
+# ParquetTable either way.
 ICEBERG_ARGS=()
 if [[ -n "${ICEBERG_JAR:-}" ]]; then
   ICEBERG_ARGS=(

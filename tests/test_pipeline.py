@@ -93,6 +93,88 @@ def test_resume_counts_only_skipped_input_docs(spark, tmp_path_factory):
     assert res.docs_in == 94
 
 
+def _corpus(spark, base, n=94):
+    write_pages_parquet(str(base / "all"), n=n, seed=42, rows_per_file=50)
+    return spark.read.parquet(str(base / "all"))
+
+
+def _docs(every, ids):
+    from pyspark.sql import functions as F
+
+    from westa_ocr_spark.corpus import url_for
+
+    return every.filter(F.col("url").isin([url_for(i) for i in ids]))
+
+
+def test_counters_are_the_manifest_commit_stats(spark, tmp_path_factory):
+    """A run's all-time counters are observed on its manifest write and
+    stored as that commit's ``stats``; they equal a groupBy(status) over
+    the manifest for a first run, a first run with duplicate urls, a
+    resumed delta that re-sends urls, and an empty input (all 0)."""
+    from pyspark.sql import functions as F
+
+    base = tmp_path_factory.mktemp("counters")
+    every = _corpus(spark, base)
+    first = _docs(every, [*range(40), 93])  # doc 93 is malformed: ERROR
+    runs = (
+        ("first", first, "a"),
+        ("dup", first.unionByName(_docs(every, range(5))), "b"),
+        ("delta", _docs(every, [*range(40, 60), *range(0, 40, 4)]), "a"),
+        ("empty", spark.createDataFrame([], "url string, html binary"),
+         "c"),
+    )
+    for run_id, pages, sink in runs:
+        out = str(base / sink)
+        res = run_extraction_job(spark, pages, out, run_id=run_id)
+        manifest = ParquetTable(f"{out}/manifest")
+        by_status = {
+            r["status"]: (r["docs"], r["rows"])
+            for r in manifest.read(spark).groupBy("status").agg(
+                F.count(F.lit(1)).alias("docs"),
+                F.sum("total_blocks").alias("rows")).collect()}
+        (done, done_rows), (error, error_rows) = (
+            by_status.get(s, (0, 0)) for s in ("DONE", "ERROR"))
+        want = (done + error, done, error, done_rows + error_rows)
+        stats = manifest.history()[-1]["stats"]
+        assert (stats["docs"], stats["done"], stats["error"],
+                stats["rows"]) == want, run_id
+        assert (res.docs_in, res.docs_done, res.docs_error,
+                res.rows_written) == want, run_id
+        assert want[0] == {"first": 41, "dup": 41, "delta": 61,
+                           "empty": 0}[run_id]
+        assert error == (0 if run_id == "empty" else 1), run_id
+
+
+def test_resumed_run_lineage_totals(spark, tmp_path_factory):
+    """A resumed delta's lineage counts the rows it staged, not the
+    input urls that join its key-stats job: Σ rows is the sink rows of
+    the urls it extracted, Σ errors their ERROR rows, and every
+    partition_id is a staged part file's."""
+    from pyspark.sql import functions as F
+
+    from westa_ocr_spark.corpus import url_for
+
+    base = tmp_path_factory.mktemp("lineage")
+    every = _corpus(spark, base)
+    out = str(base / "out")
+    run_extraction_job(spark, _docs(every, range(40)), out, run_id="first")
+    new = [*range(40, 60), 93]  # doc 93 is malformed: ERROR
+    res = run_extraction_job(
+        spark, _docs(every, [*new, *range(0, 40, 4)]), out, run_id="delta")
+    assert res.docs_processed == len(new) and res.resumed_skipped == 10
+    record = ParquetTable(f"{out}/manifest").history()[-1]["record"]
+    assert record["run_id"] == "delta"
+    lin = record["lineage"]
+    ids = [p["partition_id"] for p in lin]
+    assert None not in ids and ids == sorted(set(ids))
+    staged = ParquetTable(f"{out}/extracted").read(spark).filter(
+        F.col("url").isin([url_for(i) for i in new]))
+    errors = staged.filter(F.col("status") == "ERROR").count()
+    assert errors > 0
+    assert sum(p["rows"] for p in lin) == staged.count()
+    assert sum(p["errors"] for p in lin) == errors
+
+
 def test_upsert_is_idempotent(spark, job, pages_parquet):
     ext = ParquetTable(f"{job.out_dir}/extracted")
     before = {
@@ -289,10 +371,16 @@ def test_incremental_runs_bound_files_and_measure_merges(
 
 def test_spark_jobs_per_run(spark, tmp_path_factory):
     """Spark jobs of a fresh run and of a resumed delta onto its sink,
-    counted per job group. Each is the input's schema inference plus
-    the extract, lineage collect, key-stats, merge, manifest and
-    counters jobs (the lineage rides in the manifest commit); a new
-    collect or a table read that infers its schema shows here."""
+    counted per job group; a new collect or a table read that infers
+    its schema shows here.
+
+    - fresh, 8: input schema inference 1, extract write 2, key-stats
+      and lineage aggregation 3, manifest write 2;
+    - delta, 17: inference 1, resume and staging write 4, key-stats and
+      lineage aggregation 3, sink merge plus manifest merge 9.
+
+    The lineage rides in the manifest commit, and the counters are
+    observed on the manifest write, so neither costs a job."""
     from pyspark.sql import functions as F
 
     from westa_ocr_spark.corpus import url_for
@@ -312,7 +400,7 @@ def test_spark_jobs_per_run(spark, tmp_path_factory):
         run_extraction_job(spark, str(base / name), out, resume=resume,
                            run_id=name, job_group=group)
         jobs[name] = len(tracker.getJobIdsForGroup(group))
-    assert jobs == {"first": 10, "delta": 21}
+    assert jobs == {"first": 8, "delta": 17}
 
 
 def test_damaged_warc_file_gives_error_row_not_job_failure(

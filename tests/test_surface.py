@@ -33,9 +33,6 @@ HARNESS_GLOBS = ["__spark_entry__.py", "bench.py", "scripts/*.py",
 ROOT_MODULES = ["queries/*.py", "registry.py"]
 
 ALLOWED_UNREACHABLE = {
-    # the Iceberg MERGE INTO twin of ParquetTable, for a configured
-    # catalog; contract-tested against ParquetTable
-    "IcebergTable",
     # pure-Python references the vectorized kernels are tested against
     "_simhash64_py",
     "_aes_decrypt_block",

@@ -377,64 +377,6 @@ def test_compact_collapses_bucket_files(spark, tmp_path):
     assert _rows(spark, tbl) == before
 
 
-class _StubCatalog:
-    def __init__(self):
-        self.dropped = []
-
-    def dropTempView(self, name):
-        self.dropped.append(name)
-
-
-class _StubSession:
-    def __init__(self):
-        self.sqls = []
-        self.catalog = _StubCatalog()
-
-    def sql(self, text):
-        self.sqls.append(text)
-
-
-class _StubDF:
-    """Minimal DataFrame stand-in for the MERGE contract test."""
-
-    def __init__(self):
-        self.views = []
-        self.dedup_keys = None
-
-    def dropDuplicates(self, keys):
-        self.dedup_keys = keys
-        return self
-
-    def createOrReplaceTempView(self, name):
-        self.views.append(name)
-
-
-def test_iceberg_merge_contract():
-    """IcebergTable.merge_upsert emits the exact MERGE INTO statement
-    the reference's ON CONFLICT contract maps to
-    (/root/reference/app/repository.py:230-265), dedupes the source
-    batch, and drops its temp view."""
-    import re
-
-    from westa_ocr_spark.sources.tables import IcebergTable
-
-    t = IcebergTable("cat.db.ocr_pages")
-    sess, df = _StubSession(), _StubDF()
-    t.merge_upsert(sess, df, keys=["url", "page_index"])
-
-    assert df.dedup_keys == ["url", "page_index"]
-    assert len(df.views) == 1 and len(sess.sqls) == 1
-    view = df.views[0]
-    assert sess.catalog.dropped == [view]
-    expected = (
-        f"MERGE INTO cat.db.ocr_pages t USING {view} s "
-        "ON t.url = s.url AND t.page_index = s.page_index "
-        "WHEN MATCHED THEN UPDATE SET * "
-        "WHEN NOT MATCHED THEN INSERT *"
-    )
-    assert re.sub(r"\s+", " ", sess.sqls[0]) == expected
-
-
 def test_file_scoped_merge_prunes_nonoverlapping_files(spark, tmp_path):
     """O(delta) scoping: files in an affected bucket whose footer key
     range cannot intersect the batch stay in place (same inode), and

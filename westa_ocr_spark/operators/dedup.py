@@ -807,8 +807,9 @@ def dedup_against_store(spark, docs: DataFrame, store,
     oversized survivor set falls back to a hash join, never an
     unbounded broadcast).
 
-    ``store`` is any keyed table (ParquetTable locally, IcebergTable
-    on a cluster) holding columns ``(fp, doc_id)`` keyed by ``fp``.
+    ``store`` is any keyed table with ``ParquetTable``'s ``exists``,
+    ``read`` and ``merge_upsert``, holding columns ``(fp, doc_id)``
+    keyed by ``fp``.
     Prefer :func:`fp_bucket_store` — a store hive-partitioned on
     ``fp_bucket`` gets the bucketed anti-join pre-pass (the batch
     reads only its own buckets' fingerprints) and O(affected-bucket)

@@ -2,11 +2,14 @@
 
     read pages -> [resume anti-join] -> skew split (oversized leg)
       -> mapInPandas(extract)        -> staged write (single pass)
-      -> per-partition lineage (collected) -> key stats
+      -> one aggregation, grouping sets (url_bucket) and
+         (partition_id): key stats and per-partition lineage
       -> dropDuplicates(url, page_index) -> commit, or merge by url
       -> [compaction]
       -> groupBy(url) manifest of the same rows, upserted by url in
-         one commit with the run record {run_id, lineage}
+         one commit with the run record {run_id, lineage}; the
+         all-time counters are observed on that write, into the
+         commit's stats
 
 Reference lifecycle: ``/root/reference/app/worker.py:170-505``.
 
@@ -25,14 +28,15 @@ on the calling thread. On a fresh sink the extract output is committed
 straight into the sink (written once, no rewrite); an incremental run
 stages it and merges it in, replacing each re-sent url's whole page
 set (Iceberg MERGE INTO makes that a metadata commit on a real
-deployment — see sources/tables.py). Lineage, the key stats and the
-manifest all derive from the run's own staged rows.
+deployment — see docs/ICEBERG.md). Lineage, the key stats and the
+manifest all derive from the run's own staged rows, and the counters
+from the manifest write.
 
 Crash rule: the extracted and manifest tables commit through their own
 logs (``ParquetTable``), so a killed run leaves each table at its last
 commit, and a rerun converges from there. The manifest commit is the
 run's last one and carries the run's record (its ``run_id`` and
-per-partition lineage), read back by
+per-partition lineage) and its counters (``stats``), read back by
 ``ParquetTable(f"{out_dir}/manifest").history()``: a run has a record
 iff it finished, and a rerun of a killed run writes it once. The
 incremental staging directory is the only state outside those logs;
@@ -86,9 +90,12 @@ def _max_files_per_bucket(tbl: ParquetTable) -> int:
 
 @dataclass
 class ExtractionResult:
-    docs_in: int            # committed docs (manifest rows, all-time)
-    docs_processed: int     # docs extracted by THIS run
-    rows_written: int       # committed page rows (all-time)
+    # all-time counters, observed on the manifest write (its commit's
+    # stats): the manifest's rows (docs_in), Σ total_blocks
+    # (rows_written) and rows by status (docs_done, docs_error)
+    docs_in: int
+    docs_processed: int     # docs extracted by THIS run (key stats)
+    rows_written: int
     docs_done: int
     docs_error: int
     out_dir: str
@@ -218,9 +225,10 @@ def run_extraction_job(
         # bucketed sink sees tasks x buckets files. The session's
         # input-split size is tuned for the big scan (small splits =
         # extract parallelism); under the same setting the tail jobs
-        # (key-stats, lineage, manifest) fan out into near-empty tasks
-        # whose scheduling dominates. Pack them: bump split size / drop
-        # per-file open cost for the tail, restore on exit.
+        # (the key-stats and lineage aggregation, the merges) fan out
+        # into near-empty tasks whose scheduling dominates. Pack them:
+        # bump split size / drop per-file open cost for the tail,
+        # restore on exit.
         tail_conf = {"spark.sql.files.maxPartitionBytes": str(128 << 20),
                      "spark.sql.files.openCostInBytes": str(1 << 20)}
         conf_saved = {k: spark.conf.get(k) for k in tail_conf}
@@ -231,61 +239,62 @@ def run_extraction_job(
             else spark.read.schema(extracted.schema).parquet(staging_path)
         )
 
-        # per-partition lineage from the staged part files (one file per
-        # extract partition) — the gemini_logs analogue
-        # (/root/reference/app/repository.py:84-97), metrics only; it
-        # runs first, while the staged files are still this run's output.
-        # It is committed with the manifest, the run's last commit, so a
-        # run has a record iff it finished and a rerun cannot repeat it;
-        # sorted, since collect() order is not stable across reruns.
-        lineage = sorted(
-            (r.asDict() for r in staged.groupBy(
-                F.regexp_extract(F.input_file_name(), r"part-(\d+)", 1)
-                .cast("int")
-                .alias("partition_id")
-            ).agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum("input_bytes").alias("input_bytes"),
-                F.sum(
-                    F.when(F.col("status") == "ERROR", 1).otherwise(0)
-                ).alias("errors"),
-            ).collect()),
-            key=lambda r: r["partition_id"])
-        _mark("lineage")
-
-        # J5 key stats: one aggregation over this run's staged rows,
-        # grouped by url_bucket. A url maps to exactly one bucket, so the
-        # global counts are the sums of the bucket counts, and the same
-        # <= SINK_BUCKETS rows name the buckets and url ranges the merge
-        # touches. On a resumed run the input's
-        # urls join the same job as rows without a page_index, so the
-        # docs resume skipped are the input docs minus the extracted
-        # ones. Otherwise ``page`` is a literal and the plan folds back
-        # to the staged rows' aggregation alone.
-        keyed, page = staged, F.lit(True)
+        # One aggregation over this run's staged rows, with two grouping
+        # sets. By url_bucket, the J5 key stats: a url maps to exactly
+        # one bucket, so the global counts are the sums of the bucket
+        # counts, and the same <= SINK_BUCKETS rows name the buckets and
+        # url ranges the merge touches. By partition_id, the run's
+        # per-partition lineage (the gemini_logs analogue, westa-ocr
+        # ``app/repository.py:84-97``), from the staged
+        # part file each row came from (one file per extract partition)
+        # — read now, while the staged files are still this run's
+        # output. On a resumed run the input's urls join the same job
+        # as rows without a page_index or partition_id, so the docs
+        # resume skipped are the input docs minus the extracted ones.
+        # Otherwise ``page`` is a literal and the plan folds back to the
+        # staged rows' aggregation alone.
+        keyed = staged.withColumn("partition_id", F.regexp_extract(
+            F.input_file_name(), r"part-(\d+)", 1).cast("int"))
+        page = F.lit(True)
         if resumed:
-            keyed = staged.unionByName(
+            keyed = keyed.unionByName(
                 pages.select("url", bucket.alias("url_bucket")),
                 allowMissingColumns=True)
             page = F.col("page_index").isNotNull()
-        by_bucket = keyed.groupBy("url_bucket").agg(
+        groups = keyed.groupingSets(
+            [["url_bucket"], ["partition_id"]], "url_bucket", "partition_id"
+        ).agg(
+            F.grouping_id().alias("set"),
             F.count(F.when(page, F.lit(1))).alias("rows"),
             F.countDistinct("url", "page_index").alias("keys"),
             F.countDistinct(F.when(page, F.col("url"))).alias("docs"),
-            F.countDistinct(
-                F.when(F.col("status") == "ERROR", F.col("url"))
-            ).alias("err_docs"),
             F.countDistinct("url").alias("in_docs"),
             F.min(F.when(page, F.col("url"))).alias("lo"),
             F.max(F.when(page, F.col("url"))).alias("hi"),
+            F.sum("input_bytes").alias("input_bytes"),
+            F.count(F.when(F.col("status") == "ERROR", F.lit(1)))
+            .alias("errors"),
         ).collect()
-        run_rows, run_keys, run_docs, run_err_docs, in_docs = (
+        # grouping_id 1: partition_id aggregated away, a bucket's row
+        by_bucket = [r for r in groups if r["set"] == 1]
+        run_rows, run_keys, run_docs, in_docs = (
             sum(int(r[c]) for r in by_bucket)
-            for c in ("rows", "keys", "docs", "err_docs", "in_docs"))
+            for c in ("rows", "keys", "docs", "in_docs"))
         resumed_skipped = in_docs - run_docs
         has_dup_keys = run_keys != run_rows
         ranges = {r["url_bucket"]: (r["lo"], r["hi"])
                   for r in by_bucket if r["rows"]}
+        # grouping_id 2: a partition's row. The lineage is committed
+        # with the manifest, the run's last commit, so a run has a
+        # record iff it finished and a rerun cannot repeat it; sorted,
+        # since collect() order is not stable across reruns. The
+        # input-url rows of a resumed run are the NULL partition.
+        lineage = sorted(
+            ({c: r[c] for c in ("partition_id", "rows", "input_bytes",
+                                "errors")}
+             for r in groups if r["set"] == 2
+             and r["partition_id"] is not None),
+            key=lambda r: r["partition_id"])
         _mark("key_stats")
         if first_run:
             if has_dup_keys:
@@ -318,39 +327,21 @@ def run_extraction_job(
         # the run's last commit: the manifest rows of this run's urls,
         # built from the rows just committed (a groupBy(url) output is
         # url-unique) and upserted by url — an overwrite on a fresh
-        # sink — with the run's record
-        manifest_tbl.merge_upsert(
+        # sink — with the run's record. The manifest is unpartitioned,
+        # so that write holds every committed url, and the all-time
+        # counters are observed on it.
+        status = F.col("status")
+        counters = manifest_tbl.merge_upsert(
             spark, build_manifest(committed), keys=["url"],
-            unique_keys=True, record={"run_id": run_id, "lineage": lineage})
+            unique_keys=True, record={"run_id": run_id, "lineage": lineage},
+            observe={
+                "docs": F.count(F.lit(1)),
+                "done": F.count(F.when(status == "DONE", F.lit(1))),
+                "error": F.count(F.when(status == "ERROR", F.lit(1))),
+                "rows": F.coalesce(F.sum("total_blocks"), F.lit(0)),
+            })
         shutil.rmtree(staging_path, ignore_errors=True)
         _mark("sink_and_manifest")
-
-        if first_run and not has_dup_keys:
-            # fresh sink, no dup keys: all-time == this run, and the
-            # key-stats job already produced every counter — no
-            # manifest-scan job needed (manifest status is ERROR iff the
-            # url has >=1 error row, exactly countDistinct(ERROR url)).
-            docs_in, rows_written = run_docs, run_rows
-            docs_done, docs_error = run_docs - run_err_docs, run_err_docs
-        else:
-            # incremental or dedup-rewritten: counters must reflect the
-            # committed all-time manifest — one tiny aggregation job
-            stats = (
-                manifest_tbl.read(spark)
-                .groupBy("status")
-                .agg(
-                    F.count(F.lit(1)).alias("docs"),
-                    F.sum("total_blocks").alias("rows"),
-                )
-                .collect()
-            )
-            docs_done = sum(r["docs"] for r in stats if r["status"] == "DONE")
-            docs_error = sum(
-                r["docs"] for r in stats if r["status"] == "ERROR"
-            )
-            docs_in = sum(r["docs"] for r in stats)
-            rows_written = sum(r["rows"] for r in stats)
-        _mark("counters")
     finally:
         for k, v in conf_saved.items():
             spark.conf.set(k, v)
@@ -363,11 +354,11 @@ def run_extraction_job(
                 spark.sparkContext.setLocalProperty(key, None)
 
     return ExtractionResult(
-        docs_in=docs_in,
+        docs_in=counters["docs"],
         docs_processed=run_docs,
-        rows_written=rows_written,
-        docs_done=docs_done,
-        docs_error=docs_error,
+        rows_written=counters["rows"],
+        docs_done=counters["done"],
+        docs_error=counters["error"],
         out_dir=out_dir,
         resumed_skipped=resumed_skipped,
         stages=stages,

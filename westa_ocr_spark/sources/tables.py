@@ -1,4 +1,4 @@
-"""Keyed-table sink: a commit-logged parquet table, and an Iceberg twin.
+"""Keyed-table sink: a commit-logged parquet table.
 
 The reference's core sink is an idempotent keyed upsert —
 ``INSERT ... ON CONFLICT(job_id,page_index) DO UPDATE``
@@ -18,10 +18,8 @@ stats, the writer's record (Delta's ``commitInfo``; the pipeline's run
 record) and the table schema (Delta's ``metaData`` action), so a read
 passes the schema instead of inferring it from a part file's footer.
 One commit file means the write happened; no commit file means nothing
-happened. ``IcebergTable`` serves the same upsert
-interface through ``MERGE INTO`` on a configured catalog, for callers
-that pass it in as their store (``operators.dedup.dedup_against_store``);
-``run_extraction_job`` always writes ``ParquetTable``.
+happened. docs/ICEBERG.md gives the ``MERGE INTO`` that does the
+pipeline's per-url replace on an Iceberg catalog.
 
 Scale note: a ``ParquetTable`` merge rewrites whole key-overlapping
 files and each commit carries the full file list, acceptable for
@@ -33,9 +31,9 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
-from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import (Column, DataFrame, DataFrameReader, Observation,
+                       SparkSession)
 from pyspark.sql.functions import col as F_col
 from pyspark.sql.types import StructType
 
@@ -229,7 +227,7 @@ class ParquetTable:
     def merge_upsert(
         self, spark: SparkSession, df: DataFrame, keys: list[str],
         unique_keys: bool = False, ranges: dict | None = None,
-        record: dict | None = None,
+        record: dict | None = None, observe: dict[str, Column] | None = None,
     ) -> dict | None:
         """Upsert df by keys: new rows win over existing rows.
 
@@ -251,6 +249,13 @@ class ParquetTable:
         own aggregation job. ``record`` is stored as is in the merge's
         commit (the pipeline's run record, see :meth:`history`). On a
         table without a commit the merge is an overwrite.
+
+        An unpartitioned merge writes the whole table, so aggregates
+        over the rows it writes are the table's totals. There,
+        ``observe`` (name -> aggregate column) computes them with an
+        ``Observation`` on that write, with no job of its own (Delta's
+        ``operationMetrics``); the values are the commit's ``stats``
+        and the return value. The partitioned path ignores it.
         """
         if not unique_keys:
             df = df.dropDuplicates(keys)
@@ -261,8 +266,13 @@ class ParquetTable:
             old = self.read(spark)
             kept = old.join(df.select(*keys).distinct(), keys, "left_anti")
             df = kept.unionByName(df.select(*old.columns))
+        if observe:
+            obs = Observation()
+            df = df.observe(obs, *(c.alias(k) for k, c in observe.items()))
         version, files, added = self._write(df)
-        self._commit(version, files, added, files, df.schema, record=record)
+        stats = obs.get if observe else None
+        self._commit(version, files, added, files, df.schema, stats, record)
+        return stats
 
     def compact(self, spark: SparkSession) -> None:
         """Small-file compaction: rewrite the table so each partition
@@ -360,44 +370,4 @@ class ParquetTable:
         self._commit(version, files, added, rewrite_files, merged.schema,
                      stats, record)
         return stats
-
-
-class IcebergTable:
-    """Iceberg-backed keyed table (requires a configured catalog)."""
-
-    def __init__(self, identifier: str) -> None:
-        self.identifier = identifier
-
-    def exists(self) -> bool:  # pragma: no cover - needs iceberg runtime
-        return True
-
-    def read(self, spark: SparkSession) -> DataFrame:  # pragma: no cover
-        return spark.read.table(self.identifier)
-
-    def merge_upsert(
-        self, spark: SparkSession, df: DataFrame, keys: list[str],
-        unique_keys: bool = False,
-    ) -> None:
-        """Emit the Iceberg MERGE for an idempotent keyed upsert.
-
-        The incoming batch is key-deduplicated first — Iceberg's MERGE
-        throws on multiple source matches per target row, and the
-        reference's ON CONFLICT contract collapses duplicate requests
-        to one row anyway (``unique_keys=True`` skips the shuffle for
-        batches that are already key-unique). Contract-tested through
-        a stub session (tests/test_tables.py) since no Iceberg runtime
-        jar ships in this sandbox; see scripts/submit.sh for the
-        spark-submit recipe that enables the real catalog.
-        """
-        if not unique_keys:
-            df = df.dropDuplicates(keys)
-        view = f"_merge_src_{uuid.uuid4().hex[:8]}"
-        df.createOrReplaceTempView(view)
-        on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-        spark.sql(
-            f"MERGE INTO {self.identifier} t USING {view} s ON {on} "
-            "WHEN MATCHED THEN UPDATE SET * "
-            "WHEN NOT MATCHED THEN INSERT *"
-        )
-        spark.catalog.dropTempView(view)
 
