@@ -223,9 +223,25 @@ def test_ngram_jaccard_max_df_drops_hot_shingle(spark):
     assert uncapped.count() == 8 * 7 // 2
 
 
+def _simhash64_py(text: str) -> int:
+    """Pure-python 64-bit SimHash — the semantic reference for the
+    vectorized batch path."""
+    import hashlib
+    import re
+
+    words = re.sub(r"[^a-z0-9 ]", " ", (text or "").lower()).split()
+    votes = [0] * 64
+    for w in words:
+        h = int.from_bytes(hashlib.md5(w.encode()).digest()[:8], "big")
+        for bit in range(64):
+            votes[bit] += 1 if (h >> bit) & 1 else -1
+    sim = sum(1 << b for b in range(64) if votes[b] > 0)
+    return sim - (1 << 64) if sim >= (1 << 63) else sim
+
+
 def test_simhash64_vectorized_matches_pure_python(spark):
     from westa_ocr_spark.corpus import generate_rows
-    from westa_ocr_spark.operators.dedup import _simhash64_py, simhash64
+    from westa_ocr_spark.operators.dedup import simhash64
 
     texts = []
     for row in generate_rows(40):
@@ -432,10 +448,12 @@ def test_dedup_against_store_across_runs(spark, tmp_path):
     seen (re-crawled under new ids), keeps fresh content, dedupes
     within itself, and the store registration is idempotent on
     re-run (crash-retry semantics)."""
-    from westa_ocr_spark.operators.dedup import dedup_against_store
-    from westa_ocr_spark.sources.tables import ParquetTable
+    from westa_ocr_spark.operators.dedup import (
+        dedup_against_store,
+        fp_bucket_store,
+    )
 
-    store = ParquetTable(str(tmp_path / "fp_store"))
+    store = fp_bucket_store(str(tmp_path / "fp_store"))
     b1 = spark.createDataFrame(
         [(1, "alpha text"), (2, "beta text")], ["doc_id", "text"]
     )

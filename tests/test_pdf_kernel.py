@@ -351,9 +351,11 @@ def test_wrong_password_still_errors():
 
 def test_aes_core_fips197_vectors():
     from westa_ocr_spark.kernel.pdf_core import (
-        _aes_decrypt_block,
+        _aes_dec_words,
         _aes_encrypt_block,
         _aes_expand_key,
+        _rk_words,
+        _rk_words_dec,
     )
 
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
@@ -370,7 +372,8 @@ def test_aes_core_fips197_vectors():
         rk = _aes_expand_key(bytes.fromhex(keyhex))
         ct = _aes_encrypt_block(rk, pt)
         assert ct.hex() == cthex
-        assert _aes_decrypt_block(rk, ct) == pt
+        # single-block decrypt: the bulk path's word-key schedule
+        assert _aes_dec_words(_rk_words_dec(_rk_words(rk)), ct) == pt
 
 
 def _write_encrypted_pdf_aes(text):

@@ -215,6 +215,20 @@ def test_resent_url_replaces_its_whole_page_set(spark, tmp_path_factory):
     assert man[0]["total_blocks"] == man[0]["processed_blocks"] == 1
 
 
+def test_runs_without_an_id_keep_distinct_records(spark, tmp_path_factory):
+    """Two runs given no ``run_id`` onto one sink leave two run records
+    with distinct ids, not two records both named alike."""
+    out = str(tmp_path_factory.mktemp("noid") / "out")
+    for text in (b"first", b"second"):
+        pages = spark.createDataFrame(
+            [("https://noid.example/a", b"<p>" + text + b"</p>")],
+            "url string, html binary")
+        run_extraction_job(spark, pages, out, resume=False)
+    ids = [e["record"]["run_id"]
+           for e in ParquetTable(f"{out}/manifest").history() if e["record"]]
+    assert len(ids) == 2 and ids[0] != ids[1], ids
+
+
 def test_failed_run_clears_its_job_group(spark, tmp_path_factory):
     """A run that raises leaves no job group on the calling thread, so
     the caller's later jobs cannot be cancelled with the run's group."""

@@ -1,13 +1,19 @@
-"""Reachability guard: every top-level name of the package is run by the
-extraction pipeline, the query registry or a harness, or is a named
-twin on the allow-list below.
+"""Surface guards, stdlib ``ast`` only and matched by name.
 
-Stdlib ``ast`` only, matched by name. The nodes are the package's
-top-level functions, classes and module-level assignments; a node uses
-every ``Name`` id, ``Attribute`` attr and import alias in its source,
-and a use of a name reaches every node of that name. Name matching
-can miss dead code whose name collides with a live one, never the
-reverse, which is enough for a guard.
+Reachability: every top-level name of the package is run by the
+extraction pipeline, the query registry or a harness, or is named on
+the allow-list below. The nodes are the package's top-level functions,
+classes and module-level assignments; a node uses every ``Name`` id,
+``Attribute`` attr and import alias in its source, and a use of a name
+reaches every node of that name.
+
+Options: every defaulted parameter of a package function is set by at
+least one call in the package, a harness or a test, or is named on
+the options allow-list. A parameter that no call sets is a
+configuration nothing runs; it should be a constant.
+
+Name matching can miss dead code whose name collides with a live one,
+never the reverse, which is enough for a guard.
 """
 
 from __future__ import annotations
@@ -32,10 +38,28 @@ HARNESS_GLOBS = ["__spark_entry__.py", "bench.py", "scripts/*.py",
 # definitions and their assembler
 ROOT_MODULES = ["queries/*.py", "registry.py"]
 
-ALLOWED_UNREACHABLE = {
-    # pure-Python references the vectorized kernels are tested against
-    "_simhash64_py",
-    "_aes_decrypt_block",
+ALLOWED_UNREACHABLE: set[str] = set()
+
+# files whose calls may set a package function's options: the harnesses
+# and the tests (a test setting an option reaches a reference path or a
+# boundary through it)
+CALLER_GLOBS = HARNESS_GLOBS + ["tests/*.py"]
+
+# defaulted parameters no call sets, kept on purpose ("function.param",
+# methods as "Class.method.param")
+ALLOWED_UNSET_OPTIONS = {
+    # the PDF KDF's password: the algorithm's input, empty for the
+    # documents the corpus encrypts
+    "_std_file_key.password",
+    "_std_v5_file_key.password",
+    # recursion depth of a reference chain, set by the recursion only
+    # when it follows one (a call with no chain sets none)
+    "PdfDocument.resolve._depth",
+    # safety bounds on decompressed WARC bytes
+    "_bounded_inflate.cap",
+    "_stream_gzip_members.cap",
+    # the deployment setting: a long-running tail drops the trigger
+    "start_extraction_stream.trigger_available_now",
 }
 
 
@@ -146,3 +170,91 @@ def test_perfbench_finds_the_package_names_it_uses():
         probes.wrap_package(tracer)
     finally:
         tracer.unwrap_all()
+
+
+def _package_functions():
+    """``(qualified name, def, is a method)`` for every function of the
+    package, methods and nested functions included."""
+    out = []
+
+    def visit(node, prefix, in_class):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                static = any(isinstance(d, ast.Name)
+                             and d.id == "staticmethod"
+                             for d in child.decorator_list)
+                out.append((prefix + child.name, child,
+                            in_class and not static))
+                visit(child, f"{prefix}{child.name}.", False)
+            elif isinstance(child, ast.ClassDef):
+                visit(child, f"{prefix}{child.name}.", True)
+            else:
+                visit(child, prefix, in_class)
+
+    for path in sorted(PACKAGE.rglob("*.py")):
+        visit(ast.parse(path.read_text()), "", False)
+    return out
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
+    """``(positional index or None if keyword-only, name)`` of each
+    parameter with a default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    return ([(i, p.arg) for i, p in enumerate(pos) if i >= first]
+            + [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+               if d is not None])
+
+
+def _unset_options() -> set[str]:
+    functions = _package_functions()
+    classes = {q.rsplit(".", 2)[-2] for q, fn, m in functions
+               if m and fn.name == "__init__"}
+    # callee name -> [(positional args, via attribute, keywords, starred)]
+    calls = defaultdict(list)
+    files = sorted(PACKAGE.rglob("*.py")) + sorted(
+        p for g in CALLER_GLOBS for p in ROOT.glob(g))
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = (f.id if isinstance(f, ast.Name)
+                    else f.attr if isinstance(f, ast.Attribute) else None)
+            if name is None:
+                continue
+            call = (len(node.args), isinstance(f, ast.Attribute),
+                    {k.arg for k in node.keywords},
+                    any(isinstance(a, ast.Starred) for a in node.args)
+                    or any(k.arg is None for k in node.keywords))
+            calls[name].append(call)
+            if name in classes:
+                # a constructor call sets __init__'s parameters after self
+                calls[f"{name}.__init__"].append(
+                    (call[0] + 1, False) + call[2:])
+    unset = set()
+    for qual, fn, is_method in functions:
+        callee = (f"{qual.rsplit('.', 2)[-2]}.__init__"
+                  if fn.name == "__init__" and is_method else fn.name)
+        for index, param in _defaulted(fn):
+            def sets(call, index=index, param=param):
+                n_pos, via_attr, keywords, starred = call
+                if starred or param in keywords:
+                    return True
+                # a method called on an object gets self implicitly
+                offset = 1 if is_method and via_attr else 0
+                return index is not None and n_pos + offset > index
+            if not any(sets(c) for c in calls[callee]):
+                unset.add(f"{qual}.{param}")
+    return unset
+
+
+def test_every_option_is_set_by_a_caller():
+    unset = _unset_options()
+    assert unset == ALLOWED_UNSET_OPTIONS, {
+        "set by no call, not allowed": sorted(
+            unset - ALLOWED_UNSET_OPTIONS),
+        "allowed, but now set or gone": sorted(
+            ALLOWED_UNSET_OPTIONS - unset),
+    }

@@ -211,33 +211,6 @@ def test_empty_partitioned_table_reads_its_committed_columns(spark, tmp_path):
     assert df.count() == 0
 
 
-@pytest.mark.parametrize("op", ["append", "merge_upsert"])
-def test_commit_without_schema_reads_by_inference(spark, tmp_path, op):
-    """A commit written before commits held the table schema (its
-    ``schema`` key removed here) still reads, by inference, with the
-    same rows and columns; the next write commits the schema again."""
-    import json
-    import os
-
-    tbl = ParquetTable(str(tmp_path / "pt"), partition_by="b")
-    tbl.append(spark.createDataFrame(_BASE, _COLS))
-    columns = tbl.read(spark).columns
-    entry_path = os.path.join(tbl.path, "_log", "0.json")
-    with open(entry_path, encoding="utf-8") as fh:
-        entry = json.load(fh)
-    del entry["schema"]
-    with open(entry_path, "w", encoding="utf-8") as fh:
-        json.dump(entry, fh)
-    assert tbl.read(spark).columns == columns == ["k", "p", "v", "b"]
-    assert _rows(spark, tbl) == _expect(_BASE)
-    _OPS[op][1](spark, tbl, spark.createDataFrame(_BATCH, _COLS))
-    with open(os.path.join(tbl.path, "_log", "1.json"),
-              encoding="utf-8") as fh:
-        schema = json.load(fh)["schema"]
-    assert [f["name"] for f in schema["fields"]] == columns
-    assert _rows(spark, tbl) == _OPS[op][2]
-
-
 def test_partitioned_merge_rewrites_only_affected_buckets(
         spark, tmp_path):
     """Bucket-scoped merge: a batch touching one bucket must leave

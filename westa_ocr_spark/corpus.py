@@ -292,15 +292,14 @@ def write_pages_parquet(path: str, n: int, seed: int = 42,
     return path
 
 
-def write_pages_parquet_spark(spark, path: str, n: int,
-                              seed: int = 42) -> str:
+def write_pages_parquet_spark(spark, path: str, n: int) -> str:
     """Generate the pages table in parallel on the cluster.
 
     ``spark.range(n)`` distributes row indices; each Arrow batch is
     synthesized executor-side from the same content-derived generator,
     so the result is row-for-row identical to
-    :func:`write_pages_parquet` (just distributed — the honest way to
-    materialize a large corpus).
+    :func:`write_pages_parquet` at its default seed (just distributed —
+    the honest way to materialize a large corpus).
     """
     import pandas as pd
     from pyspark.sql import types as T
@@ -317,7 +316,7 @@ def write_pages_parquet_spark(spark, path: str, n: int,
 
     def gen(batches):
         for pdf in batches:
-            rows = [make_row(int(i), seed) for i in pdf["id"]]
+            rows = [make_row(int(i)) for i in pdf["id"]]
             out = pd.DataFrame(rows)
             out["warc_ts"] = pd.to_datetime(out["warc_ts"], utc=True)
             yield out

@@ -74,8 +74,7 @@ _LANG_STOPWORDS = {
 _CJK_LANGS = {"ja", "zh"}
 
 
-def lang_scores(col: Column, words: Column | None = None
-                ) -> dict[str, Column]:
+def lang_scores(col: Column) -> dict[str, Column]:
     """Per-language marker-hit counts.
 
     Space-delimited languages count word-array membership (ONE token
@@ -87,8 +86,7 @@ def lang_scores(col: Column, words: Column | None = None
     as 2 — non-overlapping scan shared the boundary space); the DuckDB
     twin moved in lockstep.
     """
-    if words is None:
-        words = F.split(col, " ")
+    words = F.split(col, " ")
     out: dict[str, Column] = {}
     for lang, markers in _LANG_STOPWORDS.items():
         if lang in _CJK_LANGS:
@@ -173,8 +171,8 @@ def _lang_id_udf():
     return lang_id_vec
 
 
-def with_lang_id(df, text_col: str, out_col: str = "lang_id"):
-    """Staged language ID: adds ``out_col`` to ``df`` (the scale path).
+def with_lang_id(df, text_col: str):
+    """Staged language ID: adds ``lang_id`` to ``df`` (the scale path).
 
     Vectorized Arrow path: a JVM expression form of the same argmax
     (an ``array_max`` over per-language score structs) is 10
@@ -188,7 +186,7 @@ def with_lang_id(df, text_col: str, out_col: str = "lang_id"):
     pinned by tests/test_textfns.py::test_with_lang_id_matches_jvm_form.
     Only ``text_col`` crosses the Python boundary (ArrowEvalPython sees
     one column regardless of df width)."""
-    return df.withColumn(out_col, _lang_id_udf()(F.col(text_col)))
+    return df.withColumn("lang_id", _lang_id_udf()(F.col(text_col)))
 
 
 def token_count(col: Column) -> Column:
@@ -405,11 +403,13 @@ def redact_pii(col: Column) -> Column:
     return out
 
 
-def with_rolling_fps(df, text_col: str, window_tokens: int = 8,
-                     out_col: str = "fps"):
-    """Staged rolling fingerprints (the scan form): words become a
-    real column before the window lambda touches them, so
-    normalize+split runs once per row, not once per window."""
+ROLLING_WINDOW = 8  # words per rolling fingerprint
+
+
+def with_rolling_fps(df, text_col: str):
+    """Staged rolling fingerprints (the scan form), as column ``fps``:
+    words become a real column before the window lambda touches them,
+    so normalize+split runs once per row, not once per window."""
     staged = df.select(
         "*",
         F.split(normalize_text(F.col(text_col)), " ").alias("_rw"),
@@ -417,9 +417,9 @@ def with_rolling_fps(df, text_col: str, window_tokens: int = 8,
     w = F.col("_rw")
     n = F.size(w)
     idx = F.sequence(
-        F.lit(1), F.greatest(n - F.lit(window_tokens - 1), F.lit(1))
+        F.lit(1), F.greatest(n - F.lit(ROLLING_WINDOW - 1), F.lit(1))
     )
     fps = F.transform(
-        idx, lambda i: F.md5(F.concat_ws(" ", F.slice(w, i, window_tokens)))
+        idx, lambda i: F.md5(F.concat_ws(" ", F.slice(w, i, ROLLING_WINDOW)))
     )
-    return staged.select(*df.columns, fps.alias(out_col))
+    return staged.select(*df.columns, fps.alias("fps"))

@@ -641,10 +641,6 @@ def _aes_encrypt_block(rk: list[list[int]], block: bytes) -> bytes:
     return _aes_enc_words(_rk_words(rk), block)
 
 
-def _aes_decrypt_block(rk: list[list[int]], block: bytes) -> bytes:
-    return _aes_dec_words(_rk_words_dec(_rk_words(rk)), block)
-
-
 def _aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
     """PDF AESV2/AESV3 stream layout: 16-byte IV prefix, then CBC
     ciphertext with PKCS#5 padding (ISO 32000 7.6.2)."""
@@ -808,33 +804,26 @@ def _std_object_key(key: bytes, num: int, gen: int,
     return h[: min(len(key) + 5, 16)]
 
 
-def make_standard_encryption(
-    r: int, length: int, id0: bytes
-) -> tuple[bytes, bytes, bytes]:
-    """(O, U, file_key) for an EMPTY owner+user password document —
-    algorithms 3/4/5, the writer-side complement of the decryptor
-    (used by the corpus generator's encrypted dialect)."""
+def make_standard_encryption(r: int, id0: bytes
+                             ) -> tuple[bytes, bytes, bytes]:
+    """(O, U, file_key) for an EMPTY owner+user password document with
+    a 128-bit key at revision ``r`` 3 or 4 — algorithms 3/4/5, the
+    writer-side complement of the decryptor (used by the corpus
+    generator's encrypted dialect)."""
     import hashlib
 
-    n = 5 if r == 2 else length // 8
     h = hashlib.md5(_PWD_PAD).digest()
-    if r >= 3:
-        for _ in range(50):
-            h = hashlib.md5(h).digest()
-    okey = h[:n]
+    for _ in range(50):
+        h = hashlib.md5(h).digest()
+    okey = h[:16]
     o = _rc4(okey, _PWD_PAD)
-    if r >= 3:
-        for i in range(1, 20):
-            o = _rc4(bytes(b ^ i for b in okey), o)
-    key = _std_file_key({"R": r, "Length": length, "O": o, "P": -1}, id0)
-    if r == 2:
-        u = _rc4(key, _PWD_PAD)
-    else:
-        u = _rc4(key, hashlib.md5(_PWD_PAD + id0).digest())
-        for i in range(1, 20):
-            u = _rc4(bytes(b ^ i for b in key), u)
-        u += b"\x00" * 16
-    return o, u, key
+    for i in range(1, 20):
+        o = _rc4(bytes(b ^ i for b in okey), o)
+    key = _std_file_key({"R": r, "Length": 128, "O": o, "P": -1}, id0)
+    u = _rc4(key, hashlib.md5(_PWD_PAD + id0).digest())
+    for i in range(1, 20):
+        u = _rc4(bytes(b ^ i for b in key), u)
+    return o, u + b"\x00" * 16, key
 
 
 class PdfDocument:

@@ -330,22 +330,23 @@ def _write_pdf_objstm(pages: list[str], tj_arrays: bool) -> bytes:
     return bytes(buf)
 
 
-def encrypt_pdf(data: bytes, *, r: int = 3, length: int = 128,
-                aes: bool = False, aes256: bool = False) -> bytes:
+def encrypt_pdf(data: bytes, *, aes: bool = False,
+                aes256: bool = False) -> bytes:
     """Encrypt a written PDF with the standard handler and an EMPTY
     user password (the document class pypdf opens silently; our
     reader decrypts it via ``pdf_core._setup_decryption``).
 
-    RC4 (default) is length-preserving, so every stream payload is
-    ciphered IN PLACE (byte offsets, ``/Length`` values, and the xref
-    all stay valid). AES mode (round 4: V4/R4 with the AESV2 StdCF
-    crypt filter) grows each payload by IV + padding, so the stream
-    is respliced and its literal ``/Length`` patched — byte offsets
-    shift and the original xref goes stale, which the tolerant
-    full-file object scan absorbs (real incremental-update PDFs have
-    stale xrefs too). Both modes append an incremental-update tail
-    carrying ``/Encrypt`` and the ``/ID``; the file ID and AES IVs
-    derive from the plaintext md5 — deterministic corpus.
+    RC4 (default, V2/R3 with a 128-bit key) is length-preserving, so
+    every stream payload is ciphered IN PLACE (byte offsets,
+    ``/Length`` values, and the xref all stay valid). AES mode (round
+    4: V4/R4 with the AESV2 StdCF crypt filter) grows each payload by
+    IV + padding, so the stream is respliced and its literal
+    ``/Length`` patched — byte offsets shift and the original xref
+    goes stale, which the tolerant full-file object scan absorbs (real
+    incremental-update PDFs have stale xrefs too). Both modes append an
+    incremental-update tail carrying ``/Encrypt`` and the ``/ID``; the
+    file ID and AES IVs derive from the plaintext md5 — deterministic
+    corpus.
     """
     import hashlib
     import re
@@ -391,9 +392,7 @@ def encrypt_pdf(data: bytes, *, r: int = 3, length: int = 128,
             + b"Tadb" + seed[:4],
         )
     else:
-        if aes:
-            r, length = 4, 128
-        o, u, key = make_standard_encryption(r, length, id0)
+        o, u, key = make_standard_encryption(4 if aes else 3, id0)
 
     out = bytearray()
     last = 0
@@ -462,11 +461,10 @@ def encrypt_pdf(data: bytes, *, r: int = 3, length: int = 128,
             % (o.hex().encode(), u.hex().encode())
         )
     else:
-        v = 1 if r == 2 else 2
         enc_body = (
-            b"<< /Filter /Standard /V %d /R %d /Length %d "
+            b"<< /Filter /Standard /V 2 /R 3 /Length 128 "
             b"/O <%s> /U <%s> /P -1 >>"
-            % (v, r, length, o.hex().encode(), u.hex().encode())
+            % (o.hex().encode(), u.hex().encode())
         )
     tail = (
         b"%d 0 obj\n%s\nendobj\n"

@@ -52,8 +52,7 @@ def _gated_broadcast(df: DataFrame, gate: int = BROADCAST_ROW_GATE):
     return df
 
 
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Groups of byte-identical (post-normalization) documents.
 
     Returns one row per duplicate group: fingerprint, size, canonical
@@ -62,8 +61,7 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
     """
     return (
         docs.select(
-            fingerprint(F.col(text_col)).alias("fp"),
-            F.col(id_col).alias("doc_id"),
+            fingerprint(F.col("text")).alias("fp"), "doc_id"
         )
         .groupBy("fp")
         .agg(
@@ -90,8 +88,7 @@ def _shingles_from_words(words: F.Column, k: int = 3) -> F.Column:
     return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, k)))
 
 
-def _with_shingles(docs: DataFrame, id_col: str, text_col: str,
-                   k: int = 3, distinct: bool = False) -> DataFrame:
+def _with_shingles(docs: DataFrame, distinct: bool = False) -> DataFrame:
     """(doc_id, shingle) exploded pairs, words staged as a column.
 
     Two projections on purpose: Catalyst's CollapseProject keeps the
@@ -99,10 +96,9 @@ def _with_shingles(docs: DataFrame, id_col: str, text_col: str,
     into every lambda element.
     """
     staged = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(normalize_text(F.col(text_col)), " ").alias("_words"),
+        "doc_id", F.split(normalize_text(F.col("text")), " ").alias("_words"),
     )
-    sh = _shingles_from_words(F.col("_words"), k)
+    sh = _shingles_from_words(F.col("_words"))
     if distinct:
         sh = F.array_distinct(sh)
     return staged.select(
@@ -110,32 +106,27 @@ def _with_shingles(docs: DataFrame, id_col: str, text_col: str,
     ).filter(F.length("shingle") > 0)
 
 
-def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       seeds: list[str] | None = None) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """Per-document MinHash signature: min(md5(seed || shingle)) per seed.
 
     Seeded md5 plays the role of the independent hash family; the min
     aggregates map-side (partial min) so the shuffle carries one row
     per document, not per shingle.
     """
-    seeds = seeds or MINHASH_SEEDS
-    exploded = _with_shingles(docs, id_col, text_col)
+    exploded = _with_shingles(docs)
     aggs = [
         F.min(F.md5(F.concat(F.lit(seed + ":"), F.col("shingle")))).alias(
             f"mh_{i}"
         )
-        for i, seed in enumerate(seeds)
+        for i, seed in enumerate(MINHASH_SEEDS)
     ]
     return exploded.groupBy("doc_id").agg(*aggs)
 
 
-def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", k: int = 3,
-                        min_jaccard: float = 0.0,
+def ngram_jaccard_pairs(docs: DataFrame, min_jaccard: float = 0.0,
                         top_n: int | None = 20,
                         max_df: int | None = 1000) -> DataFrame:
-    """Near-duplicate pairs by k-gram Jaccard, candidates via shared
+    """Near-duplicate pairs by 3-word-shingle Jaccard, candidates via shared
     shingles (inverted-index join — never all-pairs).
 
     ``max_df`` caps shingle document frequency: a stop-phrase shingle
@@ -150,7 +141,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     Output: (doc_a, doc_b, shared, size_a, size_b, jaccard) with
     doc_a < doc_b, ordered by (jaccard desc, doc_a, doc_b).
     """
-    sh = _with_shingles(docs, id_col, text_col, k, distinct=True)
+    sh = _with_shingles(docs, distinct=True)
     # materialize the shingle set once (round 6, guide §2.4): it feeds
     # the hot-list gate, the hot-list broadcast build, the sizes agg
     # and BOTH self-join sides — five subtree evaluations of
@@ -211,8 +202,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
 # SimHash
 
 
-def simhash16_df(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def simhash16_df(docs: DataFrame) -> DataFrame:
     """16-bit SimHash per document (SQL-oracle-able), output (doc_id,
     simhash).
 
@@ -225,13 +215,10 @@ def simhash16_df(docs: DataFrame, id_col: str = "doc_id",
     md5 work runs once — not 2x per word, not 16x per bit expression.
     """
     words = F.filter(
-        F.split(normalize_text(F.col(text_col)), " "),
+        F.split(normalize_text(F.col("text")), " "),
         lambda w: F.length(w) > 0,
     )
-    md5s = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(words, F.md5).alias("_md5s"),
-    )
+    md5s = docs.select("doc_id", F.transform(words, F.md5).alias("_md5s"))
     staged = md5s.select(
         "doc_id",
         F.transform(
@@ -264,24 +251,7 @@ _SIMHASH64_SCHEMA = T.StructType(
 )
 
 
-def _simhash64_py(text: str) -> int:
-    """Pure-python 64-bit SimHash — the semantic reference for the
-    vectorized batch path (tests assert byte-identity against it)."""
-    import hashlib
-    import re
-
-    words = re.sub(r"[^a-z0-9 ]", " ", (text or "").lower()).split()
-    votes = [0] * 64
-    for w in words:
-        h = int.from_bytes(hashlib.md5(w.encode()).digest()[:8], "big")
-        for bit in range(64):
-            votes[bit] += 1 if (h >> bit) & 1 else -1
-    sim = sum(1 << b for b in range(64) if votes[b] > 0)
-    return sim - (1 << 64) if sim >= (1 << 63) else sim
-
-
-def simhash64(docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+def simhash64(docs: DataFrame) -> DataFrame:
     """64-bit SimHash via an Arrow-batched pandas UDF (the scale path;
     no SQL oracle — registered as a rows-only check).
 
@@ -289,8 +259,8 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id",
     once, its 64 bits unpacked with one shift-and-mask broadcast, and
     each document's votes are a single weighted matmul over its unique
     words — no 64-iteration per-word Python inner loop (the round-1
-    anti-pattern the judge flagged). Output is byte-identical to
-    :func:`_simhash64_py`.
+    anti-pattern the judge flagged). Output is byte-identical to the
+    pure-Python per-word loop the tests keep as its reference.
     """
     import hashlib
 
@@ -306,7 +276,7 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id",
         for pdf in it:
             word_index: dict[str, int] = {}
             doc_words: list[tuple[list[int], list[int]]] = []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 counts = Counter(
                     norm_re.sub(" ", (text or "").lower()).split()
                 )
@@ -344,10 +314,10 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id",
                     sim = 0
                 sims.append(sim - (1 << 64) if sim >= (1 << 63) else sim)
             yield pd.DataFrame(
-                {"doc_id": list(pdf[id_col]), "simhash64": sims}
+                {"doc_id": list(pdf["doc_id"]), "simhash64": sims}
             )
 
-    return docs.select(id_col, text_col).mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         batches, schema=_SIMHASH64_SCHEMA
     )
 
@@ -358,16 +328,17 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id",
 
 NUM_PERM = 128
 NUM_BANDS = 16
+CC_MAX_ITER = 20  # pointer-doubling rounds: O(log diameter) suffice
 _MINHASH_P = 2_147_483_647  # 2^31 - 1: (a*h + b) stays within int64
 
 
-def _perm_params(num_perm: int) -> list[tuple[int, int]]:
+def _perm_params() -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for the universal-hash family,
     derived from sha256 — no ambient randomness (SURVEY.md §7.3)."""
     import hashlib
 
     out = []
-    for i in range(num_perm):
+    for i in range(NUM_PERM):
         a = (
             int.from_bytes(
                 hashlib.sha256(f"mh:{i}:a".encode()).digest()[:8], "big"
@@ -381,7 +352,7 @@ def _perm_params(num_perm: int) -> list[tuple[int, int]]:
     return out
 
 
-# Constant Column expressions cached per (SparkContext, params): the
+# Constant Column expressions cached per (SparkContext, kind): the
 # 128 permutation aggregates are ~800 py4j constructor round-trips,
 # measured ~1 s of DRIVER time per query invocation (round 6, guide
 # §7.3 "planning time itself can become the bottleneck"). Column
@@ -394,7 +365,7 @@ _EXPR_CACHE: dict = {}
 _EXPR_CACHE_SC = None  # weakref to the context the cache was built on
 
 
-def _cached_cols(kind: str, params: tuple, build):
+def _cached_cols(kind: str, build):
     import weakref
 
     from pyspark import SparkContext
@@ -404,60 +375,54 @@ def _cached_cols(kind: str, params: tuple, build):
     if _EXPR_CACHE_SC is None or _EXPR_CACHE_SC() is not sc:
         _EXPR_CACHE.clear()
         _EXPR_CACHE_SC = weakref.ref(sc) if sc is not None else None
-    key = (kind, params)
-    cols = _EXPR_CACHE.get(key)
+    cols = _EXPR_CACHE.get(kind)
     if cols is None:
         cols = build()
-        _EXPR_CACHE[key] = cols
+        _EXPR_CACHE[kind] = cols
     return cols
 
 
-def minhash_signatures_fast(docs: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text",
-                            num_perm: int = NUM_PERM) -> DataFrame:
-    """Production MinHash: one xxhash64 per shingle, ``num_perm``
+def minhash_signatures_fast(docs: DataFrame) -> DataFrame:
+    """Production MinHash: one xxhash64 per shingle, ``NUM_PERM``
     universal-hash permutations ``(a*h + b) mod (2^31-1)`` as plain
     JVM arithmetic, min-aggregated map-side — the shuffle carries one
-    row per document regardless of num_perm.
+    row per document regardless of the permutation count.
 
     (The 4-seed md5 variant :func:`minhash_signatures` is kept as the
     DuckDB-oracle twin; this is the path a 100-TB run uses.)
     """
-    exploded = _with_shingles(docs, id_col, text_col)
+    exploded = _with_shingles(docs)
     h = F.pmod(F.xxhash64(F.col("shingle")), F.lit(_MINHASH_P))
     staged = exploded.select("doc_id", h.alias("_h"))
     aggs = _cached_cols(
-        "mh_aggs", (num_perm,),
+        "mh_aggs",
         lambda: [
             F.min(
                 F.pmod(
                     F.lit(a) * F.col("_h") + F.lit(b), F.lit(_MINHASH_P)
                 )
             ).alias(f"mh_{i}")
-            for i, (a, b) in enumerate(_perm_params(num_perm))
+            for i, (a, b) in enumerate(_perm_params())
         ],
     )
     return staged.groupBy("doc_id").agg(*aggs)
 
 
-def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text",
-                        num_perm: int = NUM_PERM,
-                        bands: int = NUM_BANDS) -> DataFrame:
+def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
     """Candidate near-duplicate pairs from banded LSH: two docs pair
     iff they collide in >=1 band. Output (doc_a, doc_b), doc_a < doc_b,
     distinct across bands. The join key (band, bucket) is a hash —
     near-uniform, so the equi-join shuffle has no skew, and pairs are
     only formed WITHIN buckets, never all-pairs."""
-    sig = minhash_signatures_fast(docs, id_col, text_col, num_perm)
-    per_band = num_perm // bands
+    sig = minhash_signatures_fast(docs)
+    per_band = NUM_PERM // NUM_BANDS
     # ONE explode fan-out, not a union of per-band selects: Spark does
     # not dedupe identical subplans across union branches, so a
     # 16-branch union would run the 128-min aggregation 16 times. The
     # self-join's two sides share one canonical subplan, so Spark's
     # ReuseExchange computes the aggregation + shuffle once.
     band_structs = _cached_cols(
-        "band_structs", (num_perm, bands),
+        "band_structs",
         lambda: F.array(
             *[
                 F.struct(
@@ -472,7 +437,7 @@ def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
                         )
                     ).alias("bucket"),
                 )
-                for bnd in range(bands)
+                for bnd in range(NUM_BANDS)
             ]
         ),
     )
@@ -497,11 +462,9 @@ def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def connected_components(edges: DataFrame, src: str = "doc_a",
-                         dst: str = "doc_b",
-                         max_iter: int = 20) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Min-label propagation + pointer doubling over an undirected
-    edge set.
+    ``(doc_a, doc_b)`` edge set.
 
     Output (node, component) where component = min node id reachable.
     Each round is two shuffles: (1) 1-hop neighbor-min, (2) a
@@ -510,14 +473,14 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     not O(diameter): a 1000-node chain converges in ~10 rounds where
     plain propagation needs 1000. Labels are localCheckpoint'ed per
     round (lineage truncation for the iterative plan) and the loop
-    exits early once no label changes. Raises if ``max_iter`` rounds
+    exits early once no label changes. Raises if ``CC_MAX_ITER`` rounds
     were insufficient — a silently-unconverged component assignment
     would corrupt dedup groups downstream.
     """
     sym = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
+        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).unionByName(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+        edges.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     )
     sym = sym.distinct().localCheckpoint(eager=True)
     labels = (
@@ -526,7 +489,7 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         neigh = (
             sym.join(labels, sym["u"] == labels["node"])
             .groupBy(F.col("v").alias("node2"))
@@ -570,14 +533,11 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
         if changed == 0:
             return labels
     raise ValueError(
-        f"connected_components did not converge in {max_iter} rounds"
+        f"connected_components did not converge in {CC_MAX_ITER} rounds"
     )
 
 
-def duplicate_groups(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text",
-                     num_perm: int = NUM_PERM,
-                     bands: int = NUM_BANDS,
+def duplicate_groups(docs: DataFrame,
                      edges: DataFrame | None = None) -> DataFrame:
     """Full duplicate-group resolution: LSH candidate pairs ->
     connected components -> (doc_id, canonical_id, group_size).
@@ -589,8 +549,7 @@ def duplicate_groups(docs: DataFrame, id_col: str = "doc_id",
     the SQL-expressible Jaccard path).
     """
     if edges is None:
-        edges = lsh_candidate_pairs(docs, id_col, text_col, num_perm,
-                                    bands)
+        edges = lsh_candidate_pairs(docs)
     comp = connected_components(edges)
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("group_size")
@@ -605,9 +564,7 @@ def duplicate_groups(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-
-def keep_canonical(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def keep_canonical(docs: DataFrame) -> DataFrame:
     """The dedup a training-data pipeline actually runs: drop every
     exact duplicate except the canonical (minimum-id) copy.
 
@@ -617,21 +574,19 @@ def keep_canonical(docs: DataFrame, id_col: str = "doc_id",
     canonical ids of every group (singletons included), so the output
     is exactly one representative per distinct normalized content.
     """
-    fp = fingerprint(F.col(text_col))
+    fp = fingerprint(F.col("text"))
     canon = (
-        docs.select(fp.alias("fp"), F.col(id_col).alias("_id"))
+        docs.select(fp.alias("fp"), F.col("doc_id").alias("_id"))
         .groupBy("fp")
         .agg(F.min("_id").alias("keep_id"))
         .select("keep_id")
     )
     return docs.join(
-        canon, docs[id_col] == canon["keep_id"], "left_semi"
+        canon, docs["doc_id"] == canon["keep_id"], "left_semi"
     )
 
 
-def line_corpus_dedup(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text",
-                      max_line_df: int = 10,
+def line_corpus_dedup(docs: DataFrame, max_line_df: int = 10,
                       broadcast_gate: int = BROADCAST_ROW_GATE,
                       ) -> DataFrame:
     """C4-style cross-corpus line dedup: drop every line that occurs
@@ -648,8 +603,7 @@ def line_corpus_dedup(docs: DataFrame, id_col: str = "doc_id",
     preserved for lineage.
     """
     lines = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        "doc_id", F.posexplode(F.split("text", "\n")).alias("pos", "line"),
     )
     hot = (
         lines.filter(F.length(F.trim("line")) > 0)
@@ -680,20 +634,18 @@ def line_corpus_dedup(docs: DataFrame, id_col: str = "doc_id",
         )
         .unionByName(
             # docs whose every line was hot: re-emit empty
-            docs.select(F.col(id_col).alias("doc_id")).join(
+            docs.select("doc_id").join(
                 kept.select("doc_id").distinct(), "doc_id", "left_anti"
             ).withColumn("text", F.lit(""))
         )
     )
 
 
-def duplicated_spans(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text", k: int = 8,
-                     min_docs: int = 2) -> DataFrame:
+def duplicated_spans(docs: DataFrame, k: int = 8) -> DataFrame:
     """Cross-document repeated-SPAN detection (the substring-dedup
     class of Lee et al., "Deduplicating Training Data Makes Language
     Models Better" — word-granularity variant): every k-word rolling
-    shingle that appears in >= ``min_docs`` distinct documents marks
+    shingle that appears in two or more distinct documents marks
     its positions; per document, maximal runs of consecutive marked
     positions merge into spans. Output one row per maximal duplicated
     span: (doc_id, start_word, end_word, n_words) with end_word one
@@ -706,8 +658,7 @@ def duplicated_spans(docs: DataFrame, id_col: str = "doc_id",
     sort). Docs shorter than k words carry no spans by construction.
     """
     staged = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(normalize_text(F.col(text_col)), " ").alias("_words"),
+        "doc_id", F.split(normalize_text(F.col("text")), " ").alias("_words"),
     ).filter(F.size("_words") >= k)
     sh = staged.select(
         "doc_id",
@@ -725,7 +676,7 @@ def duplicated_spans(docs: DataFrame, id_col: str = "doc_id",
     dup = (
         sh.groupBy("h")
         .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= min_docs)
+        .filter(F.col("nd") >= 2)
         .select("h")
     )
     marked = sh.join(dup, "h", "left_semi")
@@ -790,9 +741,7 @@ def fp_bucket_store(path: str, n_buckets: int = N_FP_BUCKETS):
     return store
 
 
-def dedup_against_store(spark, docs: DataFrame, store,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def dedup_against_store(spark, docs: DataFrame, store) -> DataFrame:
     """Cross-RUN exact dedup against a persistent fingerprint store
     (round 4): the incremental form every growing corpus needs — each
     ingest batch drops documents whose content was already committed
@@ -807,68 +756,50 @@ def dedup_against_store(spark, docs: DataFrame, store,
     oversized survivor set falls back to a hash join, never an
     unbounded broadcast).
 
-    ``store`` is any keyed table with ``ParquetTable``'s ``exists``,
-    ``read`` and ``merge_upsert``, holding columns ``(fp, doc_id)``
-    keyed by ``fp``.
-    Prefer :func:`fp_bucket_store` — a store hive-partitioned on
-    ``fp_bucket`` gets the bucketed anti-join pre-pass (the batch
-    reads only its own buckets' fingerprints) and O(affected-bucket)
-    merges; an unpartitioned store still works, with a full
-    fp-column scan per batch.
+    ``store`` is a :func:`fp_bucket_store`: ``(fp, doc_id, fp_bucket)``
+    rows keyed by ``fp`` and hive-partitioned on ``fp_bucket``, so the
+    batch reads only its own buckets' fingerprints and a merge rewrites
+    only the buckets it touches.
     """
-    bucketed = getattr(store, "partition_by", None) == FP_BUCKET_COL
-    n_buckets = getattr(store, "fp_buckets", N_FP_BUCKETS)
-    fp = fingerprint(F.col(text_col))
-    fps = docs.select(
-        F.col(id_col).alias("doc_id"), fp.alias("fp"),
-    )
-    canon = fps.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    buckets: list[int] = []
-    if bucketed:
-        canon = canon.withColumn(
-            FP_BUCKET_COL, _fp_bucket(F.col("fp"), n_buckets)
-        )
+    fps = docs.select("doc_id", fingerprint(F.col("text")).alias("fp"))
+    canon = fps.groupBy("fp").agg(
+        F.min("doc_id").alias("doc_id")
+    ).withColumn(FP_BUCKET_COL, _fp_bucket(F.col("fp"), store.fp_buckets))
     # materialize the batch-internal dedup once: its distinct buckets
     # drive store-scan pruning, and the plan must not re-read inputs
     canon = canon.localCheckpoint(eager=True)
-    if bucketed:
-        # bucketed pre-pass (VERDICT r4 #6): the store is
-        # hive-partitioned on pmod(xxhash64(fp), P), so an
-        # incremental batch anti-joins against ONLY its own buckets'
-        # fingerprint files — partition pruning bounds the per-batch
-        # store read to touched buckets instead of an O(store)
-        # fp-column scan (the dominant cost at 10^12-doc store
-        # scale). The bucket list is <= P ints, collected from the
-        # already-checkpointed batch.
-        buckets = [
-            r[0] for r in canon.select(FP_BUCKET_COL).distinct().collect()
-        ]
+    # bucketed pre-pass (VERDICT r4 #6): the store is hive-partitioned
+    # on pmod(xxhash64(fp), P), so an incremental batch anti-joins
+    # against ONLY its own buckets' fingerprint files — partition
+    # pruning bounds the per-batch store read to touched buckets
+    # instead of an O(store) fp-column scan (the dominant cost at
+    # 10^12-doc store scale). The bucket list is <= P ints, collected
+    # from the already-checkpointed batch.
+    buckets = [
+        r[0] for r in canon.select(FP_BUCKET_COL).distinct().collect()
+    ]
     if store.exists():
-        known = store.read(spark)
-        if bucketed:
-            known = known.filter(F.col(FP_BUCKET_COL).isin(buckets))
         # no second checkpoint: the anti-join plan reads the CURRENT
         # commit's files and is evaluated exactly once, inside
         # merge_upsert's write — which completes before the commit
         # deletes any file, so the files it reads still exist; the
         # batch side is already checkpointed above
+        known = store.read(spark).filter(F.col(FP_BUCKET_COL).isin(buckets))
         canon = canon.join(known.select("fp"), "fp", "left_anti")
     # register FIRST, then derive the survivor set from the COMMITTED
     # store: at-least-once crash-retry returns the exact same
     # survivors (the retry's (fp, doc_id) pairs still match the rows
     # this batch registered), never double-admits a duplicate, and
-    # never loses a batch whose commit landed before the crash
-    merge_cols = ["fp", "doc_id"] + ([FP_BUCKET_COL] if bucketed else [])
+    # never loses a batch whose commit landed before the crash.
     # canon is a groupBy("fp") output — key-unique by construction, so
     # the sink's J5 dedup shuffle is pure overhead here (round 6)
     store.merge_upsert(
-        spark, canon.select(*merge_cols), keys=["fp"], unique_keys=True
+        spark, canon.select("fp", "doc_id", FP_BUCKET_COL), keys=["fp"],
+        unique_keys=True,
     )
-    post = store.read(spark)
-    if bucketed:
-        post = post.filter(F.col(FP_BUCKET_COL).isin(buckets))
     admitted = (
-        post.join(fps, ["fp", "doc_id"], "left_semi")
+        store.read(spark).filter(F.col(FP_BUCKET_COL).isin(buckets))
+        .join(fps, ["fp", "doc_id"], "left_semi")
         .select(F.col("doc_id").alias("__surv_id"))
         # ADVICE r4: admitted ids are tiny but lazily read THIS
         # commit's files — checkpoint so a caller that defers
@@ -878,5 +809,5 @@ def dedup_against_store(spark, docs: DataFrame, store,
     )
     survivors = _gated_broadcast(admitted)
     return docs.join(
-        survivors, F.col(id_col) == F.col("__surv_id"), "left_semi"
+        survivors, F.col("doc_id") == F.col("__surv_id"), "left_semi"
     )

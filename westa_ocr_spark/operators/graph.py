@@ -22,12 +22,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+DAMPING = 0.85
+# iterations per eager checkpoint (round 6): with the dangling scalar
+# folded in-plan, two iterations per job let ReuseExchange dedupe the
+# shared previous-iteration subtree that the dang and contribs
+# branches both reference — measured 3.0-3.8 s (every iteration) ->
+# 2.6-2.9 s (every 2) for 10 iterations on the 97-node bench graph,
+# identical ranks. Longer windows regress (plan growth beats the
+# saved job boundaries at cadence 5); iteration count and rank values
+# are cadence-independent, only materialization frequency changes.
+CHECKPOINT_EVERY = 2
 
-def pagerank(edges: DataFrame, src_col: str = "src",
-             dst_col: str = "dst", iterations: int = 10,
-             damping: float = 0.85,
-             checkpoint_every: int = 2) -> DataFrame:
-    """PageRank over a directed edge list -> (node, rank).
+
+def pagerank(edges: DataFrame, iterations: int = 10) -> DataFrame:
+    """PageRank over a directed ``(src, dst)`` edge list -> (node, rank).
 
     Multi-edges contribute multiply (each edge row is one link).
     Dangling nodes (no out-edges) redistribute their rank mass
@@ -36,9 +44,7 @@ def pagerank(edges: DataFrame, src_col: str = "src",
     contribution sums are all-positive double additions whose
     order-dependence is ~1e-15 — far below any 6-dp comparison.
     """
-    edges = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
+    edges = edges.select("src", "dst")
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -58,7 +64,7 @@ def pagerank(edges: DataFrame, src_col: str = "src",
         .localCheckpoint(eager=True)
     )
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    base = (1.0 - damping) / n
+    base = (1.0 - DAMPING) / n
     for it in range(iterations):
         # dangling mass as a 1-row broadcast subplan folded into the
         # SAME action as the rank update (round 6, guide §2.4 / VERDICT
@@ -86,23 +92,14 @@ def pagerank(edges: DataFrame, src_col: str = "src",
                 "node",
                 (
                     F.lit(base)
-                    + F.lit(damping)
+                    + F.lit(DAMPING)
                     * (F.coalesce(F.col("contrib"), F.lit(0.0))
                        + F.col("_dm") / F.lit(float(n)))
                 ).alias("rank"),
             )
         )
-        if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
+        if (it + 1) % CHECKPOINT_EVERY == 0 or it == iterations - 1:
             # one eager checkpoint is the only action per checkpoint
-            # window. Default cadence 2 (round 6): with the dangling
-            # scalar folded in-plan, two iterations per job let
-            # ReuseExchange dedupe the shared previous-iteration
-            # subtree that the dang and contribs branches both
-            # reference — measured 3.0-3.8 s (every iteration) ->
-            # 2.6-2.9 s (every 2) for 10 iterations on the 97-node
-            # bench graph, identical ranks. Longer windows regress
-            # (plan growth beats the saved job boundaries at cadence
-            # 5); iteration count and rank values are cadence-
-            # independent, only materialization frequency changes.
+            # window
             ranks = ranks.localCheckpoint(eager=True)
     return ranks

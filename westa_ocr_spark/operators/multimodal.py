@@ -34,7 +34,6 @@ import struct
 import zlib
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from westa_ocr_spark.kernel import check_pixels
@@ -699,13 +698,9 @@ def _image_error(url: str, data: bytes | None, exc: Exception) -> dict:
             "status": "ERROR", "error": f"decode: {exc}"}
 
 
-def _media_cols(url_col: str, data_col: str) -> list[F.Column]:
-    return [F.col(url_col).alias("url"), F.col(data_col).alias("data")]
-
-
-def extract_image_features(media: DataFrame, url_col: str = "url",
-                           data_col: str = "data") -> DataFrame:
-    """Arrow-batched image metadata + feature extraction over binary rows.
+def extract_image_features(media: DataFrame) -> DataFrame:
+    """Arrow-batched image metadata + feature extraction over
+    ``(url, data)`` binary rows.
 
     Width/height come from real header parsing
     (:func:`parse_image_dimensions`); the feature vector is real
@@ -715,16 +710,16 @@ def extract_image_features(media: DataFrame, url_col: str = "url",
     unknown or corrupt payloads become ``status='ERROR'`` rows, never
     task failures.
     """
-    return map_documents(media, _media_cols(url_col, data_col),
-                         _image_rows, IMAGE_FEATURES_SCHEMA, _image_error)
+    return map_documents(media, ["url", "data"], _image_rows,
+                         IMAGE_FEATURES_SCHEMA, _image_error)
 
 
 # --------------------------------------------------------------------------
 # Audio: real WAV PCM decode + MP3 frame-header metadata (round 3)
 
-def write_wav(n_samples: int, period: int = 50, rate: int = 8000,
-              channels: int = 1, bits: int = 16) -> bytes:
-    """REAL RIFF/WAVE file: PCM with a deterministic integer sawtooth
+def write_wav(n_samples: int, period: int = 50, channels: int = 1,
+              bits: int = 16) -> bytes:
+    """REAL 8 kHz RIFF/WAVE file: PCM with a deterministic integer sawtooth
     (no float trig, so bytes are identical everywhere). Round 5:
     mono/stereo x 8/16-bit layouts (stereo writes L and an inverted R
     so downmix behavior is observable)."""
@@ -742,7 +737,7 @@ def write_wav(n_samples: int, period: int = 50, rate: int = 8000,
                 out += struct.pack("<B", (sv >> 8) + 128)
     samples = bytes(out)
     block = channels * bits // 8
-    fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * block,
+    fmt = struct.pack("<HHIIHH", 1, channels, 8000, 8000 * block,
                       block, bits)
     chunks = (
         b"WAVE"
@@ -832,15 +827,13 @@ def parse_mp3_header(data: bytes) -> tuple[int, int]:
     return bitrate, rate
 
 
-def write_mp3_header(bitrate_kbps: int = 128,
-                     rate: int = 44100, n_frames: int = 3) -> bytes:
-    """Structurally valid MPEG1 Layer III frames (correct sync words
+def write_mp3_header(bitrate_kbps: int = 128, n_frames: int = 3) -> bytes:
+    """Structurally valid 44.1 kHz MPEG1 Layer III frames (correct sync words
     and frame lengths; payload deterministic filler — the entropy
     content is not decoded, mirroring real-crawl mp3 handling)."""
     bidx = _MP3_BITRATES.index(bitrate_kbps)
-    ridx = _MP3_RATES.index(rate)
-    hdr = bytes([0xFF, 0xFB, (bidx << 4) | (ridx << 2), 0x00])
-    frame_len = 144 * bitrate_kbps * 1000 // rate
+    hdr = bytes([0xFF, 0xFB, bidx << 4, 0x00])  # rate index 0: 44.1 kHz
+    frame_len = 144 * bitrate_kbps * 1000 // 44100
     frame = hdr + bytes(
         (i * 37) % 255 for i in range(frame_len - 4)
     )
@@ -902,14 +895,14 @@ def _audio_error(url: str, data: bytes | None, exc: Exception) -> dict:
             "error": f"audio: {exc}"}
 
 
-def extract_audio_features(media: DataFrame, url_col: str = "url",
-                           data_col: str = "data") -> DataFrame:
-    """Arrow-batched audio features over binary rows: WAV payloads
-    decode fully (REAL rms / peak / zero-crossing-rate from PCM
-    samples); MP3 payloads yield header metadata + estimated duration
-    (entropy decode out of scope); anything else is a per-row ERROR."""
-    return map_documents(media, _media_cols(url_col, data_col),
-                         _audio_rows, AUDIO_FEATURES_SCHEMA, _audio_error)
+def extract_audio_features(media: DataFrame) -> DataFrame:
+    """Arrow-batched audio features over ``(url, data)`` binary rows:
+    WAV payloads decode fully (REAL rms / peak / zero-crossing-rate
+    from PCM samples); MP3 payloads yield header metadata + estimated
+    duration (entropy decode out of scope); anything else is a per-row
+    ERROR."""
+    return map_documents(media, ["url", "data"], _audio_rows,
+                         AUDIO_FEATURES_SCHEMA, _audio_error)
 
 
 FRAME_SAMPLE_SCHEMA = T.StructType(
@@ -956,10 +949,9 @@ def split_mjpeg_frames(blob: bytes) -> list[bytes]:
 
 
 def sample_frames(media: DataFrame, every_n: int = 10,
-                  max_frames: int = 4, url_col: str = "url",
-                  data_col: str = "data") -> DataFrame:
-    """Video frame sampling: 1 binary row -> N frame rows (1-based),
-    same fan-out contract as PDF page split.
+                  max_frames: int = 4) -> DataFrame:
+    """Video frame sampling: 1 ``(url, data)`` binary row -> N frame
+    rows (1-based), same fan-out contract as PDF page split.
 
     Motion-JPEG payloads (concatenated baseline JPEGs — the one video
     container expressible without ffmpeg) sample REAL frames: every
@@ -989,5 +981,5 @@ def sample_frames(media: DataFrame, every_n: int = 10,
         return {"url": url, "frame_index": 1, "frame": None,
                 "status": "ERROR"}
 
-    return map_documents(media, _media_cols(url_col, data_col),
-                         frame_rows, FRAME_SAMPLE_SCHEMA, frame_error)
+    return map_documents(media, ["url", "data"], frame_rows,
+                         FRAME_SAMPLE_SCHEMA, frame_error)

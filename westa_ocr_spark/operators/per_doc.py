@@ -14,13 +14,13 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 
 def map_documents(
     df: DataFrame,
-    cols: list[str | Column],
+    cols: list[str],
     fn: Callable[..., list[dict]],
     schema: T.StructType,
     on_error: Callable[..., dict],

@@ -25,46 +25,40 @@ CMS_WIDTH = 1024
 CMS_DEPTH = 4
 
 
-def _bucket(col: F.Column, depth: int, width: int) -> F.Column:
-    """Portable bucket hash: two md5 bytes of the depth-seeded value
-    (ascii arithmetic — identical expression valid in DuckDB)."""
-    h = F.md5(F.concat(F.lit(f"cms{depth}:"), col.cast("string")))
-    v = (
-        F.ascii(F.substring(h, 1, 1)) * 65536
-        + F.ascii(F.substring(h, 2, 1)) * 256
-        + F.ascii(F.substring(h, 3, 1))
-    )
-    return F.pmod(v, F.lit(width))
+def _buckets(col: F.Column) -> F.Column:
+    """``(depth, bucket)`` of the value per depth. The portable bucket
+    hash is three md5 bytes of the depth-seeded value (ascii
+    arithmetic — identical expression valid in DuckDB)."""
+    rows = []
+    for d in range(CMS_DEPTH):
+        h = F.md5(F.concat(F.lit(f"cms{d}:"), col.cast("string")))
+        v = (
+            F.ascii(F.substring(h, 1, 1)) * 65536
+            + F.ascii(F.substring(h, 2, 1)) * 256
+            + F.ascii(F.substring(h, 3, 1))
+        )
+        rows.append(F.struct(F.lit(d).alias("depth"),
+                             F.pmod(v, F.lit(CMS_WIDTH)).alias("bucket")))
+    return F.array(*rows)
 
 
-def cms_build(df: DataFrame, col: str, width: int = CMS_WIDTH,
-              depth: int = CMS_DEPTH) -> DataFrame:
+def cms_build(df: DataFrame, col: str) -> DataFrame:
     """Count-Min Sketch of a column: (depth, bucket, count) rows.
 
     One explode (x depth) + one hash aggregation. Sketches over
     different inputs merge by union + groupBy-sum — used verbatim for
     distributed/incremental builds.
     """
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(d).alias("depth"),
-                _bucket(F.col(col), d, width).alias("bucket"),
-            )
-            for d in range(depth)
-        ]
-    )
     return (
-        df.select(F.explode(rows).alias("r"))
+        df.select(F.explode(_buckets(F.col(col))).alias("r"))
         .select("r.depth", "r.bucket")
         .groupBy("depth", "bucket")
         .agg(F.count(F.lit(1)).alias("count"))
     )
 
 
-def cms_estimate(sketch: DataFrame, keys: DataFrame, key_col: str,
-                 width: int = CMS_WIDTH,
-                 depth: int = CMS_DEPTH) -> DataFrame:
+def cms_estimate(sketch: DataFrame, keys: DataFrame,
+                 key_col: str) -> DataFrame:
     """Point-frequency estimates for ``keys`` (broadcast of the probe
     side): est = min over depths of the key's bucket count.
 
@@ -79,17 +73,7 @@ def cms_estimate(sketch: DataFrame, keys: DataFrame, key_col: str,
     """
     probes = keys.select(
         F.col(key_col).alias("key"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("depth"),
-                        _bucket(F.col(key_col), d, width).alias("bucket"),
-                    )
-                    for d in range(depth)
-                ]
-            )
-        ).alias("r"),
+        F.explode(_buckets(F.col(key_col))).alias("r"),
     ).select("key", "r.depth", "r.bucket")
     # The sketch side is broadcast: it is bounded by depth*width rows
     # by construction, while the probe side may be arbitrarily large.

@@ -50,10 +50,9 @@ def _error_row(url: str, _data, exc: Exception) -> dict:
             "error": f"split: {exc}"}
 
 
-def split_pdf_payloads(pages: DataFrame, url_col: str = "url",
-                       data_col: str = "html") -> DataFrame:
-    """Arrow-batched page split over (url, pdf-bytes) rows."""
+def split_pdf_payloads(pages: DataFrame) -> DataFrame:
+    """Arrow-batched page split over ``(url, html)`` rows, ``html``
+    holding the PDF bytes."""
     return map_documents(
-        pages, [url_col, data_col], _page_rows, PAGE_PAYLOAD_SCHEMA,
-        _error_row,
+        pages, ["url", "html"], _page_rows, PAGE_PAYLOAD_SCHEMA, _error_row,
     )

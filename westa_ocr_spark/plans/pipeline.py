@@ -48,6 +48,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
+import uuid
 from collections import Counter
 from dataclasses import dataclass, field
 
@@ -137,7 +138,7 @@ def run_extraction_job(
     out_dir: str,
     *,
     resume: bool = True,
-    run_id: str = "run",
+    run_id: str | None = None,
     job_group: str | None = None,
     compact_files_per_bucket: int = COMPACT_FILES_PER_BUCKET,
 ) -> ExtractionResult:
@@ -146,10 +147,14 @@ def run_extraction_job(
     ``pages`` is a DataFrame or a parquet path of the input table
     (url, warc_ts, html, text, lang); its optional ``charset`` column
     (the WARC source's transport hint) rides along into extraction.
+    ``run_id`` names the run in its manifest record; a run given none
+    gets a fresh ``uuid4().hex``, so two such runs keep two records.
     Pass ``job_group`` to make the
     run cancellable via :func:`cancel_extraction` (interrupt-on-cancel
     is set so running tasks stop, not just queued ones).
     """
+    if run_id is None:
+        run_id = uuid.uuid4().hex
     stages: dict[str, float] = {}
     merge_stats: dict | None = None
     compacted = False

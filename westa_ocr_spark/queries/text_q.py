@@ -243,8 +243,9 @@ _PROBE_TEXT = (
 )
 
 
-def _sql_rolling_fps(expr: str, k: int = 8) -> str:
+def _sql_rolling_fps(expr: str) -> str:
     words = f"string_split({_SQL_NORM.format(c=expr)}, ' ')"
+    k = textfns.ROLLING_WINDOW
     return (
         f"list_transform(range(1, greatest(len({words}) - {k - 1}, 1) + 1),"
         f" i -> md5(array_to_string(({words})[i:i+{k - 1}], ' ')))"

@@ -70,11 +70,9 @@ def _parquet_key_range(path: str, col: str):
 
 
 def _reader(spark: SparkSession, entry: dict) -> DataFrameReader:
-    """A parquet reader that takes a commit's schema when it has one,
-    instead of inferring it."""
-    schema = entry.get("schema")
-    return (spark.read.schema(StructType.fromJson(schema)) if schema
-            else spark.read)
+    """A parquet reader that takes a commit's schema instead of
+    inferring it."""
+    return spark.read.schema(StructType.fromJson(entry["schema"]))
 
 
 class ParquetTable:
@@ -88,10 +86,9 @@ class ParquetTable:
     then deletes the files the commit removed. Each commit lists every
     file of the table and its schema (the written DataFrame's, with the
     partition column last, as Spark reads it back), so a reader needs
-    only the latest one and runs no schema-inference job. A commit
-    without a schema, written before commits held one, reads by
-    inference; the next write adds it. ``history()`` returns every
-    commit's entry, with the ``record`` a ``merge_upsert`` carried.
+    only the latest one and runs no schema-inference job.
+    ``history()`` returns every commit's entry, with the ``record`` a
+    ``merge_upsert`` carried.
 
     Crash rule: ``exists()`` means a commit exists, and ``read()`` first
     deletes every file under the table that the latest commit does not
@@ -324,8 +321,7 @@ class ParquetTable:
             }
         ranges = {f"{pcol}={p}": lo_hi for p, lo_hi in ranges.items()}
         _, entry = self._snapshot()
-        cols = (StructType.fromJson(entry["schema"]).fieldNames()
-                if entry.get("schema") else self.read(spark).columns)
+        cols = StructType.fromJson(entry["schema"]).fieldNames()
         rewrite_files: list[str] = []
         files_pruned = bytes_rewritten = bytes_kept = 0
         for rel in entry["files"]:

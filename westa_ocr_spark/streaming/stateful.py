@@ -75,21 +75,21 @@ def _dedupe_fn(
 
 
 def streaming_first_seen(
-    stream: DataFrame, key_col: str = "url", ts_col: str | None = None
+    stream: DataFrame, ts_col: str | None = None
 ) -> DataFrame:
-    """First occurrence of each key across all micro-batches.
+    """First occurrence of each ``url`` across all micro-batches.
 
     ``ts_col`` (optional) names an event-time column whose per-key
     minimum becomes ``first_seen_ts``; without one the field is null.
     """
     from pyspark.sql import functions as F
 
-    cols = [F.col(key_col)]
+    cols = [F.col("url")]
     if ts_col is not None:
         cols.append(F.col(ts_col).alias("_event_ts"))
     return (
         stream.select(*cols)
-        .groupBy(key_col)
+        .groupBy("url")
         .applyInPandasWithState(
             _dedupe_fn,
             outputStructType=DEDUPED_SCHEMA,

@@ -41,6 +41,8 @@ PAGES_SCHEMA = T.StructType(
 
 # files a production stream takes per micro-batch
 FILES_PER_TRIGGER = 16
+# files, and so micro-batches, a complete-mode drain stages its events in
+DRAIN_FILES = 4
 
 
 def _file_stream(spark: SparkSession, path: str, schema: T.StructType,
@@ -86,13 +88,12 @@ def start_extraction_stream(
     return writer.start()
 
 
-def _drain_complete(spark: SparkSession, events: DataFrame, ts_col: str,
-                    key_col: str, window: Column, n_files: int,
-                    out_cols: list) -> DataFrame:
+def _drain_complete(spark: SparkSession, events: DataFrame, key_col: str,
+                    window: Column, out_cols: list) -> DataFrame:
     """Count ``events`` per (``window`` over ``ts``, ``key``) through a
     complete-mode stream and return ``out_cols`` of the drained rows.
 
-    Stages ``events`` (as ``ts``, ``key``) in ``n_files`` parquet
+    Stages ``events`` (as ``ts``, ``key``) in ``DRAIN_FILES`` parquet
     files and streams them back one file per micro-batch, so the
     aggregation state genuinely crosses batch boundaries. Complete mode
     re-emits the whole aggregate each trigger, so the drained memory
@@ -102,10 +103,10 @@ def _drain_complete(spark: SparkSession, events: DataFrame, ts_col: str,
     tag = uuid.uuid4().hex[:8]
     stage = os.path.join(tempfile.gettempdir(), f"cstream_{tag}")
     src = events.select(
-        F.col(ts_col).cast("timestamp").alias("ts"),
+        F.col("ts").cast("timestamp").alias("ts"),
         F.col(key_col).alias("key"),
     )
-    src.repartition(n_files).write.mode("overwrite").parquet(stage)
+    src.repartition(DRAIN_FILES).write.mode("overwrite").parquet(stage)
     name = f"complete_{tag}"
     (
         _file_stream(spark, stage, src.schema, files_per_trigger=1)
@@ -125,16 +126,10 @@ def _drain_complete(spark: SparkSession, events: DataFrame, ts_col: str,
     return out
 
 
-def windowed_counts_complete(
-    spark: SparkSession,
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window_minutes: int = 10,
-    n_files: int = 4,
-) -> DataFrame:
-    """Batch-equivalence proof for streaming windowed counts.
+def windowed_counts_complete(spark: SparkSession,
+                             events: DataFrame) -> DataFrame:
+    """Batch-equivalence proof for streaming windowed counts: events
+    ``(ts, event_type)`` counted per 10-minute window.
 
     Unlike a watermarked append stream (which trades completeness of
     trailing windows for bounded state), the complete-mode drain
@@ -142,31 +137,23 @@ def windowed_counts_complete(
     lets the DuckDB oracle verify the streaming surface (registry
     ``stream_windowed_counts``).
 
-    Output: (window_start epoch-seconds, key, n) — epoch longs so the
-    oracle compare is exact across engines.
+    Output: (window_start epoch-seconds, event_type, n) — epoch longs
+    so the oracle compare is exact across engines.
     """
     return _drain_complete(
-        spark, events, ts_col, key_col,
-        F.window("ts", f"{window_minutes} minutes"), n_files,
+        spark, events, "event_type", F.window("ts", "10 minutes"),
         [F.col("win.start").cast("long").alias("window_start"),
-         F.col("key").alias(key_col), "n"],
+         F.col("key").alias("event_type"), "n"],
     )
 
 
-def session_windows_complete(
-    spark: SparkSession,
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    gap_minutes: int = 30,
-    n_files: int = 4,
-) -> DataFrame:
-    """Streaming SESSION windows (gap-merged state) with an exact
-    batch twin.
+def session_windows_complete(spark: SparkSession,
+                             events: DataFrame) -> DataFrame:
+    """Streaming SESSION windows (gap-merged state) of events
+    ``(ts, user_id)`` with an exact batch twin.
 
     ``F.session_window`` merges a key's window state whenever a new
-    event lands within ``gap_minutes`` of the session's end — the
+    event lands within 30 minutes of the session's end — the
     stateful operation that distinguishes sessions from tumbling
     windows. The complete-mode drain over multiple micro-batches
     exercises cross-batch session merging, and equals the batch
@@ -177,9 +164,8 @@ def session_windows_complete(
     Output: (user_id, session_start epoch-seconds, n_events).
     """
     return _drain_complete(
-        spark, events, ts_col, key_col,
-        F.session_window("ts", f"{gap_minutes} minutes"), n_files,
-        [F.col("key").alias(key_col),
+        spark, events, "user_id", F.session_window("ts", "30 minutes"),
+        [F.col("key").alias("user_id"),
          F.col("win.start").cast("long").alias("session_start"),
          F.col("n").alias("n_events")],
     )
